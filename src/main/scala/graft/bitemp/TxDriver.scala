@@ -3,6 +3,7 @@ package graft.bitemp
 import java.time.LocalDateTime
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.sources.Route
 
 /** Bounded ALL-DRIVER route for the INTERACTIVE transaction paths
   * ([[TxLog.applyTx]] and [[TxLog.applyBatch]]) — r15 VERDICT #4, the
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * scheduler latency (ingest_cas measured 16 jobs over 6 SQL execs for
   * three txs of ≤ 16k ops), so while BOTH the current state and the
   * batch's op list fit [[DefaultTxDriverRows]] (limit-bounded collects;
-  * conf `spark.graft.txDriverRows`, 0 disables), the whole fold runs in
+  * conf `spark.graft.route.tx.maxRows`, 0 disables), the whole fold runs in
   * memory and the new state returns as a LocalRelation — zero jobs per
   * subsequent tx, because a LocalRelation collects without a job.
   *
@@ -23,35 +24,25 @@ import org.apache.spark.sql.functions._
   * [[TxLog.applyTxParts]]' candidate model: resolved pre-tx history
   * (cand_seq −1) plus EARLIER same-tx writes (cand_seq < check seq),
   * visible = max by (vt, tx_id, cand_seq) at the basis, abort iff any
-  * expected hash differs null-safely. TxDriverSpec pins the route ≡ the
+  * expected hash differs null-safely. TxLogFoldSpec pins the route ≡ the
   * conf-disabled distributed path on randomized cas/evict/range
   * programs.
   *
   * A 100 TB state (or a bulk tx) is over the bound after one bounded
-  * collect and takes the unchanged distributed paths.
+  * collect and takes the unchanged distributed paths; so does an op list
+  * with a null `seq`, and any call whose driver body fails non-fatally.
   */
 private[graft] object TxDriver {
 
   /** State rows AND batch op rows must EACH fit this bound to route
     * driver-side. ~128k version rows ≈ a few tens of MB of driver heap —
-    * the repo's bounded-artifact budget. Conf: `spark.graft.txDriverRows`
-    * (0 disables — the differential spec's lever). */
+    * the repo's bounded-artifact budget. Conf:
+    * `spark.graft.route.tx.maxRows` (0 disables — the differential
+    * spec's lever). */
   private[graft] val DefaultTxDriverRows: Long = 1L << 17
 
   private def bound(df: DataFrame): Long =
-    graft.sources.SessionConf.boundFromConf(df.sparkSession,
-      "spark.graft.txDriverRows", DefaultTxDriverRows, DefaultTxDriverRows)
-
-  private def takeNOf(b: Long): Int =
-    if (b >= Int.MaxValue - 1) Int.MaxValue else (b + 1L).toInt
-
-  /** Bounded collect: None when over the bound. A LocalRelation input
-    * (the previous driver-routed tx's state) materializes without a job. */
-  private def collectBounded(df: DataFrame, b: Long): Option[Array[Row]] = {
-    val takeN = takeNOf(b)
-    val rows = df.limit(takeN).collect()
-    if (rows.length >= takeN) None else Some(rows)
-  }
+    Route.maxRows(df.sparkSession, "tx", DefaultTxDriverRows)
 
   private final case class OpRow(op: String, eid: String, hash: Option[String],
       startVt: Option[LocalDateTime], endVt: Option[LocalDateTime],
@@ -60,17 +51,19 @@ private[graft] object TxDriver {
   private def opt[A](r: Row, i: Int): Option[A] =
     if (r.isNullAt(i)) None else Some(r.getAs[A](i))
 
+  /** None when any op row has a null `seq`: the distributed join drops
+    * such rows, so the route declines rather than guess an order. */
   private def opRowsOf(rows: Array[Row],
-      schema: org.apache.spark.sql.types.StructType): Array[OpRow] = {
+      schema: org.apache.spark.sql.types.StructType): Option[Array[OpRow]] = {
     val (iOp, iEid, iH, iS, iE, iA, iX, iQ) = (schema.fieldIndex("op"),
       schema.fieldIndex("eid"), schema.fieldIndex("content_hash"),
       schema.fieldIndex("start_vt"), schema.fieldIndex("end_vt"),
       schema.fieldIndex("at_vt"), schema.fieldIndex("expected_hash"),
       schema.fieldIndex("seq"))
-    rows.map(r => OpRow(r.getString(iOp), r.getString(iEid),
+    if (rows.exists(_.isNullAt(iQ))) None
+    else Some(rows.map(r => OpRow(r.getString(iOp), r.getString(iEid),
       opt[String](r, iH), opt[LocalDateTime](r, iS), opt[LocalDateTime](r, iE),
-      opt[LocalDateTime](r, iA), opt[String](r, iX),
-      if (r.isNullAt(iQ)) 0L else r.getLong(iQ)))
+      opt[LocalDateTime](r, iA), opt[String](r, iX), r.getLong(iQ))))
   }
 
   private implicit val ldtOrd: Ordering[LocalDateTime] = _ compareTo _
@@ -190,20 +183,18 @@ private[graft] object TxDriver {
   private[bitemp] def tryApplyTx(state: DataFrame, ops: DataFrame,
       txId: Long, txTime: LocalDateTime): Option[(DataFrame, Boolean)] = {
     val b = bound(state)
-    if (b <= 0) return None
-    try {
+    Route.attempt {
       val opsSel = ops.select(TxLog.opSchema.fieldNames.map(col).toSeq: _*)
-      val opRows = collectBounded(opsSel, b).getOrElse(return None)
-      val stRows = collectBounded(stateCols(state), b).getOrElse(return None)
-      val mem = new MemState
-      mem.seed(stRows, TxLog.versionSchema)
-      if (mem.applyOne(opRowsOf(opRows, TxLog.opSchema), txId, txTime))
-        Some((state, true))
-      else Some((mem.toDf(state.sparkSession), false))
-    } catch {
-      // a caller-shaped frame this route can't read (missing column,
-      // exotic type) falls back to the distributed path, never fails
-      case _: org.apache.spark.sql.AnalysisException => None
+      for {
+        opRows <- Route.collect(opsSel, b)
+        txOps <- opRowsOf(opRows, TxLog.opSchema)
+        stRows <- Route.collect(stateCols(state), b)
+      } yield {
+        val mem = new MemState
+        mem.seed(stRows, TxLog.versionSchema)
+        if (mem.applyOne(txOps, txId, txTime)) (state, true)
+        else (mem.toDf(state.sparkSession), false)
+      }
     }
   }
 
@@ -215,29 +206,29 @@ private[graft] object TxDriver {
   private[bitemp] def tryApplyBatch(state: DataFrame,
       txs: Seq[(Long, LocalDateTime, DataFrame)]): Option[DataFrame] = {
     val b = bound(state)
-    if (b <= 0) return None
-    try {
+    Route.attempt {
       val tagged = txs.zipWithIndex.map { case ((_, _, ops), i) =>
         ops.select(lit(i).as("_i") +:
           TxLog.opSchema.fieldNames.map(col).toSeq: _*)
       }.reduce(_ unionByName _)
-      val opRows = collectBounded(tagged, b).getOrElse(return None)
-      val stRows = collectBounded(stateCols(state), b).getOrElse(return None)
-      val mem = new MemState
-      mem.seed(stRows, TxLog.versionSchema)
       val taggedSchema = org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("_i",
           org.apache.spark.sql.types.IntegerType) +: TxLog.opSchema.fields)
-      val byTx = opRows.groupBy(_.getInt(0))
-      txs.zipWithIndex.foreach { case ((txId, txTime, _), i) =>
-        val rows = byTx.getOrElse(i, Array.empty[Row])
-        // aborted txs leave state unchanged (applyBatch contract)
-        mem.applyOne(opRowsOf(rows, taggedSchema), txId, txTime)
-        ()
+      for {
+        opRows <- Route.collect(tagged, b)
+        txOps <- opRowsOf(opRows, taggedSchema)
+        stRows <- Route.collect(stateCols(state), b)
+      } yield {
+        val mem = new MemState
+        mem.seed(stRows, TxLog.versionSchema)
+        val byTx = opRows.map(_.getInt(0)).zip(txOps).groupMap(_._1)(_._2)
+        txs.zipWithIndex.foreach { case ((txId, txTime, _), i) =>
+          // aborted txs leave state unchanged (applyBatch contract)
+          mem.applyOne(byTx.getOrElse(i, Array.empty[OpRow]), txId, txTime)
+          ()
+        }
+        mem.toDf(state.sparkSession)
       }
-      Some(mem.toDf(state.sparkSession))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => None
     }
   }
 }

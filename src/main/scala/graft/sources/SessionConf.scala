@@ -35,18 +35,4 @@ object SessionConf {
     withConf(sp,
       "spark.sql.shuffle.partitions" -> partitions.toString,
       "spark.sql.adaptive.enabled" -> "false")(body)
-
-  /** Resolve a size-route bound (r15 VERDICT #7: the driver-route bounds
-    * were compile-time constants — a 100 TB deployment with a small
-    * driver could not turn them down without recompiling). Precedence:
-    * an EXPLICIT caller override (any value different from the compiled
-    * default) wins; otherwise the session conf `key` (`spark.graft.*`)
-    * tunes it; otherwise the compiled default. An unparseable conf value
-    * falls back to the default rather than crashing the operator. */
-  def boundFromConf(sp: SparkSession, key: String, passed: Long,
-      default: Long): Long =
-    if (passed != default) passed
-    else sp.conf.getOption(key)
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(default)
 }

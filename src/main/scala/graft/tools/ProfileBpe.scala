@@ -89,8 +89,10 @@ object ProfileBpe {
     // distributed route (forced): one job cycle per merge — the r12 cost
     val distMerges = 4
     val distSec = time {
-      TextAnalysis.bpeTrain(corpus, numMerges = distMerges,
-        driverVocabRows = 0).count()
+      graft.sources.SessionConf.withConf(spark,
+        "spark.graft.route.bpe.maxRows" -> "0") {
+        TextAnalysis.bpeTrain(corpus, numMerges = distMerges).count()
+      }
     }
     println(f"distributed route: $distMerges%4d merges in ${distSec}%7.2f s " +
       f"(${distSec / distMerges}%.2f s/merge -> ${merges} merges would be " +

@@ -858,17 +858,32 @@ class DatalogSpec extends AnyFunSuite {
   }
 
   test("driver-bound domains enforce the cap BEFORE the pull (r12)") {
+    import graft.sources.Route
     val df = spark.range(0, 50).toDF("x")
-    // over-cap: loud error, and the pull itself was LIMIT-bounded — the
-    // plan pin below shows the collect materializes cap+1 rows, not 50
-    val ex = intercept[IllegalArgumentException] {
-      Planner.boundedDomain(df, 10, "too many bindings")
-    }
-    assert(ex.getMessage.contains("too many bindings"))
-    val p = Planner.boundedPlan(df, 10).queryExecution.executedPlan.toString
-    assert(p.contains("CollectLimit") || p.contains("GlobalLimit"), p.take(2000))
+    // over-cap: no rows come back, and the pull itself is LIMIT-bounded —
+    // a 2^62-row domain answers after cap+1 rows, not after a full scan
+    assert(Route.collect(df, 10).isEmpty)
+    assert(Route.collect(spark.range(0, 1L << 62).toDF("x"), 10).isEmpty)
     // under-cap: the full domain comes back
-    assert(Planner.boundedDomain(df, 50, "no").length == 50)
+    assert(Route.collect(df, 50).map(_.length).contains(50))
+  }
+
+  test("compiled-query cache keys cannot be forged by separator characters") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
+    // two argument vectors whose parts joined with bare '|' once shared a
+    // cache key, so the second call was served the first call's plan
+    val rows = Seq(Row("e1", "k", "a|s:b"), Row("e1", "j", "c"),
+      Row("e2", "k", "a"), Row("e2", "j", "b|s:c"))
+    val schema = StructType(Seq(StructField("e", StringType),
+      StructField("a", StringType), StructField("v_str", StringType)))
+    val src = new QuadSource(spark.createDataFrame(rows.asJava, schema),
+      Map("k" -> "v_str", "j" -> "v_str"), key = Some("separator-fixture"))
+    val q = "[:find ?e :in [?x ?y] :where [[?e :k ?x] [?e :j ?y]]]"
+    def find(x: String, y: String) =
+      Planner.q(spark, src, q, x, y).collect().map(_.getString(0)).toSet
+    assert(find("a|s:b", "c") == Set("e1"))
+    assert(find("a", "b|s:c") == Set("e2"))
   }
 
   test("compiled-query cache: same plan object on repeat, conf-disable + invalidation (r16)") {

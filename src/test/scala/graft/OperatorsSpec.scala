@@ -14,6 +14,12 @@ class OperatorsSpec extends AnyFunSuite {
   private def docs = Tables.load(spark, dir, "documents")
   private def emb = Tables.load(spark, dir, "embeddings")
 
+  /** Run `f` with the named size routes' bounds set through
+    * `spark.graft.route.<name>.maxRows` (0 forces the distributed form). */
+  private def withRoutes[A](bounds: (String, Long)*)(f: => A): A =
+    graft.sources.SessionConf.withConf(spark, bounds.map { case (n, b) =>
+      s"spark.graft.route.$n.maxRows" -> b.toString }: _*)(f)
+
   test("connected components: chain + clique + singleton, min-label clusters") {
     import spark.implicits._
     // chain 1-2-3-4 (diameter 3 — needs >1 round), clique {10,11,12},
@@ -41,16 +47,19 @@ class OperatorsSpec extends AnyFunSuite {
       val pairs = (0 until n).map(_ =>
         (rnd.nextInt(15).toLong, rnd.nextInt(15).toLong))
         .filter { case (a, b) => a != b }.distinct.toDF("d1", "d2")
-      def lab(limit: Long) = Dedup.connectedComponents(pairs,
-        driverPairLimit = limit).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      def lab(limit: Long) = withRoutes("dedup.components" -> limit) {
+        Dedup.connectedComponents(pairs).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(lab(2000000L) == lab(0L), s"trial $trial") // driver ≡ cluster rounds
     }
     // mid-collect overflow (limit smaller than the pair count) must also
     // fall back to the cluster rounds, same answer
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("d1", "d2")
-    def lab(limit: Long) = Dedup.connectedComponents(pairs, driverPairLimit = limit)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def lab(limit: Long) = withRoutes("dedup.components" -> limit) {
+      Dedup.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(lab(2L) == lab(0L))
   }
 
@@ -491,7 +500,9 @@ class OperatorsSpec extends AnyFunSuite {
         col("pos").as("pb")), Seq("_sa"))
       .select(col("da"), col("pa"), col("db"), col("pb"))
     val (dvRoute, rel1) = Dedup.lcpDescent(adj, idx, 3, 8)
-    val (shRoute, rel2) = Dedup.lcpDescent(adj, idx, 3, 8, driverPairRows = 0L)
+    val (shRoute, rel2) = withRoutes("dedup.descent" -> 0L) {
+      Dedup.lcpDescent(adj, idx, 3, 8)
+    }
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("da"), r.getAs[Int]("pa"), r.getAs[Long]("db"),
         r.getAs[Int]("pb"), r.getAs[Long]("match_len"))).toSet
@@ -558,7 +569,9 @@ class OperatorsSpec extends AnyFunSuite {
     // edge cache released; only the final labels frame's blocks survive
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("d1", "d2")
     val b2 = persisted
-    val cc = Dedup.connectedComponents(pairs, driverPairLimit = 0L)
+    val cc = withRoutes("dedup.components" -> 0L) {
+      Dedup.connectedComponents(pairs)
+    }
     val leaked2 = (persisted -- b2) - resultRddId(cc)
     assert(leaked2.isEmpty, s"label-round blocks leaked: $leaked2")
     graft.sources.SessionCache.release(cc)
@@ -568,10 +581,10 @@ class OperatorsSpec extends AnyFunSuite {
     // the init plan rides the nodesDf checkpoint, which must NOT be
     // released in that case (review catch)
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    assert(graft.operators.Graph.pageRank(edges, iters = 0,
-      driverNodeLimit = 0L).count() == 3)
-    assert(graft.operators.Graph.minLabelComponents(edges, iters = 0,
-      driverNodeLimit = 0L).count() == 3)
+    withRoutes("graph.nodes" -> 0L) {
+      assert(graft.operators.Graph.pageRank(edges, iters = 0).count() == 3)
+      assert(graft.operators.Graph.minLabelComponents(edges, iters = 0).count() == 3)
+    }
   }
 
   test("driver-probe route ≡ distributed probes on every suffix consumer (r15)") {
@@ -612,7 +625,9 @@ class OperatorsSpec extends AnyFunSuite {
       rows(eDist.cutExternal(corpus, bench, 3)))
     // and vs the fully-shuffled descent (pair bound 0) on the dp handle
     assert(rows(eDp.decontaminateExternal(bench, 3)) ==
-      rows(Dedup.decontaminateExternal(eDp, bench, 3, driverPairRows = 0L)))
+      withRoutes("dedup.descent" -> 0L) {
+        rows(Dedup.decontaminateExternal(eDp, bench, 3))
+      })
     Seq(jDp, jDist, eDp, eDist).foreach(_.release())
   }
 
@@ -692,8 +707,9 @@ class OperatorsSpec extends AnyFunSuite {
     // rounds; BOTH descent routes
     val idx = Dedup.buildSuffixIndex(corpus, maxLen)
     assert(outSet(idx.decontaminateExternal(bench, minLen)) == joint)
-    assert(outSet(Dedup.decontaminateExternal(idx, bench, minLen,
-      driverPairRows = 0L)) == joint)
+    assert(withRoutes("dedup.descent" -> 0L) {
+      outSet(Dedup.decontaminateExternal(idx, bench, minLen))
+    } == joint)
     // in-session PINNED pair maps (withPairmaps — the in-memory
     // analogue of the saved artifact): identical results, no-op when
     // maps are present, and release() frees every pinned block
@@ -726,8 +742,9 @@ class OperatorsSpec extends AnyFunSuite {
     val loaded = Dedup.loadSuffixIndex(spark, dir)
     assert(loaded.pairmaps.nonEmpty) // persisted, not re-derived
     assert(outSet(loaded.decontaminateExternal(bench, minLen)) == joint)
-    assert(outSet(Dedup.decontaminateExternal(loaded, bench, minLen,
-      driverPairRows = 0L)) == joint)
+    assert(withRoutes("dedup.descent" -> 0L) {
+      outSet(Dedup.decontaminateExternal(loaded, bench, minLen))
+    } == joint)
     // cap behavior is CHUNKING, not failure (r15): a benchmark larger
     // than maxBenchPositions greedy-packs into doc-granularity chunks,
     // each run through the same query, per-position spans max-merged —
@@ -735,8 +752,10 @@ class OperatorsSpec extends AnyFunSuite {
     // chunks on this fixture (docs are ≤ ~48 tokens each)
     assert(outSet(loaded.decontaminateExternal(bench, minLen,
       maxBenchPositions = 60)) == joint)
-    assert(outSet(Dedup.decontaminateExternal(loaded, bench, minLen,
-      maxBenchPositions = 60, driverPairRows = 0L)) == joint)
+    assert(withRoutes("dedup.descent" -> 0L) {
+      outSet(Dedup.decontaminateExternal(loaded, bench, minLen,
+        maxBenchPositions = 60))
+    } == joint)
     // a SINGLE doc above the cap still fails loudly (splitting a doc
     // would corrupt its remaining-length clamp)
     val e = intercept[IllegalArgumentException](
@@ -857,8 +876,9 @@ class OperatorsSpec extends AnyFunSuite {
     assert(fed.shards.length == 3 && fed.shards.forall(_.nDocs > 0))
     assert(fed.nDocs == 18L)
     assert(outSet(fed.decontaminateExternal(bench, minLen)) == ref)
-    assert(outSet(fed.decontaminateExternal(bench, minLen,
-      driverPairRows = 0L)) == ref)
+    assert(withRoutes("dedup.descent" -> 0L) {
+      outSet(fed.decontaminateExternal(bench, minLen))
+    } == ref)
     assert(cutMap(fed.cutExternal(corpus, bench, minLen)) == refCut)
     // pinned pair maps: same answers, maps present on every shard
     val fedPm = fed.withPinnedPairmaps
@@ -1286,13 +1306,15 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got == expected.toList)
     assert(got.length == n)
     // size-route differential (r13): the distributed rounds (forced via
-    // driverVocabRows = 0) ≡ the in-driver incremental learner (the
-    // default here — this vocab is far below the bound), incl. ties and
+    // route bpe = 0) ≡ the in-driver incremental learner (the default
+    // here — this vocab is far below the bound), incl. ties and
     // identical-symbol runs
-    val gotDist = TextAnalysis.bpeTrain(d, n, driverVocabRows = 0)
-      .orderBy("rank").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4))).toSeq
+    val gotDist = withRoutes("bpe" -> 0L) {
+      TextAnalysis.bpeTrain(d, n)
+        .orderBy("rank").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getLong(4))).toSeq
+    }
     assert(gotDist == got)
     // apply_bpe: bpeSegment's pieces must equal the reference's final
     // vocabulary state for every distinct word
@@ -2152,23 +2174,26 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("graph fixpoints: driver-state path equals the cluster-side DataFrame path") {
     import spark.implicits._
-    // driverNodeLimit = 0 forces the web-scale shuffle-join rounds on the
+    // route graph.nodes = 0 forces the web-scale shuffle-join rounds on the
     // same fixture the default routes to the driver-state rounds — the
     // two paths must produce the identical integer recurrence
     val edges = (Seq(("h", "l1"), ("h", "l2"), ("h", "l3"), ("h", "l4")) ++
       Seq(("l1", "h"), ("l2", "h"), ("l3", "h"), ("l4", "h")) ++
       Seq(("x", "y"), ("y", "x"), ("y", "z"))).toDF("src", "dst")
-    def prMap(limit: Long) =
-      graft.operators.Graph.pageRank(edges, iters = 4, driverNodeLimit = limit)
+    def prMap(limit: Long) = withRoutes("graph.nodes" -> limit) {
+      graft.operators.Graph.pageRank(edges, iters = 4)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     assert(prMap(0L) == prMap(graft.operators.Graph.DefaultDriverNodeLimit))
-    def spMap(limit: Long) =
-      graft.operators.Graph.shortestPaths(edges, "h", iters = 3, driverNodeLimit = limit)
+    def spMap(limit: Long) = withRoutes("graph.nodes" -> limit) {
+      graft.operators.Graph.shortestPaths(edges, "h", iters = 3)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     assert(spMap(0L) == spMap(graft.operators.Graph.DefaultDriverNodeLimit))
-    def ccMap(limit: Long) =
-      graft.operators.Graph.minLabelComponents(edges, iters = 4, driverNodeLimit = limit)
+    def ccMap(limit: Long) = withRoutes("graph.nodes" -> limit) {
+      graft.operators.Graph.minLabelComponents(edges, iters = 4)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    }
     assert(ccMap(0L) == ccMap(graft.operators.Graph.DefaultDriverNodeLimit))
     assert(ccMap(0L)("z") == "x")
   }
@@ -2185,15 +2210,20 @@ class OperatorsSpec extends AnyFunSuite {
       // THREE routes per fixpoint (r15): nodeLimit 0 = cluster shuffle
       // joins; edgeLimit 0 = driver state + per-round RDD propagate;
       // defaults = all-driver rounds — all must agree bit-for-bit
-      def pr(nl: Long, el: Long) = graft.operators.Graph.pageRank(edges, iters = 3,
-        driverNodeLimit = nl, driverEdgeLimit = el)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      def cc(nl: Long, el: Long) = graft.operators.Graph.minLabelComponents(edges, iters = 5,
-        driverNodeLimit = nl, driverEdgeLimit = el)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      def sp(nl: Long, el: Long) = graft.operators.Graph.shortestPaths(edges, "v1", iters = 4,
-        driverNodeLimit = nl, driverEdgeLimit = el)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      def graph[A](nl: Long, el: Long)(f: => A): A =
+        withRoutes("graph.nodes" -> nl, "graph.edges" -> el)(f)
+      def pr(nl: Long, el: Long) = graph(nl, el) {
+        graft.operators.Graph.pageRank(edges, iters = 3)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      def cc(nl: Long, el: Long) = graph(nl, el) {
+        graft.operators.Graph.minLabelComponents(edges, iters = 5)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      }
+      def sp(nl: Long, el: Long) = graph(nl, el) {
+        graft.operators.Graph.shortestPaths(edges, "v1", iters = 4)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
       val (nodeDef, edgeDef) = (graft.operators.Graph.DefaultDriverNodeLimit,
         graft.operators.Graph.DefaultDriverEdgeLimit)
       assert(pr(0L, edgeDef) == pr(nodeDef, edgeDef), s"pageRank trial $trial")
@@ -2214,8 +2244,9 @@ class OperatorsSpec extends AnyFunSuite {
         a <- 1 to n; b <- 1 to n
         if a != b && rnd.nextDouble() < 0.3
       } yield (s"v$a", s"v$b")).toDF("src", "dst")
-      def tc(el: Long) = graft.operators.Graph.triangleCount(edges,
-        driverEdgeLimit = el).head().getLong(0)
+      def tc(el: Long) = withRoutes("graph.edges" -> el) {
+        graft.operators.Graph.triangleCount(edges).head().getLong(0)
+      }
       assert(tc(0L) == tc(graft.operators.Graph.DefaultDriverEdgeLimit),
         s"triangles trial $trial")
     }
@@ -2227,9 +2258,10 @@ class OperatorsSpec extends AnyFunSuite {
     // it in UTF-16 compareTo — the driver path must use the byte order
     val hi = "￿"; val supp = "𐀀" // U+10000
     val edges = Seq((hi, supp), (supp, hi)).toDF("src", "dst")
-    def lab(limit: Long) = graft.operators.Graph.minLabelComponents(edges,
-      iters = 2, driverNodeLimit = limit).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    def lab(limit: Long) = withRoutes("graph.nodes" -> limit) {
+      graft.operators.Graph.minLabelComponents(edges, iters = 2).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    }
     val driver = lab(graft.operators.Graph.DefaultDriverNodeLimit)
     val cluster = lab(0L)
     assert(driver == cluster)
@@ -2242,10 +2274,10 @@ class OperatorsSpec extends AnyFunSuite {
     // map lookups use Java equality, so without coercion "5" would never
     // match 5L and the result would silently be just the source row
     val edges = Seq((5L, 6L), (6L, 7L), (7L, 8L)).toDF("src", "dst")
-    def dists(limit: Long) =
-      graft.operators.Graph.shortestPaths(edges, "5", iters = 3,
-        driverNodeLimit = limit).collect()
+    def dists(limit: Long) = withRoutes("graph.nodes" -> limit) {
+      graft.operators.Graph.shortestPaths(edges, "5", iters = 3).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     val expected = Map(5L -> 0L, 6L -> 1L, 7L -> 2L, 8L -> 3L)
     assert(dists(graft.operators.Graph.DefaultDriverNodeLimit) == expected)
     assert(dists(0L) == expected) // forced cluster path agrees, same types
@@ -2299,50 +2331,113 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("size-route bounds honor spark.graft.* confs (r16)") {
     import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.bitemp.TxLog
+    import graft.datalog.{Planner, QuadSource}
+    def isLocal(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    def jobs[A](f: => A): (A, Int) = SparkJobs.count(spark)(f)
+    // every route key reaches its route: the same call, the key set to
+    // 0, takes the distributed form (seen in the plan or the job count)
+    // and computes the identical result
     val rnd = new scala.util.Random(21)
     val d = (0L until 16L).map { i =>
       (i, Seq.fill(12 + rnd.nextInt(10))("abcd"(rnd.nextInt(4)).toString).mkString(" "))
     }.toDF("doc_id", "text")
-    // default: a tiny corpus takes the driver-probe route (LocalRelation)
+    // dedup.probe: a tiny corpus takes the driver-probe route (LocalRelation)
     val spans = Dedup.exactDupSpans(d, minLen = 3, maxLen = 8)
-    assert(spans.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-    // conf-zeroed probe bound: the SAME call routes distributed without a
-    // recompile (r15 VERDICT #7) — and computes the identical spans
-    val spans2 = graft.sources.SessionConf.withConf(spark,
-      "spark.graft.driverProbeMax" -> "0") {
+    assert(isLocal(spans))
+    val spans2 = withRoutes("dedup.probe" -> 0L) {
       Dedup.exactDupSpans(d, minLen = 3, maxLen = 8)
     }
-    assert(!spans2.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(!isLocal(spans2))
     def spanSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
     assert(spanSet(spans) == spanSet(spans2))
     graft.sources.SessionCache.release(spans2)
-    // graph bounds through conf: a zeroed edge limit forces the non-driver
-    // routes, result unchanged (the route differential is pinned above —
-    // this pins the CONF plumbing reaches it)
+    // dedup.descent: the driver descent leaves nothing to release, the
+    // shuffled cascade its pre-filter checkpoint
+    val idx = Dedup.buildSuffixIndex(d, maxLen = 8)
+    val adj = idx.sa.select(col("_sa"), col("doc_id").as("da"), col("pos").as("pa"))
+      .join(idx.sa.select((col("_sa") - 1).as("_sa"), col("doc_id").as("db"),
+        col("pos").as("pb")), Seq("_sa"))
+      .select(col("da"), col("pa"), col("db"), col("pb"))
+    val (dv, dvRel) = Dedup.lcpDescent(adj, idx, 3, 8)
+    val (sh, shRel) = withRoutes("dedup.descent" -> 0L)(Dedup.lcpDescent(adj, idx, 3, 8))
+    assert(dvRel.isEmpty && shRel.nonEmpty)
+    def lcps(df: org.apache.spark.sql.DataFrame) =
+      spanSet(df.select("da", "pa", "db", "pb", "match_len"))
+    assert(lcps(dv) == lcps(sh))
+    graft.sources.SessionCache.release(shRel)
+    idx.release()
+    // dedup.components: driver union-find (LocalRelation) vs label rounds
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("d1", "d2")
+    val ccDriver = Dedup.connectedComponents(pairs)
+    val ccDist = withRoutes("dedup.components" -> 0L)(Dedup.connectedComponents(pairs))
+    assert(isLocal(ccDriver) && !isLocal(ccDist))
+    assert(spanSet(ccDriver) == spanSet(ccDist))
+    graft.sources.SessionCache.release(ccDist)
+    // graph.edges: a repeat call on the memoized snapshot runs no job,
+    // the edge-bound-zeroed call runs its rounds as jobs; graph.nodes:
+    // zeroed, the web-scale rounds leave a non-local frame
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
     def prSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     val prDefault = prSet(graft.operators.Graph.pageRank(edges, iters = 3))
-    val prConf = graft.sources.SessionConf.withConf(spark,
-      "spark.graft.driverEdgeLimit" -> "0") {
-      prSet(graft.operators.Graph.pageRank(edges, iters = 3))
+    val (prAgain, againJobs) = jobs(prSet(graft.operators.Graph.pageRank(edges, iters = 3)))
+    val (prEdges, edgeJobs) = withRoutes("graph.edges" -> 0L) {
+      jobs(prSet(graft.operators.Graph.pageRank(edges, iters = 3)))
     }
-    assert(prDefault == prConf)
-    // cumsum small bound through conf: 0 forces the two-pass form,
-    // bit-identical by the helper's total-order contract
+    assert(againJobs == 0 && edgeJobs > 0, s"jobs: $againJobs vs $edgeJobs")
+    val prNodesDf = withRoutes("graph.nodes" -> 0L)(graft.operators.Graph.pageRank(edges, iters = 3))
+    assert(!isLocal(prNodesDf))
+    assert(Set(prAgain, prEdges, prSet(prNodesDf)) == Set(prDefault))
+    // cumsum: the window form is one sorted partition, the two-pass form
+    // keeps its slices; bit-identical by the helper's total-order contract
     val rows = (1L to 60L).map(i => (i, i % 7)).toDF("id", "v")
-    val viaWindow = Sampling.distributedCumSum(rows, Seq.empty,
-      Seq(col("id")), col("v"), "cum")
-    val viaTwoPass = graft.sources.SessionConf.withConf(spark,
-      "spark.graft.cumSumSmallRows" -> "0") {
-      Sampling.distributedCumSum(rows, Seq.empty, Seq(col("id")), col("v"), "cum")
-    }
+    def cum() = Sampling.distributedCumSum(rows, Seq.empty, Seq(col("id")),
+      col("v"), "cum", slices = 5)
+    val viaWindow = cum()
+    val viaTwoPass = withRoutes("cumsum" -> 0L)(cum())
+    assert(viaWindow.rdd.getNumPartitions == 1 && viaTwoPass.rdd.getNumPartitions > 1)
     assert(viaWindow.collect().map(_.toSeq).toSet ==
       viaTwoPass.collect().map(_.toSeq).toSet)
     graft.sources.SessionCache.release(Seq(viaWindow, viaTwoPass))
+    // bpe: the in-driver learner needs one vocabulary pull, the
+    // distributed rounds at least a job per merge
+    val text = Seq("low lower lowest newer wider", "new newest low").toDF("text")
+    def merges() = TextAnalysis.bpeTrain(text, 6).orderBy("rank").collect().toSeq
+    val (bpeDriver, driverJobs) = jobs(merges())
+    val (bpeDist, distJobs) = withRoutes("bpe" -> 0L)(jobs(merges()))
+    assert(driverJobs < distJobs, s"jobs: $driverJobs vs $distJobs")
+    assert(bpeDriver == bpeDist)
+    // tx: the driver fold returns a LocalRelation state
+    val txTime = java.time.LocalDateTime.parse("2020-01-01T00:00:00")
+    val ops = spark.createDataFrame(java.util.Arrays.asList(
+      Row("put", "a", "h1", null, null, null, null, 1L),
+      Row("cas", "b", "h2", null, null, null, null, 2L)), TxLog.opSchema)
+    def tx() = TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, txTime)._1
+    val txDriver = tx()
+    val txDist = withRoutes("tx" -> 0L)(tx())
+    assert(isLocal(txDriver) && !isLocal(txDist))
+    assert(spanSet(txDriver) == spanSet(txDist))
+    // rules: the driver fixpoint collects one relation per round, the
+    // DataFrame fixpoint pays distinct/except/checkpoint jobs per round
+    val facts = (1L to 5L).map(i => Row(i, "edge", null, i + 1L, null))
+    val src = new QuadSource(spark.createDataFrame(
+      java.util.Arrays.asList(facts: _*), StructType(Seq(
+        StructField("e", LongType), StructField("a", StringType),
+        StructField("v_str", StringType), StructField("v_num", LongType),
+        StructField("v_bool", BooleanType)))), Map("edge" -> "v_num"))
+    def reach() = Planner.q(spark, src, """[:find x y :where [(path x y)]
+         :rules [[(path x y) [x :edge y]]
+                 [(path x y) (path x z) [z :edge y]]]]""")
+      .collect().map(_.toSeq).toSet
+    val (rulesDriver, ruleDriverJobs) = jobs(reach())
+    val (rulesDist, ruleDistJobs) = withRoutes("rules" -> 0L)(jobs(reach()))
+    assert(ruleDriverJobs < ruleDistJobs, s"jobs: $ruleDriverJobs vs $ruleDistJobs")
+    assert(rulesDriver == rulesDist && rulesDriver.size == 15)
   }
 
   test("driver probe declines identity-equality doc id types (r16 ADVICE)") {
@@ -2366,8 +2461,7 @@ class OperatorsSpec extends AnyFunSuite {
         java.nio.charset.StandardCharsets.UTF_8).toLong, r.getInt(1),
         r.getLong(2))).toSet
     // same corpus with long ids, distributed route forced: same spans
-    val spansLong = graft.sources.SessionConf.withConf(spark,
-      "spark.graft.driverProbeMax" -> "0") {
+    val spansLong = withRoutes("dedup.probe" -> 0L) {
       Dedup.exactDupSpans(base, minLen = 3, maxLen = 8)
     }
     val viaLong = spansLong.collect()

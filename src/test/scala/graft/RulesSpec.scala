@@ -263,14 +263,14 @@ class RulesSpec extends AnyFunSuite {
 
   // ------------- driver-state vs DataFrame fixpoint equivalence (r9)
 
-  /** Re-run `q` with `graft.rules.driverRowLimit` pinned to `limit`
+  /** Re-run `q` with route `rules` pinned to `limit`
     * (0 = force the cluster-resident DataFrame fixpoint; a tiny
     * positive value forces mid-fixpoint overflow and the rerun-from-
     * scratch fallback), restoring the session default afterwards. */
   private def runAt(limit: Int, src: QuadSource, q: String, args: Any*): Set[Seq[Any]] = {
-    spark.conf.set("graft.rules.driverRowLimit", limit.toString)
+    spark.conf.set("spark.graft.route.rules.maxRows", limit.toString)
     try run(src, q, args: _*)
-    finally spark.conf.unset("graft.rules.driverRowLimit")
+    finally spark.conf.unset("spark.graft.route.rules.maxRows")
   }
 
   test("driver-state and DataFrame fixpoints agree (single recursive rule)") {

@@ -20,7 +20,7 @@ class TxLogFoldSpec extends AnyFunSuite {
     * TxDriver's own route differential is the r16 test below. */
   private def dist[A](f: => A): A =
     graft.sources.SessionConf.withConf(spark,
-      "spark.graft.txDriverRows" -> "0")(f)
+      "spark.graft.route.tx.maxRows" -> "0")(f)
 
   private val vts = (1 to 6).map(i => LocalDateTime.parse(f"2020-01-0$i%dT00:00:00"))
 
@@ -206,7 +206,7 @@ class TxLogFoldSpec extends AnyFunSuite {
     // a 1-row bound can fit no real tx: every call must fall back to the
     // distributed path and still produce the oracle state
     val tight = graft.sources.SessionConf.withConf(spark,
-      "spark.graft.txDriverRows" -> "1") {
+      "spark.graft.route.tx.maxRows" -> "1") {
       TxLog.applyBatch(TxLog.emptyState(spark), txs)
     }
     assert(!tight.queryExecution.analyzed
@@ -214,5 +214,47 @@ class TxLogFoldSpec extends AnyFunSuite {
       "an over-bound batch must not route driver-side")
     assert(stateRows(tight) ==
       stateRows(dist(TxLog.applyBatchSeq(TxLog.emptyState(spark), txs))))
+  }
+
+  test("driver tx route declines op rows with a null seq (poisoned frame)") {
+    import scala.jdk.CollectionConverters._
+    val t = LocalDateTime.parse("2021-01-01T00:00:00")
+    // the distributed join drops a null-seq op; the driver fold must not
+    // read it as seq 0 and apply it
+    val ops = spark.createDataFrame(List(
+      Row("put", "a", "h1", vts(0), null, null, null, 1L),
+      Row("put", "b", "h2", vts(1), null, null, null, null),
+      Row("cas", "a", "h3", null, null, vts(2), "h1", 2L)
+    ).asJava, TxLog.opSchema)
+    val (one, _) = TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, t)
+    assert(!one.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "a null seq must decline the driver route")
+    assert(stateRows(one) ==
+      stateRows(dist(TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, t)._1)))
+    val txs = Seq((1L, t, ops))
+    assert(stateRows(TxLog.applyBatch(TxLog.emptyState(spark), txs)) ==
+      stateRows(dist(TxLog.applyBatch(TxLog.emptyState(spark), txs))))
+  }
+
+  test("driver tx route falls back on a non-fatal driver error (poisoned frame)") {
+    import scala.jdk.CollectionConverters._
+    val t = LocalDateTime.parse("2021-01-01T00:00:00")
+    // an int `seq` column: Spark widens it on the distributed path, the
+    // driver fold's getLong throws ClassCastException — which must send
+    // the call to the distributed path, not fail it
+    val ops = spark.createDataFrame(List(
+      Row("put", "a", "h1", vts(0), null, null, null, 1L),
+      Row("cas", "a", "h2", null, null, vts(2), "h1", 2L)
+    ).asJava, TxLog.opSchema)
+      .withColumn("seq", org.apache.spark.sql.functions.col("seq").cast("int"))
+    val (one, aborted) = TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, t)
+    val (oneDist, abortedDist) =
+      dist(TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, t))
+    assert(aborted == abortedDist)
+    assert(stateRows(one) == stateRows(oneDist))
+    val txs = Seq((1L, t, ops))
+    assert(stateRows(TxLog.applyBatch(TxLog.emptyState(spark), txs)) ==
+      stateRows(dist(TxLog.applyBatch(TxLog.emptyState(spark), txs))))
   }
 }

@@ -62,4 +62,34 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(cache.getOrBuild((spark, "k"))(41) == 41)
     assert(cache.getOrBuild((spark, "k"))(sys.error("must not rebuild")) == 41)
   }
+
+  test("capped memo: never over the cap, invalidated keys do not count") {
+    type K = (org.apache.spark.sql.SparkSession, Int)
+    val cache = new SessionCache[K, Int]
+    val cap = 8
+    // a burst of distinct misses: the size never exceeds the cap and
+    // the oldest entries go first
+    (0 until 40).foreach { i =>
+      cache.getOrBuild((spark, i), maxEntries = cap)(i)
+      assert(cache.size <= cap, s"after miss $i")
+    }
+    assert(cache.size == cap)
+    (32 until 40).foreach(i =>
+      assert(cache.getOrBuild((spark, i), maxEntries = cap)(-1) == i))
+    // invalidate half: those keys leave entirely, so the next misses
+    // fill the freed room instead of evicting live entries
+    cache.invalidateIf(_._2 % 2 == 0)
+    assert(cache.size == cap / 2)
+    (100 until 104).foreach(i => cache.getOrBuild((spark, i), maxEntries = cap)(i))
+    assert(cache.size == cap)
+    Seq(33, 35, 37, 39).foreach(i =>
+      assert(cache.getOrBuild((spark, i), maxEntries = cap)(-1) == i, s"live $i evicted"))
+    // a re-added invalidated key is a fresh (newest) entry: its miss
+    // evicts the oldest live entry (33), and the next miss keeps it
+    assert(cache.getOrBuild((spark, 32), maxEntries = cap)(320) == 320)
+    assert(cache.getOrBuild((spark, 33), maxEntries = cap)(-1) == -1)
+    assert(cache.getOrBuild((spark, 32), maxEntries = cap)(-1) == 320)
+    assert(cache.size == cap)
+  }
 }
+
