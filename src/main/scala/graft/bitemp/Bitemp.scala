@@ -63,6 +63,43 @@ object Bitemp {
       .filter(!col("tombstone"))
   }
 
+  /** One row of a driver-resident version state (the TxLog version
+    * schema); `contentHash` may be null. */
+  final case class Version(eid: String, vt: java.time.LocalDateTime,
+      tt: java.time.LocalDateTime, txId: Long, contentHash: String,
+      tombstone: Boolean)
+
+  private val versionKeyCols = Seq(0, 1, 2, 3, 5) // all but content_hash
+
+  /** Version-schema rows (column order of `TxLog.versionSchema`) as
+    * [[Version]]s; None when a row has a null eid, vt, tt, tx_id or
+    * tombstone, which the distributed resolvers read by SQL null rules
+    * that [[asOfLocal]] does not model. */
+  def versionsOf(rows: Array[org.apache.spark.sql.Row]): Option[Array[Version]] =
+    if (rows.exists(r => versionKeyCols.exists(r.isNullAt))) None
+    else Some(rows.map(r => Version(r.getString(0), r.getAs[java.time.LocalDateTime](1),
+      r.getAs[java.time.LocalDateTime](2), r.getLong(3), r.getString(4), r.getBoolean(5))))
+
+  /** The driver twin of [[asOf]] (`basis` Left(maxTxId)) and [[asOfTime]]
+    * (Right(txTime)) over resident versions: per entity the greatest
+    * (vt, tx_id) among rows with vt ≤ validTime and tx_id ≤ maxTxId (or
+    * tt ≤ txTime); a winning tombstone hides the entity. */
+  def asOfLocal(versions: Iterable[Version], validTime: java.time.LocalDateTime,
+      basis: Either[Long, java.time.LocalDateTime]): Iterable[Version] = {
+    val known: Version => Boolean = basis match {
+      case Left(maxTxId) => _.txId <= maxTxId
+      case Right(txTime) => !_.tt.isAfter(txTime)
+    }
+    val best = scala.collection.mutable.HashMap.empty[String, Version]
+    versions.foreach { v =>
+      if (!v.vt.isAfter(validTime) && known(v)) best.get(v.eid) match {
+        case Some(w) if { val c = v.vt.compareTo(w.vt); c < 0 || (c == 0 && v.txId <= w.txId) } => ()
+        case _ => best.update(v.eid, v)
+      }
+    }
+    best.values.filter(!_.tombstone)
+  }
+
   /** Entity history (crux-core/src/crux/kv/index_store.clj:524-554; API
     * crux-core/src/crux/query.clj:1859-1887).
     *

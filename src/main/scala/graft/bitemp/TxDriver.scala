@@ -30,7 +30,9 @@ import graft.sources.Route
   *
   * A 100 TB state (or a bulk tx) is over the bound after one bounded
   * collect and takes the unchanged distributed paths; so does an op list
-  * with a null `seq`, and any call whose driver body fails non-fatally.
+  * with a null `seq`, a state row with a null key column
+  * ([[Bitemp.versionsOf]]), and any call whose driver body fails
+  * non-fatally.
   */
 private[graft] object TxDriver {
 
@@ -41,8 +43,11 @@ private[graft] object TxDriver {
     * spec's lever). */
   private[graft] val DefaultTxDriverRows: Long = 1L << 17
 
-  private def bound(df: DataFrame): Long =
-    Route.maxRows(df.sparkSession, "tx", DefaultTxDriverRows)
+  /** The route's bound in `spark`'s session. */
+  private[graft] def maxRows(spark: org.apache.spark.sql.SparkSession): Long =
+    Route.maxRows(spark, "tx", DefaultTxDriverRows)
+
+  private def bound(df: DataFrame): Long = maxRows(df.sparkSession)
 
   private final case class OpRow(op: String, eid: String, hash: Option[String],
       startVt: Option[LocalDateTime], endVt: Option[LocalDateTime],
@@ -68,27 +73,13 @@ private[graft] object TxDriver {
 
   private implicit val ldtOrd: Ordering[LocalDateTime] = _ compareTo _
 
-  private final case class V(vt: LocalDateTime, tt: LocalDateTime,
-      txId: Long, hash: Option[String], tomb: Boolean)
-
-  /** In-memory version store; one instance per routed call. */
-  private final class MemState {
+  /** In-memory version store, seeded with the state; one instance per
+    * routed call. */
+  private final class MemState(state: Array[Bitemp.Version]) {
     val byEid = new scala.collection.mutable.HashMap[
-      String, scala.collection.mutable.ArrayBuffer[V]]
-
-    def seed(rows: Array[Row],
-        schema: org.apache.spark.sql.types.StructType): Unit = {
-      val (iE, iV, iT, iX, iH, iB) = (schema.fieldIndex("eid"),
-        schema.fieldIndex("vt"), schema.fieldIndex("tt"),
-        schema.fieldIndex("tx_id"), schema.fieldIndex("content_hash"),
-        schema.fieldIndex("tombstone"))
-      rows.foreach { r =>
-        byEid.getOrElseUpdate(r.getString(iE),
-          scala.collection.mutable.ArrayBuffer.empty[V]) +=
-          V(r.getAs[LocalDateTime](iV), r.getAs[LocalDateTime](iT),
-            r.getLong(iX), opt[String](r, iH), r.getBoolean(iB))
-      }
-    }
+      String, scala.collection.mutable.ArrayBuffer[Bitemp.Version]]
+    state.foreach(v => byEid.getOrElseUpdate(v.eid,
+      scala.collection.mutable.ArrayBuffer.empty[Bitemp.Version]) += v)
 
     /** Apply ONE transaction; returns true (state untouched) on a
       * match/cas abort. Mirrors [[TxLog.applyTx]]'s eager path exactly:
@@ -114,7 +105,7 @@ private[graft] object TxDriver {
           val resolved = byEid.getOrElse(c.eid, Nil).groupBy(_.vt)
             .iterator.map { case (vt, vs) =>
               val w = vs.maxBy(_.txId)
-              (vt, w.txId, -1L, w.hash)
+              (vt, w.txId, -1L, Option(w.contentHash))
             }
           val cands = resolved ++ txWrites.iterator
             .filter(w => w._1 == c.eid && w._5 < c.seq)
@@ -148,7 +139,7 @@ private[graft] object TxDriver {
       val emitted = foldOps.groupBy(_.eid).iterator.flatMap {
         case (eid, eops) =>
           val hist = byEid.getOrElse(eid, Nil).iterator.map(v =>
-            FoldIn(eid, 0, Some(v.vt), Some(v.tt), v.txId, v.hash, v.tomb,
+            FoldIn(eid, 0, Some(v.vt), Some(v.tt), v.txId, Option(v.contentHash), v.tombstone,
               "", None, 0L))
           TxLogFold.foldEntity(hist ++ eops.iterator)
       }.toArray
@@ -159,24 +150,29 @@ private[graft] object TxDriver {
         .foreach((e: String) => byEid.remove(e))
       emitted.foreach { r =>
         byEid.getOrElseUpdate(r.eid,
-          scala.collection.mutable.ArrayBuffer.empty[V]) +=
-          V(r.vt, r.tt, r.txId, r.hash, r.tomb)
+          scala.collection.mutable.ArrayBuffer.empty[Bitemp.Version]) +=
+          Bitemp.Version(r.eid, r.vt, r.tt, r.txId, r.hash.orNull, r.tomb)
       }
       false
     }
 
     def toDf(spark: org.apache.spark.sql.SparkSession): DataFrame = {
       import scala.jdk.CollectionConverters._
-      val rows = byEid.iterator.flatMap { case (eid, vs) =>
-        vs.iterator.map(v =>
-          Row(eid, v.vt, v.tt, v.txId, v.hash.orNull, v.tomb))
-      }.toList
+      val rows = byEid.valuesIterator.flatMap(_.iterator.map(v =>
+        Row(v.eid, v.vt, v.tt, v.txId, v.contentHash, v.tombstone))).toList
       spark.createDataFrame(rows.asJava, TxLog.versionSchema)
     }
   }
 
   private def stateCols(state: DataFrame): DataFrame =
     state.select(TxLog.versionSchema.fieldNames.map(col).toSeq: _*)
+
+  /** `state`'s rows in `TxLog.versionSchema` order, read without a job:
+    * Some only for a LocalRelation state (the form this route returns)
+    * within the bound. Any other state answers None without running
+    * anything, so a reader decides its route for free. */
+  private[graft] def residentRows(state: DataFrame): Option[Array[Row]] =
+    if (state.isLocal) Route.collect(stateCols(state), bound(state)) else None
 
   /** [[TxLog.applyTx]]'s driver route: Some((newState, aborted)) when
     * both the state and the tx fit the bound, None → distributed path. */
@@ -189,9 +185,9 @@ private[graft] object TxDriver {
         opRows <- Route.collect(opsSel, b)
         txOps <- opRowsOf(opRows, TxLog.opSchema)
         stRows <- Route.collect(stateCols(state), b)
+        st <- Bitemp.versionsOf(stRows)
       } yield {
-        val mem = new MemState
-        mem.seed(stRows, TxLog.versionSchema)
+        val mem = new MemState(st)
         if (mem.applyOne(txOps, txId, txTime)) (state, true)
         else (mem.toDf(state.sparkSession), false)
       }
@@ -218,9 +214,9 @@ private[graft] object TxDriver {
         opRows <- Route.collect(tagged, b)
         txOps <- opRowsOf(opRows, taggedSchema)
         stRows <- Route.collect(stateCols(state), b)
+        st <- Bitemp.versionsOf(stRows)
       } yield {
-        val mem = new MemState
-        mem.seed(stRows, TxLog.versionSchema)
+        val mem = new MemState(st)
         val byTx = opRows.map(_.getInt(0)).zip(txOps).groupMap(_._1)(_._2)
         txs.zipWithIndex.foreach { case ((txId, txTime, _), i) =>
           // aborted txs leave state unchanged (applyBatch contract)

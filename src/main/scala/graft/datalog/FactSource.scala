@@ -55,12 +55,12 @@ trait FactSource {
   *   source pivots the quads into one wide "entity" frame (single
   *   groupBy, map-side partial agg) and reuses the table compiler —
   *   schemaless pull without per-row driver fetches. */
-final class QuadSource(df: DataFrame, attrTypes: Map[String, String],
-    refAttrs: Set[String] = Set.empty,
+final class QuadSource(val df: DataFrame, val attrTypes: Map[String, String],
+    val refAttrs: Set[String] = Set.empty,
     /** cardinality-many attributes: the entity pivot aggregates these as
       * sorted value ARRAYS (one quad row per element stays the scan/join
       * representation) so pull returns every element, not max-one. */
-    multiAttrs: Set[String] = Set.empty,
+    val multiAttrs: Set[String] = Set.empty,
     /** see [[FactSource.cacheKey]] — set only for file-backed corpora */
     key: Option[String] = None) extends FactSource {
   override def cacheKey: Option[String] = key

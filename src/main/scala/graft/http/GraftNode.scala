@@ -3,7 +3,7 @@ package graft.http
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import graft.bitemp.{Bitemp, TxLog}
+import graft.bitemp.{Bitemp, TxDriver, TxLog}
 import graft.datalog.{FactSource, Planner}
 
 /** The node behind the HTTP surface: a content-addressed document store +
@@ -12,20 +12,27 @@ import graft.datalog.{FactSource, Planner}
   * (crux-http-server/src/crux/http_server.clj:447-451 builds the handler
   * around a started node).
   *
-  * State is two DataFrames, exactly the reference's split
+  * State is two stores, exactly the reference's split
   * (doc-store + tx-log/index, SURVEY §1.1):
   *
   *  - `versions` — eid/vt/tt/tx_id/content_hash/tombstone (TxLog schema)
-  *  - `docs` — content_hash → canonical doc JSON
+  *  - the doc store — content_hash → canonical doc JSON
   *
   * Writes go through [[TxLog.applyTx]] — the same single-writer fold as
   * batch/stream ingest, so HTTP `submit-tx` has identical semantics to the
   * other two ingest paths. Tx metadata (id, time, committed) is driver-side
   * bookkeeping, like the reference's tx-log consumer position.
   *
-  * Reads never collect whole tables to the driver: entity resolution
-  * filters to one eid before resolving; query results stream out through
-  * `toLocalIterator` in the server (crux's open-q cursor re-expressed).
+  * Up to the `tx` size route's bound (`spark.graft.route.tx.maxRows`,
+  * default 2^17 rows) the state lives in driver memory: the tx fold
+  * leaves `versions` a LocalRelation and the doc store is a driver map,
+  * so put-only txs and [[db]] snapshots run no Spark job. Above the bound,
+  * and for a state loaded from files, both are distributed DataFrames:
+  * txs union and checkpoint the doc store, snapshots resolve with a
+  * distributed plan, and no read collects a whole table to the driver —
+  * entity resolution filters to one eid before resolving; query results
+  * stream out through `toLocalIterator` in the server (crux's open-q
+  * cursor re-expressed).
   */
 final class GraftNode(val spark: SparkSession, val source: FactSource,
     sqlDir: Option[String] = None,
@@ -35,11 +42,8 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     fnAllowList: Option[Seq[String]] = None) {
 
   @volatile private var versions: DataFrame = TxLog.emptyState(spark)
-  @volatile private var docs: DataFrame = spark.createDataFrame(
-    new java.util.ArrayList[Row](),
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("content_hash", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("doc", org.apache.spark.sql.types.StringType))))
+  @volatile private var docs: GraftNode.DocStore =
+    GraftNode.DocStore.resident(spark, Map.empty)
 
   final case class TxInfo(txId: Long, txTime: java.time.LocalDateTime, committed: Boolean)
   private val txs = new java.util.concurrent.CopyOnWriteArrayList[TxInfo]()
@@ -50,7 +54,10 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
 
   /** Pre-load the version index + doc store (e.g. from parquet) — the
     * "node started over an existing tx-log" case. */
-  def loadState(v: DataFrame, d: DataFrame): Unit = synchronized {
+  def loadState(v: DataFrame, d: DataFrame): Unit =
+    load(v, GraftNode.DocStore.of(d))
+
+  private def load(v: DataFrame, d: GraftNode.DocStore): Unit = synchronized {
     versions = v
     docs = d
     val top = v.agg(max("tx_id"), max("tt")).head()
@@ -61,7 +68,7 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
   }
 
   def currentVersions: DataFrame = versions
-  def currentDocs: DataFrame = docs
+  def currentDocs: DataFrame = docs.frame
 
   // ------------------------------------------------------------------ tx
 
@@ -79,15 +86,12 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     * (fork_test.clj:91: a with-tx put on a future db lands at the db's
     * valid time, not "now"). */
   def submitTxAt(ops: List[JValue], defaultVt: Option[java.time.LocalDateTime]): TxInfo = synchronized {
+    // parse first: a refused op list takes no tx id
+    val parsed = ops.zipWithIndex.map { case (op, seq) => parseOp(op, seq) }
     val txId = txIdGen.incrementAndGet()
     val txTime = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-    val parsed = ops.zipWithIndex.map { case (op, seq) => parseOp(op, seq) }
     val newDocs = parsed.collect { case (_, Some((hash, doc))) => (hash, doc) }.distinct
-    if (newDocs.nonEmpty) {
-      import spark.implicits._
-      docs = docs.unionByName(newDocs.toDF("content_hash", "doc")).distinct()
-        .localCheckpoint(true)
-    }
+    if (newDocs.nonEmpty) docs = docs.add(newDocs)
     var opRows = spark.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(parsed.map(_._1)).asJava, TxLog.opSchema)
     defaultVt.foreach { vt =>
@@ -127,7 +131,7 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     txId.foreach(id => base = base.filter(col("tx_id") <= id))
     txTime.foreach(tt => base = base.filter(col("tt") <= tt))
     val fork = new GraftNode(spark, source, sqlDir, fnAllowList)
-    fork.loadState(base, docs)
+    fork.load(base, docs)
     val info = fork.submitTxAt(ops, validTime)
     if (info.committed) Some(fork) else None
   }
@@ -142,12 +146,10 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     * explicit maintenance call (crux runs it inside the evict tx; a
     * 100 TB store wants it batched off the write path). */
   def gcDocs(): Long = synchronized {
-    val before = docs.count()
-    docs = docs.join(
-        versions.select(col("content_hash")).filter(col("content_hash").isNotNull).distinct(),
-        Seq("content_hash"), "left_semi")
-      .localCheckpoint(true)
-    before - docs.count()
+    val (kept, dropped) = docs.retain(
+      versions.select(col("content_hash")).filter(col("content_hash").isNotNull).distinct())
+    docs = kept
+    dropped
   }
 
   /** One tx op → (TxLog op row, optional new doc). */
@@ -156,11 +158,25 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
       case JString(s) => java.time.LocalDateTime.parse(s)
       case other => throw new IllegalArgumentException(s"expected timestamp string, got $other")
     }
+    // a doc headed for the store: (hash, canonical JSON). Its integer
+    // facts are Longs, so one outside the Long range is refused here
+    // rather than wrapped when the doc is exploded to quads; nested
+    // objects are opaque JSON values and keep their integers as written
+    def stored(doc: JObject): (String, String) = {
+      def inRange(v: JValue): Unit = v match {
+        case JInt(n) if !n.isValidLong => throw new IllegalArgumentException(
+          s"integer $n is outside the 64-bit range a fact value holds")
+        case JArray(items) => items.foreach(inRange)
+        case _ => ()
+      }
+      doc.obj.foreach { case (_, v) => inRange(v) }
+      val json = Json.render(canonical(doc))
+      (sha256(json), json)
+    }
     op match {
       case JArray(JString("put") :: (doc: JObject) :: rest) =>
         val eid = eidOf(doc)
-        val json = Json.render(canonical(doc))
-        val hash = sha256(json)
+        val (hash, json) = stored(doc)
         val (svt, evt) = rest match {
           case Nil => (null, null)
           case vt :: Nil => (ts(vt), null)
@@ -195,9 +211,9 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
           case JNull => null
           case o => throw new IllegalArgumentException(s"cas old-doc must be doc or null, got $o")
         }
-        val json = Json.render(canonical(newDoc))
-        (Row("cas", eidStr(eid), sha256(json), null, null, atVt, expHash, seq.toLong),
-          Some(sha256(json) -> json))
+        val (hash, json) = stored(newDoc)
+        (Row("cas", eidStr(eid), hash, null, null, atVt, expHash, seq.toLong),
+          Some(hash -> json))
       case JArray(JString("evict") :: eid :: Nil) =>
         (Row("evict", eidStr(eid), null, null, null, null, null, seq.toLong), None)
       case other => throw new IllegalArgumentException(s"unsupported tx-op $other")
@@ -270,9 +286,7 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
   def entityDoc(eid: String, validTime: Option[java.time.LocalDateTime],
       txTime: Option[java.time.LocalDateTime], txId: Option[Long]): Option[JValue] =
     entityTx(eid, validTime, txTime, txId).flatMap { row =>
-      val hash = row.getAs[String]("content_hash")
-      docs.filter(col("content_hash") === hash).limit(1).collect().headOption
-        .map(r => Json.parse(r.getAs[String]("doc")))
+      docs.lookup(row.getAs[String]("content_hash")).map(Json.parse(_))
     }
 
   /** Entity history rows (+docs when asked) — crux.api/entity-history.
@@ -293,7 +307,7 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
       val sort =
         if (sortAsc) Seq(col("vt").asc, col("tx_id").asc)
         else Seq(col("vt").desc, col("tx_id").desc)
-      h.join(docs, Seq("content_hash"), "left")
+      h.join(docs.frame, Seq("content_hash"), "left")
         .select((Bitemp.metaCols.map(col) :+ col("doc")): _*)
         .orderBy(sort: _*)
     } else h
@@ -411,18 +425,23 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     * doc JSON into EAV quads (arrays become one fact per element — crux
     * cardinality-many; JSON null is a nil-valued fact; nested objects are
     * carried as their canonical JSON string, an opaque value). Attribute
-    * type families come from one small aggregate over the quads (the
+    * type families come from one per-attribute summary of the quads (the
     * analogue of the reference's attribute stats); an attribute holding
     * several families binds tagged/Mixed.
     *
-    * Scale: doc→quad explosion is a distributed flatMap over the resolved
-    * snapshot (never a driver collect); only the per-ATTRIBUTE family
-    * summary (#attrs rows) reaches the driver. */
+    * Scale: while the node's state is driver-resident — `versions` the
+    * LocalRelation the `tx` route leaves, within its bound
+    * (`spark.graft.route.tx.maxRows`, default 2^17 rows), and the doc
+    * store a driver map — the snapshot is built in driver memory with no
+    * Spark job, and its quads are an RDD parallelized from there. Any
+    * other state takes the distributed form, decided without a job: the
+    * resolve is a distributed aggregate, doc→quad explosion a distributed
+    * flatMap (never a driver collect) checkpointed once per handle, and
+    * only the per-ATTRIBUTE family summary (#attrs rows) reaches the
+    * driver. */
   def db(validTime: Option[java.time.LocalDateTime] = None,
       txTime: Option[java.time.LocalDateTime] = None,
       txId: Option[Long] = None): graft.datalog.FactSource = {
-    import spark.implicits._
-    import graft.datalog.QuadSource
     // NodeOutOfSyncException analogue (api_test.clj:359, issue 546): a
     // tx basis past the last INDEXED tx cannot be served consistently.
     // Aborted txs still advance the index (the reference's await-tx
@@ -440,36 +459,57 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
         s"node out of sync: requested tx-id $id is after " +
           s"latest completed ${latest.map(_.txId).getOrElse("none")}")
     }
-    val now = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-    val vt = lit(validTime.getOrElse(now))
-    val resolved = (txTime, txId) match {
-      case (_, Some(id)) => Bitemp.asOf(versions, vt, lit(id))
-      case (Some(tt), _) => Bitemp.asOfTime(versions, vt, lit(tt))
-      case _ => Bitemp.asOf(versions, vt, lit(Long.MaxValue))
+    val vt = validTime.getOrElse(java.time.LocalDateTime.now(java.time.ZoneOffset.UTC))
+    val basis: Either[Long, java.time.LocalDateTime] = (txTime, txId) match {
+      case (_, Some(id)) => Left(id)
+      case (Some(tt), _) => Right(tt)
+      case _ => Left(Long.MaxValue)
+    }
+    val (state, store) = (versions, docs)
+    residentDb(state, store, vt, basis)
+      .getOrElse(distributedDb(state, store.frame, vt, basis))
+  }
+
+  /** [[db]]'s driver form; None (no job run) unless the state is
+    * driver-resident, and None on any non-fatal error in its body. */
+  private def residentDb(state: DataFrame, store: GraftNode.DocStore,
+      vt: java.time.LocalDateTime,
+      basis: Either[Long, java.time.LocalDateTime]): Option[graft.datalog.QuadSource] =
+    store.resident.flatMap { byHash =>
+      graft.sources.Route.attempt {
+        TxDriver.residentRows(state).flatMap(Bitemp.versionsOf).map { vs =>
+          val quads = Bitemp.asOfLocal(vs, vt, basis).toSeq.flatMap { v =>
+            byHash.get(v.contentHash).toSeq.flatMap(GraftNode.docQuads(v.eid, _))
+          }
+          // parallelized from driver memory, not a LocalRelation: both
+          // build with no job, but over a LocalRelation Catalyst evaluates
+          // every attribute frame's filter on the driver while optimizing
+          // each query (3x the optimization time of a scanned frame)
+          val slices = math.min(spark.sparkContext.defaultParallelism,
+            quads.size / GraftNode.QuadsPerSlice + 1)
+          GraftNode.snapshot(
+            spark.createDataFrame(spark.sparkContext.parallelize(quads, slices))
+              .toDF(GraftNode.QuadCols: _*),
+            GraftNode.AttrFamily.of(quads))
+        }
+      }
+    }
+
+  /** [[db]]'s distributed form. */
+  private def distributedDb(state: DataFrame, docFrame: DataFrame,
+      vt: java.time.LocalDateTime,
+      basis: Either[Long, java.time.LocalDateTime]): graft.datalog.QuadSource = {
+    import spark.implicits._
+    val resolved = basis match {
+      case Left(id) => Bitemp.asOf(state, lit(vt), lit(id))
+      case Right(tt) => Bitemp.asOfTime(state, lit(vt), lit(tt))
     }
     val withDocs = resolved.filter(!col("tombstone"))
       .select(col("eid"), col("content_hash"))
-      .join(docs, Seq("content_hash"))
+      .join(docFrame, Seq("content_hash"))
       .select(col("eid"), col("doc")).as[(String, String)]
-    val quads = withDocs.flatMap { case (eid, doc) =>
-      def rows(a: String, v: JValue): Seq[(String, String, String, Option[Long], Option[Double], Option[Boolean])] =
-        v match {
-          case JArray(items) => items.flatMap(rows(a, _))
-          case JString(s) => Seq((eid, a, s, None, None, None))
-          case JInt(n) => Seq((eid, a, null, Some(n.toLong), None, None))
-          case JLong(n) => Seq((eid, a, null, Some(n), None, None))
-          case JDouble(d) => Seq((eid, a, null, None, Some(d), None))
-          case JDecimal(d) => Seq((eid, a, null, None, Some(d.toDouble), None))
-          case JBool(b) => Seq((eid, a, null, None, None, Some(b)))
-          case JNull | JNothing => Seq((eid, a, null, None, None, None))
-          case other: JObject => Seq((eid, a, Json.render(other), None, None, None))
-          case other => Seq((eid, a, Json.render(other), None, None, None))
-        }
-      Json.parse(doc) match {
-        case JObject(fields) => fields.flatMap { case (a, v) => rows(a, v) }
-        case _ => Nil
-      }
-    }.toDF("e", "a", "v_str", "v_num", "v_dbl", "v_bool")
+    val quads = withDocs.flatMap { case (eid, doc) => GraftNode.docQuads(eid, doc) }
+      .toDF(GraftNode.QuadCols: _*)
       // materialize the snapshot once: every attribute frame of every
       // query against this db handle scans the checkpointed quads
       // instead of re-running resolve + JSON parse per frame (the
@@ -481,27 +521,10 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
       count(when(col("v_str").startsWith(":"), 1)).as("nkw"),
       count(lit(1)).as("npe"))
     val fams = perEA.groupBy("a").agg(
-      sum("ns").as("ns"), sum("nn").as("nn"), sum("nd").as("nd"),
-      sum("nb").as("nb"), sum("nkw").as("nkw"), max("npe").as("maxPerE")).collect()
-    val attrTypes = fams.map { r =>
-      val present = Seq("v_str" -> r.getLong(1), "v_num" -> r.getLong(2),
-        "v_dbl" -> r.getLong(3), "v_bool" -> r.getLong(4))
-        .filter(_._2 > 0).map(_._1)
-      r.getString(0) -> (present match {
-        case Seq(one) => one
-        case Seq() => "v_str" // nil-only facts
-        case _ => QuadSource.Mixed
-      })
-    }.toMap
-    // an attribute whose every value is a keyword MAY reference entities —
-    // the reference follows any pull-join value that resolves to an
-    // entity (pull.clj); joins on non-entity keywords simply find nothing
-    val refAttrs = fams.collect { case r if r.getLong(5) > 0 &&
-      r.getLong(5) == r.getLong(1) && r.getLong(2) + r.getLong(3) + r.getLong(4) == 0 =>
-      r.getString(0)
-    }.toSet
-    val multiAttrs = fams.collect { case r if r.getLong(6) > 1 => r.getString(0) }.toSet
-    new QuadSource(quads, attrTypes, refAttrs = refAttrs, multiAttrs = multiAttrs)
+      sum("ns").as("strs"), sum("nn").as("longs"), sum("nd").as("doubles"),
+      sum("nb").as("bools"), sum("nkw").as("keywords"), max("npe").as("maxPerEntity"))
+      .as[GraftNode.AttrFamily].collect()
+    GraftNode.snapshot(quads, fams.toSeq)
   }
 
   /** `api/q` against [[db]] — query the node's ingested documents at a
@@ -563,4 +586,136 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
 
 object GraftNode {
   private val nodeIds = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** One EAV fact of a snapshot: entity, attribute and the value in the
+    * column of its family (all value columns null for a nil fact). */
+  private[http] type Quad = (String, String, String, Option[Long], Option[Double], Option[Boolean])
+  private[http] val QuadCols: Seq[String] = Seq("e", "a", "v_str", "v_num", "v_dbl", "v_bool")
+  /** Quads per partition of a driver-built snapshot: a small snapshot
+    * scans as one task, a large one spreads up to the default
+    * parallelism. */
+  private val QuadsPerSlice = 1 << 16
+
+  /** One stored doc's quads — the explode both [[GraftNode.db]] forms
+    * run: a fact per top-level field, one per element of an array, a
+    * nested object as its canonical JSON string. */
+  private[http] def docQuads(eid: String, doc: String): Seq[Quad] = {
+    def rows(a: String, v: JValue): Seq[Quad] = v match {
+      case JArray(items) => items.flatMap(rows(a, _))
+      case JString(s) => Seq((eid, a, s, None, None, None))
+      case JInt(n) => Seq((eid, a, null, Some(n.toLong), None, None))
+      case JLong(n) => Seq((eid, a, null, Some(n), None, None))
+      case JDouble(d) => Seq((eid, a, null, None, Some(d), None))
+      case JDecimal(d) => Seq((eid, a, null, None, Some(d.toDouble), None))
+      case JBool(b) => Seq((eid, a, null, None, None, Some(b)))
+      case JNull | JNothing => Seq((eid, a, null, None, None, None))
+      case other => Seq((eid, a, Json.render(other), None, None, None))
+    }
+    Json.parse(doc) match {
+      case JObject(fields) => fields.flatMap { case (a, v) => rows(a, v) }
+      case _ => Nil
+    }
+  }
+
+  /** One attribute's value families over a snapshot's quads: facts per
+    * value column, keyword strings, and the most facts one entity holds.
+    * Both [[GraftNode.db]] forms fill it; [[snapshot]] reads it. */
+  private[http] final case class AttrFamily(a: String, strs: Long, longs: Long, doubles: Long,
+      bools: Long, keywords: Long, maxPerEntity: Long)
+
+  private[http] object AttrFamily {
+    /** The summary of driver-side quads. */
+    def of(quads: Seq[Quad]): Seq[AttrFamily] =
+      quads.groupBy(_._2).iterator.map { case (a, qs) =>
+        AttrFamily(a, qs.count(_._3 != null), qs.count(_._4.isDefined),
+          qs.count(_._5.isDefined), qs.count(_._6.isDefined),
+          qs.count(q => q._3 != null && q._3.startsWith(":")),
+          qs.groupBy(_._1).valuesIterator.map(_.size.toLong).max)
+      }.toSeq
+  }
+
+  /** The snapshot's Datalog source: quads plus the attribute types,
+    * reference attributes and cardinality-many attributes of `fams`. */
+  private[http] def snapshot(quads: DataFrame, fams: Seq[AttrFamily]): graft.datalog.QuadSource = {
+    val attrTypes = fams.map { f =>
+      val present = Seq("v_str" -> f.strs, "v_num" -> f.longs,
+        "v_dbl" -> f.doubles, "v_bool" -> f.bools).filter(_._2 > 0).map(_._1)
+      f.a -> (present match {
+        case Seq(one) => one
+        case Seq() => "v_str" // nil-only facts
+        case _ => graft.datalog.QuadSource.Mixed
+      })
+    }.toMap
+    // an attribute whose every value is a keyword MAY reference entities —
+    // the reference follows any pull-join value that resolves to an
+    // entity (pull.clj); joins on non-entity keywords simply find nothing
+    val refAttrs = fams.collect { case f if f.keywords > 0 && f.keywords == f.strs &&
+      f.longs + f.doubles + f.bools == 0 => f.a }.toSet
+    val multiAttrs = fams.collect { case f if f.maxPerEntity > 1 => f.a }.toSet
+    new graft.datalog.QuadSource(quads, attrTypes, refAttrs = refAttrs, multiAttrs = multiAttrs)
+  }
+
+  /** The node's content-addressed doc store. `resident` (hash → canonical
+    * doc JSON in driver memory) while it fits the `tx` route's bound, so
+    * a tx adds docs and a snapshot reads them with no job; `frame` is
+    * then a LocalRelation built on first use. Otherwise `frame` alone,
+    * the distributed form. Immutable, so a fork shares it. */
+  private[http] final class DocStore private (spark: SparkSession,
+      val resident: Option[Map[String, String]], distributed: DataFrame) {
+
+    lazy val frame: DataFrame = resident match {
+      case Some(byHash) =>
+        import spark.implicits._
+        byHash.toSeq.toDF("content_hash", "doc")
+      case None => distributed
+    }
+
+    def lookup(hash: String): Option[String] = resident match {
+      case Some(byHash) => byHash.get(hash)
+      case None => frame.filter(col("content_hash") === hash).limit(1).collect()
+        .headOption.map(_.getAs[String]("doc"))
+    }
+
+    /** This store plus `docs`: still resident while the union fits the
+      * bound, else the distributed union, deduped and checkpointed. */
+    def add(docs: Seq[(String, String)]): DocStore =
+      resident.map(_ ++ docs).filter(_.size <= TxDriver.maxRows(spark)) match {
+        case Some(byHash) => DocStore.resident(spark, byHash)
+        case None =>
+          import spark.implicits._
+          new DocStore(spark, None, frame.unionByName(docs.toDF("content_hash", "doc"))
+            .distinct().localCheckpoint(true))
+      }
+
+    /** Keep only the docs whose hash is in `live`; returns the new store
+      * and how many docs it dropped. A resident store pulls its kept
+      * docs (at most its own size) back to the driver. */
+    def retain(live: DataFrame): (DocStore, Long) = {
+      val kept = frame.join(live, Seq("content_hash"), "left_semi")
+      resident match {
+        case Some(byHash) =>
+          val next = kept.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+          (DocStore.resident(spark, next), (byHash.size - next.size).toLong)
+        case None =>
+          val before = frame.count()
+          val cp = kept.localCheckpoint(true)
+          (new DocStore(spark, None, cp), before - cp.count())
+      }
+    }
+  }
+
+  private[http] object DocStore {
+    def resident(spark: SparkSession, byHash: Map[String, String]): DocStore =
+      new DocStore(spark, Some(byHash), null)
+
+    /** A loaded doc frame: resident when it is a LocalRelation within the
+      * bound (read with no job), else kept as the distributed form. */
+    def of(d: DataFrame): DocStore = {
+      val spark = d.sparkSession
+      val pulled = if (!d.isLocal) None else graft.sources.Route.collect(
+        d.select(col("content_hash"), col("doc")), TxDriver.maxRows(spark))
+      pulled.fold(new DocStore(spark, None, d))(rows => resident(spark,
+        rows.iterator.filter(!_.isNullAt(0)).map(r => r.getString(0) -> r.getString(1)).toMap))
+    }
+  }
 }

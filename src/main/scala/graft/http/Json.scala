@@ -44,7 +44,9 @@ object Json {
     case JString(s) => s
     case JBool(b) => b
     case JLong(l) => l
-    case JInt(i) => i.toLong
+    case JInt(i) if i.isValidLong => i.toLong
+    case JInt(i) => throw new IllegalArgumentException(
+      s"integer $i is outside the 64-bit range a value holds")
     case JDouble(d) => d
     case JDecimal(d) => d.bigDecimal
     case JArray(xs) => xs.map(fromJValue)

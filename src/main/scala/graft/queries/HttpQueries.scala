@@ -115,7 +115,10 @@ object HttpQueries {
     * r3): put the first customers as JSON docs through submit-tx, then
     * run a Datalog query against the doc-store snapshot — the full
     * ingest → bitemporal resolve → doc→quad explode → plan path,
-    * oracle-checked against the same rows straight off the parquet. */
+    * oracle-checked against the same rows straight off the parquet.
+    * These few dozen docs sit far under the `tx` route's bound, so the tx and
+    * the snapshot take their driver forms and run no Spark job; the
+    * distributed forms are pinned equal to them by NodeSnapshotSpec. */
   def nodeDbQuery(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val node = new GraftNode(s, TableSource.tpch(s, dir))

@@ -431,6 +431,14 @@ class HttpSpec extends AnyFunSuite {
       assert(qc == 400, qbody)                                  // planner rejects pre-stream
       assert(post(port, "/_crux/submit-tx", """{"tx-ops": [["frobnicate", 1]]}""")._1 == 400)
       assert(get(port, "/_crux/tx-committed?tx-id=999")._1 == 400)
+      // an integer past the 64-bit range is refused, not wrapped to 0
+      val tooBig = "18446744073709551616"
+      val (tc, tbody) = post(port, "/_crux/submit-tx",
+        s"""{"tx-ops": [["put", {"crux.db/id": ":big", "n": $tooBig}]]}""")
+      assert(tc == 400, tbody)
+      val (ic, ibody) = post(port, "/_crux/query",
+        s"""{"query": "{:find [?n] :in [?n] :where [[(identity ?n)]]}", "in-args": [$tooBig]}""")
+      assert(ic == 400, ibody)
     }
   }
 }

@@ -234,6 +234,28 @@ class NodeQuerySpec extends AnyFunSuite {
       Set(Seq("an untyped value"), Seq("123")))
   }
 
+  test("integers outside the Long range are refused, not wrapped; Long.MaxValue round-trips") {
+    val node = newNode()
+    val tooBig = BigInt("18446744073709551616") // 2^64: wraps to 0 as a Long
+    // a top-level value and an array element are both refused at submit,
+    // and a refused op list takes no tx id
+    intercept[IllegalArgumentException](node.submitTx(List(
+      put(("crux.db/id" -> ":big") ~ ("n" -> JInt(tooBig))))))
+    intercept[IllegalArgumentException](node.submitTx(List(
+      put(("crux.db/id" -> ":big") ~ ("ns" -> JArray(List(JInt(1), JInt(-tooBig))))))))
+    assert(node.latestSubmittedTx.isEmpty)
+    // the extremes of the range are kept exactly
+    val tx = node.submitTx(List(
+      put(("crux.db/id" -> ":max") ~ ("n" -> JInt(BigInt(Long.MaxValue)))),
+      put(("crux.db/id" -> ":min") ~ ("n" -> JInt(BigInt(Long.MinValue))))))
+    assert(tx.txId == 1L)
+    assert(q(node, """{:find [?e ?n] :where [[?e :n ?n]]}""") ==
+      Set(Seq(":max", Long.MaxValue), Seq(":min", Long.MinValue)))
+    // the HTTP in-arg decoder refuses the same way
+    intercept[IllegalArgumentException](graft.http.Json.fromJValue(JInt(tooBig)))
+    assert(graft.http.Json.fromJValue(JInt(BigInt(Long.MaxValue))) == Long.MaxValue)
+  }
+
   test("gcDocs drops content no live version references after evict") {
     val node = newNode()
     node.submitTx(List(

@@ -3,8 +3,10 @@
 # src/main or the oracle SQL in a round (SCALE.md "Release-process rule"):
 #
 #   1. full ScalaTest suite
-#   2. Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
-#   3. full Bench at sf0.1 (JSON line on stdout)
+#   2. perfbench build + unit tests (perfbench compiles the program from
+#      source, so a GraftNode/TxLog API change that breaks it is red here)
+#   3. Verify dump at sf0.01 + DuckDB oracle compare (the driver's gate)
+#   4. full Bench at sf0.1 (JSON line on stdout)
 #
 # Exits non-zero on the first red. Timestamps printed for the SCALE.md
 # record. Usage: tools/gate.sh [outdir]   (default /tmp/graft_gate)
@@ -21,6 +23,13 @@ sbt -batch test > "$OUT/sbt_test.log" 2>&1 || {
   echo "gate: sbt test RED"; exit 1; }
 grep -E "Tests: succeeded" "$OUT/sbt_test.log" | tail -1 || true
 echo "gate: sbt test end $(stamp)"
+
+echo "gate: perfbench test start $(stamp)"
+(cd perfbench && sbt -batch test) > "$OUT/perfbench_test.log" 2>&1 || {
+  grep -E "Tests:|FAILED|Failed tests|\[error\]" "$OUT/perfbench_test.log" | tail -10 || true
+  echo "gate: perfbench test RED"; exit 1; }
+grep -E "Tests: succeeded" "$OUT/perfbench_test.log" | tail -1 || true
+echo "gate: perfbench test end $(stamp)"
 
 echo "gate: verify start $(stamp)"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
