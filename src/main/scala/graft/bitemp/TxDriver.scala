@@ -49,23 +49,29 @@ private[graft] object TxDriver {
 
   private def bound(df: DataFrame): Long = maxRows(df.sparkSession)
 
-  private final case class OpRow(op: String, eid: String, hash: Option[String],
+  private[graft] final case class OpRow(op: String, eid: String, hash: Option[String],
       startVt: Option[LocalDateTime], endVt: Option[LocalDateTime],
       atVt: Option[LocalDateTime], expected: Option[String], seq: Long)
+
+  /** The op kinds [[MemState.applyOne]] models as [[TxLog.applyTxParts]]
+    * does; any other kind declines the route. */
+  private val modelledOps = Set("put", "delete", "cas", "match", "evict")
 
   private def opt[A](r: Row, i: Int): Option[A] =
     if (r.isNullAt(i)) None else Some(r.getAs[A](i))
 
-  /** None when any op row has a null `seq`: the distributed join drops
-    * such rows, so the route declines rather than guess an order. */
-  private def opRowsOf(rows: Array[Row],
+  /** None when any op row has a null `seq` (the distributed join drops
+    * such rows, so the route declines rather than guess an order), a null
+    * `eid`, or an op kind outside [[modelledOps]]. */
+  private[graft] def opRowsOf(rows: Array[Row],
       schema: org.apache.spark.sql.types.StructType): Option[Array[OpRow]] = {
     val (iOp, iEid, iH, iS, iE, iA, iX, iQ) = (schema.fieldIndex("op"),
       schema.fieldIndex("eid"), schema.fieldIndex("content_hash"),
       schema.fieldIndex("start_vt"), schema.fieldIndex("end_vt"),
       schema.fieldIndex("at_vt"), schema.fieldIndex("expected_hash"),
       schema.fieldIndex("seq"))
-    if (rows.exists(_.isNullAt(iQ))) None
+    if (rows.exists(r => r.isNullAt(iQ) || r.isNullAt(iEid) ||
+        !modelledOps.contains(r.getString(iOp)))) None
     else Some(rows.map(r => OpRow(r.getString(iOp), r.getString(iEid),
       opt[String](r, iH), opt[LocalDateTime](r, iS), opt[LocalDateTime](r, iE),
       opt[LocalDateTime](r, iA), opt[String](r, iX), r.getLong(iQ))))
@@ -73,19 +79,21 @@ private[graft] object TxDriver {
 
   private implicit val ldtOrd: Ordering[LocalDateTime] = _ compareTo _
 
-  /** In-memory version store, seeded with the state; one instance per
-    * routed call. */
-  private final class MemState(state: Array[Bitemp.Version]) {
+  /** In-memory version store, seeded with the state (or with just the
+    * touched entities' rows: a tx reads no other entity); one instance
+    * per routed call. */
+  private[graft] final class MemState(state: Array[Bitemp.Version]) {
     val byEid = new scala.collection.mutable.HashMap[
       String, scala.collection.mutable.ArrayBuffer[Bitemp.Version]]
     state.foreach(v => byEid.getOrElseUpdate(v.eid,
       scala.collection.mutable.ArrayBuffer.empty[Bitemp.Version]) += v)
 
-    /** Apply ONE transaction; returns true (state untouched) on a
-      * match/cas abort. Mirrors [[TxLog.applyTx]]'s eager path exactly:
-      * precondition first, then the fold, then evict-wins merge. */
+    /** Apply ONE transaction; returns the version rows it emitted, or
+      * None (state untouched) on a match/cas abort. Mirrors
+      * [[TxLog.applyTx]]'s eager path exactly: precondition first, then
+      * the fold, then evict-wins merge. */
     def applyOne(ops: Array[OpRow], txId: Long,
-        txTime: LocalDateTime): Boolean = {
+        txTime: LocalDateTime): Option[Array[Bitemp.Version]] = {
       val checks = ops.filter(o => o.op == "match" || o.op == "cas")
       if (checks.nonEmpty) {
         // candidates = resolved pre-tx history (cand_seq −1) + EARLIER
@@ -115,7 +123,7 @@ private[graft] object TxDriver {
             .flatMap(_._4)
           c.expected != visible // null-safe: None == None passes
         }
-        if (aborted) return true
+        if (aborted) return None
       }
       // the fold: identical FoldIn rows to applyPutDeleteTxs' op mapping
       // (cas → put at its basis vt, delete → null hash, evict → no vt),
@@ -142,18 +150,17 @@ private[graft] object TxDriver {
             FoldIn(eid, 0, Some(v.vt), Some(v.tt), v.txId, Option(v.contentHash), v.tombstone,
               "", None, 0L))
           TxLogFold.foldEntity(hist ++ eops.iterator)
-      }.toArray
+      }.map(r => Bitemp.Version(r.eid, r.vt, r.tt, r.txId, r.hash.orNull, r.tomb)).toArray
       // evict wins over the same tx's writes (foldEntity already emits
       // nothing for an evicted entity); dropping the eid's rows IS the
       // distributed path's anti-join
       ops.iterator.filter(_.op == "evict").map(_.eid).toSet
         .foreach((e: String) => byEid.remove(e))
-      emitted.foreach { r =>
-        byEid.getOrElseUpdate(r.eid,
-          scala.collection.mutable.ArrayBuffer.empty[Bitemp.Version]) +=
-          Bitemp.Version(r.eid, r.vt, r.tt, r.txId, r.hash.orNull, r.tomb)
+      emitted.foreach { v =>
+        byEid.getOrElseUpdate(v.eid,
+          scala.collection.mutable.ArrayBuffer.empty[Bitemp.Version]) += v
       }
-      false
+      Some(emitted)
     }
 
     def toDf(spark: org.apache.spark.sql.SparkSession): DataFrame = {
@@ -188,7 +195,7 @@ private[graft] object TxDriver {
         st <- Bitemp.versionsOf(stRows)
       } yield {
         val mem = new MemState(st)
-        if (mem.applyOne(txOps, txId, txTime)) (state, true)
+        if (mem.applyOne(txOps, txId, txTime).isEmpty) (state, true)
         else (mem.toDf(state.sparkSession), false)
       }
     }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Build-once memo for session-scoped artifacts (loaded tables, staged
   * fixtures, checkpointed index/edge builds), keyed by a tuple whose
-  * FIRST element is the owning [[SparkSession]].
+  * FIRST element is the owning [[SparkSession]] — or its `SparkContext`,
+  * for an artifact every session of the context shares.
   *
   * Two policies every such cache in the repo shares (they were fixed
   * piecemeal across rounds — this is the one implementation):
@@ -28,15 +29,13 @@ final class SessionCache[K <: Product, V] {
   // insertion-ordered; every access holds its monitor briefly
   private val m = new java.util.LinkedHashMap[K, V]()
 
-  private def sessionOf(k: K): SparkSession =
-    k.productElement(0).asInstanceOf[SparkSession]
+  private def stopped(k: K): Boolean = k.productElement(0) match {
+    case sc: org.apache.spark.SparkContext => sc.isStopped
+    case s => s.asInstanceOf[SparkSession].sparkContext.isStopped
+  }
 
-  def getOrBuild(k: K, maxEntries: Int = Int.MaxValue)(build: => V): V = {
-    val hit = m.synchronized {
-      m.keySet.removeIf(kk => sessionOf(kk).sparkContext.isStopped)
-      Option(m.get(k))
-    }
-    hit.getOrElse {
+  def getOrBuild(k: K, maxEntries: Int = Int.MaxValue)(build: => V): V =
+    get(k).getOrElse {
       val v = build
       val prior = m.synchronized {
         val w = Option(m.putIfAbsent(k, v))
@@ -57,6 +56,12 @@ final class SessionCache[K <: Product, V] {
           winner
       }
     }
+
+  /** The entry for `k` if one was built (after the dead-session sweep);
+    * builds nothing. */
+  def get(k: K): Option[V] = m.synchronized {
+    m.keySet.removeIf(kk => stopped(kk))
+    Option(m.get(k))
   }
 
   /** Drop entries matching `p` (e.g. a data dir whose files were

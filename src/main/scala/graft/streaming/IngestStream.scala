@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.bitemp.TxLog
+import graft.sources.Route
 
 /** Typed rows for [[IngestStream.sessions]] (flatMapGroupsWithState). */
 final case class SessionEvent(user_id: Long, tst: java.sql.Timestamp, ts_us: Long, v_scaled: Long)
@@ -18,11 +19,28 @@ final case class SessionRow(user_id: Long, start_us: Long, end_us: Long, n_event
   *
   * State is a versioned parquet "index store": `base-<tx>/` full
   * snapshots plus `delta-<tx>/` per-batch appends, named by `commit-<tx>`
-  * manifest files (highest id = current). A batch appends ONLY its delta
-  * (the versions table is append-only outside eviction —
-  * `TxLog.resolvedHistory` supersedes by max tx_id), so the per-batch
-  * write cost is O(batch), not O(total history). Every `compactEvery`
-  * batches — and on any evict — the store compacts into a fresh base dir.
+  * manifest files (highest id = current). A manifest holds `base=`,
+  * `deltas=` and `epoch=` lines; the epoch is a random id the store's
+  * first commit writes and every later commit carries, so a store
+  * deleted and recreated at the same path is a different store. A batch
+  * appends ONLY its delta (the versions table is append-only outside
+  * eviction — `TxLog.resolvedHistory` supersedes by max tx_id), so the
+  * per-batch write cost is O(batch), not O(total history). Every
+  * `compactEvery` batches — and on any evict — the store compacts into a
+  * fresh base dir.
+  *
+  * The parquet store is the durable log. Beside it the writer keeps a
+  * driver-resident mirror of the committed state ([[StoreMirror]]): the
+  * version rows and each maintained view's folded rows, for as long as
+  * the store fits the `tx` size route's bound
+  * (`spark.graft.route.tx.maxRows`, default 2^17 rows). Under the bound a
+  * batch folds in memory ([[graft.bitemp.TxDriver]]'s MemState, the same
+  * fold the node and the distributed path run) and writes its parquet
+  * from the driver rows, and [[loadState]]/[[loadView]] answer from the
+  * mirror without listing or scanning parquet. Over the bound, with the
+  * bound at 0, for a store another writer commits to, or in a JVM that
+  * did not write the store, every call runs the distributed parquet
+  * plans.
   *
   * Crash safety follows the reference's checkpoint protocol
   * (crux-core/src/crux/checkpoint.clj:94-113, same shape as
@@ -35,9 +53,12 @@ final case class SessionRow(user_id: Long, start_us: Long, end_us: Long, n_event
   */
 object IngestStream {
 
-  /** What a commit manifest names: the base snapshot dir (if any) and the
-    * delta dirs layered over it, in tx order. */
-  final case class StateManifest(txId: Long, base: Option[String], deltas: Seq[String])
+  /** What a commit manifest names: the base snapshot dir (if any), the
+    * delta dirs layered over it in tx order, and the store's `epoch` — a
+    * random id the store's first commit writes and every later commit
+    * carries (None for a manifest written before epochs existed). */
+  final case class StateManifest(txId: Long, base: Option[String], deltas: Seq[String],
+      epoch: Option[String] = None)
 
   private val CommitFile = "commit-(\\d+)".r
 
@@ -139,7 +160,13 @@ object IngestStream {
     * ([[graft.sources.JdbcLog.subscribe]]), the reference's
     * handle-polling-subscription shape (crux-jdbc/src/crux/jdbc.clj:
     * 152-154) — drive the SAME sequential indexer. Idempotent per txId
-    * (the commit manifest is the replay guard). */
+    * (the commit manifest is the replay guard).
+    *
+    * While the store's mirror is resident and the batch's ops fit the
+    * `tx` route bound, the batch folds in driver memory and writes its
+    * parquet from the driver rows ([[applyResident]]); otherwise it runs
+    * the distributed plan ([[applyDistributed]]). Both write the same
+    * layout. */
   def applyToStore(sp: SparkSession, ops: DataFrame, batchId: Long,
       stateDir: String, txTimeOfBatch: java.time.LocalDateTime,
       secondarySinks: Seq[(DataFrame, Long) => Unit] = Nil,
@@ -155,64 +182,26 @@ object IngestStream {
         // replay guard: if a commit manifest already covers this batch (we
         // crashed between the state commit and Spark's checkpoint commit),
         // re-applying would duplicate version rows — idempotent skip
-        if (committedTx(stateDir, conf).exists(_ >= batchId)) ()
+        val cur = currentManifest(stateDir, conf)
+        if (cur.exists(_.txId >= batchId)) ()
         else {
           val fs = hfs(stateDir, conf)
-          val cur = currentManifest(stateDir, conf)
-          val current = loadState(sp, stateDir)
-          // ops carry their own intra-tx seq (opSchema) — no global-window
-          // renumbering; a single unpartitioned sort would serialize at scale
-          // a producer whose op mix is fixed (pure put/delete feeds are
-          // the norm) declares it once and every batch skips the
-          // shape-probe job — same contract as TxLog.TxShape for
-          // interactive txs
-          // Check-free batches (the declared norm: pure put/delete/evict
-          // feeds) take the ONE-SHUFFLE fold ([[TxLog.applyPutDeleteTxs]],
-          // differential-spec'd against the sequential path) instead of
-          // the join+window tx plan — at micro-batch latency the
-          // scheduler round-trips of the multi-shuffle plan dominate, and
-          // a check-free tx can never abort so the eager precondition
-          // machinery buys nothing. The touched-eid resolve for the
-          // matviews is passed as a LAZY plan: it executes inside the
-          // view write's single action, only when a view is maintained.
-          val parts = txShape match {
-            case Some(sh) if !sh.hasChecks =>
-              // ONE state scan per batch: the touched entities' history is
-              // cached LAZILY and feeds BOTH the fold (as its pruned
-              // state) and the matviews' before-resolve — the first
-              // action (the delta write) fills the cache as a side
-              // effect, the view write reads the cached rows. (An eager
-              // localCheckpoint here would spend a whole extra job per tx
-              // just materializing; persist on the SAME DataFrame object
-              // is a guaranteed cache hit for every later consumer.)
-              // no .distinct() on the broadcast side: a left_semi probe
-              // tolerates duplicate build rows, and the distinct was one
-              // whole shuffle+job per tx just to shrink an already-tiny
-              // broadcast
-              val histTouched = current.join(
-                  broadcast(ops.select(col("eid"))),
-                  Seq("eid"), "left_semi")
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              val (newRows, evictEids) = TxLog.applyPutDeleteTxs(
-                histTouched, Seq((batchId, txTimeOfBatch, ops)),
-                stateIsPruned = true)
-              TxLog.TxParts(newRows, evictEids, sh.hasEvict, aborted = false,
-                cleanup = () => { histTouched.unpersist(); () },
-                resolvedTouched = histTouched)
-            case _ =>
-              TxLog.applyTxParts(current, ops, batchId, txTimeOfBatch, txShape)
-          }
-          val delta = parts.newRows
-          // label the per-tx jobs (Spark UI / profiling attribution)
-          def labeled[A](what: String)(f: => A): A = {
-            sp.sparkContext.setJobDescription(s"graft-tx-$batchId $what")
-            val t0 = System.nanoTime()
-            try f finally {
-              sp.sparkContext.setJobDescription(null)
-              if (java.lang.Boolean.getBoolean("graft.debug.plan"))
-                // scalastyle:off println
-                println(f"    [phase] tx-$batchId $what%-22s ${(System.nanoTime() - t0) / 1e6}%7.0f ms")
-            }
+          // the store's identity: minted by its first commit, carried by
+          // every later one (a store recreated at the same path gets a new
+          // one, so no memo of the old store can answer for it)
+          val epoch = cur.flatMap(_.epoch).getOrElse(java.util.UUID.randomUUID().toString)
+          // _viewmeta (measures + owning state dir) exists from the FIRST
+          // tx, not the first flush — a group-committed stream may run
+          // many txs before any flush, and readers need the sidecar to
+          // detect (or auto-resolve) the unflushed tail. Once written for
+          // this store epoch the mirror remembers it, so the exists()
+          // probe is not paid per tx.
+          val metaKnown = StoreMirror.metaWritten(sp, stateDir, epoch)
+          val viewDirs = matViewDir.toSeq.flatMap(vd => views.map(v => (vd, v)))
+          viewDirs.foreach { case (vd, v) =>
+            val dir = s"$vd/${v.name}"
+            if (!metaKnown(dir)) writeViewMeta(hfs(vd, conf),
+              new org.apache.hadoop.fs.Path(dir), v.measures.map(_._1), stateDir)
           }
           // GROUP COMMIT for the views: flush only when a view's span
           // since its last committed flush reaches viewFlushEvery txs, or
@@ -222,118 +211,265 @@ object IngestStream {
           // next flush, and [[loadView]]'s catch-up keeps readers exact
           // in between. viewFlushEvery trades per-tx write constants
           // against catch-up span size — at 1 (default) every tx flushes.
-          val flushViews = !parts.aborted && matViewDir.exists { vd =>
-            parts.hasEvict || viewFlushEvery <= 1 ||
-              views.exists(v => batchId + 1 -
-                viewHighWater(hfs(vd, conf), s"$vd/${v.name}") > viewFlushEvery)
-          }
-          // _viewmeta (measures + owning state dir) exists from the FIRST
-          // tx, not the first flush — a group-committed stream may run
-          // many txs before any flush, and readers need the sidecar to
-          // detect (or auto-resolve) the unflushed tail; no-op once written
-          matViewDir.foreach { vd =>
-            val vfs = hfs(vd, conf)
-            views.foreach(v => writeViewMeta(vfs,
-              new org.apache.hadoop.fs.Path(s"$vd/${v.name}"),
-              v.measures.map(_._1), stateDir))
-          }
-          // When views flush this tx, the tx's two actions — the state
-          // delta write and the view maintenance — are INDEPENDENT given
-          // the shared cached fold (both derive from histTouched + ops),
-          // so they run concurrently: the fold rows are persisted once and
-          // the block manager's per-block locks guarantee each partition
-          // computes exactly once even with both jobs racing for it. The
-          // per-tx wall drops from write+views to max(write, views). Both
-          // complete before the manifest commits, so crash semantics are
-          // unchanged (a committed vdelta with an uncommitted manifest is
-          // already handled by maintainViews' replay skip).
-          val wantViews = flushViews
-          val deltaCached =
-            if (wantViews)
-              delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            else delta
-          def writeState(): StateManifest =
-            if (parts.aborted) // advance the tx id over the same data dirs
-              StateManifest(batchId, cur.flatMap(_.base), cur.toSeq.flatMap(_.deltas))
-            else {
-              // evict emptiness is driver-known (TxParts.hasEvict) — no
-              // extra job to decide compaction
-              val mustCompact =
-                parts.hasEvict || cur.exists(_.deltas.size + 1 >= compactEvery)
-              if (mustCompact) {
-                // evict is the one destructive op — it (and stack-depth
-                // maintenance) rewrites into a fresh base dir; the old
-                // dirs stay live until the manifest below commits
-                val baseName = s"base-$batchId"
-                val pruned =
-                  if (parts.hasEvict)
-                    current.join(broadcast(parts.evictEids), Seq("eid"), "left_anti")
-                  else current
-                val full = pruned
-                  .unionByName(deltaCached)
-                  .dropDuplicates("eid", "vt", "tx_id") // restore-row dups
-                labeled("state compact+fold")(
-                  full.write.mode("overwrite").parquet(s"$stateDir/$baseName"))
-                StateManifest(batchId, Some(baseName), Nil)
-              } else {
-                val deltaName = s"delta-$batchId"
-                // the fold shuffle keeps its declared parallelism for
-                // compute (coalesce after a shuffle boundary narrows only
-                // the reduce+write side); the WRITE coalesces to ONE file
-                // per delta — every later tx's state scan opens the whole
-                // delta stack, so file fanout is the read-side constant
-                // that compounds (r16: the coalesce this comment already
-                // promised was missing — each tx landed txPartitions
-                // files, and batch N's state scan re-opened N×that many)
-                labeled("delta fold+write")(
-                  deltaCached.coalesce(1).write.mode("overwrite")
-                    .parquet(s"$stateDir/$deltaName"))
-                StateManifest(batchId, cur.flatMap(_.base),
-                  cur.toSeq.flatMap(_.deltas) :+ deltaName)
-              }
+          def flushDue(aborted: Boolean, hasEvict: Boolean): Boolean =
+            !aborted && matViewDir.exists { vd =>
+              hasEvict || viewFlushEvery <= 1 ||
+                views.exists(v => batchId + 1 -
+                  viewIds(hfs(vd, conf), s"$vd/${v.name}", None).highWater > viewFlushEvery)
             }
-          def writeViews(): Unit = matViewDir.foreach { vd =>
-            labeled("view maintenance") {
-              // per-view span source: a view whose high-water is exactly
-              // the previous tx rides the tx's own cached frames (zero
-              // extra store scans); a lagging view (group-committed span,
-              // or a crash between two views' writes) rebuilds its span
-              // from the journal
-              val signedFor: Long => DataFrame = fromTx =>
-                if (fromTx == batchId - 1)
-                  signedFromFrames(parts.resolvedTouched, deltaCached,
-                    parts.evictEids, parts.hasEvict)
-                else
-                  signedFromJournal(current.unionByName(deltaCached), fromTx,
-                    parts.evictEids, parts.hasEvict)
-              maintainViews(sp, vd, views, batchId, signedFor, viewCompactEvery,
-                stateDir)
-            }
+          val routed = StoreMirror.forWrite(sp, stateDir, cur, storedState(sp, stateDir, cur))
+            .flatMap(snap => Route.attempt(applyResident(sp, ops, batchId, txTimeOfBatch,
+              stateDir, cur, snap, compactEvery, matViewDir, txShape, views,
+              viewCompactEvery, flushDue, conf)))
+          val (next, after, cleanup) = routed match {
+            case Some((m, snap)) => (m, Some(snap), () => ())
+            case None =>
+              val (m, c) = applyDistributed(sp, ops, batchId, txTimeOfBatch, stateDir,
+                cur, compactEvery, matViewDir, txShape, views, viewCompactEvery, flushDue)
+              (m, None, c)
           }
-          val next: StateManifest =
-            if (wantViews) {
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.ExecutionContext.Implicits.global
-              import scala.concurrent.duration.Duration
-              val stateF = Future(writeState())
-              val viewF = Future(writeViews())
-              val m = Await.result(stateF, Duration.Inf)
-              Await.result(viewF, Duration.Inf)
-              m
-            } else writeState()
           // sinks run BEFORE the manifest commit: the commit marker is the
           // replay guard, so a crash between the two replays the batch into
           // the (idempotent) sinks — at-least-once delivery, matching the
           // reference's secondary-index contract (tx.clj:400-410 indexes
           // secondaries inside the same tx before the tx is marked done)
           secondarySinks.foreach(sink => sink(ops, batchId))
-          if (wantViews) deltaCached.unpersist()
-          commitManifest(stateDir, next, conf)
+          val committed = next.copy(epoch = Some(epoch))
+          commitManifest(stateDir, committed, conf)
+          // the mirror advances only once the commit is durable
+          StoreMirror.committed(sp, stateDir, committed, after.map(_.at(committed)),
+            viewDirs.map { case (vd, v) => s"$vd/${v.name}" }.toSet)
           pruneStale(fs, stateDir, conf)
-          // delta landed + sinks ran: drop this tx's cached op list so
+          // delta landed + sinks ran: drop this tx's cached frames so
           // block-manager entries stay flat across a long-running stream
-          parts.cleanup()
+          cleanup()
         }
+  }
+
+  /** Label the per-tx jobs (Spark UI / profiling attribution). */
+  private def labeled[A](sp: SparkSession, batchId: Long, what: String)(f: => A): A = {
+    sp.sparkContext.setJobDescription(s"graft-tx-$batchId $what")
+    val t0 = System.nanoTime()
+    try f finally {
+      sp.sparkContext.setJobDescription(null)
+      if (java.lang.Boolean.getBoolean("graft.debug.plan"))
+        // scalastyle:off println
+        println(f"    [phase] tx-$batchId $what%-22s ${(System.nanoTime() - t0) / 1e6}%7.0f ms")
+    }
+  }
+
+  /** The batch on the resident mirror: the ops are pulled in one bounded
+    * collect, folded by [[StoreMirror.fold]] (TxDriver.MemState), and the
+    * delta — or on compaction/evict the base — is written from the driver
+    * rows in one job. Each flushed view aggregates its in-memory signed
+    * rows in one job and writes the collected delta in one more. Returns
+    * the manifest to commit and the snapshot that matches it; None sends
+    * the batch to [[applyDistributed]]: ops over the bound, a null `seq`
+    * or `eid`, an op kind MemState does not model, or ops a declared
+    * `txShape` rules out (the check-free fold would ignore them). */
+  private def applyResident(sp: SparkSession, ops: DataFrame, batchId: Long,
+      txTime: java.time.LocalDateTime, stateDir: String, cur: Option[StateManifest],
+      snap: StoreMirror.Snapshot, compactEvery: Int, matViewDir: Option[String],
+      txShape: Option[TxLog.TxShape], views: Seq[ViewDef], viewCompactEvery: Int,
+      flushDue: (Boolean, Boolean) => Boolean,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Option[(StateManifest, StoreMirror.Snapshot)] = {
+    val bound = graft.bitemp.TxDriver.maxRows(sp)
+    for {
+      opRows <- Route.collect(ops.select(TxLog.opSchema.fieldNames.map(col).toSeq: _*), bound)
+      txOps <- graft.bitemp.TxDriver.opRowsOf(opRows, TxLog.opSchema)
+      if txShape.forall(sh =>
+        (sh.hasChecks || !txOps.exists(o => o.op == "match" || o.op == "cas")) &&
+          (sh.hasEvict || !txOps.exists(_.op == "evict")))
+    } yield {
+      val hasEvict = txShape.fold(txOps.exists(_.op == "evict"))(_.hasEvict)
+      val f = StoreMirror.fold(snap, txOps, batchId, txTime)
+      val curDirs = (cur.flatMap(_.base), cur.toSeq.flatMap(_.deltas))
+      def writeState(): (StateManifest, Map[String, Vector[graft.bitemp.Bitemp.Version]]) =
+        if (f.aborted) // advance the tx id over the same data dirs
+          (StateManifest(batchId, curDirs._1, curDirs._2), snap.byEid)
+        else if (hasEvict || cur.exists(_.deltas.size + 1 >= compactEvery)) {
+          val baseName = s"base-$batchId"
+          val rows = f.compactedByEid
+          labeled(sp, batchId, "state compact+fold")(
+            StoreMirror.single(sp, StoreMirror.rowsOf(rows), TxLog.versionSchema)
+              .write.mode("overwrite").parquet(s"$stateDir/$baseName"))
+          (StateManifest(batchId, Some(baseName), Nil), rows)
+        } else {
+          val deltaName = s"delta-$batchId"
+          labeled(sp, batchId, "delta fold+write")(
+            StoreMirror.single(sp, StoreMirror.rowsOf(f.emitted), TxLog.versionSchema)
+              .write.mode("overwrite").parquet(s"$stateDir/$deltaName"))
+          (StateManifest(batchId, curDirs._1, curDirs._2 :+ deltaName), f.afterByEid)
+        }
+      matViewDir.filter(_ => flushDue(f.aborted, hasEvict)) match {
+        case None =>
+          val (next, byEid) = writeState()
+          (next, f.next(byEid, snap.views, snap.declinedViews))
+        case Some(vd) =>
+          // the state write and the view jobs share only the driver-side
+          // fold, so they run concurrently; the state write is joined
+          // even when the views fail, so no write outlives the call
+          val stateF = forked(sp)(writeState())
+          val viewsT = scala.util.Try(labeled(sp, batchId, "view maintenance")(
+            maintainResident(sp, vd, views, batchId, f, viewCompactEvery, bound, conf)))
+          val (next, byEid) = scala.concurrent.Await.result(stateF,
+            scala.concurrent.duration.Duration.Inf)
+          val (vs, declined) = viewsT.get
+          (next, f.next(byEid, vs, declined))
+      }
+    }
+  }
+
+  /** Run `f` on a pool thread under the caller's job group, so its jobs
+    * are attributed and cancelled with the caller's (a pool thread keeps
+    * the local properties of whichever thread created it). */
+  private def forked[A](sp: SparkSession)(f: => A): scala.concurrent.Future[A] = {
+    val sc = sp.sparkContext
+    val keys = Seq("spark.jobGroup.id", "spark.job.interruptOnCancel", "spark.scheduler.pool")
+    val props = keys.map(k => k -> sc.getLocalProperty(k))
+    scala.concurrent.Future {
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try f finally keys.foreach(sc.setLocalProperty(_, null))
+    }(scala.concurrent.ExecutionContext.global)
+  }
+
+  /** The batch's distributed plan: the touched-history fold over the
+    * committed parquet stack, the delta or base write, and the views'
+    * span deltas. Returns the manifest to commit and the cleanup to run
+    * after it. */
+  private def applyDistributed(sp: SparkSession, ops: DataFrame, batchId: Long,
+      txTimeOfBatch: java.time.LocalDateTime, stateDir: String,
+      cur: Option[StateManifest], compactEvery: Int, matViewDir: Option[String],
+      txShape: Option[TxLog.TxShape], views: Seq[ViewDef], viewCompactEvery: Int,
+      flushDue: (Boolean, Boolean) => Boolean): (StateManifest, () => Unit) = {
+    val current = storedState(sp, stateDir, cur)
+    // ops carry their own intra-tx seq (opSchema) — no global-window
+    // renumbering; a single unpartitioned sort would serialize at scale
+    // a producer whose op mix is fixed (pure put/delete feeds are
+    // the norm) declares it once and every batch skips the
+    // shape-probe job — same contract as TxLog.TxShape for
+    // interactive txs
+    // Check-free batches (the declared norm: pure put/delete/evict
+    // feeds) take the ONE-SHUFFLE fold ([[TxLog.applyPutDeleteTxs]],
+    // differential-spec'd against the sequential path) instead of
+    // the join+window tx plan — at micro-batch latency the
+    // scheduler round-trips of the multi-shuffle plan dominate, and
+    // a check-free tx can never abort so the eager precondition
+    // machinery buys nothing. The touched-eid resolve for the
+    // matviews is passed as a LAZY plan: it executes inside the
+    // view write's single action, only when a view is maintained.
+    val parts = txShape match {
+      case Some(sh) if !sh.hasChecks =>
+        // ONE state scan per batch: the touched entities' history is
+        // cached LAZILY and feeds BOTH the fold (as its pruned
+        // state) and the matviews' before-resolve — the first
+        // action (the delta write) fills the cache as a side
+        // effect, the view write reads the cached rows. (An eager
+        // localCheckpoint here would spend a whole extra job per tx
+        // just materializing; persist on the SAME DataFrame object
+        // is a guaranteed cache hit for every later consumer.)
+        // no .distinct() on the broadcast side: a left_semi probe
+        // tolerates duplicate build rows, and the distinct was one
+        // whole shuffle+job per tx just to shrink an already-tiny
+        // broadcast
+        val histTouched = current.join(
+            broadcast(ops.select(col("eid"))),
+            Seq("eid"), "left_semi")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (newRows, evictEids) = TxLog.applyPutDeleteTxs(
+          histTouched, Seq((batchId, txTimeOfBatch, ops)),
+          stateIsPruned = true)
+        TxLog.TxParts(newRows, evictEids, sh.hasEvict, aborted = false,
+          cleanup = () => { histTouched.unpersist(); () },
+          resolvedTouched = histTouched)
+      case _ =>
+        TxLog.applyTxParts(current, ops, batchId, txTimeOfBatch, txShape)
+    }
+    val delta = parts.newRows
+    def labeled[A](what: String)(f: => A): A =
+      IngestStream.labeled(sp, batchId, what)(f)
+    // When views flush this tx, the tx's two actions — the state
+    // delta write and the view maintenance — are INDEPENDENT given
+    // the shared cached fold (both derive from histTouched + ops),
+    // so they run concurrently: the fold rows are persisted once and
+    // the block manager's per-block locks guarantee each partition
+    // computes exactly once even with both jobs racing for it. The
+    // per-tx wall drops from write+views to max(write, views). Both
+    // complete before the manifest commits, so crash semantics are
+    // unchanged (a committed vdelta with an uncommitted manifest is
+    // already handled by maintainViews' replay skip).
+    val wantViews = flushDue(parts.aborted, parts.hasEvict)
+    val deltaCached =
+      if (wantViews)
+        delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else delta
+    def writeState(): StateManifest =
+      if (parts.aborted) // advance the tx id over the same data dirs
+        StateManifest(batchId, cur.flatMap(_.base), cur.toSeq.flatMap(_.deltas))
+      else {
+        // evict emptiness is driver-known (TxParts.hasEvict) — no
+        // extra job to decide compaction
+        val mustCompact =
+          parts.hasEvict || cur.exists(_.deltas.size + 1 >= compactEvery)
+        if (mustCompact) {
+          // evict is the one destructive op — it (and stack-depth
+          // maintenance) rewrites into a fresh base dir; the old
+          // dirs stay live until the manifest below commits
+          val baseName = s"base-$batchId"
+          val pruned =
+            if (parts.hasEvict)
+              current.join(broadcast(parts.evictEids), Seq("eid"), "left_anti")
+            else current
+          val full = pruned
+            .unionByName(deltaCached)
+            .dropDuplicates("eid", "vt", "tx_id") // restore-row dups
+          labeled("state compact+fold")(
+            full.write.mode("overwrite").parquet(s"$stateDir/$baseName"))
+          StateManifest(batchId, Some(baseName), Nil)
+        } else {
+          val deltaName = s"delta-$batchId"
+          // ONE file per delta — every later tx's state scan opens
+          // the whole delta stack, so file fanout is the read-side
+          // constant that compounds. The fold's reduce keeps its
+          // declared parallelism: repartition(1) caps the file count
+          // after a shuffle boundary (a coalesce(1) here would run
+          // the reduce itself in one task)
+          labeled("delta fold+write")(
+            deltaCached.repartition(1).write.mode("overwrite")
+              .parquet(s"$stateDir/$deltaName"))
+          StateManifest(batchId, cur.flatMap(_.base),
+            cur.toSeq.flatMap(_.deltas) :+ deltaName)
+        }
+      }
+    def writeViews(): Unit = matViewDir.foreach { vd =>
+      labeled("view maintenance") {
+        // per-view span source: a view whose high-water is exactly
+        // the previous tx rides the tx's own cached frames (zero
+        // extra store scans); a lagging view (group-committed span,
+        // or a crash between two views' writes) rebuilds its span
+        // from the journal
+        val signedFor: Long => DataFrame = fromTx =>
+          if (fromTx == batchId - 1)
+            signedFromFrames(parts.resolvedTouched, deltaCached,
+              parts.evictEids, parts.hasEvict)
+          else
+            signedFromJournal(current.unionByName(deltaCached), fromTx,
+              parts.evictEids, parts.hasEvict)
+        maintainViews(sp, vd, views, batchId, signedFor, viewCompactEvery)
+      }
+    }
+    val next: StateManifest =
+      if (wantViews) {
+        import scala.concurrent.Await
+        import scala.concurrent.duration.Duration
+        val stateF = forked(sp)(writeState())
+        val viewF = forked(sp)(writeViews())
+        val m = Await.result(stateF, Duration.Inf)
+        Await.result(viewF, Duration.Inf)
+        m
+      } else writeState()
+    (next, () => { if (wantViews) deltaCached.unpersist(); parts.cleanup() })
   }
 
   /** One incrementally-maintained materialized view over the CURRENT
@@ -376,6 +512,10 @@ object IngestStream {
     * docs of each type" dashboard query, answered without the version log. */
   val typeCountsView: ViewDef = ViewDef("type_counts", keys = Seq("content_hash"))
 
+  /** The (vt, tt) basis both signed-delta paths resolve at: past every
+    * valid and transaction time the store holds. */
+  private val SignedBasis = java.time.LocalDateTime.parse("2099-01-01T00:00")
+
   /** DUAL-WINNER resolve → SIGNED delta rows, from membership-tagged
     * version rows: one groupBy picks each touched entity's before- and
     * after-winner (`max_by(vt, tx_id)` per side, exactly
@@ -390,7 +530,7 @@ object IngestStream {
     * branches' exchanges stop being equal, and exchange reuse can't dedup
     * the resolve. */
   private def winnersToSigned(tagged: DataFrame, payload: Seq[String]): DataFrame = {
-    val basis = lit(java.time.LocalDateTime.parse("2099-01-01T00:00"))
+    val basis = lit(SignedBasis)
     val stc = struct(payload.map(col): _*)
     val ord = struct(col("vt"), col("tx_id"))
     val winners = tagged
@@ -466,13 +606,6 @@ object IngestStream {
     winnersToSigned(tagged, payload)
   }
 
-  /** The view's committed high-water tx: the newest committed
-    * vbase-/vdelta- id, −1 if the view was never flushed. */
-  private def viewHighWater(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Long =
-    (listCommitted(fs, dir, "vdelta-") ++ listCommitted(fs, dir, "vbase-"))
-      .foldLeft(-1L)(math.max)
-
   /** One view's delta aggregate over a signed span. */
   private def viewDelta(v: ViewDef, signed: DataFrame): DataFrame = {
     val aggs = v.measures.map { case (m, e) => sum(col("_sign") * e).as(m) }
@@ -512,7 +645,7 @@ object IngestStream {
     * HDFS/S3/local alike. */
   private def maintainViews(sp: SparkSession, viewDir: String,
       views: Seq[ViewDef], txId: Long, signedFor: Long => DataFrame,
-      compactEvery: Int, stateDir: String): Unit = {
+      compactEvery: Int): Unit = {
     import org.apache.hadoop.fs.Path
     val conf = sp.sessionState.newHadoopConf()
     val fs = hfs(viewDir, conf)
@@ -531,34 +664,23 @@ object IngestStream {
         // txId] — views normally move in lockstep, but a crash between
         // two views' writes leaves one behind, and its next flush must
         // cover the wider span (the journal builder makes that exact)
-        val deltaAgg = viewDelta(v, signedFor(viewHighWater(fs, dir)))
+        val deltaAgg = viewDelta(v, signedFor(viewIds(fs, dir, None).highWater))
         // a dir without _SUCCESS is a torn write from a crash — the guard
         // must NOT trust it as this tx's delta (ADVICE r7)
         if (fs.exists(target)) fs.delete(target, true)
-        writeViewMeta(fs, new Path(dir), v.measures.map(_._1), stateDir)
         if (java.lang.Boolean.getBoolean("graft.debug.plan"))
           // scalastyle:off println
           println(deltaAgg.queryExecution.executedPlan.toString.take(6000))
-        deltaAgg.coalesce(1).write.mode("overwrite").parquet(target.toString)
+        // one file per vdelta, capped after the aggregate's shuffle
+        deltaAgg.repartition(1).write.mode("overwrite").parquet(target.toString)
       }
       // compaction: fold the committed delta stack into a fresh base once
       // it is compactEvery deep (read-side merge fanout knob, not a
       // correctness one — loadView unions whatever stack exists)
       val deltaIds = listCommitted(fs, dir, "vdelta-")
-      if (deltaIds.size >= compactEvery) {
-        val basePath = new Path(s"$dir/vbase-$txId")
-        if (fs.exists(basePath)) fs.delete(basePath, true) // torn compaction
-        loadView(sp, viewDir, v.name, beforeTx = Some(txId + 1)).foreach {
-          merged =>
-            merged.coalesce(1).write.mode("overwrite").parquet(basePath.toString)
-            // base committed: deltas it subsumes go; 2 newest bases stay
-            // (the older is a concurrent reader's grace window)
-            deltaIds.filter(_ <= txId).foreach(id =>
-              fs.delete(new Path(s"$dir/vdelta-$id"), true))
-            listCommitted(fs, dir, "vbase-").sorted.dropRight(2).foreach(id =>
-              fs.delete(new Path(s"$dir/vbase-$id"), true))
-        }
-      }
+      if (deltaIds.size >= compactEvery)
+        compactView(fs, dir, txId, deltaIds,
+          loadView(sp, viewDir, v.name, beforeTx = Some(txId + 1)).map(_.repartition(1)))
     }
     if (views.size <= 1) views.foreach(maintainOne)
     else {
@@ -566,9 +688,113 @@ object IngestStream {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       Await.result(
-        Future.sequence(views.map(v => Future(maintainOne(v)))), Duration.Inf)
+        Future.sequence(views.map(v => forked(sp)(maintainOne(v)))), Duration.Inf)
       ()
     }
+  }
+
+  /** Fold a view's committed delta stack into `vbase-<txId>` (written
+    * from `merged`, the view's state through txId): a torn base is
+    * cleared first; once the base lands the deltas it subsumes go, and
+    * the 2 newest bases stay (the older is a concurrent reader's grace
+    * window). */
+  private def compactView(fs: org.apache.hadoop.fs.FileSystem, dir: String, txId: Long,
+      deltaIds: Seq[Long], merged: => Option[DataFrame]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val basePath = new Path(s"$dir/vbase-$txId")
+    if (fs.exists(basePath)) fs.delete(basePath, true) // torn compaction
+    merged.foreach { m =>
+      m.write.mode("overwrite").parquet(basePath.toString)
+      deltaIds.filter(_ <= txId).foreach(id =>
+        fs.delete(new Path(s"$dir/vdelta-$id"), true))
+      listCommitted(fs, dir, "vbase-").sorted.dropRight(2).foreach(id =>
+        fs.delete(new Path(s"$dir/vbase-$id"), true))
+    }
+  }
+
+  /** [[maintainViews]] on the resident mirror: each view's span delta is
+    * [[viewDelta]] over the batch's in-memory signed rows
+    * ([[StoreMirror.Folded.signed]]), collected in one job and written
+    * from the driver rows in one more; the view's mirror folds the same
+    * rows in (and writes the base from its rows on compaction). A view
+    * whose mirror is missing or stale is re-seeded from its stored stack
+    * once; one whose measures the merge does not know is declined for the
+    * store epoch and keeps only its files. Crash handling is
+    * maintainViews': a committed `vdelta-<txId>` is trusted, a torn one
+    * replaced. Returns the views' rows and the declined view dirs. */
+  private def maintainResident(sp: SparkSession, viewDir: String, views: Seq[ViewDef],
+      txId: Long, f: StoreMirror.Folded, compactEvery: Int, bound: Long,
+      conf: org.apache.hadoop.conf.Configuration)
+      : (Map[String, StoreMirror.ViewRows], Set[String]) = {
+    import org.apache.hadoop.fs.Path
+    val fs = hfs(viewDir, conf)
+    views.foldLeft((f.before.views, f.before.declinedViews)) { case ((vs, declined), v) =>
+      val dir = s"$viewDir/${v.name}"
+      val measures = v.measures.map(_._1)
+      val ids0 = viewIds(fs, dir, None)
+      val target = new Path(s"$dir/vdelta-$txId")
+      val merged: Option[StoreMirror.ViewRows] =
+        if (committedDir(fs, target)) None
+        else {
+          val signed = StoreMirror.single(sp,
+            f.signed(ids0.highWater, txId, SignedBasis), StoreMirror.signedSchema)
+          val agg = viewDelta(v, signed)
+          val rows = agg.collect()
+          if (fs.exists(target)) fs.delete(target, true)
+          StoreMirror.single(sp, rows.toSeq, agg.schema)
+            .write.mode("overwrite").parquet(target.toString)
+          val prior =
+            if (declined(dir)) None
+            else if (ids0 == StoreMirror.ViewIds(None, Nil))
+              Some(StoreMirror.emptyView(ids0, agg.schema, measures))
+            else vs.get(dir).filter(vr => vr.ids == ids0 && vr.measures == measures)
+          prior.flatMap(_.merge(rows, agg.schema,
+            StoreMirror.ViewIds(ids0.base, ids0.deltas :+ txId)))
+        }
+      val deltaIds = listCommitted(fs, dir, "vdelta-")
+      val compacted =
+        if (deltaIds.size < compactEvery) merged
+        else {
+          compactView(fs, dir, txId, deltaIds, merged match {
+            case Some(vr) => Some(vr.frame(sp).coalesce(1))
+            case None => loadView(sp, viewDir, v.name, beforeTx = Some(txId + 1))
+                .map(_.repartition(1))
+          })
+          merged.map(vr => vr.copy(ids = StoreMirror.ViewIds(Some(txId), Nil),
+            rows = vr.rows.filter { case (_, ms) => vr.liveMeasures(ms) }))
+        }
+      val ids1 = viewIds(fs, dir, None)
+      val now = compacted.filter(_.ids == ids1).orElse(
+        if (declined(dir)) None
+        else StoreMirror.seedView(ids1, storedView(sp, dir, ids1, measures), measures, bound))
+      now match {
+        case Some(vr) => (vs.updated(dir, vr), declined)
+        case None => (vs - dir, declined + dir)
+      }
+    }
+  }
+
+  /** The committed ids [[loadView]] folds for `dir` (those below
+    * `beforeTx`, if given). */
+  private def viewIds(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      beforeTx: Option[Long]): StoreMirror.ViewIds = {
+    def keep(ids: Seq[Long]) = ids.filter(id => beforeTx.forall(id < _))
+    val baseId = keep(listCommitted(fs, dir, "vbase-")).sorted.lastOption
+    StoreMirror.ViewIds(baseId,
+      keep(listCommitted(fs, dir, "vdelta-")).filter(id => baseId.forall(id > _)).sorted)
+  }
+
+  /** A view's stored stack folded per key (every key, `n` = 0 included). */
+  private def storedView(sp: SparkSession, dir: String, ids: StoreMirror.ViewIds,
+      measures: Seq[String]): DataFrame =
+    foldMeasures(sp.read.parquet((ids.base.map(b => s"$dir/vbase-$b").toSeq ++
+      ids.deltas.map(d => s"$dir/vdelta-$d")): _*), measures)
+
+  /** Sum each measure per key (every non-measure column is a key). */
+  private def foldMeasures(stack: DataFrame, measures: Seq[String]): DataFrame = {
+    val keys = stack.columns.filterNot(c => measures.contains(c))
+    val sums = measures.map(m => sum(col(m)).as(m))
+    stack.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
   }
 
   /** `true` iff the dir's parquet write committed (its `_SUCCESS` marker
@@ -598,19 +824,13 @@ object IngestStream {
     * without it a `loadView` call missing `catchUp` would silently return
     * a stale view under `viewFlushEvery` > 1 (r8 ADVICE). Written at
     * stream start (first tx), not first flush, so the staleness probe
-    * exists even before any flush has happened. */
-  /** View dirs whose `_viewmeta` this JVM has already written or seen:
-    * the sidecar is write-once but its guard runs per TX, and paying a
-    * filesystem exists() round-trip (a metadata RPC on HDFS/S3) per view
-    * per tx forever is pure overhead after the first. Keyed by dir
-    * string; bounded by the number of distinct views a driver serves. */
-  private val viewMetaSeen: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+    * exists even before any flush has happened. The writer skips the
+    * exists() probe once its store's mirror records the sidecar for the
+    * store epoch ([[StoreMirror.metaWritten]]), so a view dir recreated
+    * with a new store always gets its sidecar. */
   private def writeViewMeta(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, measures: Seq[String],
       stateDir: String): Unit = {
-    if (viewMetaSeen.contains(dir.toString)) return
     val p = new org.apache.hadoop.fs.Path(dir, "_viewmeta")
     if (!fs.exists(p)) {
       fs.mkdirs(dir)
@@ -626,7 +846,6 @@ object IngestStream {
       finally out.close()
       if (!fs.rename(tmp, p)) fs.delete(tmp, false) // lost a benign race
     }
-    viewMetaSeen.add(dir.toString); ()
   }
 
   /** (measure columns, owning state dir if recorded). */
@@ -652,6 +871,17 @@ object IngestStream {
     * folded by summing each measure per key, dead keys (`n` = 0)
     * dropped. One scan over O(view + compactEvery × touched) rows.
     *
+    * While the owning store's mirror is resident, matches the store's
+    * current manifest, and holds this view folded at exactly its
+    * committed `vbase-`/`vdelta-` ids, the read is served from the
+    * mirror instead: a LocalRelation copied from the mirror's immutable
+    * rows, so collecting it runs no job, and a later commit never changes
+    * a frame already handed out. A `beforeTx` that cuts off committed
+    * txs, a view the mirror does not hold (another writer, a fresh JVM, a
+    * measure type the mirror's merge does not know), or
+    * `spark.graft.route.tx.maxRows` = 0 reads the parquet stack as
+    * described here.
+    *
     * With `catchUp = Some((stateDir, viewDef))` the read is exact even
     * under group-committed maintenance (`viewFlushEvery` > 1): if the
     * state store's committed tx is past the view's flushed high-water,
@@ -663,65 +893,79 @@ object IngestStream {
       beforeTx: Option[Long] = None,
       catchUp: Option[(String, ViewDef)] = None): Option[DataFrame] = {
     import org.apache.hadoop.fs.Path
-    val fs = hfs(viewDir, sp.sessionState.newHadoopConf())
+    val conf = sp.sessionState.newHadoopConf()
+    val fs = hfs(viewDir, conf)
     val dir = s"$viewDir/$name"
-    def keep(ids: Seq[Long]) = ids.filter(id => beforeTx.forall(id < _))
-    val baseId = keep(listCommitted(fs, dir, "vbase-")).sorted.lastOption
-    val deltaIds = keep(listCommitted(fs, dir, "vdelta-"))
-      .filter(id => baseId.forall(id > _)).sorted
-    val dirs = baseId.map(b => s"$dir/vbase-$b").toSeq ++
-      deltaIds.map(d => s"$dir/vdelta-$d")
-    val hw = (baseId.toSeq ++ deltaIds).foldLeft(-1L)(math.max)
+    val ids = viewIds(fs, dir, beforeTx)
+    val dirs = ids.base.map(b => s"$dir/vbase-$b").toSeq ++
+      ids.deltas.map(d => s"$dir/vdelta-$d")
+    val hw = ids.highWater
     val (metaMeasures, metaStateDir) = readViewMeta(fs, new Path(dir))
-    val tail: Option[DataFrame] = catchUp.flatMap { case (stateDir, v) =>
-      val conf = sp.sessionState.newHadoopConf()
-      committedTx(stateDir, conf)
-        .map(t => beforeTx.map(b => math.min(t, b - 1)).getOrElse(t))
-        .filter(_ > hw)
-        .map { bound =>
+    val measures = catchUp.map(_._2.measures.map(_._1)).getOrElse(metaMeasures)
+    // the owning store and its newest manifest, read once: the catch-up
+    // bound, the staleness probe and the mirror check all use it
+    val owner = catchUp.map(_._1).orElse(metaStateDir)
+      .map(sd => sd -> currentManifest(sd, conf))
+    val committed = owner.flatMap(_._2)
+      .map(m => beforeTx.map(b => math.min(m.txId, b - 1)).getOrElse(m.txId))
+    // staleness guard (r8 ADVICE): a reader that asked for the view
+    // WITHOUT catchUp under group-committed maintenance gets a result
+    // missing the unflushed tail — the _viewmeta's owning state dir makes
+    // that detectable, so say it loudly instead of silently serving stale
+    if (catchUp.isEmpty) for ((sd, _) <- owner; t <- committed if t > hw) {
+      // scalastyle:off println
+      Console.err.println(
+        s"loadView($name): flushed through tx $hw but the owning store " +
+          s"($sd) has committed tx $t - the result is missing the " +
+          "unflushed tail; pass catchUp = Some((stateDir, viewDef)) " +
+          "for an exact read")
+      // scalastyle:on println
+    }
+    val tailTo = catchUp.flatMap(_ => committed.filter(_ > hw))
+    residentView(sp, dir, ids, measures, beforeTx, owner, catchUp.map(_._2), tailTo)
+      .orElse {
+        val tail: Option[DataFrame] = for ((stateDir, v) <- catchUp; bound <- tailTo) yield {
           val stack0 = loadState(sp, stateDir)
           val stack = if (beforeTx.isDefined)
             stack0.filter(col("tx_id") <= bound) else stack0
           viewDelta(v, signedFromJournal(stack, hw,
             stack.select("eid").limit(0), hasEvict = false))
         }
-    }
-    // staleness guard (r8 ADVICE): a reader that asked for the view
-    // WITHOUT catchUp under group-committed maintenance gets a result
-    // missing the unflushed tail — the _viewmeta's owning state dir makes
-    // that detectable, so say it loudly instead of silently serving stale
-    if (catchUp.isEmpty) metaStateDir.foreach { sd =>
-      committedTx(sd, sp.sessionState.newHadoopConf())
-        .map(t => beforeTx.map(b => math.min(t, b - 1)).getOrElse(t))
-        .filter(_ > hw)
-        .foreach { t =>
-          // scalastyle:off println
-          Console.err.println(
-            s"loadView($name): flushed through tx $hw but the owning store " +
-              s"($sd) has committed tx $t - the result is missing the " +
-              "unflushed tail; pass catchUp = Some((stateDir, viewDef)) " +
-              "for an exact read")
-          // scalastyle:on println
+        val stored =
+          if (dirs.isEmpty) None else Some(sp.read.parquet(dirs: _*))
+        val stack = (stored, tail) match {
+          case (Some(s), Some(t)) => Some(s.unionByName(t))
+          case (s, t) => s.orElse(t)
         }
-    }
-    if (dirs.isEmpty && tail.isEmpty) return None
-    val measures = catchUp.map(_._2.measures.map(_._1))
-      .getOrElse(metaMeasures)
-    val stored =
-      if (dirs.isEmpty) None else Some(sp.read.parquet(dirs: _*))
-    val stack = (stored, tail) match {
-      case (Some(s), Some(t)) => s.unionByName(t)
-      case (Some(s), None) => s
-      case (None, Some(t)) => t
-      case _ => return None
-    }
-    val keys = stack.columns.filterNot(c => measures.contains(c))
-    Some(stack
-      .groupBy(keys.map(col): _*)
-      .agg(measures.map(m => sum(col(m)).as(m)).head,
-        measures.map(m => sum(col(m)).as(m)).tail: _*)
-      .filter(col("n") =!= 0))
+        stack.map(foldMeasures(_, measures).filter(col("n") =!= 0))
+      }
   }
+
+  /** [[loadView]] from the owning store's resident mirror: served when
+    * the store's snapshot matches its current manifest, the view's rows
+    * were folded at exactly the committed `ids`, and `beforeTx` cuts
+    * nothing off. The frame is built from the snapshot's immutable rows
+    * (no job); a catch-up tail folds the unflushed span's in-memory
+    * signed rows in through one aggregate job. */
+  private def residentView(sp: SparkSession, dir: String, ids: StoreMirror.ViewIds,
+      measures: Seq[String], beforeTx: Option[Long],
+      owner: Option[(String, Option[StateManifest])], v: Option[ViewDef],
+      tailTo: Option[Long]): Option[DataFrame] =
+    for {
+      (stateDir, cur) <- owner
+      m <- cur if beforeTx.forall(_ > m.txId)
+      snap <- StoreMirror.resident(sp, stateDir, cur)
+      vr <- snap.views.get(dir) if vr.ids == ids && vr.measures == measures
+      folded <- (v, tailTo) match {
+        case (Some(view), Some(_)) => Route.attempt {
+          val span = StoreMirror.Folded(snap, Map.empty, Set.empty, Set.empty, aborted = false)
+          val agg = viewDelta(view, StoreMirror.single(sp,
+            span.signed(ids.highWater, Long.MaxValue, SignedBasis), StoreMirror.signedSchema))
+          vr.merge(agg.collect(), agg.schema, vr.ids)
+        }
+        case _ => Some(vr)
+      }
+    } yield folded.frame(sp)
 
   /** Latest [[typeCountsView]] state (back-compat name). Unlike the
     * generic [[loadView]] — which cannot reconstruct an arbitrary
@@ -740,9 +984,10 @@ object IngestStream {
       catchUp = catchUpStateDir.orElse(metaDir).map(d => (d, typeCountsView)))
   }
 
-  /** Write `commit-<tx>` naming the state's dirs; the rename is the
-    * atomic commit point (data dirs already landed; old manifests and
-    * dirs are untouched until [[pruneStale]] runs AFTER this returns). */
+  /** Write `commit-<tx>` naming the state's dirs and the store's epoch;
+    * the rename is the atomic commit point (data dirs already landed; old
+    * manifests and dirs are untouched until [[pruneStale]] runs AFTER
+    * this returns). */
   private def commitManifest(stateDir: String, m: StateManifest,
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     import org.apache.hadoop.fs.Path
@@ -751,8 +996,8 @@ object IngestStream {
     val tmp = new Path(stateDir, s"commit-${m.txId}.tmp")
     val out = fs.create(tmp, true)
     try out.write(
-      s"base=${m.base.getOrElse("")}\ndeltas=${m.deltas.mkString(",")}\n"
-        .getBytes("UTF-8"))
+      (s"base=${m.base.getOrElse("")}\ndeltas=${m.deltas.mkString(",")}\n" +
+        m.epoch.fold("")(e => s"epoch=$e\n")).getBytes("UTF-8"))
     finally out.close()
     val dst = new Path(stateDir, s"commit-${m.txId}")
     require(fs.rename(tmp, dst), s"state commit failed: rename $tmp -> $dst")
@@ -802,7 +1047,8 @@ object IngestStream {
     }.toMap
     Some(StateManifest(txId,
       kv.get("base").filter(_.nonEmpty),
-      kv.get("deltas").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)))
+      kv.get("deltas").toSeq.flatMap(_.split(",")).filter(_.nonEmpty),
+      kv.get("epoch").filter(_.nonEmpty)))
   }
 
   /** The newest committed manifest, if any. */
@@ -843,11 +1089,30 @@ object IngestStream {
     throw new java.util.concurrent.TimeoutException(s"tx $txId not indexed within ${timeoutMs}ms")
   }
 
-  /** The committed versions table: the manifest's base + delta dirs read
-    * as one parquet scan ([[TxLog.resolvedHistory]] tolerates the
-    * superseded rows across layers by design). */
-  def loadState(spark: SparkSession, stateDir: String): DataFrame =
-    currentManifest(stateDir, spark.sessionState.newHadoopConf()) match {
+  /** The committed versions table: the rows of the manifest's base +
+    * delta dirs ([[TxLog.resolvedHistory]] tolerates the superseded rows
+    * across layers by design).
+    *
+    * While this JVM's writer keeps the store's mirror resident
+    * ([[StoreMirror]]: the store fits the session's `tx` route bound and
+    * its current manifest, epoch included, is the one the mirror was built
+    * for) the frame is a one-partition LocalRelation copied from the
+    * mirror's immutable snapshot: no parquet listing, no scan, and no job
+    * to build it. Otherwise — another writer, a fresh JVM, an over-bound
+    * store, or `spark.graft.route.tx.maxRows` = 0 — it is one parquet scan
+    * of the manifest's dirs. Either frame keeps the rows of the commit it
+    * was built at: the mirror frame holds a copy of them, and the scan's
+    * dirs stay until the prune after the next commit but one. */
+  def loadState(spark: SparkSession, stateDir: String): DataFrame = {
+    val cur = currentManifest(stateDir, spark.sessionState.newHadoopConf())
+    StoreMirror.resident(spark, stateDir, cur).fold(storedState(spark, stateDir, cur))(
+      _.frame(spark))
+  }
+
+  /** [[loadState]]'s parquet form: one scan of `cur`'s dirs. */
+  private def storedState(spark: SparkSession, stateDir: String,
+      cur: Option[StateManifest]): DataFrame =
+    cur match {
       case Some(m) =>
         val dirs = (m.base.toSeq ++ m.deltas).map(d => s"$stateDir/$d")
         if (dirs.isEmpty) TxLog.emptyState(spark)
