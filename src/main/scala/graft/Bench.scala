@@ -21,20 +21,11 @@ object Bench {
   private[graft] def spiked(t: Double, ref: Option[Double]): Boolean =
     ref.exists(r => r > 0 && t > 3 * r)
 
+  type Gate = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Steady-state measurement: run every query once at the smallest scale
-    // factor first so codegen/JIT compilation isn't billed to the timed run
-    // (first-execution overhead measured at 3-10s per plan, dwarfing the
-    // actual sf0.1 work for most queries).
+    val spark = session()
     // SPARK_GRAFT_ONLY=q18,sql_temporal — restrict to a subset while
     // iterating on specific queries (driver runs always leave it unset)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -50,18 +41,8 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }).toSeq.sortBy(_._1)
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-    }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable => Left(s"err:${e.getClass.getSimpleName}") }
-    }
+    warmUp(spark, selected.map(_._2), sfDir)
+    def timed(fn: Gate): Either[String, Double] = timeOnce(spark, fn, sfDir).map(_._2)
     // Bench self-defense (r13 VERDICT "what's wrong" #1 — two rounds of
     // committed boards poisoned by driver-box contention spikes the
     // judge had to re-measure): per-gate timings compare against the
@@ -85,12 +66,10 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val cpuSamples = scala.collection.mutable.ArrayBuffer[Double]()
-    // a throwing query is reported as "err:<Exception>" — NEVER as a
-    // (fast) time: a broken query must look broken in BENCH json, not fast
     val firstPass: Seq[(String, Either[String, Double])] =
       selected.zipWithIndex.map { case ((name, fn), i) =>
         if (i % 40 == 0) cpuSamples += cpuOnce()
-        val runs = Seq(timeOnce(fn), timeOnce(fn), timeOnce(fn))
+        val runs = Seq(timed(fn), timed(fn), timed(fn))
         val oks = runs.collect { case Right(t) => t }
         name -> (if (oks.isEmpty) runs.head else Right(oks.min))
       }
@@ -109,7 +88,7 @@ object Bench {
           reran += name
           Thread.sleep(3000) // settle: let a transient co-tenant burst pass
           val fn = SparkEntry.queries(name)
-          val again = Seq(timeOnce(fn), timeOnce(fn), timeOnce(fn))
+          val again = Seq(timed(fn), timed(fn), timed(fn))
             .collect { case Right(x) => x }
           val best = (t +: again).min
           if (spiked(best, ref.get(name))) contended += name
@@ -217,5 +196,40 @@ object Bench {
     } catch { case _: Throwable => () } // read-only checkout: stdout stays authoritative
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","errors":$nErr,"total_normalized":$totalNorm,"cpu_control_min":${num(cpuMin)},"spark_control_min":${num(sparkMin)},"n_queries":${results.size + ingest.size},"n_reran":${reran.length},"contended":$contendedJson,"rerun_skipped":$skippedJson,"queries_file":"$benchOut","sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The session every timed run uses (Bench and `graft.tools.Profile`):
+    * `local[SPARK_GRAFT_CPUS]`, as many shuffle partitions as cores, UTC,
+    * no UI, WARN logging. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Steady-state measurement: run every gate once at the smallest scale
+    * factor (`SPARK_GRAFT_WARM_DIR`) first so codegen/JIT compilation isn't
+    * billed to the timed runs (first-execution overhead measured at 3-10s
+    * per plan, dwarfing the actual sf0.1 work for most queries). Skipped
+    * when the warm-up dir is missing or is the target dir itself. */
+  def warmUp(spark: SparkSession, gates: Seq[Gate], sfDir: String): Unit = {
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
+      gates.foreach(timeOnce(spark, _, warmDir))
+  }
+
+  /** One timed run: the gate's row count and wall seconds. A throwing
+    * gate is reported as "err:<Exception>" — NEVER as a (fast) time: a
+    * broken query must look broken in BENCH json, not fast. */
+  def timeOnce(spark: SparkSession, fn: Gate, dir: String): Either[String, (Long, Double)] = {
+    val t0 = System.nanoTime()
+    try { val n = fn(spark, dir).count(); Right((n, (System.nanoTime() - t0) / 1e9)) }
+    catch { case e: Throwable => Left(s"err:${e.getClass.getSimpleName}") }
   }
 }

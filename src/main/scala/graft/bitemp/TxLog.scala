@@ -114,8 +114,10 @@ object TxLog {
     }
     // Eager precondition (its own small action, early return on abort).
     // Riding the check inside the checkpoint action as a broadcast flag
-    // was measured (tools.ProfileCas) and gained nothing for committing
-    // txs while aborting txs paid a wasted state materialization.
+    // was measured (tools.ProfileCas, since removed: `git show
+    // 0ac7475:src/main/scala/graft/tools/ProfileCas.scala`) and gained
+    // nothing for committing txs while aborting txs paid a wasted state
+    // materialization.
     val p = applyTxParts(state, ops, txId, txTime, shapeHint)
     try {
       // the anti-join stays even when the tx has no evicts (same

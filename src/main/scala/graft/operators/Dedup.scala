@@ -55,7 +55,9 @@ object Dedup {
     * while the per-round probe key set stays broadcast-cheap (≤ ~2·2¹⁷
     * keys ≈ a few MB); at ~10⁶ pairs the measured crossover flips — the
     * per-round key broadcast + rank collect outweigh the shuffled
-    * cascade's exchanges (10× ProfilePipeline table in SCALE.md), so a
+    * cascade's exchanges (10× ProfilePipeline table in SCALE.md; the
+    * tool is removed, `git show
+    * 0ac7475:src/main/scala/graft/tools/ProfilePipeline.scala`), so a
     * duplication-heavy corpus routes to the shuffled form well before
     * driver memory is at risk. */
   private def descentPairsOf(spark: org.apache.spark.sql.SparkSession): Long =

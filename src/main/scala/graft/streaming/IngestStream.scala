@@ -249,13 +249,7 @@ object IngestStream {
   /** Label the per-tx jobs (Spark UI / profiling attribution). */
   private def labeled[A](sp: SparkSession, batchId: Long, what: String)(f: => A): A = {
     sp.sparkContext.setJobDescription(s"graft-tx-$batchId $what")
-    val t0 = System.nanoTime()
-    try f finally {
-      sp.sparkContext.setJobDescription(null)
-      if (java.lang.Boolean.getBoolean("graft.debug.plan"))
-        // scalastyle:off println
-        println(f"    [phase] tx-$batchId $what%-22s ${(System.nanoTime() - t0) / 1e6}%7.0f ms")
-    }
+    try f finally sp.sparkContext.setJobDescription(null)
   }
 
   /** The batch on the resident mirror: the ops are pulled in one bounded
@@ -668,9 +662,6 @@ object IngestStream {
         // a dir without _SUCCESS is a torn write from a crash — the guard
         // must NOT trust it as this tx's delta (ADVICE r7)
         if (fs.exists(target)) fs.delete(target, true)
-        if (java.lang.Boolean.getBoolean("graft.debug.plan"))
-          // scalastyle:off println
-          println(deltaAgg.queryExecution.executedPlan.toString.take(6000))
         // one file per vdelta, capped after the aggregate's shuffle
         deltaAgg.repartition(1).write.mode("overwrite").parquet(target.toString)
       }
