@@ -10,7 +10,10 @@ import graft.queries.LubmQueries
   * DuckDB oracles in LubmSql. */
 class LubmSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private def run(name: String) = LubmQueries.all(name)(spark, "unused")
+  private def run(name: String) = {
+    ReferenceCorpus.assumeFiles(LubmQueries.path)
+    LubmQueries.all(name)(spark, "unused")
+  }
 
   test("lubm q1: graduate students taking GraduateCourse0 (lubm_test.clj:42)") {
     assert(run("lubm_q1").collect().map(_.getString(0)).toSet ==

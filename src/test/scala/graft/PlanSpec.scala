@@ -80,6 +80,7 @@ class PlanSpec extends AnyFunSuite {
     // multi-hop join cascade without degrading join strategy. (q8, not
     // the empty-result q2: AQE collapses an empty cascade to
     // EmptyRelation and there'd be no join left to pin.)
+    ReferenceCorpus.assumeFiles(graft.queries.LubmQueries.path)
     val df = graft.queries.LubmQueries.all("lubm_q8")(spark, dir)
     df.collect() // materialize so AQE settles the final plan
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)

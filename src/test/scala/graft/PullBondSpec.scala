@@ -34,10 +34,13 @@ class PullBondSpec extends AnyFunSuite {
     case other => throw new IllegalStateException(s"unexpected edn $other")
   }
 
+  private val bondPath = s"${ReferenceCorpus.root}/crux-test/resources/data/james-bond.edn"
+
   private lazy val node: GraftNode = {
+    ReferenceCorpus.assumeFiles(bondPath)
     val node = new GraftNode(spark, TableSource.tpch(spark, "/root/testdata/sf0.001"))
-    val edn = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/crux-test/resources/data/james-bond.edn")), "UTF-8")
+    val edn = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(bondPath)),
+      "UTF-8")
     val docs = Edn.parse(edn) match {
       case Edn.Vec(items) => items.map {
         case Edn.MapV(es) => JObject(es.map { case (Edn.Kw(k), v) => k -> ednToJson(v)

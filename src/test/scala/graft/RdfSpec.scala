@@ -35,8 +35,10 @@ class RdfSpec extends AnyFunSuite {
 
   test("artists graph: entity count, ref navigation, blank-node doc (rdf_test.clj:9-28)") {
     import org.apache.spark.sql.functions.col
-    val quads = Rdf.loadNTriples(spark,
-      "/root/reference/labs/crux-rdf/test-resources/crux/example-data-artists.nt")
+    val artists =
+      s"${ReferenceCorpus.root}/labs/crux-rdf/test-resources/crux/example-data-artists.nt"
+    ReferenceCorpus.assumeFiles(artists)
+    val quads = Rdf.loadNTriples(spark, artists)
     // 7 entities: 2 artists, 4 paintings, Picasso's blank-node address
     assert(quads.select("e").distinct().count() == 7)
     def one(e: String, a: String): String =
@@ -61,10 +63,11 @@ class RdfSpec extends AnyFunSuite {
 
   test("dbpedia entities load and query (dbpedia_test.clj:13-30)") {
     import org.apache.spark.sql.functions.col
-    val quads = Rdf.loadNTriples(spark,
-        "/root/reference/crux-test/test/crux/Pablo_Picasso.ntriples")
-      .unionByName(Rdf.loadNTriples(spark,
-        "/root/reference/crux-test/test/crux/Guernica_(Picasso).ntriples"))
+    val picasso = s"${ReferenceCorpus.root}/crux-test/test/crux/Pablo_Picasso.ntriples"
+    val guernica = s"${ReferenceCorpus.root}/crux-test/test/crux/Guernica_(Picasso).ntriples"
+    ReferenceCorpus.assumeFiles(picasso, guernica)
+    val quads = Rdf.loadNTriples(spark, picasso)
+      .unionByName(Rdf.loadNTriples(spark, guernica))
     val strAttrs = quads.filter(col("v_str").isNotNull)
       .select("a").distinct().collect().map(_.getString(0))
     val src = new graft.datalog.QuadSource(quads, strAttrs.map(_ -> "v_str").toMap)

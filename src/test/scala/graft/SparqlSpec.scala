@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.datalog.QuadSource
+import graft.queries.SparqlQueries
 import graft.sparql.Sparql
 import graft.sources.Rdf
 
@@ -21,7 +22,8 @@ class SparqlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private lazy val source: QuadSource = {
-    val quads = Rdf.loadNTriples(spark, "/root/reference/crux-test/test/crux/vc-db-1.nt")
+    ReferenceCorpus.assumeFiles(SparqlQueries.path)
+    val quads = Rdf.loadNTriples(spark, SparqlQueries.path)
     val attrs = quads.select("a").distinct().collect().map(_.getString(0))
     val types = attrs.map { a =>
       a -> (if (a == "age") "v_num" else "v_str")
@@ -240,11 +242,18 @@ class SparqlSpec extends AnyFunSuite {
     Sparql.query(spark, src, q).collect().toSet[Row].map(_.toSeq.map(unwrap))
 
   test("unsupported syntax fails loudly") {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    // Sparql.parse rejects each query before any source is read
+    val quads = spark.createDataFrame(Seq(Row("x", "b", "y")).asJava,
+      StructType(Seq(StructField("e", StringType), StructField("a", StringType),
+        StructField("v_str", StringType))))
+    val src = new QuadSource(quads, Map("b" -> "v_str"))
     for (bad <- Seq(
       "SELECT ?x WHERE { ?x ?p ?o }", // variable predicate (sparql.clj throws too)
       "ASK { ?x <http://a#b> ?y }",
       "SELECT ?x WHERE { ?x <http://a#b> ?y . FILTER bound(?y) }"))
       assertThrows[IllegalArgumentException](
-        Sparql.query(spark, source, bad).collect())
+        Sparql.query(spark, src, bad).collect())
   }
 }
