@@ -67,7 +67,11 @@ object Bitemp {
     * schema); `contentHash` may be null. */
   final case class Version(eid: String, vt: java.time.LocalDateTime,
       tt: java.time.LocalDateTime, txId: Long, contentHash: String,
-      tombstone: Boolean)
+      tombstone: Boolean) {
+    /** This version as a row in `TxLog.versionSchema` column order. */
+    def toRow: org.apache.spark.sql.Row =
+      org.apache.spark.sql.Row(eid, vt, tt, txId, contentHash, tombstone)
+  }
 
   private val versionKeyCols = Seq(0, 1, 2, 3, 5) // all but content_hash
 
@@ -98,6 +102,24 @@ object Bitemp {
       }
     }
     best.values.filter(!_.tombstone)
+  }
+
+  /** The driver twin of [[history]] (and of the [[TxLog.resolvedHistory]]
+    * it runs) over resident versions: the rows with vtStart ≤ vt < vtEnd;
+    * without corrections only the greatest tx_id per (eid, vt); ordered
+    * by eid, then (vt, tx_id) ascending or descending. */
+  def historyLocal(versions: Iterable[Version], sortAsc: Boolean, withCorrections: Boolean,
+      vtStart: Option[java.time.LocalDateTime],
+      vtEnd: Option[java.time.LocalDateTime]): Seq[Version] = {
+    val inRange = versions.iterator.filter(v =>
+      vtStart.forall(b => !v.vt.isBefore(b)) && vtEnd.forall(v.vt.isBefore)).toSeq
+    val corrected =
+      if (withCorrections) inRange
+      else inRange.groupBy(v => (v.eid, v.vt)).valuesIterator.map(_.maxBy(_.txId)).toSeq
+    implicit val vtOrd: Ordering[java.time.LocalDateTime] = _ compareTo _
+    val byVt = Ordering[(java.time.LocalDateTime, Long)]
+    corrected.sortBy(v => (v.eid, (v.vt, v.txId)))(
+      Ordering.Tuple2(Ordering.String, if (sortAsc) byVt else byVt.reverse))
   }
 
   /** Entity history (crux-core/src/crux/kv/index_store.clj:524-554; API

@@ -1,7 +1,7 @@
 package graft.bitemp
 
 import java.time.LocalDateTime
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, ResidentRelation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Route
 
@@ -11,10 +11,11 @@ import graft.sources.Route
   * probe: at interactive op counts the sequential tx fold is pure
   * scheduler latency (ingest_cas measured 16 jobs over 6 SQL execs for
   * three txs of ≤ 16k ops), so while BOTH the current state and the
-  * batch's op list fit [[DefaultTxDriverRows]] (limit-bounded collects;
-  * conf `spark.graft.route.tx.maxRows`, 0 disables), the whole fold runs in
-  * memory and the new state returns as a LocalRelation — zero jobs per
-  * subsequent tx, because a LocalRelation collects without a job.
+  * batch's op list fit [[DefaultTxDriverRows]] (conf
+  * `spark.graft.route.tx.maxRows`, 0 disables), the whole fold runs in
+  * memory and the new state returns as a [[ResidentRelation]] over a
+  * [[State]] — the next tx, a node snapshot or an entity history reads
+  * that value by reference, with no collect and no job.
   *
   * SEMANTICS ARE NOT REIMPLEMENTED: the per-entity fold is the same
   * [[TxLogFold.foldEntity]] the distributed groupByKey fold runs (the
@@ -28,11 +29,12 @@ import graft.sources.Route
   * conf-disabled distributed path on randomized cas/evict/range
   * programs.
   *
-  * A 100 TB state (or a bulk tx) is over the bound after one bounded
-  * collect and takes the unchanged distributed paths; so does an op list
-  * with a null `seq`, a state row with a null key column
-  * ([[Bitemp.versionsOf]]), and any call whose driver body fails
-  * non-fatally.
+  * Any other state (a LocalRelation handed in, or a small distributed
+  * one) is pulled into a [[State]] once, by one bounded collect. A
+  * 100 TB state (or a bulk tx) is over the bound and takes the unchanged
+  * distributed paths; so does an op list with a null `seq`, a state row
+  * with a null key column ([[Bitemp.versionsOf]]), and any call whose
+  * driver body fails non-fatally.
   */
 private[graft] object TxDriver {
 
@@ -44,7 +46,7 @@ private[graft] object TxDriver {
   private[graft] val DefaultTxDriverRows: Long = 1L << 17
 
   /** The route's bound in `spark`'s session. */
-  private[graft] def maxRows(spark: org.apache.spark.sql.SparkSession): Long =
+  private[graft] def maxRows(spark: SparkSession): Long =
     Route.maxRows(spark, "tx", DefaultTxDriverRows)
 
   private def bound(df: DataFrame): Long = maxRows(df.sparkSession)
@@ -79,9 +81,8 @@ private[graft] object TxDriver {
 
   private implicit val ldtOrd: Ordering[LocalDateTime] = _ compareTo _
 
-  /** In-memory version store, seeded with the state (or with just the
-    * touched entities' rows: a tx reads no other entity); one instance
-    * per routed call. */
+  /** In-memory version store, seeded with the touched entities' rows (a
+    * tx reads no other entity); one instance per routed call. */
   private[graft] final class MemState(state: Array[Bitemp.Version]) {
     val byEid = new scala.collection.mutable.HashMap[
       String, scala.collection.mutable.ArrayBuffer[Bitemp.Version]]
@@ -162,24 +163,71 @@ private[graft] object TxDriver {
       }
       Some(emitted)
     }
+  }
 
-    def toDf(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val rows = byEid.valuesIterator.flatMap(_.iterator.map(v =>
-        Row(v.eid, v.vt, v.tt, v.txId, v.contentHash, v.tombstone))).toList
-      spark.createDataFrame(rows.asJava, TxLog.versionSchema)
+  /** A driver-resident version state: its rows by entity and their
+    * count. Immutable; a [[ResidentRelation]] state frame holds it by
+    * reference. */
+  private[graft] final class State(val byEid: Map[String, Vector[Bitemp.Version]],
+      val size: Long) {
+    def frame(spark: SparkSession): DataFrame =
+      ResidentRelation(spark, this, TxLog.versionSchema, size)(
+        byEid.valuesIterator.flatMap(_.iterator.map(_.toRow)))
+
+    def filter(p: Bitemp.Version => Boolean): State =
+      State.of(byEid.valuesIterator.flatMap(_.iterator.filter(p)))
+
+    /** The greatest tx id and the greatest tx time; None when empty. */
+    def latest: Option[(Long, LocalDateTime)] =
+      if (size == 0) None
+      else Some((byEid.valuesIterator.flatMap(_.iterator.map(_.txId)).max,
+        byEid.valuesIterator.flatMap(_.iterator.map(_.tt)).max))
+
+    /** A [[MemState]] seeded with the rows of the entities `ops` touch
+      * (a tx reads no other entity) and, once `run` has folded over it,
+      * this state with those entities' rows replaced by the fold's. */
+    def fold(ops: Iterable[OpRow])(run: MemState => Unit): State = {
+      val eids = ops.iterator.map(_.eid).toSet
+      val mem = new MemState(eids.iterator.flatMap(e => byEid.getOrElse(e, Vector.empty)).toArray)
+      run(mem)
+      var next = byEid
+      var n = size
+      eids.foreach { e =>
+        n -= byEid.get(e).fold(0)(_.size)
+        mem.byEid.get(e).filter(_.nonEmpty) match {
+          case Some(vs) => next = next.updated(e, vs.toVector); n += vs.size
+          case None => next -= e
+        }
+      }
+      new State(next, n)
     }
   }
 
-  private def stateCols(state: DataFrame): DataFrame =
-    state.select(TxLog.versionSchema.fieldNames.map(col).toSeq: _*)
+  private[graft] object State {
+    def of(versions: Iterator[Bitemp.Version]): State = {
+      val byEid = versions.toVector.groupBy(_.eid)
+      new State(byEid, byEid.valuesIterator.map(_.size.toLong).sum)
+    }
+  }
 
-  /** `state`'s rows in `TxLog.versionSchema` order, read without a job:
-    * Some only for a LocalRelation state (the form this route returns)
-    * within the bound. Any other state answers None without running
-    * anything, so a reader decides its route for free. */
-  private[graft] def residentRows(state: DataFrame): Option[Array[Row]] =
-    if (state.isLocal) Route.collect(stateCols(state), bound(state)) else None
+  /** The [[State]] `state` holds by reference, within its session's bound;
+    * None for any other frame. Runs nothing. */
+  private[graft] def resident(state: DataFrame): Option[State] =
+    ResidentRelation.valueOf(state).collect { case s: State if s.size <= bound(state) => s }
+
+  /** `state` as a [[State]] within `b` rows: the resident value itself,
+    * or any other frame pulled once by one bounded collect. */
+  private def stateOf(state: DataFrame, b: Long): Option[State] =
+    ResidentRelation.valueOf(state) match {
+      case Some(s: State) => Some(s).filter(_.size <= b)
+      case _ => Route.collect(state.select(TxLog.versionSchema.fieldNames.map(col).toSeq: _*), b)
+        .flatMap(Bitemp.versionsOf).map(vs => State.of(vs.iterator))
+    }
+
+  /** A tx time at the microsecond precision Spark stores (the distributed
+    * fold's `lit(txTime)`), so a resident state reads as a stored one. */
+  private def micros(t: LocalDateTime): LocalDateTime =
+    t.truncatedTo(java.time.temporal.ChronoUnit.MICROS)
 
   /** [[TxLog.applyTx]]'s driver route: Some((newState, aborted)) when
     * both the state and the tx fit the bound, None → distributed path. */
@@ -191,12 +239,12 @@ private[graft] object TxDriver {
       for {
         opRows <- Route.collect(opsSel, b)
         txOps <- opRowsOf(opRows, TxLog.opSchema)
-        stRows <- Route.collect(stateCols(state), b)
-        st <- Bitemp.versionsOf(stRows)
+        st <- stateOf(state, b)
       } yield {
-        val mem = new MemState(st)
-        if (mem.applyOne(txOps, txId, txTime).isEmpty) (state, true)
-        else (mem.toDf(state.sparkSession), false)
+        var aborted = false
+        val next = st.fold(txOps)(mem =>
+          aborted = mem.applyOne(txOps, txId, micros(txTime)).isEmpty)
+        if (aborted) (state, true) else (next.frame(state.sparkSession), false)
       }
     }
   }
@@ -220,17 +268,16 @@ private[graft] object TxDriver {
       for {
         opRows <- Route.collect(tagged, b)
         txOps <- opRowsOf(opRows, taggedSchema)
-        stRows <- Route.collect(stateCols(state), b)
-        st <- Bitemp.versionsOf(stRows)
+        st <- stateOf(state, b)
       } yield {
-        val mem = new MemState(st)
         val byTx = opRows.map(_.getInt(0)).zip(txOps).groupMap(_._1)(_._2)
-        txs.zipWithIndex.foreach { case ((txId, txTime, _), i) =>
-          // aborted txs leave state unchanged (applyBatch contract)
-          mem.applyOne(byTx.getOrElse(i, Array.empty[OpRow]), txId, txTime)
-          ()
-        }
-        mem.toDf(state.sparkSession)
+        st.fold(txOps) { mem =>
+          txs.zipWithIndex.foreach { case ((txId, txTime, _), i) =>
+            // aborted txs leave state unchanged (applyBatch contract)
+            mem.applyOne(byTx.getOrElse(i, Array.empty[OpRow]), txId, micros(txTime))
+            ()
+          }
+        }.frame(state.sparkSession)
       }
     }
   }

@@ -25,8 +25,12 @@ import graft.datalog.{FactSource, Planner}
   *
   * Up to the `tx` size route's bound (`spark.graft.route.tx.maxRows`,
   * default 2^17 rows) the state lives in driver memory: the tx fold
-  * leaves `versions` a LocalRelation and the doc store is a driver map,
-  * so put-only txs and [[db]] snapshots run no Spark job. Above the bound,
+  * leaves `versions` a [[org.apache.spark.sql.ResidentRelation]] holding
+  * its versions by entity by reference, and the doc store is a driver map
+  * of docs parsed once when stored. Put-only txs, [[db]] snapshots,
+  * [[entityTx]] and [[entityHistory]] read that memory and run no Spark
+  * job; a snapshot's quads are the same kind of leaf, so its joins plan
+  * as broadcasts without a shuffle. Above the bound,
   * and for a state loaded from files, both are distributed DataFrames:
   * txs union and checkpoint the doc store, snapshots resolve with a
   * distributed plan, and no read collects a whole table to the driver —
@@ -60,10 +64,13 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
   private def load(v: DataFrame, d: GraftNode.DocStore): Unit = synchronized {
     versions = v
     docs = d
-    val top = v.agg(max("tx_id"), max("tt")).head()
-    if (!top.isNullAt(0)) {
-      txIdGen.set(top.getLong(0))
-      txs.add(TxInfo(top.getLong(0), top.getAs[java.time.LocalDateTime](1), committed = true))
+    val top = TxDriver.resident(v).map(_.latest).getOrElse {
+      val r = v.agg(max("tx_id"), max("tt")).head()
+      if (r.isNullAt(0)) None else Some((r.getLong(0), r.getAs[java.time.LocalDateTime](1)))
+    }
+    top.foreach { case (id, tt) =>
+      txIdGen.set(id)
+      txs.add(TxInfo(id, tt, committed = true))
     }
   }
 
@@ -122,14 +129,14 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     * tx aborts (failed match — with-tx returns nil, fork_test.clj:42).
     * `validTime` is the forked db's valid-time basis: ops without an
     * explicit valid time land there. State DataFrames are immutable, so
-    * the fork is O(1) — no data copy. */
+    * the fork is O(1) — no data copy; a resident state at a tx basis is
+    * filtered in driver memory. */
   def withTx(ops: List[JValue],
       validTime: Option[java.time.LocalDateTime] = None,
       txTime: Option[java.time.LocalDateTime] = None,
       txId: Option[Long] = None): Option[GraftNode] = {
-    var base = versions
-    txId.foreach(id => base = base.filter(col("tx_id") <= id))
-    txTime.foreach(tt => base = base.filter(col("tt") <= tt))
+    val base = TxDriver.resident(versions).fold(GraftNode.knownAt(versions, txId, txTime))(
+      _.filter(GraftNode.knownAt(txId, txTime)).frame(spark))
     val fork = new GraftNode(spark, source, sqlDir, fnAllowList)
     fork.load(base, docs)
     val info = fork.submitTxAt(ops, validTime)
@@ -272,15 +279,21 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     * crux.api/entity: entity-tx resolution + doc-store fetch. */
   def entityTx(eid: String, validTime: Option[java.time.LocalDateTime],
       txTime: Option[java.time.LocalDateTime], txId: Option[Long]): Option[Row] = {
-    val now = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-    val vt = lit(validTime.getOrElse(now))
-    val one = versions.filter(col("eid") === eid)
-    val resolved = (txTime, txId) match {
-      case (_, Some(id)) => Bitemp.asOf(one, vt, lit(id))
-      case (Some(tt), _) => Bitemp.asOfTime(one, vt, lit(tt))
-      case _ => Bitemp.asOf(one, vt, lit(Long.MaxValue))
-    }
-    resolved.limit(1).collect().headOption
+    val vt = validTime.getOrElse(java.time.LocalDateTime.now(java.time.ZoneOffset.UTC))
+    val basis = GraftNode.basisOf(txTime, txId)
+    val state = versions
+    TxDriver.resident(state).flatMap(st => graft.sources.Route.attempt(Some(
+      Bitemp.asOfLocal(st.byEid.getOrElse(eid, Vector.empty), vt, basis).headOption.map(v =>
+        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          v.toRow.toSeq.toArray, TxLog.versionSchema): Row))))
+      .getOrElse {
+        val one = state.filter(col("eid") === eid)
+        val resolved = basis match {
+          case Left(id) => Bitemp.asOf(one, lit(vt), lit(id))
+          case Right(tt) => Bitemp.asOfTime(one, lit(vt), lit(tt))
+        }
+        resolved.limit(1).collect().headOption
+      }
   }
 
   def entityDoc(eid: String, validTime: Option[java.time.LocalDateTime],
@@ -292,25 +305,40 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
   /** Entity history rows (+docs when asked) — crux.api/entity-history.
     * An optional tx basis (id or time) restricts to versions KNOWN at
     * that point on the transaction axis (api_test.clj:292 queries
-    * history at earlier db bases). */
+    * history at earlier db bases). Over a resident state (and, with docs,
+    * a resident doc store) the history resolves in driver memory
+    * ([[Bitemp.historyLocal]]) and returns as a LocalRelation of its
+    * rows; any other state runs [[Bitemp.history]]. */
   def entityHistory(eid: String, sortAsc: Boolean, withCorrections: Boolean,
       withDocs: Boolean,
       startVt: Option[java.time.LocalDateTime], endVt: Option[java.time.LocalDateTime],
       txTime: Option[java.time.LocalDateTime] = None, txId: Option[Long] = None): DataFrame = {
-    var base = versions.filter(col("eid") === eid)
-    txId.foreach(id => base = base.filter(col("tx_id") <= id))
-    txTime.foreach(tt => base = base.filter(col("tt") <= tt))
-    val h = Bitemp.history(base,
-      sortAsc = sortAsc, withCorrections = withCorrections,
-      vtStart = startVt.map(lit(_)), vtEnd = endVt.map(lit(_)))
-    if (withDocs) {
-      val sort =
-        if (sortAsc) Seq(col("vt").asc, col("tx_id").asc)
-        else Seq(col("vt").desc, col("tx_id").desc)
-      h.join(docs.frame, Seq("content_hash"), "left")
-        .select((Bitemp.metaCols.map(col) :+ col("doc")): _*)
-        .orderBy(sort: _*)
-    } else h
+    val (state, store) = (versions, docs)
+    val resident = for {
+      st <- TxDriver.resident(state)
+      byHash <- if (withDocs) store.resident else Some(Map.empty[String, GraftNode.Doc])
+      h <- graft.sources.Route.attempt(Some(Bitemp.historyLocal(
+        st.byEid.getOrElse(eid, Vector.empty).filter(GraftNode.knownAt(txId, txTime)),
+        sortAsc, withCorrections, startVt, endVt)))
+    } yield {
+      import scala.jdk.CollectionConverters._
+      if (!withDocs) spark.createDataFrame(h.map(_.toRow).asJava, TxLog.versionSchema)
+      else spark.createDataFrame(h.map(v => Row(v.eid, v.vt, v.tt, v.txId, v.tombstone,
+        byHash.get(v.contentHash).map(_.json).orNull)).asJava, GraftNode.HistoryDocsSchema)
+    }
+    resident.getOrElse {
+      val h = Bitemp.history(GraftNode.knownAt(state.filter(col("eid") === eid), txId, txTime),
+        sortAsc = sortAsc, withCorrections = withCorrections,
+        vtStart = startVt.map(lit(_)), vtEnd = endVt.map(lit(_)))
+      if (withDocs) {
+        val sort =
+          if (sortAsc) Seq(col("vt").asc, col("tx_id").asc)
+          else Seq(col("vt").desc, col("tx_id").desc)
+        h.join(store.frame, Seq("content_hash"), "left")
+          .select((Bitemp.metaCols.map(col) :+ col("doc")): _*)
+          .orderBy(sort: _*)
+      } else h
+    }
   }
 
   /** Datalog query → DataFrame (find-var column names preserved). */
@@ -430,10 +458,13 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     * several families binds tagged/Mixed.
     *
     * Scale: while the node's state is driver-resident — `versions` the
-    * LocalRelation the `tx` route leaves, within its bound
+    * resident relation the `tx` route leaves, within its bound
     * (`spark.graft.route.tx.maxRows`, default 2^17 rows), and the doc
     * store a driver map — the snapshot is built in driver memory with no
-    * Spark job, and its quads are an RDD parallelized from there. Any
+    * Spark job from each doc's facts, parsed once when the doc was
+    * stored. Its quads are a [[org.apache.spark.sql.ResidentRelation]]:
+    * row-count statistics, so attribute joins broadcast, and one
+    * partition up to 2^16 quads, so they need no shuffle. Any
     * other state takes the distributed form, decided without a job: the
     * resolve is a distributed aggregate, doc→quad explosion a distributed
     * flatMap (never a driver collect) checkpointed once per handle, and
@@ -460,11 +491,7 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
           s"latest completed ${latest.map(_.txId).getOrElse("none")}")
     }
     val vt = validTime.getOrElse(java.time.LocalDateTime.now(java.time.ZoneOffset.UTC))
-    val basis: Either[Long, java.time.LocalDateTime] = (txTime, txId) match {
-      case (_, Some(id)) => Left(id)
-      case (Some(tt), _) => Right(tt)
-      case _ => Left(Long.MaxValue)
-    }
+    val basis = GraftNode.basisOf(txTime, txId)
     val (state, store) = (versions, docs)
     residentDb(state, store, vt, basis)
       .getOrElse(distributedDb(state, store.frame, vt, basis))
@@ -475,25 +502,20 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
   private def residentDb(state: DataFrame, store: GraftNode.DocStore,
       vt: java.time.LocalDateTime,
       basis: Either[Long, java.time.LocalDateTime]): Option[graft.datalog.QuadSource] =
-    store.resident.flatMap { byHash =>
-      graft.sources.Route.attempt {
-        TxDriver.residentRows(state).flatMap(Bitemp.versionsOf).map { vs =>
-          val quads = Bitemp.asOfLocal(vs, vt, basis).toSeq.flatMap { v =>
-            byHash.get(v.contentHash).toSeq.flatMap(GraftNode.docQuads(v.eid, _))
-          }
-          // parallelized from driver memory, not a LocalRelation: both
-          // build with no job, but over a LocalRelation Catalyst evaluates
-          // every attribute frame's filter on the driver while optimizing
-          // each query (3x the optimization time of a scanned frame)
-          val slices = math.min(spark.sparkContext.defaultParallelism,
-            quads.size / GraftNode.QuadsPerSlice + 1)
-          GraftNode.snapshot(
-            spark.createDataFrame(spark.sparkContext.parallelize(quads, slices))
-              .toDF(GraftNode.QuadCols: _*),
-            GraftNode.AttrFamily.of(quads))
+    for {
+      byHash <- store.resident
+      st <- TxDriver.resident(state)
+      src <- graft.sources.Route.attempt {
+        val quads = Bitemp.asOfLocal(st.byEid.values.view.flatten, vt, basis).toVector.flatMap { v =>
+          byHash.get(v.contentHash).toSeq.flatMap(_.facts.map { case (a, s, n, d, b) =>
+            (v.eid, a, s, n, d, b) })
         }
+        val frame = org.apache.spark.sql.ResidentRelation(spark, quads,
+          GraftNode.QuadSchema, quads.size)(quads.iterator.map(q =>
+          Row(q._1, q._2, q._3, q._4.getOrElse(null), q._5.getOrElse(null), q._6.getOrElse(null))))
+        Some(GraftNode.snapshot(frame, GraftNode.AttrFamily.of(quads)))
       }
-    }
+    } yield src
 
   /** [[db]]'s distributed form. */
   private def distributedDb(state: DataFrame, docFrame: DataFrame,
@@ -591,30 +613,69 @@ object GraftNode {
     * column of its family (all value columns null for a nil fact). */
   private[http] type Quad = (String, String, String, Option[Long], Option[Double], Option[Boolean])
   private[http] val QuadCols: Seq[String] = Seq("e", "a", "v_str", "v_num", "v_dbl", "v_bool")
-  /** Quads per partition of a driver-built snapshot: a small snapshot
-    * scans as one task, a large one spreads up to the default
-    * parallelism. */
-  private val QuadsPerSlice = 1 << 16
+  private val QuadSchema = {
+    import org.apache.spark.sql.types._
+    StructType(QuadCols.zip(Seq(StringType, StringType, StringType, LongType, DoubleType,
+      BooleanType)).map { case (c, t) => StructField(c, t) })
+  }
+  /** Columns of a history with docs. */
+  private val HistoryDocsSchema = org.apache.spark.sql.types.StructType(
+    TxLog.versionSchema.filter(_.name != "content_hash") :+
+      org.apache.spark.sql.types.StructField("doc", org.apache.spark.sql.types.StringType))
 
-  /** One stored doc's quads — the explode both [[GraftNode.db]] forms
+  /** A quad without its entity: attribute and value columns. */
+  private[http] type Fact = (String, String, Option[Long], Option[Double], Option[Boolean])
+
+  /** One stored doc's facts — the explode both [[GraftNode.db]] forms
     * run: a fact per top-level field, one per element of an array, a
     * nested object as its canonical JSON string. */
-  private[http] def docQuads(eid: String, doc: String): Seq[Quad] = {
-    def rows(a: String, v: JValue): Seq[Quad] = v match {
+  private[http] def docFacts(doc: String): Seq[Fact] = {
+    def rows(a: String, v: JValue): Seq[Fact] = v match {
       case JArray(items) => items.flatMap(rows(a, _))
-      case JString(s) => Seq((eid, a, s, None, None, None))
-      case JInt(n) => Seq((eid, a, null, Some(n.toLong), None, None))
-      case JLong(n) => Seq((eid, a, null, Some(n), None, None))
-      case JDouble(d) => Seq((eid, a, null, None, Some(d), None))
-      case JDecimal(d) => Seq((eid, a, null, None, Some(d.toDouble), None))
-      case JBool(b) => Seq((eid, a, null, None, None, Some(b)))
-      case JNull | JNothing => Seq((eid, a, null, None, None, None))
-      case other => Seq((eid, a, Json.render(other), None, None, None))
+      case JString(s) => Seq((a, s, None, None, None))
+      case JInt(n) => Seq((a, null, Some(n.toLong), None, None))
+      case JLong(n) => Seq((a, null, Some(n), None, None))
+      case JDouble(d) => Seq((a, null, None, Some(d), None))
+      case JDecimal(d) => Seq((a, null, None, Some(d.toDouble), None))
+      case JBool(b) => Seq((a, null, None, None, Some(b)))
+      case JNull | JNothing => Seq((a, null, None, None, None))
+      case other => Seq((a, Json.render(other), None, None, None))
     }
     Json.parse(doc) match {
       case JObject(fields) => fields.flatMap { case (a, v) => rows(a, v) }
       case _ => Nil
     }
+  }
+
+  /** One stored doc's quads: its facts under entity `eid`. */
+  private[http] def docQuads(eid: String, doc: String): Seq[Quad] =
+    docFacts(doc).map { case (a, s, n, d, b) => (eid, a, s, n, d, b) }
+
+  /** A resident doc: its canonical JSON, and its facts parsed once. */
+  private[http] final class Doc(val json: String) {
+    lazy val facts: Seq[Fact] = docFacts(json)
+  }
+
+  /** A tx basis as [[Bitemp.asOfLocal]] takes it: a tx id wins over a tx
+    * time; neither is the latest tx. */
+  private def basisOf(txTime: Option[java.time.LocalDateTime],
+      txId: Option[Long]): Either[Long, java.time.LocalDateTime] = (txTime, txId) match {
+    case (_, Some(id)) => Left(id)
+    case (Some(tt), _) => Right(tt)
+    case _ => Left(Long.MaxValue)
+  }
+
+  /** Whether a version is known at an optional tx id and tx time. */
+  private def knownAt(txId: Option[Long], txTime: Option[java.time.LocalDateTime])(
+      v: Bitemp.Version): Boolean =
+    txId.forall(v.txId <= _) && txTime.forall(tt => !v.tt.isAfter(tt))
+
+  /** `versions` restricted to the rows known at an optional tx id and tx
+    * time. */
+  private def knownAt(versions: DataFrame, txId: Option[Long],
+      txTime: Option[java.time.LocalDateTime]): DataFrame = {
+    val byId = txId.fold(versions)(id => versions.filter(col("tx_id") <= id))
+    txTime.fold(byId)(tt => byId.filter(col("tt") <= tt))
   }
 
   /** One attribute's value families over a snapshot's quads: facts per
@@ -655,31 +716,34 @@ object GraftNode {
     new graft.datalog.QuadSource(quads, attrTypes, refAttrs = refAttrs, multiAttrs = multiAttrs)
   }
 
-  /** The node's content-addressed doc store. `resident` (hash → canonical
-    * doc JSON in driver memory) while it fits the `tx` route's bound, so
-    * a tx adds docs and a snapshot reads them with no job; `frame` is
-    * then a LocalRelation built on first use. Otherwise `frame` alone,
-    * the distributed form. Immutable, so a fork shares it. */
+  /** The node's content-addressed doc store. `resident` (hash → doc in
+    * driver memory) while it fits the `tx` route's bound, so a tx adds
+    * docs and a snapshot reads their facts with no job; `frame` is then a
+    * LocalRelation built on first use. Otherwise `frame` alone, the
+    * distributed form. Immutable, so a fork shares it. */
   private[http] final class DocStore private (spark: SparkSession,
-      val resident: Option[Map[String, String]], distributed: DataFrame) {
+      val resident: Option[Map[String, Doc]], distributed: DataFrame) {
 
     lazy val frame: DataFrame = resident match {
       case Some(byHash) =>
         import spark.implicits._
-        byHash.toSeq.toDF("content_hash", "doc")
+        byHash.iterator.map { case (h, d) => (h, d.json) }.toSeq.toDF("content_hash", "doc")
       case None => distributed
     }
 
     def lookup(hash: String): Option[String] = resident match {
-      case Some(byHash) => byHash.get(hash)
+      case Some(byHash) => byHash.get(hash).map(_.json)
       case None => frame.filter(col("content_hash") === hash).limit(1).collect()
         .headOption.map(_.getAs[String]("doc"))
     }
 
     /** This store plus `docs`: still resident while the union fits the
-      * bound, else the distributed union, deduped and checkpointed. */
+      * bound (each new doc's facts parsed here, once), else the
+      * distributed union, deduped and checkpointed. */
     def add(docs: Seq[(String, String)]): DocStore =
-      resident.map(_ ++ docs).filter(_.size <= TxDriver.maxRows(spark)) match {
+      resident.map(byHash => byHash ++ docs.iterator.filterNot(d => byHash.contains(d._1))
+        .map { case (h, json) => val d = new Doc(json); d.facts; h -> d })
+        .filter(_.size <= TxDriver.maxRows(spark)) match {
         case Some(byHash) => DocStore.resident(spark, byHash)
         case None =>
           import spark.implicits._
@@ -694,7 +758,7 @@ object GraftNode {
       val kept = frame.join(live, Seq("content_hash"), "left_semi")
       resident match {
         case Some(byHash) =>
-          val next = kept.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+          val next = kept.collect().map(r => r.getString(0) -> byHash(r.getString(0))).toMap
           (DocStore.resident(spark, next), (byHash.size - next.size).toLong)
         case None =>
           val before = frame.count()
@@ -705,7 +769,7 @@ object GraftNode {
   }
 
   private[http] object DocStore {
-    def resident(spark: SparkSession, byHash: Map[String, String]): DocStore =
+    def resident(spark: SparkSession, byHash: Map[String, Doc]): DocStore =
       new DocStore(spark, Some(byHash), null)
 
     /** A loaded doc frame: resident when it is a LocalRelation within the
@@ -715,7 +779,7 @@ object GraftNode {
       val pulled = if (!d.isLocal) None else graft.sources.Route.collect(
         d.select(col("content_hash"), col("doc")), TxDriver.maxRows(spark))
       pulled.fold(new DocStore(spark, None, d))(rows => resident(spark,
-        rows.iterator.filter(!_.isNullAt(0)).map(r => r.getString(0) -> r.getString(1)).toMap))
+        rows.iterator.filter(!_.isNullAt(0)).map(r => r.getString(0) -> new Doc(r.getString(1))).toMap))
     }
   }
 }

@@ -26,8 +26,10 @@ import graft.sources.{Rdf, WatDivGen}
   * after the first shuffle).
   */
 object WatDivQueries {
-  /** Committed deterministic slice (see [[WatDivGen]] provenance). */
-  val path = "/root/repo/data/watdiv/watdiv-slice.nt"
+  /** Committed deterministic slice (see [[WatDivGen]] provenance), as an
+    * absolute path into the working directory's checkout: the oracle SQL
+    * embeds it, so it must name one file wherever it is read. */
+  val path: String = java.nio.file.Paths.get(WatDivGen.defaultPath).toAbsolutePath.toString
 
   private val attrs = Seq("type", "parentCountry", "caption", "hasGenre",
     "contentRating", "hasReview", "reviewer", "rating", "totalVotes",

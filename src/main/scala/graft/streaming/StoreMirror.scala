@@ -135,12 +135,9 @@ private[streaming] object StoreMirror {
     def at(m: StateManifest): Snapshot = new Snapshot(Some(m), byEid, size, views, declinedViews)
   }
 
-  private def versionRow(v: Bitemp.Version): Row =
-    Row(v.eid, v.vt, v.tt, v.txId, v.contentHash, v.tombstone)
-
   /** Version rows by entity as `TxLog.versionSchema` rows. */
   def rowsOf(byEid: Map[String, Vector[Bitemp.Version]]): Seq[Row] =
-    byEid.valuesIterator.flatMap(_.iterator.map(versionRow)).toSeq
+    byEid.valuesIterator.flatMap(_.iterator.map(_.toRow)).toSeq
 
   /** A LocalRelation over `rows` (the data is copied in): collecting it
     * runs no job. */
@@ -280,8 +277,8 @@ private[streaming] object StoreMirror {
         // range restore re-emits an older tx id, which is not "before")
         val prior = winner(if (fromTx >= txId - 1) before.byEid.getOrElse(eid, Vector.empty)
           else stack.filter(_.txId <= fromTx))
-        after.map(v => Row.fromSeq(1L +: versionRow(v).toSeq)).iterator ++
-          prior.map(v => Row.fromSeq(-1L +: versionRow(v).toSeq)).iterator
+        after.map(v => Row.fromSeq(1L +: v.toRow.toSeq)).iterator ++
+          prior.map(v => Row.fromSeq(-1L +: v.toRow.toSeq)).iterator
       }.toSeq
     }
   }

@@ -159,6 +159,53 @@ class NodeSnapshotSpec extends AnyFunSuite {
     }, runs = 6, seed = 57L)
   }
 
+  test("driver entityHistory and entityTx ≡ the same calls at maxRows=0 on random node programs (property)") {
+    // one call: entity, sort order, corrections, docs, vt bounds, a tx
+    // basis (none, a tx id or a tx time of the n-th tx) and a valid time
+    val call = for {
+      eid <- Gen.oneOf(eids)
+      asc <- Gen.oneOf(true, false)
+      corrections <- Gen.oneOf(true, false)
+      withDocs <- Gen.oneOf(true, false)
+      start <- Gen.option(Gen.oneOf(pastVts))
+      end <- Gen.option(Gen.oneOf(pastVts :+ futureVt))
+      basis <- Gen.oneOf("none", "tx-id", "tx-time")
+      nth <- Gen.choose(1, 5)
+      vt <- Gen.option(Gen.oneOf(pastVts :+ futureVt))
+    } yield (eid, asc, corrections, withDocs, start.map(LocalDateTime.parse),
+      end.map(LocalDateTime.parse), basis, nth, vt.map(LocalDateTime.parse))
+    // the same put twice at one past valid time: two corrections of one
+    // (eid, vt), so a history with corrections holds a (vt, tx_id) tie
+    val correction = for { d <- doc; vt <- Gen.oneOf(pastVts) } yield
+      List[JValue](JArray(List(JString("put"), d, JString(vt))))
+    val program = for {
+      n <- Gen.choose(2, 5)
+      txs <- Gen.listOfN(n, tx)
+      fix <- correction
+      calls <- Gen.listOfN(6, call)
+    } yield (txs :+ fix :+ fix, calls)
+    check(Prop.forAllNoShrink(program) { case (txs, calls) =>
+      val node = newNode()
+      val infos = txs.map(node.submitTx)
+      // every entity's whole history, newest first with corrections: the
+      // call whose order rests on the (vt, tx_id) tie-break
+      val sweep = eids.map(e => (e, false, true, false, None, None, "none", 1, None))
+      (sweep ++ calls).foreach { case (eid, asc, corrections, withDocs, start, end, basis, nth, vt) =>
+        val info = infos(math.min(nth, infos.size) - 1)
+        val txId = if (basis == "tx-id") Some(info.txId) else None
+        val txTime = if (basis == "tx-time") Some(info.txTime) else None
+        def history() = node.entityHistory(eid, asc, corrections, withDocs, start, end,
+          txTime, txId).collect().toSeq.map(_.toSeq)
+        def entity() = node.entityTx(eid, vt, txTime, txId).map(_.toSeq)
+        val what = s"$eid asc=$asc corrections=$corrections docs=$withDocs vt=[$start, $end) " +
+          s"$basis of tx $nth at $vt"
+        assert(history() == distributed(history()), s"history $what")
+        assert(entity() == distributed(entity()), s"entityTx $what")
+      }
+      true
+    }, runs = 10, seed = 61L)
+  }
+
   // ------------------------------------------------------------- job counts
 
   private def put(id: String, n: Long): JValue =
@@ -183,6 +230,41 @@ class NodeSnapshotSpec extends AnyFunSuite {
       val (_, overDbJobs) = SparkJobs.count(spark)(over.db())
       assert(overDbJobs > 0, "maxRows=0 keeps the distributed snapshot")
     }
+  }
+
+  test("under the tx bound entityHistory and entityTx run no Spark job; at maxRows=0 history stays distributed") {
+    val node = newNode()
+    node.submitTx((1 to 20).map(i => put(s"e$i", i.toLong)).toList)
+    node.submitTx(List(put("e1", 100L)))
+    Seq(false, true).foreach { withDocs =>
+      val (rows, jobs) = SparkJobs.count(spark)(node.entityHistory("e1", sortAsc = true,
+        withCorrections = false, withDocs = withDocs, startVt = None, endVt = None).collect())
+      assert(jobs == 0 && rows.length == 2, s"history with docs=$withDocs: $jobs jobs")
+    }
+    val (doc, txJobs) = SparkJobs.count(spark)(node.entityDoc("e1", None, None, None))
+    assert(txJobs == 0 && doc.isDefined, "entityTx + doc over resident state")
+    val (_, distJobs) = SparkJobs.count(spark)(distributed(node.entityHistory("e1",
+      sortAsc = true, withCorrections = false, withDocs = false, startVt = None,
+      endVt = None).collect()))
+    assert(distJobs > 0, "maxRows=0 keeps the distributed history")
+  }
+
+  test("a two-attribute :in query over a resident db() plans without a shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val node = newNode()
+    node.submitTx((1 to 200).map(i => put(s"e$i", i.toLong)).toList)
+    val df = node.queryAt("{:find [?e ?n] :in [?t] :where [[?e :tier ?t] [?e :n ?n]]}", Seq("even"))
+    assert(df.collect().length == 100)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+      p.collect { case s: ShuffleExchangeLike => s } ++ p.collect {
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => shuffles(q.plan)
+      }.flatten
+    assert(shuffles(plan).isEmpty, s"shuffle exchange in\n$plan")
   }
 
   test("a state that is not driver-resident takes the distributed snapshot with no extra pull") {

@@ -2412,7 +2412,7 @@ class OperatorsSpec extends AnyFunSuite {
     val (bpeDist, distJobs) = withRoutes("bpe" -> 0L)(jobs(merges()))
     assert(driverJobs < distJobs, s"jobs: $driverJobs vs $distJobs")
     assert(bpeDriver == bpeDist)
-    // tx: the driver fold returns a LocalRelation state
+    // tx: the driver fold returns a resident state
     val txTime = java.time.LocalDateTime.parse("2020-01-01T00:00:00")
     val ops = spark.createDataFrame(java.util.Arrays.asList(
       Row("put", "a", "h1", null, null, null, null, 1L),
@@ -2420,7 +2420,8 @@ class OperatorsSpec extends AnyFunSuite {
     def tx() = TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, txTime)._1
     val txDriver = tx()
     val txDist = withRoutes("tx" -> 0L)(tx())
-    assert(isLocal(txDriver) && !isLocal(txDist))
+    assert(org.apache.spark.sql.ResidentRelation.valueOf(txDriver).isDefined &&
+      org.apache.spark.sql.ResidentRelation.valueOf(txDist).isEmpty)
     assert(spanSet(txDriver) == spanSet(txDist))
     // rules: the driver fixpoint collects one relation per round, the
     // DataFrame fixpoint pays distinct/except/checkpoint jobs per round

@@ -186,10 +186,9 @@ class TxLogFoldSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(4000 + trial)
       val txs = randomTxs(rnd, nTxs = 8, withCas = trial % 2 == 0)
       // default conf: the bounded driver route serves these tiny txs and
-      // the state comes back as a LocalRelation (zero-job collects later)
+      // the state comes back resident (later txs read it with no job)
       val driver = TxLog.applyBatch(TxLog.emptyState(spark), txs)
-      assert(driver.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      assert(org.apache.spark.sql.ResidentRelation.valueOf(driver).isDefined,
         "small batch must take the driver route")
       val viaDist = dist(TxLog.applyBatch(TxLog.emptyState(spark), txs))
       assert(stateRows(driver) == stateRows(viaDist), s"trial $trial diverged")
@@ -209,8 +208,7 @@ class TxLogFoldSpec extends AnyFunSuite {
       "spark.graft.route.tx.maxRows" -> "1") {
       TxLog.applyBatch(TxLog.emptyState(spark), txs)
     }
-    assert(!tight.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+    assert(org.apache.spark.sql.ResidentRelation.valueOf(tight).isEmpty,
       "an over-bound batch must not route driver-side")
     assert(stateRows(tight) ==
       stateRows(dist(TxLog.applyBatchSeq(TxLog.emptyState(spark), txs))))
@@ -227,8 +225,7 @@ class TxLogFoldSpec extends AnyFunSuite {
       Row("cas", "a", "h3", null, null, vts(2), "h1", 2L)
     ).asJava, TxLog.opSchema)
     val (one, _) = TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, t)
-    assert(!one.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+    assert(org.apache.spark.sql.ResidentRelation.valueOf(one).isEmpty,
       "a null seq must decline the driver route")
     assert(stateRows(one) ==
       stateRows(dist(TxLog.applyTx(TxLog.emptyState(spark), ops, 1L, t)._1)))

@@ -14,6 +14,9 @@ class WatDivSpec extends AnyFunSuite {
   private def run(name: String) = WatDivQueries.all(name)(spark, "unused")
 
   test("generator is deterministic and matches the committed slice") {
+    assert(java.nio.file.Paths.get(WatDivQueries.path)
+      .startsWith(java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath),
+      s"${WatDivQueries.path} is not in this checkout")
     val committed = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(WatDivQueries.path))
     val regen = WatDivGen.triples()
