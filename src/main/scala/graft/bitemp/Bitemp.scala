@@ -38,29 +38,36 @@ object Bitemp {
   /** Resolve the current-facts snapshot at (validTime, txId basis).
     *
     * Returns one row per live entity, same schema as `versions`.
+    *
+    * Under the `tx` route bound, when `versions` is deterministic filters
+    * over a driver-resident tx state (a [[TxDriver]] state frame, or an
+    * ingest store's `loadState`) and `validTime` and `maxTxId` are
+    * literals, the snapshot resolves in driver memory: the filters'
+    * `eid = …` / `eid IN (…)` keys are looked up by entity, and the
+    * winners come back as a LocalRelation, so collecting them runs no job
+    * ([[TxDriver.tryAsOf]]). Any other input runs the aggregate below.
     */
-  def asOf(versions: DataFrame, validTime: Column, maxTxId: Column): DataFrame = {
-    val payload = versions.columns.toSeq
-    val candidate = versions
-      .filter(col("vt") <= validTime && col("tx_id") <= maxTxId)
-    candidate
-      .groupBy(col("eid"))
-      .agg(max_by(struct(payload.map(col): _*), struct(col("vt"), col("tx_id"))).as("_r"))
-      .select("_r.*")
-      .filter(!col("tombstone"))
-  }
+  def asOf(versions: DataFrame, validTime: Column, maxTxId: Column): DataFrame =
+    resolve(versions, validTime, Left(maxTxId))
 
   /** As-of by transaction *time* instead of tx-id (the reference resolves a
     * tx-time basis to a tx-id first, crux-core/src/crux/query.clj:1931-1952;
-    * here tt ≤ TT directly, equivalent for a monotonic log). */
-  def asOfTime(versions: DataFrame, validTime: Column, txTime: Column): DataFrame = {
+    * here tt ≤ TT directly, equivalent for a monotonic log). Routes in
+    * driver memory as [[asOf]] does. */
+  def asOfTime(versions: DataFrame, validTime: Column, txTime: Column): DataFrame =
+    resolve(versions, validTime, Right(txTime))
+
+  private def resolve(versions: DataFrame, validTime: Column,
+      basis: Either[Column, Column]): DataFrame = {
     val payload = versions.columns.toSeq
-    versions
-      .filter(col("vt") <= validTime && col("tt") <= txTime)
+    val known = basis.fold(col("tx_id") <= _, col("tt") <= _)
+    val resolved = versions
+      .filter(col("vt") <= validTime && known)
       .groupBy(col("eid"))
       .agg(max_by(struct(payload.map(col): _*), struct(col("vt"), col("tx_id"))).as("_r"))
       .select("_r.*")
       .filter(!col("tombstone"))
+    TxDriver.tryAsOf(versions, validTime, basis, resolved.schema).getOrElse(resolved)
   }
 
   /** One row of a driver-resident version state (the TxLog version

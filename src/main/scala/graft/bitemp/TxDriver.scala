@@ -1,8 +1,9 @@
 package graft.bitemp
 
 import java.time.LocalDateTime
-import org.apache.spark.sql.{DataFrame, ResidentRelation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, ResidentRelation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType, TimestampNTZType}
 import graft.sources.Route
 
 /** Bounded ALL-DRIVER route for the INTERACTIVE transaction paths
@@ -14,8 +15,9 @@ import graft.sources.Route
   * batch's op list fit [[DefaultTxDriverRows]] (conf
   * `spark.graft.route.tx.maxRows`, 0 disables), the whole fold runs in
   * memory and the new state returns as a [[ResidentRelation]] over a
-  * [[State]] — the next tx, a node snapshot or an entity history reads
-  * that value by reference, with no collect and no job.
+  * [[State]] — the next tx, a node snapshot, an entity history or an
+  * as-of read ([[tryAsOf]]) reads that value by reference, with no
+  * collect and no job.
   *
   * SEMANTICS ARE NOT REIMPLEMENTED: the per-entity fold is the same
   * [[TxLogFold.foldEntity]] the distributed groupByKey fold runs (the
@@ -171,8 +173,10 @@ private[graft] object TxDriver {
   private[graft] final class State(val byEid: Map[String, Vector[Bitemp.Version]],
       val size: Long) {
     def frame(spark: SparkSession): DataFrame =
-      ResidentRelation(spark, this, TxLog.versionSchema, size)(
-        byEid.valuesIterator.flatMap(_.iterator.map(_.toRow)))
+      ResidentRelation(spark, this, TxLog.versionSchema, size)(rows)
+
+    /** The versions as `TxLog.versionSchema` rows. */
+    def rows: Iterator[Row] = byEid.valuesIterator.flatMap(_.iterator.map(_.toRow))
 
     def filter(p: Bitemp.Version => Boolean): State =
       State.of(byEid.valuesIterator.flatMap(_.iterator.filter(p)))
@@ -204,16 +208,53 @@ private[graft] object TxDriver {
   }
 
   private[graft] object State {
-    def of(versions: Iterator[Bitemp.Version]): State = {
-      val byEid = versions.toVector.groupBy(_.eid)
+    def of(versions: Iterator[Bitemp.Version]): State = apply(versions.toVector.groupBy(_.eid))
+
+    def apply(byEid: Map[String, Vector[Bitemp.Version]]): State =
       new State(byEid, byEid.valuesIterator.map(_.size.toLong).sum)
-    }
   }
 
   /** The [[State]] `state` holds by reference, within its session's bound;
     * None for any other frame. Runs nothing. */
   private[graft] def resident(state: DataFrame): Option[State] =
     ResidentRelation.valueOf(state).collect { case s: State if s.size <= bound(state) => s }
+
+  /** [[Bitemp.asOf]] (`basis` Left, a tx id) and [[Bitemp.asOfTime]]
+    * (Right, a tx time) in driver memory: when `versions` is
+    * deterministic filters over a resident [[State]] within the bound, and
+    * the valid time and the basis are literals of the compared columns'
+    * types (a `TIMESTAMP_NTZ` vt and tx time, a long or int tx id), the
+    * candidates are the filters' `eid` keys looked up by entity (every row
+    * without a key), each re-checked against the whole filter condition,
+    * and [[Bitemp.asOfLocal]] picks the winners. They return as a
+    * LocalRelation in `schema` (the distributed result's), so collecting
+    * them runs no job. None → the distributed plan. */
+  private[bitemp] def tryAsOf(versions: DataFrame, validTime: Column,
+      basis: Either[Column, Column], schema: StructType): Option[DataFrame] = {
+    val b = bound(versions)
+    Route.attempt(for {
+      f <- ResidentRelation.filtered(versions) if b > 0
+      st <- Some(f.value).collect { case s: State if s.size <= b => s }
+      vt <- ntzLiteral(validTime)
+      known <- basis match {
+        case Left(id) => ResidentRelation.literalOf(id).collect {
+          case (n: Long, LongType) => Left(n)
+          case (n: Int, IntegerType) => Left(n.toLong)
+        }
+        case Right(tt) => ntzLiteral(tt).map(Right(_))
+      }
+    } yield {
+      val test = f.test
+      val candidates = f.keys("eid").fold(st.byEid.valuesIterator.flatten)(
+        _.iterator.flatMap(st.byEid.getOrElse(_, Vector.empty)))
+      val winners = Bitemp.asOfLocal(candidates.filter(v => test(v.toRow)).toVector, vt, known)
+      import scala.jdk.CollectionConverters._
+      versions.sparkSession.createDataFrame(winners.map(_.toRow).toSeq.asJava, schema)
+    })
+  }
+
+  private def ntzLiteral(c: Column): Option[LocalDateTime] =
+    ResidentRelation.literalOf(c).collect { case (t: LocalDateTime, TimestampNTZType) => t }
 
   /** `state` as a [[State]] within `b` rows: the resident value itself,
     * or any other frame pulled once by one bounded collect. */

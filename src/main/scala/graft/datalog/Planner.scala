@@ -36,7 +36,11 @@ object Planner {
     * pin path equivalence). */
   val DefaultRuleDriverRowLimit: Long = 1000000L
 
-  final case class Rel(df: DataFrame, distinctSure: Boolean) {
+  /** A relation of bindings. `scalar` marks a scalar `:in` seed, whose
+    * one row binds its one var to that value: a merge step applies it as
+    * a filter or a literal column instead of joining it. */
+  final case class Rel(df: DataFrame, distinctSure: Boolean,
+      scalar: Option[(String, Any)] = None) {
     def vars: Set[String] = df.columns.toSet
   }
 
@@ -572,7 +576,15 @@ private final class Planner(spark: SparkSession, source: FactSource,
   }
 
   def inRel(b: Binding, arg: Any): Rel = b match {
-    case BindScalar(v) => Rel(litDf(Seq(v.name), Seq(Seq(arg))), distinctSure = true)
+    case BindScalar(v) =>
+      val value = norm(arg)
+      val plain = value match {
+        case null | _: String | _: Long | _: Double | _: Boolean |
+            _: java.time.LocalDateTime | _: java.sql.Timestamp => true
+        case _ => false
+      }
+      Rel(litDf(Seq(v.name), Seq(Seq(arg))), distinctSure = true,
+        scalar = if (plain) Some(v.name -> value) else None)
     case BindColl(v) =>
       Rel(litDf(Seq(v.name), arg.asInstanceOf[Seq[Any]].map(Seq(_))).distinct(), distinctSure = true)
     case BindTuple(vs) =>
@@ -867,24 +879,24 @@ private final class Planner(spark: SparkSession, source: FactSource,
       val (sharing, other) = rest.partition(r => (r.vars & current.vars).nonEmpty)
       var next = if (sharing.nonEmpty) sharing.head else other.head
       val shared = (next.vars & current.vars).toSeq
-      // a shared var that is mixed-family tagged on ONE side joins in tag
-      // space: lift the single-family side before the equi-join
-      shared.foreach { v =>
-        val (ct, nt) = (current.df.schema(v).dataType, next.df.schema(v).dataType)
-        if (isTagged(ct) && !isTagged(nt))
-          next = Rel(next.df.withColumn(v, taggedOf(col(v), nt)), next.distinctSure)
-        else if (!isTagged(ct) && isTagged(nt))
-          current = Rel(current.df.withColumn(v, taggedOf(col(v), ct)), current.distinctSure)
-      }
-      // cross-family unification is statically empty (type-tag semantics).
-      // Build the empty result WITHOUT an equi-join: comparing incompatible
-      // columns throws at analysis (BOOLEAN=BIGINT) or constant-folds into
-      // a runtime cast error — shared vars keep `current`'s typing
-      val famMismatch = shared.exists { v =>
-        val (tl, tr) = (tagOf(current.df.schema(v).dataType), tagOf(next.df.schema(v).dataType))
-        tl != tr && tl != 3 && tr != 3 // NullType (tag 3) joins any family
-      }
-      val joinedDf =
+      val joinedDf = scalarMerge(current, next).getOrElse {
+        // a shared var that is mixed-family tagged on ONE side joins in tag
+        // space: lift the single-family side before the equi-join
+        shared.foreach { v =>
+          val (ct, nt) = (current.df.schema(v).dataType, next.df.schema(v).dataType)
+          if (isTagged(ct) && !isTagged(nt))
+            next = Rel(next.df.withColumn(v, taggedOf(col(v), nt)), next.distinctSure)
+          else if (!isTagged(ct) && isTagged(nt))
+            current = Rel(current.df.withColumn(v, taggedOf(col(v), ct)), current.distinctSure)
+        }
+        // cross-family unification is statically empty (type-tag semantics).
+        // Build the empty result WITHOUT an equi-join: comparing incompatible
+        // columns throws at analysis (BOOLEAN=BIGINT) or constant-folds into
+        // a runtime cast error — shared vars keep `current`'s typing
+        val famMismatch = shared.exists { v =>
+          val (tl, tr) = (tagOf(current.df.schema(v).dataType), tagOf(next.df.schema(v).dataType))
+          famsDiffer(tl, tr)
+        }
         if (shared.isEmpty) current.df.crossJoin(next.df)
         else if (famMismatch) {
           val rest = next.df.columns.filterNot(shared.toSet)
@@ -904,6 +916,7 @@ private final class Planner(spark: SparkSession, source: FactSource,
             next.df.columns.filterNot(shared.toSet).map(c => col(s"__jr.$c").as(c))
           l.join(r, cond).select(keepCols.toSeq: _*)
         }
+      }
       current = Rel(joinedDf, current.distinctSure && next.distinctSure && shared.nonEmpty)
       rest = (if (sharing.nonEmpty) sharing.tail ++ other else other.tail)
       // apply any predicates/get-attrs that have just become applicable —
@@ -979,6 +992,37 @@ private final class Planner(spark: SparkSession, source: FactSource,
     case DateType | TimestampType | TimestampNTZType => 7
     case StringType => 8
     case _ => 10
+  }
+
+  /** Whether two family tags never unify; NullType (tag 3) unifies with
+    * any family. */
+  private def famsDiffer(tl: Int, tr: Int): Boolean = tl != tr && tl != 3 && tr != 3
+
+  /** A merge step with a scalar `:in` seed ([[Rel.scalar]]) on either
+    * side: the other side filtered on `v <=> value` when it binds the
+    * seed's var `v` (the value lifted into tag space as the join lifts a
+    * column, and no rows across families), else extended by the value as
+    * a column. Same rows, columns and column types as the null-safe
+    * equi-join or cross join, without a literal relation to broadcast;
+    * None when neither side is such a seed. */
+  private def scalarMerge(current: Rel, next: Rel): Option[DataFrame] = {
+    val (seed, other) = if (next.scalar.isDefined) (next, current) else (current, next)
+    seed.scalar.map { case (v, value) =>
+      val dt = seed.df.schema(v).dataType
+      val ot = if (other.vars(v)) Some(other.df.schema(v).dataType) else None
+      val lifted = ot.exists(isTagged)
+      val seedCol = if (lifted) taggedOf(lit(value), dt) else lit(value)
+      val merged = ot match {
+        case None => other.df.withColumn(v, seedCol)
+        case Some(t) =>
+          val mismatch = !lifted && famsDiffer(tagOf(dt), tagOf(t))
+          val kept = other.df.filter(if (mismatch) lit(false) else col(v) <=> seedCol)
+          // a join keeps the left side's column of a shared var
+          if (seed eq current) kept.withColumn(v, seedCol) else kept
+      }
+      merged.select((current.df.columns ++ next.df.columns.filterNot(current.vars))
+        .map(col).toSeq: _*)
+    }
   }
 
   /** Tagged mixed-family value (QuadSource.Mixed; [[Tagged]] for the
@@ -3049,7 +3093,8 @@ private final class Planner(spark: SparkSession, source: FactSource,
     // grouping var and the struct joins AFTER the fold — one struct per
     // aggregated row, never inside the aggregation shuffle.
     lazy val pullFrames: Seq[(FindPull, DataFrame)] = {
-      val cat = source.pullCatalog.getOrElse(
+      // read only for a pull: a source without a catalog answers the rest
+      lazy val cat = source.pullCatalog.getOrElse(
         throw new IllegalArgumentException("this source does not support pull"))
       /** table of a pull var: a SUBJECT-position triple binds it to the
         * attr's owning table; a VALUE-position binding under a ref attr

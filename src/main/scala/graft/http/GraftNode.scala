@@ -281,19 +281,14 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
       txTime: Option[java.time.LocalDateTime], txId: Option[Long]): Option[Row] = {
     val vt = validTime.getOrElse(java.time.LocalDateTime.now(java.time.ZoneOffset.UTC))
     val basis = GraftNode.basisOf(txTime, txId)
-    val state = versions
-    TxDriver.resident(state).flatMap(st => graft.sources.Route.attempt(Some(
-      Bitemp.asOfLocal(st.byEid.getOrElse(eid, Vector.empty), vt, basis).headOption.map(v =>
-        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          v.toRow.toSeq.toArray, TxLog.versionSchema): Row))))
-      .getOrElse {
-        val one = state.filter(col("eid") === eid)
-        val resolved = basis match {
-          case Left(id) => Bitemp.asOf(one, lit(vt), lit(id))
-          case Right(tt) => Bitemp.asOfTime(one, lit(vt), lit(tt))
-        }
-        resolved.limit(1).collect().headOption
-      }
+    // over a resident state the as-of resolves by entity lookup in
+    // driver memory and the collect runs no job (Bitemp.asOf)
+    val one = versions.filter(col("eid") === eid)
+    val resolved = basis match {
+      case Left(id) => Bitemp.asOf(one, lit(vt), lit(id))
+      case Right(tt) => Bitemp.asOfTime(one, lit(vt), lit(tt))
+    }
+    resolved.limit(1).collect().headOption
   }
 
   def entityDoc(eid: String, validTime: Option[java.time.LocalDateTime],

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.bitemp.TxLog
+import graft.bitemp.{TxDriver, TxLog}
 import graft.sources.Route
 
 /** Typed rows for [[IngestStream.sessions]] (flatMapGroupsWithState). */
@@ -279,27 +279,28 @@ object IngestStream {
       val hasEvict = txShape.fold(txOps.exists(_.op == "evict"))(_.hasEvict)
       val f = StoreMirror.fold(snap, txOps, batchId, txTime)
       val curDirs = (cur.flatMap(_.base), cur.toSeq.flatMap(_.deltas))
-      def writeState(): (StateManifest, Map[String, Vector[graft.bitemp.Bitemp.Version]]) =
+      def write(dir: String, label: String, st: TxDriver.State): Unit =
+        labeled(sp, batchId, label)(
+          StoreMirror.single(sp, st.rows.toSeq, TxLog.versionSchema)
+            .write.mode("overwrite").parquet(s"$stateDir/$dir"))
+      def writeState(): (StateManifest, TxDriver.State) =
         if (f.aborted) // advance the tx id over the same data dirs
-          (StateManifest(batchId, curDirs._1, curDirs._2), snap.byEid)
+          (StateManifest(batchId, curDirs._1, curDirs._2), snap.state)
         else if (hasEvict || cur.exists(_.deltas.size + 1 >= compactEvery)) {
           val baseName = s"base-$batchId"
-          val rows = f.compactedByEid
-          labeled(sp, batchId, "state compact+fold")(
-            StoreMirror.single(sp, StoreMirror.rowsOf(rows), TxLog.versionSchema)
-              .write.mode("overwrite").parquet(s"$stateDir/$baseName"))
-          (StateManifest(batchId, Some(baseName), Nil), rows)
+          val compacted = TxDriver.State(f.compactedByEid)
+          write(baseName, "state compact+fold", compacted)
+          (StateManifest(batchId, Some(baseName), Nil), compacted)
         } else {
           val deltaName = s"delta-$batchId"
-          labeled(sp, batchId, "delta fold+write")(
-            StoreMirror.single(sp, StoreMirror.rowsOf(f.emitted), TxLog.versionSchema)
-              .write.mode("overwrite").parquet(s"$stateDir/$deltaName"))
-          (StateManifest(batchId, curDirs._1, curDirs._2 :+ deltaName), f.afterByEid)
+          write(deltaName, "delta fold+write", TxDriver.State(f.emitted))
+          (StateManifest(batchId, curDirs._1, curDirs._2 :+ deltaName),
+            TxDriver.State(f.afterByEid))
         }
       matViewDir.filter(_ => flushDue(f.aborted, hasEvict)) match {
         case None =>
-          val (next, byEid) = writeState()
-          (next, f.next(byEid, snap.views, snap.declinedViews))
+          val (next, state) = writeState()
+          (next, f.next(state, snap.views, snap.declinedViews))
         case Some(vd) =>
           // the state write and the view jobs share only the driver-side
           // fold, so they run concurrently; the state write is joined
@@ -307,10 +308,10 @@ object IngestStream {
           val stateF = forked(sp)(writeState())
           val viewsT = scala.util.Try(labeled(sp, batchId, "view maintenance")(
             maintainResident(sp, vd, views, batchId, f, viewCompactEvery, bound, conf)))
-          val (next, byEid) = scala.concurrent.Await.result(stateF,
+          val (next, state) = scala.concurrent.Await.result(stateF,
             scala.concurrent.duration.Duration.Inf)
           val (vs, declined) = viewsT.get
-          (next, f.next(byEid, vs, declined))
+          (next, f.next(state, vs, declined))
       }
     }
   }
@@ -1087,13 +1088,17 @@ object IngestStream {
     * While this JVM's writer keeps the store's mirror resident
     * ([[StoreMirror]]: the store fits the session's `tx` route bound and
     * its current manifest, epoch included, is the one the mirror was built
-    * for) the frame is a one-partition LocalRelation copied from the
-    * mirror's immutable snapshot: no parquet listing, no scan, and no job
-    * to build it. Otherwise — another writer, a fresh JVM, an over-bound
-    * store, or `spark.graft.route.tx.maxRows` = 0 — it is one parquet scan
-    * of the manifest's dirs. Either frame keeps the rows of the commit it
-    * was built at: the mirror frame holds a copy of them, and the scan's
-    * dirs stay until the prune after the next commit but one. */
+    * for) the frame is the `tx` route's resident leaf over the mirror's
+    * immutable [[graft.bitemp.TxDriver.State]]: no parquet listing, no
+    * scan, and no copy to build it. [[graft.bitemp.Bitemp.asOf]] and
+    * `asOfTime` over it — `loadState(...).filter(col("eid").isin(...))`
+    * or unfiltered — resolve in driver memory by entity lookup and run no
+    * job; any other plan over it scans the leaf in one job. Otherwise —
+    * another writer, a fresh JVM, an over-bound store, or
+    * `spark.graft.route.tx.maxRows` = 0 — it is one parquet scan of the
+    * manifest's dirs. Either frame keeps the rows of the commit it was
+    * built at: the leaf holds the snapshot's state by reference, and the
+    * scan's dirs stay until the prune after the next commit but one. */
   def loadState(spark: SparkSession, stateDir: String): DataFrame = {
     val cur = currentManifest(stateDir, spark.sessionState.newHadoopConf())
     StoreMirror.resident(spark, stateDir, cur).fold(storedState(spark, stateDir, cur))(

@@ -13,16 +13,20 @@ import IngestStream.StateManifest
   * log that stays the durable copy.
   *
   * One [[Snapshot]] per store holds the version rows of the committed
-  * stack and, per maintained view, its folded rows. It is used while the
-  * store fits the `tx` route bound (`spark.graft.route.tx.maxRows`) of the
-  * calling session; `0` turns it off for that session.
+  * stack as a [[TxDriver.State]] (the value the `tx` route's resident
+  * leaf holds, so `loadState` is that leaf and an as-of read over it
+  * resolves in memory) and, per maintained view, its folded rows. It is
+  * used while the store fits the `tx` route bound
+  * (`spark.graft.route.tx.maxRows`) of the calling session; `0` turns it
+  * off for that session.
   *
   * The mirror is correct or absent:
   *  - a snapshot answers only for the manifest it was built for,
   *    including the manifest's `epoch` (a random id the store's first
   *    commit writes and every later commit carries), so a store deleted
   *    and recreated at the same path is never answered from the old one;
-  *  - a snapshot is immutable, and frames built from it copy its rows;
+  *  - a snapshot is immutable: a state frame holds it by reference, and
+  *    a view frame copies its rows;
   *  - only the writer seeds it (one bounded pull per store epoch); any
   *    decline — over the bound, a commit this JVM did not make — is
   *    remembered for the epoch, and the store runs its distributed plans.
@@ -113,31 +117,20 @@ private[streaming] object StoreMirror {
     }
 
   /** The committed state of one store: the manifest it matches (None for a
-    * store with no commit yet), its version rows by entity, its maintained
-    * views by view dir, and the view dirs that declined the mirror. */
-  final class Snapshot(val manifest: Option[StateManifest],
-      val byEid: Map[String, Vector[Bitemp.Version]], val size: Long,
+    * store with no commit yet), its version rows as a [[TxDriver.State]],
+    * its maintained views by view dir, and the view dirs that declined the
+    * mirror. */
+  final class Snapshot(val manifest: Option[StateManifest], val state: TxDriver.State,
       val views: Map[String, ViewRows], val declinedViews: Set[String]) {
-    // the frame last built for a session: both reads of a step share it
-    @volatile private var framed: Option[(SparkSession, DataFrame)] = None
 
-    /** The version rows as a frame: a one-partition LocalRelation, so a
-      * filter folds into the relation at planning and an aggregate over it
-      * runs as one single-task job. */
-    def frame(spark: SparkSession): DataFrame = framed match {
-      case Some((s, df)) if s eq spark => df
-      case _ =>
-        val df = single(spark, rowsOf(byEid), TxLog.versionSchema)
-        framed = Some((spark, df))
-        df
-    }
+    /** The version rows as the `tx` route's resident leaf over [[state]]:
+      * building it copies and converts nothing, an as-of read over it
+      * (filtered by `eid` or not) resolves in memory
+      * ([[Bitemp.asOf]]), and a job that scans it converts the rows then. */
+    def frame(spark: SparkSession): DataFrame = state.frame(spark)
 
-    def at(m: StateManifest): Snapshot = new Snapshot(Some(m), byEid, size, views, declinedViews)
+    def at(m: StateManifest): Snapshot = new Snapshot(Some(m), state, views, declinedViews)
   }
-
-  /** Version rows by entity as `TxLog.versionSchema` rows. */
-  def rowsOf(byEid: Map[String, Vector[Bitemp.Version]]): Seq[Row] =
-    byEid.valuesIterator.flatMap(_.iterator.map(_.toRow)).toSeq
 
   /** A LocalRelation over `rows` (the data is copied in): collecting it
     * runs no job. */
@@ -152,11 +145,8 @@ private[streaming] object StoreMirror {
     local(spark, rows, schema).coalesce(1)
 
   private def snapshotOf(manifest: Option[StateManifest],
-      versions: Iterator[Bitemp.Version]): Snapshot = {
-    val byEid = versions.toVector.groupBy(_.eid)
-    new Snapshot(manifest, byEid, byEid.valuesIterator.map(_.size.toLong).sum,
-      Map.empty, Set.empty)
-  }
+      versions: Iterator[Bitemp.Version]): Snapshot =
+    new Snapshot(manifest, TxDriver.State.of(versions), Map.empty, Set.empty)
 
   /** What this JVM knows of one store epoch: its snapshot, or None once
     * the mirror declined it; and the view dirs whose `_viewmeta` sidecar
@@ -185,7 +175,7 @@ private[streaming] object StoreMirror {
       m <- cur if bound > 0
       e <- m.epoch
       s <- slot(spark, stateDir) if s.epoch == e
-      snap <- s.snap if snap.manifest.contains(m) && snap.size <= bound
+      snap <- s.snap if snap.manifest.contains(m) && snap.state.size <= bound
     } yield snap
   }
 
@@ -211,7 +201,7 @@ private[streaming] object StoreMirror {
           case Some(s) if s.epoch == e =>
             val hit = s.snap.filter(_.manifest.contains(m))
             if (hit.isEmpty) c.slot = Some(s.copy(snap = None))
-            hit.filter(_.size <= bound)
+            hit.filter(_.state.size <= bound)
           case _ =>
             val seeded = Route.attempt(Route.collect(stored, bound)
               .flatMap(Bitemp.versionsOf).map(vs => snapshotOf(Some(m), vs.iterator)))
@@ -240,7 +230,7 @@ private[streaming] object StoreMirror {
     /** Every entity's rows after the batch: evicted entities dropped, the
       * emitted rows appended (the delta stack's row multiset). */
     def afterByEid: Map[String, Vector[Bitemp.Version]] =
-      emitted.foldLeft(before.byEid -- evicted) { case (acc, (eid, vs)) =>
+      emitted.foldLeft(before.state.byEid -- evicted) { case (acc, (eid, vs)) =>
         acc.updated(eid, acc.getOrElse(eid, Vector.empty) ++ vs)
       }
 
@@ -250,9 +240,9 @@ private[streaming] object StoreMirror {
     def compactedByEid: Map[String, Vector[Bitemp.Version]] =
       afterByEid.map { case (eid, vs) => eid -> vs.distinctBy(v => (v.vt, v.txId)) }
 
-    def next(byEid: Map[String, Vector[Bitemp.Version]], views: Map[String, ViewRows],
+    def next(state: TxDriver.State, views: Map[String, ViewRows],
         declined: Set[String]): Snapshot =
-      new Snapshot(None, byEid, byEid.valuesIterator.map(_.size.toLong).sum, views, declined)
+      new Snapshot(None, state, views, declined)
 
     /** Signed before/after rows of the span (fromTx, this batch] for the
       * view delta: per touched entity its winner before the span (rows
@@ -264,18 +254,18 @@ private[streaming] object StoreMirror {
     def signed(fromTx: Long, txId: Long, basis: LocalDateTime): Seq[Row] = {
       val touched: Iterable[String] =
         if (fromTx >= txId - 1) opEids
-        else opEids ++ before.byEid.iterator.collect {
+        else opEids ++ before.state.byEid.iterator.collect {
           case (e, vs) if vs.exists(_.txId > fromTx) => e
         } ++ emitted.keysIterator
       def winner(vs: Iterable[Bitemp.Version]): Option[Bitemp.Version] =
         Bitemp.asOfLocal(vs, basis, Right(basis)).headOption
       touched.iterator.flatMap { eid =>
-        val stack = before.byEid.getOrElse(eid, Vector.empty) ++
+        val stack = before.state.byEid.getOrElse(eid, Vector.empty) ++
           emitted.getOrElse(eid, Vector.empty)
         val after = if (evicted(eid)) None else winner(stack)
         // a one-batch span's before side is the pre-batch rows alone (a
         // range restore re-emits an older tx id, which is not "before")
-        val prior = winner(if (fromTx >= txId - 1) before.byEid.getOrElse(eid, Vector.empty)
+        val prior = winner(if (fromTx >= txId - 1) before.state.byEid.getOrElse(eid, Vector.empty)
           else stack.filter(_.txId <= fromTx))
         after.map(v => Row.fromSeq(1L +: v.toRow.toSeq)).iterator ++
           prior.map(v => Row.fromSeq(-1L +: v.toRow.toSeq)).iterator
@@ -294,7 +284,7 @@ private[streaming] object StoreMirror {
       txTime: LocalDateTime): Folded = {
     val opEids = ops.iterator.map(_.eid).toSet
     val mem = new TxDriver.MemState(
-      opEids.iterator.flatMap(e => snap.byEid.getOrElse(e, Vector.empty)).toArray)
+      opEids.iterator.flatMap(e => snap.state.byEid.getOrElse(e, Vector.empty)).toArray)
     mem.applyOne(ops, txId, txTime) match {
       case None => Folded(snap, Map.empty, Set.empty, opEids, aborted = true)
       case Some(emitted) =>

@@ -3,13 +3,13 @@ package org.apache.spark.sql
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** A driver-resident relation: an immutable driver value held by
   * reference as Spark's own `LogicalRDD` leaf, so Catalyst plans it like
@@ -22,7 +22,9 @@ import org.apache.spark.sql.types.StructType
   *  - Building the frame runs no job and converts nothing: the rows become
   *    `UnsafeRow` slices when a job first scans the leaf.
   *  - [[valueOf]] returns the value from the analyzed plan, with no
-  *    collect and no job, so a reader decides its route for free.
+  *    collect and no job, so a reader decides its route for free;
+  *    [[filtered]] does the same under deterministic filters and hands
+  *    the reader their key values and their condition.
   *
   * `LogicalRDD` compares by RDD identity, so two frames over one value are
   * the same relation only when they share the leaf. Lives in this package
@@ -51,13 +53,76 @@ object ResidentRelation {
   }
 
   /** The value `df` holds when it is exactly a resident relation; no job. */
-  def valueOf(df: Dataset[_]): Option[AnyRef] = df.queryExecution.analyzed match {
-    case l: LogicalRDD => l.rdd match {
-      case r: ResidentRDD => Some(r.value)
+  def valueOf(df: Dataset[_]): Option[AnyRef] =
+    filtered(df).collect { case f if f.conditions.isEmpty => f.value }
+
+  /** `df` when its analyzed plan is a chain of deterministic,
+    * subquery-free `Filter`s (possibly none) over a resident relation;
+    * no job. */
+  def filtered(df: Dataset[_]): Option[Filtered] = {
+    @annotation.tailrec
+    def walk(p: LogicalPlan, conds: List[Expression]): Option[Filtered] = p match {
+      case Filter(c, child) if c.deterministic && !SubqueryExpression.hasSubquery(c) =>
+        walk(child, c :: conds)
+      case l: LogicalRDD => l.rdd match {
+        case r: ResidentRDD => Some(new Filtered(r.value, l.output, conds))
+        case _ => None
+      }
       case _ => None
     }
-    case _ => None
+    walk(df.queryExecution.analyzed, Nil)
   }
+
+  /** A resident relation's value under the filter `conditions` (over the
+    * leaf's `output`) that [[filtered]] read off a plan. */
+  final class Filtered private[ResidentRelation] (val value: AnyRef, output: Seq[Attribute],
+      private[ResidentRelation] val conditions: Seq[Expression]) {
+
+    /** The string values that the conjuncts `column = 'v'` and
+      * `column IN ('v', ...)` pin `column` to, intersected; None when no
+      * conjunct pins it. Every row that passes the filters has its
+      * `column` in the set, so the set only narrows. */
+    def keys(column: String): Option[Set[String]] =
+      output.find(a => a.name == column && a.dataType == StringType).flatMap { k =>
+        def conjuncts(e: Expression): Seq[Expression] = e match {
+          case And(l, r) => conjuncts(l) ++ conjuncts(r)
+          case o => Seq(o)
+        }
+        def pins(a: Attribute, vs: Seq[Expression]): Option[Set[Any]] =
+          if (a.semanticEquals(k) && vs.forall {
+            case l: Literal => l.dataType == StringType
+            case _ => false
+          }) Some(vs.map(_.eval()).toSet)
+          else None
+        conditions.flatMap(conjuncts).flatMap {
+          case EqualTo(a: Attribute, l: Literal) => pins(a, Seq(l))
+          case EqualTo(l: Literal, a: Attribute) => pins(a, Seq(l))
+          case In(a: Attribute, ls) => pins(a, ls)
+          case InSet(a: Attribute, hs) if a.semanticEquals(k) => Some(hs)
+          case _ => None
+        }.reduceOption(_ intersect _)
+          .map(_.collect { case s: org.apache.spark.unsafe.types.UTF8String => s.toString })
+      }
+
+    /** The whole filter condition, interpreted, as a test of a row in the
+      * leaf's schema (external types); always true without filters. */
+    def test: Row => Boolean = conditions.reduceOption(And) match {
+      case None => _ => true
+      case Some(c) =>
+        val p = Predicate.createInterpreted(BindReferences.bindReference(c, output))
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(
+          DataTypeUtils.fromAttributes(output))
+        r => p.eval(toCatalyst(r).asInstanceOf[InternalRow])
+    }
+  }
+
+  /** A column's value and type when it is a literal (Spark 4's `Column`
+    * holds a `ColumnNode`, not an expression). */
+  def literalOf(c: Column): Option[(Any, DataType)] =
+    classic.ColumnNodeToExpressionConverter(c.node) match {
+      case l: Literal => Some((CatalystTypeConverters.convertToScala(l.value, l.dataType), l.dataType))
+      case _ => None
+    }
 }
 
 /** The RDD under a [[ResidentRelation]]: holds the driver value, and on

@@ -267,6 +267,24 @@ class NodeSnapshotSpec extends AnyFunSuite {
     assert(shuffles(plan).isEmpty, s"shuffle exchange in\n$plan")
   }
 
+  test("a scalar :in over a resident db() is a filter: no broadcast of a literal relation") {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val node = newNode()
+    node.submitTx((1 to 200).map(i => put(s"e$i", i.toLong)).toList)
+    val df = node.queryAt("{:find [?e ?n] :in [?t] :where [[?e :tier ?t] [?e :n ?n]]}", Seq("even"))
+    assert(df.collect().length == 100)
+    def literalBroadcasts(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case b: BroadcastExchangeExec if b.child.collectFirst { case l: LocalTableScanExec => l }.isDefined => b
+    } ++ p.collect {
+      case a: AdaptiveSparkPlanExec => literalBroadcasts(a.finalPhysicalPlan)
+      case q: QueryStageExec => literalBroadcasts(q.plan)
+    }.flatten
+    assert(literalBroadcasts(df.queryExecution.executedPlan).isEmpty,
+      s"literal relation broadcast in\n${df.queryExecution.executedPlan}")
+  }
+
   test("a state that is not driver-resident takes the distributed snapshot with no extra pull") {
     val node = newNode()
     node.submitTx((1 to 20).map(i => put(s"e$i", i.toLong)).toList)
