@@ -49,20 +49,28 @@ trait FactSource {
   * (any subset of: v_str, v_num, v_dbl, v_ts, v_bool). `attrTypes` names
   * each attribute's value column.
   *
+  * `df` is built on first use. `leaf(a, vcol)` may serve a single-family
+  * attribute from its own `(eid, value)` frame (a resident
+  * [[graft.http.GraftNode.db]] snapshot's per-attribute index), built on
+  * its first [[attr]]; everything else reads `df`.
+  *
   * @param refAttrs attributes whose values are entity ids — the pull
   *   join attributes (the reference marks these in doc refs; pull.clj
   *   follows any value that resolves to an entity). Pull over a quad
   *   source pivots the quads into one wide "entity" frame (single
   *   groupBy, map-side partial agg) and reuses the table compiler —
   *   schemaless pull without per-row driver fetches. */
-final class QuadSource(val df: DataFrame, val attrTypes: Map[String, String],
+final class QuadSource(quads: => DataFrame, val attrTypes: Map[String, String],
     val refAttrs: Set[String] = Set.empty,
     /** cardinality-many attributes: the entity pivot aggregates these as
       * sorted value ARRAYS (one quad row per element stays the scan/join
       * representation) so pull returns every element, not max-one. */
     val multiAttrs: Set[String] = Set.empty,
     /** see [[FactSource.cacheKey]] — set only for file-backed corpora */
-    key: Option[String] = None) extends FactSource {
+    key: Option[String] = None,
+    leaf: (String, String) => Option[DataFrame] = (_, _) => None) extends FactSource {
+  lazy val df: DataFrame = quads
+  private val leaves = scala.collection.concurrent.TrieMap.empty[String, Option[DataFrame]]
   override def cacheKey: Option[String] = key
   def attrs: Set[String] = attrTypes.keySet
   override def stringAttrs: Set[String] =
@@ -82,8 +90,8 @@ final class QuadSource(val df: DataFrame, val attrTypes: Map[String, String],
     if (vcol == QuadSource.Mixed) {
       val tagged = QuadSource.taggedValue(df)
       df.filter(col("a") === a).select(col("e").as("eid"), tagged.as("value"))
-    } else
-      df.filter(col("a") === a).select(col("e").as("eid"), col(vcol).as("value"))
+    } else leaves.getOrElseUpdate(a, leaf(a, vcol)).getOrElse(
+      df.filter(col("a") === a).select(col("e").as("eid"), col(vcol).as("value")))
   }
 
   /** Single scan: string-family rows live in v_str regardless of whether

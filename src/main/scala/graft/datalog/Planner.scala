@@ -150,7 +150,7 @@ object Planner {
       if (scalarSubs.isEmpty) query.where
       else query.where.map(substConstraintArgs(scalarSubs))
     val joined = p.planConjunction(where, inRels.toList)
-    p.finalize(query, joined)
+    org.apache.spark.sql.ResidentRelation.oneStageJoins(p.finalize(query, joined))
   }
 
   private def ednOf(x: Any): Option[Edn.Val] = x match {

@@ -1,7 +1,8 @@
 package graft.http
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, ResidentRelation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 import graft.bitemp.{Bitemp, TxDriver, TxLog}
 import graft.datalog.{FactSource, Planner}
@@ -29,8 +30,8 @@ import graft.datalog.{FactSource, Planner}
   * its versions by entity by reference, and the doc store is a driver map
   * of docs parsed once when stored. Put-only txs, [[db]] snapshots,
   * [[entityTx]] and [[entityHistory]] read that memory and run no Spark
-  * job; a snapshot's quads are the same kind of leaf, so its joins plan
-  * as broadcasts without a shuffle. Above the bound,
+  * job; a snapshot serves each attribute from a leaf of the same kind,
+  * so its joins run in one stage with no exchange. Above the bound,
   * and for a state loaded from files, both are distributed DataFrames:
   * txs union and checkpoint the doc store, snapshots resolve with a
   * distributed plan, and no read collects a whole table to the driver —
@@ -457,9 +458,12 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
     * (`spark.graft.route.tx.maxRows`, default 2^17 rows), and the doc
     * store a driver map — the snapshot is built in driver memory with no
     * Spark job from each doc's facts, parsed once when the doc was
-    * stored. Its quads are a [[org.apache.spark.sql.ResidentRelation]]:
-    * row-count statistics, so attribute joins broadcast, and one
-    * partition up to 2^16 quads, so they need no shuffle. Any
+    * stored. Its facts are grouped by attribute once; each single-family
+    * attribute a query names is its own one-partition
+    * [[org.apache.spark.sql.ResidentRelation]] of `(eid, value)`, so
+    * attribute joins run in one stage with no exchange and no broadcast
+    * ([[org.apache.spark.sql.ResidentRelation.oneStageJoins]]). The rest
+    * read the whole quads, one more such leaf built on first use. Any
     * other state takes the distributed form, decided without a job: the
     * resolve is a distributed aggregate, doc→quad explosion a distributed
     * flatMap (never a driver collect) checkpointed once per handle, and
@@ -501,14 +505,19 @@ final class GraftNode(val spark: SparkSession, val source: FactSource,
       byHash <- store.resident
       st <- TxDriver.resident(state)
       src <- graft.sources.Route.attempt {
-        val quads = Bitemp.asOfLocal(st.byEid.values.view.flatten, vt, basis).toVector.flatMap { v =>
+        val byAttr = Bitemp.asOfLocal(st.byEid.values.view.flatten, vt, basis).toVector.flatMap { v =>
           byHash.get(v.contentHash).toSeq.flatMap(_.facts.map { case (a, s, n, d, b) =>
             (v.eid, a, s, n, d, b) })
-        }
-        val frame = org.apache.spark.sql.ResidentRelation(spark, quads,
-          GraftNode.QuadSchema, quads.size)(quads.iterator.map(q =>
-          Row(q._1, q._2, q._3, q._4.getOrElse(null), q._5.getOrElse(null), q._6.getOrElse(null))))
-        Some(GraftNode.snapshot(frame, GraftNode.AttrFamily.of(quads)))
+        }.groupBy(_._2)
+        // a leaf of `quads` in the quad columns `cols`, named `names`
+        def leaf(value: AnyRef, quads: Iterable[GraftNode.Quad], cols: Seq[Int], names: Seq[String]) =
+          ResidentRelation(spark, value, StructType(cols.zip(names).map { case (i, n) =>
+            GraftNode.QuadSchema(i).copy(name = n) }), quads.size)(
+            quads.iterator.map(q => Row.fromSeq(cols.map(GraftNode.quadValues(q)))))
+        import GraftNode.QuadCols
+        Some(GraftNode.snapshot(leaf(byAttr, byAttr.values.flatten, QuadCols.indices, QuadCols),
+          GraftNode.AttrFamily.of(byAttr), (a, vcol) =>
+            Some(leaf(byAttr(a), byAttr(a), Seq(0, QuadCols.indexOf(vcol)), Seq("eid", "value")))))
       }
     } yield src
 
@@ -608,6 +617,9 @@ object GraftNode {
     * column of its family (all value columns null for a nil fact). */
   private[http] type Quad = (String, String, String, Option[Long], Option[Double], Option[Boolean])
   private[http] val QuadCols: Seq[String] = Seq("e", "a", "v_str", "v_num", "v_dbl", "v_bool")
+  /** A quad's [[QuadCols]] values, null for an absent value. */
+  private def quadValues(q: Quad): Seq[Any] =
+    Seq(q._1, q._2, q._3, q._4.getOrElse(null), q._5.getOrElse(null), q._6.getOrElse(null))
   private val QuadSchema = {
     import org.apache.spark.sql.types._
     StructType(QuadCols.zip(Seq(StringType, StringType, StringType, LongType, DoubleType,
@@ -680,9 +692,9 @@ object GraftNode {
       bools: Long, keywords: Long, maxPerEntity: Long)
 
   private[http] object AttrFamily {
-    /** The summary of driver-side quads. */
-    def of(quads: Seq[Quad]): Seq[AttrFamily] =
-      quads.groupBy(_._2).iterator.map { case (a, qs) =>
+    /** The summary of driver-side quads grouped by attribute. */
+    def of(byAttr: Map[String, Seq[Quad]]): Seq[AttrFamily] =
+      byAttr.iterator.map { case (a, qs) =>
         AttrFamily(a, qs.count(_._3 != null), qs.count(_._4.isDefined),
           qs.count(_._5.isDefined), qs.count(_._6.isDefined),
           qs.count(q => q._3 != null && q._3.startsWith(":")),
@@ -690,9 +702,10 @@ object GraftNode {
       }.toSeq
   }
 
-  /** The snapshot's Datalog source: quads plus the attribute types,
-    * reference attributes and cardinality-many attributes of `fams`. */
-  private[http] def snapshot(quads: DataFrame, fams: Seq[AttrFamily]): graft.datalog.QuadSource = {
+  /** The snapshot's Datalog source: quads (built on first use), `leaf`, and
+    * the attribute types, reference and cardinality-many attributes of `fams`. */
+  private[http] def snapshot(quads: => DataFrame, fams: Seq[AttrFamily],
+      leaf: (String, String) => Option[DataFrame] = (_, _) => None): graft.datalog.QuadSource = {
     val attrTypes = fams.map { f =>
       val present = Seq("v_str" -> f.strs, "v_num" -> f.longs,
         "v_dbl" -> f.doubles, "v_bool" -> f.bools).filter(_._2 > 0).map(_._1)
@@ -708,7 +721,8 @@ object GraftNode {
     val refAttrs = fams.collect { case f if f.keywords > 0 && f.keywords == f.strs &&
       f.longs + f.doubles + f.bools == 0 => f.a }.toSet
     val multiAttrs = fams.collect { case f if f.maxPerEntity > 1 => f.a }.toSet
-    new graft.datalog.QuadSource(quads, attrTypes, refAttrs = refAttrs, multiAttrs = multiAttrs)
+    new graft.datalog.QuadSource(quads, attrTypes, refAttrs = refAttrs, multiAttrs = multiAttrs,
+      leaf = leaf)
   }
 
   /** The node's content-addressed doc store. `resident` (hash → doc in

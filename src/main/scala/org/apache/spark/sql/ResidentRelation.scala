@@ -4,7 +4,10 @@ import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, HintInfo, JoinHint, LogicalPlan,
+  Repartition, SHUFFLE_HASH, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -15,10 +18,11 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * reference as Spark's own `LogicalRDD` leaf, so Catalyst plans it like
   * any scanned relation and never sees its rows.
   *
-  *  - Statistics come from the row count, so a join against it can
-  *    broadcast.
+  *  - Statistics come from the row count.
   *  - Up to [[RowsPerSlice]] rows it is one `SinglePartition` slice, so an
-  *    aggregate or a join of two such leaves needs no exchange.
+  *    aggregate over it needs no exchange, and [[oneStageJoins]] runs
+  *    equi-joins over such leaves in one stage, with no exchange and no
+  *    broadcast.
   *  - Building the frame runs no job and converts nothing: the rows become
   *    `UnsafeRow` slices when a job first scans the leaf.
   *  - [[valueOf]] returns the value from the analyzed plan, with no
@@ -50,6 +54,40 @@ object ResidentRelation {
     val leaf = LogicalRDD(output, new ResidentRDD(sc, value, schema, slices, () => rows),
       if (slices == 1) SinglePartition else UnknownPartitioning(slices))(session, Some(stats))
     classic.Dataset.ofRows(session, leaf)
+  }
+
+  /** `df` with each equi-join whose sides read only one-slice resident
+    * leaves hinted as a shuffled hash join on the side with fewer leaf rows
+    * that its join type can build: it runs in its scans' stage with no
+    * exchange and no broadcast job. A side that joins or unions is coalesced
+    * to one partition, as Spark re-shuffles a nested join's partitioning. */
+  def oneStageJoins(df: DataFrame): DataFrame = {
+    def rows(side: LogicalPlan): Option[BigInt] = {
+      val leaves = side.collectLeaves()
+      val oneSlice = leaves.forall {
+        case l: LogicalRDD => l.rdd.isInstanceOf[ResidentRDD] && l.outputPartitioning == SinglePartition
+        case _ => false
+      }
+      if (oneSlice) Some(leaves.flatMap(_.stats.rowCount).sum) else None
+    }
+    def single(side: LogicalPlan): LogicalPlan =
+      if (side.exists(_.children.size > 1)) Repartition(1, shuffle = false, side) else side
+    val (build, shuffleHash) = (new JoinSelectionHelper {}, Some(HintInfo(Some(SHUFFLE_HASH))))
+    val plan = df.queryExecution.analyzed
+    val hinted = plan.transformUp {
+      case j @ ExtractEquiJoinKeys(joinType, _, _, _, _, left, right, JoinHint.NONE) =>
+        (rows(left), rows(right)) match {
+          case (Some(l), Some(r)) =>
+            val (canLeft, canRight) = (build.canBuildShuffledHashJoinLeft(joinType),
+              build.canBuildShuffledHashJoinRight(joinType))
+            val hint = if (canLeft && (l <= r || !canRight)) Some(JoinHint(shuffleHash, None))
+              else if (canRight) Some(JoinHint(None, shuffleHash)) else None
+            hint.fold(j)(h => j.copy(left = single(left), right = single(right), hint = h))
+          case _ => j
+        }
+    }
+    if (hinted eq plan) df
+    else classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession], hinted)
   }
 
   /** The value `df` holds when it is exactly a resident relation; no job. */
