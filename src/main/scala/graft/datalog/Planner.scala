@@ -3099,26 +3099,32 @@ private final class Planner(spark: SparkSession, source: FactSource,
       /** table of a pull var: a SUBJECT-position triple binds it to the
         * attr's owning table; a VALUE-position binding under a ref attr
         * binds it to that ref's TARGET table ((pull ?p ...) on the target
-        * of [?f :film/bond ?p] — standard reference usage). */
-      def tableOfPullVar(v: V): String = query.where.collectFirst {
+        * of [?f :film/bond ?p] — standard reference usage). None when
+        * the binding attr is one the source does not hold: that triple
+        * is empty (see entityRel), so the query is too. */
+      def tableOfPullVar(v: V): Option[String] = query.where.collectFirst {
         case Triple(V(n), a, _) if n == v.name =>
-          // a clear error beats the bare Option.get's "None.get" — the
-          // typical trigger is a catalog (table) source queried with a
-          // doc-store attribute (the HTTP route needs db=docs for those)
-          source.tableOf(a).getOrElse(throw new IllegalArgumentException(
-            s"pull: attribute :$a resolves to no table in this source"))
+          Option.when(source.attrs.contains(a))(
+            // a clear error beats the bare Option.get's "None.get"
+            source.tableOf(a).getOrElse(throw new IllegalArgumentException(
+              s"pull: attribute :$a resolves to no table in this source")))
       }.orElse(query.where.collectFirst {
         case Triple(_, a, V(n)) if n == v.name =>
-          source.tableOf(a).flatMap(t => cat.tables(t).refs.get(a))
-            .getOrElse(throw new IllegalArgumentException(
-              s"pull var ?${v.name} is bound in value position of :$a, which is not a ref attribute"))
+          Option.when(source.attrs.contains(a))(
+            source.tableOf(a).flatMap(t => cat.tables(t).refs.get(a))
+              .getOrElse(throw new IllegalArgumentException(
+                s"pull var ?${v.name} is bound in value position of :$a, which is not a ref attribute")))
       }).getOrElse(throw new IllegalArgumentException(
         s"pull var ?${v.name} not bound by a triple"))
       pulls.map { p =>
-        val table = tableOfPullVar(p.v)
-        val pdf = graft.pull.Pull.pullSpecs(cat, table,
-            graft.pull.Pull.patternFromEdn(p.pattern))
-          .select(col("_id").cast("string").as(p.v.name), col("pulled").as(outName(p)))
+        val pdf = tableOfPullVar(p.v) match {
+          case Some(table) => graft.pull.Pull.pullSpecs(cat, table,
+              graft.pull.Pull.patternFromEdn(p.pattern))
+            .select(col("_id").cast("string").as(p.v.name), col("pulled").as(outName(p)))
+          case None => spark.createDataFrame(new java.util.ArrayList[Row](),
+            StructType(Seq(StructField(p.v.name, StringType),
+              StructField(outName(p), StructType(Nil)))))
+        }
         (p, pdf)
       }
     }

@@ -26,42 +26,26 @@ import graft.sources.Route
   * guarantees.
   *
   * EXECUTION, size-routed (the GraphX lesson — iterative fixpoints don't
-  * fit per-round Catalyst planning): while the NODE-bounded iteration
-  * state (ranks / frontier / labels) fits the driver, each round is ONE
-  * RDD job — edges stream through a `mapPartitions` lookup against the
-  * broadcast state and a `reduceByKey` whose node-sized result returns to
-  * the driver. No per-round query planning, codegen, or checkpoint
-  * bookkeeping; the edge set itself never moves or collects (the same
-  * bounded-driver-artifact policy as [[Similarity.kmeansAssign]]'s
-  * centroids). Above [[DefaultDriverNodeLimit]] nodes the rounds run as
-  * DataFrame shuffle joins against the hash(src)-partitioned edge table —
-  * the web-scale plan, where even the node state is cluster-resident.
-  * Both paths compute the identical integer recurrence (spec-pinned).
+  * fit per-round Catalyst planning): while the edge set fits the driver
+  * ([[DefaultDriverEdgeLimit]]), the rounds run as array loops over a
+  * memoized dense-indexed edge snapshot, with no job per round. Above it
+  * the rounds run as DataFrame shuffle joins against the
+  * hash(src)-partitioned edge table — the web-scale plan, where the node
+  * state is cluster-resident too. Both routes compute the identical
+  * integer recurrence (differential-spec-pinned).
   */
 object Graph {
 
-  /** Keep the node-bounded iteration state on the driver below this many
-    * nodes: ~2M (id, long) entries ≈ tens to low hundreds of MB —
-    * the same bounded-artifact budget as a broadcast join's build side.
-    * Above it, rounds run as cluster-side shuffle joins. Route
-    * `graph.nodes`: 0 forces the cluster-side DataFrame path (the
-    * differential spec pins driver-path ≡ cluster-path). */
-  private[graft] val DefaultDriverNodeLimit: Long = 2000000L
-
-  /** Innermost route (r15): when the EDGE set itself fits the driver
+  /** The driver route's bound (r15): when the EDGE set fits the driver
     * (≤ 4M (int, int) pairs after dense id indexing ≈ tens of MB — the
-    * same bounded-artifact budget as the node state), the rounds run as
-    * plain array loops with ZERO jobs per round. The per-round
-    * single-job propagate was still paying one task wave + broadcast
-    * build + collect per round — pure scheduling latency at
-    * interactive graph sizes (measured: 5 rounds ≈ 1.2 s of the
-    * pagerank gate's 1.9 s at 1.2M edges). All three routes compute the
-    * identical integer recurrence (differential-spec-pinned). Route
-    * `graph.edges`: 0 forces the outer routes. */
+    * same bounded-artifact budget as a broadcast join's build side), the
+    * rounds run as plain array loops with ZERO jobs per round; a round
+    * that is a Spark job pays a task wave per round — pure scheduling
+    * latency at interactive graph sizes (measured: 5 rounds ≈ 1.2 s of
+    * the pagerank gate's 1.9 s at 1.2M edges). The node index is built
+    * from the edges in hand, so nodes ≤ 2 × edges. Route `graph.edges`:
+    * 0 forces the DataFrame shuffle-join rounds. */
   private[graft] val DefaultDriverEdgeLimit: Long = 1L << 22
-
-  private def nodeLimitOf(spark: org.apache.spark.sql.SparkSession): Long =
-    Route.maxRows(spark, "graph.nodes", DefaultDriverNodeLimit)
 
   /** Dense-indexed driver copy of an edge frame: first-seen node order,
     * id → index, and int edge endpoint arrays. */
@@ -76,7 +60,7 @@ object Graph {
     * plan equality is RDD identity) hit the cache across calls; ad-hoc
     * frames just rebuild. `None` (over the bound, cached too — the
     * answer is a property of the same immutable plan AND limit) routes
-    * the caller to the distributed paths. The limit is part of the key
+    * the caller to the DataFrame rounds. The limit is part of the key
     * (r15 ADVICE): a snapshot cached under the default bound must not be
     * replayed for a caller with a tighter driver-memory bound, nor a
     * None cached under a tight bound force default-limit calls off the
@@ -95,7 +79,7 @@ object Graph {
     * 64 snapshots: ad-hoc plans (a fresh checkpoint per call) never
     * repeat as keys, so a long-lived serving session must not
     * accumulate them. A failed build is not memoized; the caller's
-    * [[Route.attempt]] sends it to the distributed paths. */
+    * [[Route.attempt]] sends it to the DataFrame rounds. */
   private def driverGraph(eRaw: DataFrame): Option[DriverGraph] = {
     val limit = Route.maxRows(eRaw.sparkSession, "graph.edges", DefaultDriverEdgeLimit)
     if (limit <= 0) return None
@@ -126,66 +110,6 @@ object Graph {
     }
   }
 
-
-  /** One fixpoint round, driver-state form: stream the cached (src, dst)
-    * edge RDD against a broadcast per-source emission map (the driver
-    * precomputes emissions — rank÷deg, dist+1, label — per round;
-    * node-bounded work), partial-aggregate per destination (`reduceByKey`
-    * — integer ops only, so partitioning-order free), and collect the
-    * node-bounded result. Exactly one Spark job per round. */
-  private def propagate(edges: org.apache.spark.rdd.RDD[(Any, Any)],
-      emitBySrc: scala.collection.Map[Any, Long],
-      combine: (Long, Long) => Long): scala.collection.mutable.HashMap[Any, Long] = {
-    val sc = edges.sparkContext
-    val bc = sc.broadcast(emitBySrc)
-    // SINGLE-stage round: each partition combines locally into a
-    // node-bounded map and `reduce` merges the partials ON ARRIVAL at the
-    // driver (Spark's mergeResult is incremental, so driver memory is
-    // O(nodes + one partial), not O(partitions × nodes)). A reduceByKey
-    // shuffle here moved ~P×nodes boxed tuples through the
-    // Java-serializing RDD shuffle every round — measured as most of the
-    // round's wall at 1.2M edges.
-    def merge(a: scala.collection.mutable.HashMap[Any, Long],
-        b: scala.collection.mutable.HashMap[Any, Long]): scala.collection.mutable.HashMap[Any, Long] = {
-      val (big, small) = if (a.size >= b.size) (a, b) else (b, a)
-      small.foreach { case (k, v) =>
-        big.get(k) match {
-          case Some(o) => big.update(k, combine(o, v))
-          case None => big.update(k, v)
-        }
-      }
-      big
-    }
-    try edges.mapPartitions { it =>
-        val m = bc.value
-        val acc = new scala.collection.mutable.HashMap[Any, Long]
-        it.foreach { case (s, t) => m.get(s) match {
-          case Some(v) => acc.get(t) match {
-            case Some(o) => acc.update(t, combine(o, v))
-            case None => acc.update(t, v)
-          }
-          case None => ()
-        } }
-        Iterator.single(acc)
-      }.reduce(merge)
-    // non-blocking release: destroy() waits on the remove RPC per round
-    finally bc.unpersist(blocking = false)
-  }
-
-  /** The cached (src, dst) tuple RDD the driver-state rounds scan: the
-    * TUPLES are persisted, not just the DataFrame — otherwise every round
-    * re-pays the InternalRow→Row conversion over the full edge table
-    * (measured ~200 ms/round at 1.2M edges, most of a round). Cached at
-    * a quarter of the source parallelism (floor 8): the per-round kernel
-    * (map lookup + emit) is far lighter than a task's fixed overhead, so
-    * coarser waves cut round wall while the count still scales with the
-    * cluster. */
-  private def edgeTupleRdd(e: DataFrame): org.apache.spark.rdd.RDD[(Any, Any)] = {
-    val parts = math.max(8, e.rdd.getNumPartitions / 4)
-    e.rdd.map(r => (r.get(0), r.get(1))).coalesce(parts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
   /** @param edges directed edges (`srcCol`, `dstCol`); dangling nodes
     *   (no outlinks) simply contribute nothing, the standard simplified
     *   treatment. Returns (id, rank_pico). */
@@ -197,21 +121,12 @@ object Graph {
     val spark = edges.sparkSession
     val eSel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val eRaw = if (assumeDistinct) eSel else eSel.distinct()
-    val idTypeRaw = eSel.schema("src").dataType
-    val nodeLimit = nodeLimitOf(spark)
-    // all-driver probe FIRST (r15): one bounded collect straight off the
-    // (memoized) edge artifact replaces the per-call repartition +
-    // checkpoint + degree shuffle the distributed rounds need — those
-    // layout passes were most of the gate's remaining wall once the
-    // rounds themselves ran driver-side. Honors BOTH bounds: nodes are
-    // derived from the rows in hand, so `graph.nodes` routes exactly
-    // as before (tests force 0 to reach the outer paths). The cheap
-    // disqualifier runs BEFORE the snapshot build (r15 ADVICE: a
-    // lowered node limit must prevent the driver collect, not just
-    // discard its result).
+    val idType = eSel.schema("src").dataType
+    // driver route (r15): one bounded collect straight off the (memoized)
+    // edge artifact replaces the per-call repartition + checkpoint +
+    // degree shuffle the distributed rounds need
     Route.attempt {
-      if (nodeLimit <= 0) None
-      else driverGraph(eRaw).filter(_.nodeIds.length <= nodeLimit).map { dg =>
+      driverGraph(eRaw).map { dg =>
         require(dg.srcA.nonEmpty, "pageRank needs a non-empty edge set")
         import scala.jdk.CollectionConverters._
         val nV = dg.nodeIds.length
@@ -238,90 +153,52 @@ object Graph {
         spark.createDataFrame(
           dg.nodeIds.zipWithIndex.map { case (id, i) => Row(id, ranks(i)) }
             .toList.asJava,
-          StructType(Seq(StructField("id", idTypeRaw),
+          StructType(Seq(StructField("id", idType),
             StructField("rank_pico", LongType))))
       }
     } match {
       case Some(out) => return out
       case None => ()
     }
-    // hash(src) layout: the RDD path spreads its per-round scan across
-    // the cluster (an AQE-coalesced checkpoint would freeze 2-3
-    // partitions), and the shuffle-join path reuses it every round
+    // per-round DataFrame shuffle joins over a hash(src) layout that every
+    // round reuses (an AQE-coalesced checkpoint would freeze 2-3
+    // partitions); the degree rides the materialized edge table so each
+    // round is one edge-stream pass + a node-keyed aggregate
     val par = spark.sparkContext.defaultParallelism
     val e = eRaw.repartition(par, col("src")).localCheckpoint(true)
-    val idType = e.schema("src").dataType
-    val eRdd = edgeTupleRdd(e)
-    // node ids AND out-degrees in ONE bounded pass (dst-only nodes land
-    // with degree 0), which also primes the tuple cache; `take` stops
-    // driver materialization once the limit+1'th node proves the graph
-    // belongs on the cluster-side path
-    val degPull = Route.collect(eRdd
-      .flatMap { case (s, t) => Iterator((s, 1L), (t, 0L)) }
-      .reduceByKey(_ + _), nodeLimit)
-    if (degPull.isDefined) {
-      val degAll: Array[(Any, Long)] = degPull.get
-      require(degAll.nonEmpty, "pageRank needs a non-empty edge set")
-      val nodeIds: Array[Any] = degAll.map(_._1)
-      val deg: Map[Any, Long] = degAll.iterator.filter(_._2 > 0L).toMap
-      val n = nodeIds.length.toLong
-      val base = (15L * 1000000000000L) / (100L * n)
-      val init = 1000000000000L / n
-      var ranks: scala.collection.Map[Any, Long] =
-        nodeIds.iterator.map(_ -> init).toMap
-      for (_ <- 0 until iters) {
-        // emission = rank(src) div outdeg(src), precomputed per source
-        val emit = deg.map { case (s, d) => s -> ranks(s) / d }
-        val contribs = propagate(eRdd, emit, _ + _).toMap
-        ranks = nodeIds.iterator
-          .map(id => id -> (base + 85L * contribs.getOrElse(id, 0L) / 100L))
-          .toMap
-      }
-      eRdd.unpersist(blocking = false)
-      graft.sources.SessionCache.release(e)
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        nodeIds.map(id => Row(id, ranks(id))).toList.asJava,
-        StructType(Seq(StructField("id", idType), StructField("rank_pico", LongType))))
-    } else {
-      eRdd.unpersist(blocking = false)
-      // web-scale path: per-round DataFrame shuffle joins; the degree
-      // rides the materialized edge table so each round is one
-      // edge-stream pass + a node-keyed aggregate
-      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      val eDeg = e.join(deg, "src").localCheckpoint(true)
-      val nodesDf = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    val eDeg = e.join(deg, "src").localCheckpoint(true)
+    val nodesDf = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()
+      .localCheckpoint(true)
+    val n = nodesDf.count()
+    require(n > 0, "pageRank needs a non-empty edge set")
+    val base = (15L * 1000000000000L) / (100L * n)
+    var ranks = nodesDf.withColumn("r", lit(1000000000000L / n))
+    for (_ <- 0 until iters) {
+      val contribs = eDeg.join(ranks, eDeg("src") === ranks("id"))
+        .select(col("dst").as("id"), expr("r div d").as("c"))
+        .groupBy(col("id")).agg(sum(col("c")).as("c"))
+      val next = nodesDf.join(contribs, Seq("id"), "left")
+        .select(col("id"),
+          (lit(base) + expr(s"(85 * coalesce(c, 0L)) div 100")).as("r"))
+        // materialize each round: the plan would otherwise nest `iters`
+        // joins deep and re-execute every prior round per action
         .localCheckpoint(true)
-      val n = nodesDf.count()
-      require(n > 0, "pageRank needs a non-empty edge set")
-      val base = (15L * 1000000000000L) / (100L * n)
-      var ranks = nodesDf.withColumn("r", lit(1000000000000L / n))
-      for (_ <- 0 until iters) {
-        val contribs = eDeg.join(ranks, eDeg("src") === ranks("id"))
-          .select(col("dst").as("id"), expr("r div d").as("c"))
-          .groupBy(col("id")).agg(sum(col("c")).as("c"))
-        val next = nodesDf.join(contribs, Seq("id"), "left")
-          .select(col("id"),
-            (lit(base) + expr(s"(85 * coalesce(c, 0L)) div 100")).as("r"))
-          // materialize each round: the plan would otherwise nest `iters`
-          // joins deep and re-execute every prior round per action
-          .localCheckpoint(true)
-        // the superseded round's checkpoint blocks are dead (r13
-        // uniformity: release, not unpersist — checkpoint RDD blocks);
-        // round 1's predecessor is a lazy plan, for which this is a no-op
-        graft.sources.SessionCache.release(ranks)
-        ranks = next
-      }
-      val out = ranks.select(col("id"), col("r").as("rank_pico"))
-      // nodesDf stays alive at iters = 0: the returned frame is then the
-      // lazy init plan OVER the nodesDf checkpoint, which has no lineage
-      // to recompute from (review catch — releasing it made the result
-      // throw 'Checkpoint block not found' on first action)
-      graft.sources.SessionCache.release(
-        if (iters > 0) Seq(eDeg, nodesDf, e) else Seq(eDeg, e))
-      out
+      // the superseded round's checkpoint blocks are dead (r13
+      // uniformity: release, not unpersist — checkpoint RDD blocks);
+      // round 1's predecessor is a lazy plan, for which this is a no-op
+      graft.sources.SessionCache.release(ranks)
+      ranks = next
     }
+    val out = ranks.select(col("id"), col("r").as("rank_pico"))
+    // nodesDf stays alive at iters = 0: the returned frame is then the
+    // lazy init plan OVER the nodesDf checkpoint, which has no lineage
+    // to recompute from (review catch — releasing it made the result
+    // throw 'Checkpoint block not found' on first action)
+    graft.sources.SessionCache.release(
+      if (iters > 0) Seq(eDeg, nodesDf, e) else Seq(eDeg, e))
+    out
   }
 
   /** Unweighted single-source shortest path (hop distance), `iters`
@@ -330,9 +207,8 @@ object Graph {
     * so like [[pageRank]] the result is exact at any parallelism and the
     * oracle replays the identical recurrence unrolled.
     *
-    * Size-routed like [[pageRank]]: the distance table is bounded by
-    * reached nodes ≤ edges + 1, so a bounded existence probe picks the
-    * driver-state rounds vs the DataFrame shuffle-join rounds. (This is
+    * Size-routed like [[pageRank]]: array-loop rounds over the driver
+    * edge snapshot, else DataFrame shuffle-join rounds. (This is
     * the bounded-hop form; the Datalog planner's semi-naive fixpoint is
     * the run-to-convergence reachability path.) */
   def shortestPaths(edges: DataFrame, sourceId: String, iters: Int = 6,
@@ -342,10 +218,10 @@ object Graph {
     val eSel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val eRaw = if (assumeDistinct) eSel else eSel.distinct()
     // coerce the source id to the edge column's JVM type: the driver
-    // path's map lookups use Java equality (a String "5" key never
+    // route's index lookup uses Java equality (a String "5" key never
     // matches java.lang.Long edge endpoints — it would silently return
     // only the source row), and typing the seed row by idType keeps the
-    // cluster path's join/union free of implicit casts too
+    // DataFrame rounds' join/union free of implicit casts too
     val idType = eSel.schema("src").dataType
     val source: Any = idType match {
       case org.apache.spark.sql.types.StringType => sourceId
@@ -357,17 +233,10 @@ object Graph {
     }
     val distSchema = StructType(Seq(
       StructField("id", idType), StructField("d", LongType)))
-    val nodeLimit = nodeLimitOf(spark)
-    // all-driver probe FIRST (r15): one bounded collect off the raw
-    // artifact replaces the repartition+checkpoint+tuple-cache layout
-    // passes entirely when the edge list fits BOTH bounds (the edge
-    // count is this function's small-route criterion, so honoring
-    // the node limit keeps the test-forced outer routes reachable).
-    // The cheap disqualifier runs BEFORE the snapshot build (r15
-    // ADVICE).
+    // driver route (r15): one bounded collect off the raw artifact
+    // replaces the repartition + checkpoint layout pass
     Route.attempt {
-      if (nodeLimit <= 0) None
-      else driverGraph(eRaw).filter(_.srcA.length <= nodeLimit).map { dg =>
+      driverGraph(eRaw).map { dg =>
         import scala.jdk.CollectionConverters._
         val srcIdx: Integer = dg.index.get(source)
         val nV = dg.nodeIds.length
@@ -403,46 +272,24 @@ object Graph {
     val e = eRaw
       .repartition(spark.sparkContext.defaultParallelism, col("src"))
       .localCheckpoint(true)
-    // the distance table is bounded by reached nodes ≤ 2×edges: a bounded
-    // existence probe routes small graphs to the driver-state rounds
-    if (Route.fits(e, nodeLimit)) {
-      val eRdd = edgeTupleRdd(e)
-      var dist: scala.collection.Map[Any, Long] = Map(source -> 0L)
-      for (_ <- 0 until iters) {
-        // emission = dist(src) + 1, precomputed per source
-        val stepped = propagate(eRdd,
-          dist.map { case (s, d) => s -> (d + 1L) }, math.min)
-        val next = scala.collection.mutable.HashMap[Any, Long](dist.toSeq: _*)
-        stepped.foreach { case (id, d2) =>
-          next(id) = math.min(next.getOrElse(id, Long.MaxValue), d2)
-        }
-        dist = next
-      }
-      eRdd.unpersist(blocking = false)
-      graft.sources.SessionCache.release(e)
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        dist.toList.map { case (id, d) => Row(id, d) }.asJava, distSchema)
-    } else {
-      var dist = spark.createDataFrame(
-        java.util.List.of(Row(source, 0L)), distSchema)
-      for (_ <- 0 until iters) {
-        val stepped = e.join(dist, e("src") === dist("id"))
-          .select(col("dst").as("id"), (col("d") + 1).as("d"))
-        val next = dist.unionByName(stepped)
-          .groupBy(col("id")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-        graft.sources.SessionCache.release(dist) // superseded round (r13)
-        dist = next
-      }
-      graft.sources.SessionCache.release(e)
-      dist
+    var dist = spark.createDataFrame(
+      java.util.List.of(Row(source, 0L)), distSchema)
+    for (_ <- 0 until iters) {
+      val stepped = e.join(dist, e("src") === dist("id"))
+        .select(col("dst").as("id"), (col("d") + 1).as("d"))
+      val next = dist.unionByName(stepped)
+        .groupBy(col("id")).agg(min(col("d")).as("d"))
+        .localCheckpoint(true)
+      graft.sources.SessionCache.release(dist) // superseded round (r13)
+      dist = next
     }
+    graft.sources.SessionCache.release(e)
+    dist
   }
 
-  /** Total order on node ids for the driver-state min-label rounds; only
-    * the standard id types qualify — anything else takes the DataFrame
-    * path, whose `min` carries Spark's own ordering. */
+  /** Total order on node ids for the driver min-label rounds; only the
+    * standard id types qualify — anything else takes the DataFrame
+    * rounds, whose `min` carries Spark's own ordering. */
   private def idOrdering(sample: Any): Option[Ordering[Any]] = sample match {
     // UTF-8 BYTE order, not String's UTF-16 compareTo: Spark's min() on
     // StringType compares UTF8String bytes, and the two differ for
@@ -470,39 +317,33 @@ object Graph {
     * run-to-convergence variant used by the dedup pipeline; this is the
     * fixed-cost form a scheduled graph job wants — `iters` scans,
     * known in advance.) Size-routed like [[pageRank]], with the extra
-    * constraint that labels ARE ids: the driver-state rounds need a
+    * constraint that labels ARE ids: the driver route needs a
     * driver-side id ordering, so exotic id types stay on the DataFrame
-    * path. Driver-state labels ride a dense index (id → position in the
-    * sorted node array) so the propagate kernel stays (Any, Long). */
+    * rounds. Driver labels are positions in the sorted node array, so
+    * "min label" is "min id". */
   def minLabelComponents(edges: DataFrame, iters: Int = 8,
       srcCol: String = "src", dstCol: String = "dst",
       assumeDistinct: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     val eSel = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val eRaw = if (assumeDistinct) eSel else eSel.distinct()
-    val idTypeRaw = eSel.schema("src").dataType
-    val nodeLimit = nodeLimitOf(spark)
-    // cheap route-disqualifiers BEFORE the snapshot build (r15 ADVICE):
-    // a zeroed node limit or an id type with no driver-side total order
-    // must prevent the driver collect, not just discard its result
-    val idOrderable = idTypeRaw match {
+    val idType = eSel.schema("src").dataType
+    // an id type with no driver-side total order must prevent the driver
+    // collect, not just discard its result (r15 ADVICE)
+    val idOrderable = idType match {
       case org.apache.spark.sql.types.StringType | LongType |
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     }
-    // all-driver probe FIRST (r15): one bounded collect off the raw
-    // artifact replaces the repartition+checkpoint+tuple-cache layout
-    // passes when edges fit the bound, nodes fit the node limit AND
-    // the id type has a driver-side total order (same constraint as
-    // the driver-state rounds)
+    // driver route (r15): one bounded collect off the raw artifact
+    // replaces the repartition + checkpoint layout pass
     Route.attempt {
-      if (nodeLimit <= 0 || !idOrderable) None
-      else driverGraph(eRaw).filter(dg => dg.nodeIds.nonEmpty &&
-          dg.nodeIds.length <= nodeLimit &&
-          idOrdering(dg.nodeIds(0)).isDefined).map { dg =>
+      if (!idOrderable) None
+      else driverGraph(eRaw).filter(_.nodeIds.nonEmpty).flatMap { dg =>
+        idOrdering(dg.nodeIds(0)).map(ord => (dg, ord))
+      }.map { case (dg, ord) =>
         import scala.jdk.CollectionConverters._
         // relabel in sorted-id space so "min label" is "min id"
-        val ord = idOrdering(dg.nodeIds(0)).get
         val nodeIds = dg.nodeIds.sorted(ord)
         val sortedIdx = new java.util.HashMap[Any, Integer](nodeIds.length * 2)
         nodeIds.zipWithIndex.foreach { case (id, i) => sortedIdx.put(id, i) }
@@ -529,8 +370,8 @@ object Graph {
           nodeIds.zipWithIndex.map { case (id, i) =>
             Row(id, nodeIds(lab(i).toInt))
           }.toList.asJava,
-          StructType(Seq(StructField("id", idTypeRaw),
-            StructField("lab", idTypeRaw))))
+          StructType(Seq(StructField("id", idType),
+            StructField("lab", idType))))
       }
     } match {
       case Some(out) => return out
@@ -539,55 +380,24 @@ object Graph {
     val e = eRaw
       .repartition(spark.sparkContext.defaultParallelism, col("src"))
       .localCheckpoint(true)
-    val idType = e.schema("src").dataType
-    val eRdd = edgeTupleRdd(e)
-    // distinct node ids, bounded: ONE shuffle job over the tuple RDD
-    // (which it also primes into the cache)
-    val nodeIds0 = Route.collect(
-      eRdd.flatMap { case (s, t) => Iterator(s, t) }.distinct(), nodeLimit)
-    val ord = nodeIds0.flatMap(_.headOption).flatMap(idOrdering)
-    if (ord.isDefined) {
-      // dense relabel: node ids sorted once; label = index of the
-      // component's minimum id, so min-combining stays pure Long
-      val nodeIds = nodeIds0.get.sorted(ord.get)
-      val index: Map[Any, Long] =
-        nodeIds.iterator.zipWithIndex.map { case (id, i) => id -> i.toLong }.toMap
-      var lab: scala.collection.Map[Any, Long] = index
-      for (_ <- 0 until iters) {
-        val incoming = propagate(eRdd, lab, math.min)
-        val next = scala.collection.mutable.HashMap[Any, Long](lab.toSeq: _*)
-        incoming.foreach { case (id, l2) =>
-          next(id) = math.min(next(id), l2)
-        }
-        lab = next
-      }
-      eRdd.unpersist(blocking = false)
-      graft.sources.SessionCache.release(e)
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        nodeIds.map(id => Row(id, nodeIds(lab(id).toInt))).toList.asJava,
-        StructType(Seq(StructField("id", idType), StructField("lab", idType))))
-    } else {
-      eRdd.unpersist(blocking = false)
-      val nodesDf = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
+    val nodesDf = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()
+      .localCheckpoint(true)
+    var lab = nodesDf.withColumn("lab", col("id"))
+    for (_ <- 0 until iters) {
+      val incoming = e.join(lab, e("src") === lab("id"))
+        .select(col("dst").as("id"), col("lab"))
+      val next = lab.unionByName(incoming)
+        .groupBy(col("id")).agg(min(col("lab")).as("lab"))
         .localCheckpoint(true)
-      var lab = nodesDf.withColumn("lab", col("id"))
-      for (_ <- 0 until iters) {
-        val incoming = e.join(lab, e("src") === lab("id"))
-          .select(col("dst").as("id"), col("lab"))
-        val next = lab.unionByName(incoming)
-          .groupBy(col("id")).agg(min(col("lab")).as("lab"))
-          .localCheckpoint(true)
-        graft.sources.SessionCache.release(lab) // superseded round (r13)
-        lab = next
-      }
-      // same iters = 0 guard as pageRank: the init labels plan is lazy
-      // over the nodesDf checkpoint
-      graft.sources.SessionCache.release(
-        if (iters > 0) Seq(nodesDf, e) else Seq(e))
-      lab
+      graft.sources.SessionCache.release(lab) // superseded round (r13)
+      lab = next
     }
+    // same iters = 0 guard as pageRank: the init labels plan is lazy
+    // over the nodesDf checkpoint
+    graft.sources.SessionCache.release(
+      if (iters > 0) Seq(nodesDf, e) else Seq(e))
+    lab
   }
 
   /** Total triangle count over an undirected graph (input edges may

@@ -48,16 +48,6 @@ object Route {
       if (rows.length < n) Some(rows) else None
     }
 
-  /** [[collect]] for an RDD stage the route already holds (`take` stops
-    * once cap+1 elements prove the input is over). */
-  def collect[T](rdd: org.apache.spark.rdd.RDD[T], maxRows: Long): Option[Array[T]] =
-    if (maxRows <= 0) None
-    else {
-      val n = takeN(maxRows)
-      val rows = rdd.take(n)
-      if (rows.length < n) Some(rows) else None
-    }
-
   /** Whether `df` has at most `maxRows` rows, counted per partition with
     * an early exit at cap+1: an over-bound input learns its route after
     * one bounded pass and no single task sees more than cap+1 rows (a

@@ -236,7 +236,6 @@ class NodeSnapshotSpec extends AnyFunSuite {
       Seq(Basis(), Basis(txId = Some(infos(pastTx - 1).txId)),
           Basis(validTime = Some(LocalDateTime.parse(pastVts(2))))).foreach { b =>
         shapes.foreach { case (query, args) =>
-          // a pull of an attribute absent at the basis fails in both forms
           def answer() = scala.util.Try(node.queryAt(query, args, b.validTime, b.txTime, b.txId)
             .collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap)
             .toEither.left.map(_.getMessage)
@@ -245,6 +244,29 @@ class NodeSnapshotSpec extends AnyFunSuite {
       }
       true
     }, runs = 6, seed = 67L)
+  }
+
+  test("a pull bound by an attribute the snapshot does not hold is empty in both forms") {
+    val node = newNode()
+    node.submitTx(List(JArray(List(JString("put"),
+      JObject("crux.db/id" -> JString(":a"), "name" -> JString("x"))))))
+    val queries = Seq(
+      "{:find [(pull ?e [*])] :where [[?e :score _]]}",
+      "{:find [?n (pull ?e [:name])] :where [[?e :name ?n] [?e :score _]]}",
+      "{:find [(pull ?r [*])] :where [[?e :ref ?r]]}",
+      "{:find [(count ?e) (pull ?e [*])] :where [[?e :score _]]}")
+    // latest: no doc has :score or :ref; a valid time before the put: the
+    // snapshot holds no attribute at all
+    Seq(None, Some(LocalDateTime.parse("2000-01-01T00:00:00"))).foreach { vt =>
+      queries.foreach { query =>
+        def answer() = node.queryAt(query, Nil, vt, None, None).collect().toSeq
+        assert(answer().isEmpty, s"$query at $vt")
+        assert(distributed(answer()).isEmpty, s"$query at $vt, distributed")
+      }
+    }
+    // the pull still reads a held attribute
+    assert(node.queryAt("{:find [(pull ?e [:name])] :where [[?e :name _]]}", Nil, None, None, None)
+      .collect().map(_.getStruct(0).getString(0)).toSeq == Seq("x"))
   }
 
   // ------------------------------------------------------------- job counts

@@ -581,7 +581,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the init plan rides the nodesDf checkpoint, which must NOT be
     // released in that case (review catch)
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    withRoutes("graph.nodes" -> 0L) {
+    withRoutes("graph.edges" -> 0L) {
       assert(graft.operators.Graph.pageRank(edges, iters = 0).count() == 3)
       assert(graft.operators.Graph.minLabelComponents(edges, iters = 0).count() == 3)
     }
@@ -2172,67 +2172,46 @@ class OperatorsSpec extends AnyFunSuite {
     assert(short(4L) != 1L && bounded(4L) == 1L)
   }
 
-  test("graph fixpoints: driver-state path equals the cluster-side DataFrame path") {
-    import spark.implicits._
-    // route graph.nodes = 0 forces the web-scale shuffle-join rounds on the
-    // same fixture the default routes to the driver-state rounds — the
-    // two paths must produce the identical integer recurrence
-    val edges = (Seq(("h", "l1"), ("h", "l2"), ("h", "l3"), ("h", "l4")) ++
-      Seq(("l1", "h"), ("l2", "h"), ("l3", "h"), ("l4", "h")) ++
-      Seq(("x", "y"), ("y", "x"), ("y", "z"))).toDF("src", "dst")
-    def prMap(limit: Long) = withRoutes("graph.nodes" -> limit) {
-      graft.operators.Graph.pageRank(edges, iters = 4)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-    assert(prMap(0L) == prMap(graft.operators.Graph.DefaultDriverNodeLimit))
-    def spMap(limit: Long) = withRoutes("graph.nodes" -> limit) {
-      graft.operators.Graph.shortestPaths(edges, "h", iters = 3)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-    assert(spMap(0L) == spMap(graft.operators.Graph.DefaultDriverNodeLimit))
-    def ccMap(limit: Long) = withRoutes("graph.nodes" -> limit) {
-      graft.operators.Graph.minLabelComponents(edges, iters = 4)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    }
-    assert(ccMap(0L) == ccMap(graft.operators.Graph.DefaultDriverNodeLimit))
-    assert(ccMap(0L)("z") == "x")
-  }
-
   test("randomized differential: graph fixpoints agree across paths on random digraphs") {
     import spark.implicits._
-    (0 until 2).foreach { trial =>
+    // a hub-and-leaves fixture plus a tail (z reached only from y) and
+    // two random digraphs
+    val fixed = (Seq(("h", "l1"), ("h", "l2"), ("h", "l3"), ("h", "l4")) ++
+      Seq(("l1", "h"), ("l2", "h"), ("l3", "h"), ("l4", "h")) ++
+      Seq(("x", "y"), ("y", "x"), ("y", "z"))).toDF("src", "dst")
+    val random = (0 until 2).map { trial =>
       val rnd = new scala.util.Random(8200 + trial)
       val n = 8 + rnd.nextInt(6)
-      val edges = (for {
+      (for {
         a <- 1 to n; b <- 1 to n
         if a != b && rnd.nextDouble() < 0.2
       } yield (s"v$a", s"v$b")).toDF("src", "dst")
-      // THREE routes per fixpoint (r15): nodeLimit 0 = cluster shuffle
-      // joins; edgeLimit 0 = driver state + per-round RDD propagate;
-      // defaults = all-driver rounds — all must agree bit-for-bit
-      def graph[A](nl: Long, el: Long)(f: => A): A =
-        withRoutes("graph.nodes" -> nl, "graph.edges" -> el)(f)
-      def pr(nl: Long, el: Long) = graph(nl, el) {
-        graft.operators.Graph.pageRank(edges, iters = 3)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-      def cc(nl: Long, el: Long) = graph(nl, el) {
-        graft.operators.Graph.minLabelComponents(edges, iters = 5)
-          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      }
-      def sp(nl: Long, el: Long) = graph(nl, el) {
-        graft.operators.Graph.shortestPaths(edges, "v1", iters = 4)
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-      val (nodeDef, edgeDef) = (graft.operators.Graph.DefaultDriverNodeLimit,
-        graft.operators.Graph.DefaultDriverEdgeLimit)
-      assert(pr(0L, edgeDef) == pr(nodeDef, edgeDef), s"pageRank trial $trial")
-      assert(pr(nodeDef, 0L) == pr(nodeDef, edgeDef), s"pageRank rdd-route trial $trial")
-      assert(cc(0L, edgeDef) == cc(nodeDef, edgeDef), s"components trial $trial")
-      assert(cc(nodeDef, 0L) == cc(nodeDef, edgeDef), s"components rdd-route trial $trial")
-      assert(sp(0L, edgeDef) == sp(nodeDef, edgeDef), s"sssp trial $trial")
-      assert(sp(nodeDef, 0L) == sp(nodeDef, edgeDef), s"sssp rdd-route trial $trial")
     }
+    (("fixed", fixed, "h") +: random.zipWithIndex.map { case (e, t) => (s"trial $t", e, "v1") })
+      .foreach { case (what, edges, from) =>
+        // TWO routes per fixpoint: edgeLimit 0 = DataFrame shuffle-join
+        // rounds, the default = all-driver rounds — bit-for-bit equal
+        def pr(el: Long) = withRoutes("graph.edges" -> el) {
+          graft.operators.Graph.pageRank(edges, iters = 3)
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        }
+        def cc(el: Long) = withRoutes("graph.edges" -> el) {
+          graft.operators.Graph.minLabelComponents(edges, iters = 5)
+            .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        }
+        def sp(el: Long) = withRoutes("graph.edges" -> el) {
+          graft.operators.Graph.shortestPaths(edges, from, iters = 4)
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        }
+        val edgeDef = graft.operators.Graph.DefaultDriverEdgeLimit
+        assert(pr(0L) == pr(edgeDef), s"pageRank $what")
+        assert(cc(0L) == cc(edgeDef), s"components $what")
+        assert(sp(0L) == sp(edgeDef), s"sssp $what")
+      }
+    assert(withRoutes("graph.edges" -> 0L) {
+      graft.operators.Graph.minLabelComponents(fixed, iters = 4)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    }("z") == "x")
   }
 
   test("triangleCount: driver route ≡ distributed wedge join (r15)") {
@@ -2258,11 +2237,11 @@ class OperatorsSpec extends AnyFunSuite {
     // it in UTF-16 compareTo — the driver path must use the byte order
     val hi = "￿"; val supp = "𐀀" // U+10000
     val edges = Seq((hi, supp), (supp, hi)).toDF("src", "dst")
-    def lab(limit: Long) = withRoutes("graph.nodes" -> limit) {
+    def lab(limit: Long) = withRoutes("graph.edges" -> limit) {
       graft.operators.Graph.minLabelComponents(edges, iters = 2).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
     }
-    val driver = lab(graft.operators.Graph.DefaultDriverNodeLimit)
+    val driver = lab(graft.operators.Graph.DefaultDriverEdgeLimit)
     val cluster = lab(0L)
     assert(driver == cluster)
     assert(driver.values.toSet == Set(hi)) // UTF-8 byte order: U+FFFF wins
@@ -2270,16 +2249,16 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("shortestPaths coerces sourceId to the edge id type on both paths") {
     import spark.implicits._
-    // Long-typed node ids with a String sourceId: the driver-state path's
-    // map lookups use Java equality, so without coercion "5" would never
+    // Long-typed node ids with a String sourceId: the driver route's
+    // index lookup uses Java equality, so without coercion "5" would never
     // match 5L and the result would silently be just the source row
     val edges = Seq((5L, 6L), (6L, 7L), (7L, 8L)).toDF("src", "dst")
-    def dists(limit: Long) = withRoutes("graph.nodes" -> limit) {
+    def dists(limit: Long) = withRoutes("graph.edges" -> limit) {
       graft.operators.Graph.shortestPaths(edges, "5", iters = 3).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     val expected = Map(5L -> 0L, 6L -> 1L, 7L -> 2L, 8L -> 3L)
-    assert(dists(graft.operators.Graph.DefaultDriverNodeLimit) == expected)
+    assert(dists(graft.operators.Graph.DefaultDriverEdgeLimit) == expected)
     assert(dists(0L) == expected) // forced cluster path agrees, same types
   }
 
@@ -2378,21 +2357,27 @@ class OperatorsSpec extends AnyFunSuite {
     assert(isLocal(ccDriver) && !isLocal(ccDist))
     assert(spanSet(ccDriver) == spanSet(ccDist))
     graft.sources.SessionCache.release(ccDist)
-    // graph.edges: a repeat call on the memoized snapshot runs no job,
-    // the edge-bound-zeroed call runs its rounds as jobs; graph.nodes:
-    // zeroed, the web-scale rounds leave a non-local frame
+    // graph.edges: a repeat call on the memoized snapshot runs no job;
+    // zeroed, each fixpoint runs its rounds as jobs and leaves a
+    // non-local frame
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
-    def prSet(df: org.apache.spark.sql.DataFrame) =
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val prDefault = prSet(graft.operators.Graph.pageRank(edges, iters = 3))
-    val (prAgain, againJobs) = jobs(prSet(graft.operators.Graph.pageRank(edges, iters = 3)))
-    val (prEdges, edgeJobs) = withRoutes("graph.edges" -> 0L) {
-      jobs(prSet(graft.operators.Graph.pageRank(edges, iters = 3)))
+    val fixpoints = Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      graft.operators.Graph.pageRank(_, iters = 3),
+      graft.operators.Graph.shortestPaths(_, "1", iters = 3),
+      graft.operators.Graph.minLabelComponents(_, iters = 3))
+    fixpoints.foreach { f =>
+      val viaDriver = f(edges)
+      val (again, againJobs) = jobs(pairSet(f(edges)))
+      val (viaRounds, roundJobs) = withRoutes("graph.edges" -> 0L)(jobs {
+        val df = f(edges)
+        (df, pairSet(df))
+      })
+      assert(againJobs == 0 && roundJobs > 0, s"jobs: $againJobs vs $roundJobs")
+      assert(isLocal(viaDriver) && !isLocal(viaRounds._1))
+      assert(Set(pairSet(viaDriver), again, viaRounds._2).size == 1)
     }
-    assert(againJobs == 0 && edgeJobs > 0, s"jobs: $againJobs vs $edgeJobs")
-    val prNodesDf = withRoutes("graph.nodes" -> 0L)(graft.operators.Graph.pageRank(edges, iters = 3))
-    assert(!isLocal(prNodesDf))
-    assert(Set(prAgain, prEdges, prSet(prNodesDf)) == Set(prDefault))
     // cumsum: the window form is one sorted partition, the two-pass form
     // keeps its slices; bit-identical by the helper's total-order contract
     val rows = (1L to 60L).map(i => (i, i % 7)).toDF("id", "v")

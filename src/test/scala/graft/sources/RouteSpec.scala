@@ -29,9 +29,8 @@ class RouteSpec extends AnyFunSuite {
     val df = spark.range(0, 7).toDF("x")
     val (c, cJobs) = SparkJobs.count(spark)(Route.collect(df, 0L))
     val (f, fJobs) = SparkJobs.count(spark)(Route.fits(df, 0L))
-    val (r, rJobs) = SparkJobs.count(spark)(Route.collect(df.rdd, 0L))
-    assert(c.isEmpty && !f && r.isEmpty)
-    assert((cJobs, fJobs, rJobs) == ((0, 0, 0)))
+    assert(c.isEmpty && !f)
+    assert((cJobs, fJobs) == ((0, 0)))
   }
 
   test("exactly cap rows routes to the driver, cap+1 rows does not") {
@@ -40,8 +39,6 @@ class RouteSpec extends AnyFunSuite {
       assert(Route.collect(df, n.toLong).map(_.length).contains(n), s"n=$n")
       assert(Route.collect(df, n - 1L).isEmpty, s"n=$n")
       assert(Route.fits(df, n.toLong) && !Route.fits(df, n - 1L), s"n=$n")
-      assert(Route.collect(df.rdd, n.toLong).map(_.length).contains(n), s"n=$n")
-      assert(Route.collect(df.rdd, n - 1L).isEmpty, s"n=$n")
     }
   }
 
