@@ -2172,46 +2172,60 @@ class OperatorsSpec extends AnyFunSuite {
     assert(short(4L) != 1L && bounded(4L) == 1L)
   }
 
-  test("randomized differential: graph fixpoints agree across paths on random digraphs") {
+  test("graph fixpoints: driver-state path equals the cluster-side DataFrame path") {
     import spark.implicits._
-    // a hub-and-leaves fixture plus a tail (z reached only from y) and
-    // two random digraphs
-    val fixed = (Seq(("h", "l1"), ("h", "l2"), ("h", "l3"), ("h", "l4")) ++
+    // route graph.edges = 0 forces the shuffle-join rounds on the same
+    // fixture the default routes to the all-driver rounds — the two paths
+    // must produce the identical integer recurrence
+    val edges = (Seq(("h", "l1"), ("h", "l2"), ("h", "l3"), ("h", "l4")) ++
       Seq(("l1", "h"), ("l2", "h"), ("l3", "h"), ("l4", "h")) ++
       Seq(("x", "y"), ("y", "x"), ("y", "z"))).toDF("src", "dst")
-    val random = (0 until 2).map { trial =>
+    def prMap(limit: Long) = withRoutes("graph.edges" -> limit) {
+      graft.operators.Graph.pageRank(edges, iters = 4)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    assert(prMap(0L) == prMap(graft.operators.Graph.DefaultDriverEdgeLimit))
+    def spMap(limit: Long) = withRoutes("graph.edges" -> limit) {
+      graft.operators.Graph.shortestPaths(edges, "h", iters = 3)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    assert(spMap(0L) == spMap(graft.operators.Graph.DefaultDriverEdgeLimit))
+    def ccMap(limit: Long) = withRoutes("graph.edges" -> limit) {
+      graft.operators.Graph.minLabelComponents(edges, iters = 4)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    }
+    assert(ccMap(0L) == ccMap(graft.operators.Graph.DefaultDriverEdgeLimit))
+    assert(ccMap(0L)("z") == "x")
+  }
+
+  test("randomized differential: graph fixpoints agree across paths on random digraphs") {
+    import spark.implicits._
+    (0 until 2).foreach { trial =>
       val rnd = new scala.util.Random(8200 + trial)
       val n = 8 + rnd.nextInt(6)
-      (for {
+      val edges = (for {
         a <- 1 to n; b <- 1 to n
         if a != b && rnd.nextDouble() < 0.2
       } yield (s"v$a", s"v$b")).toDF("src", "dst")
-    }
-    (("fixed", fixed, "h") +: random.zipWithIndex.map { case (e, t) => (s"trial $t", e, "v1") })
-      .foreach { case (what, edges, from) =>
-        // TWO routes per fixpoint: edgeLimit 0 = DataFrame shuffle-join
-        // rounds, the default = all-driver rounds — bit-for-bit equal
-        def pr(el: Long) = withRoutes("graph.edges" -> el) {
-          graft.operators.Graph.pageRank(edges, iters = 3)
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        }
-        def cc(el: Long) = withRoutes("graph.edges" -> el) {
-          graft.operators.Graph.minLabelComponents(edges, iters = 5)
-            .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        }
-        def sp(el: Long) = withRoutes("graph.edges" -> el) {
-          graft.operators.Graph.shortestPaths(edges, from, iters = 4)
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        }
-        val edgeDef = graft.operators.Graph.DefaultDriverEdgeLimit
-        assert(pr(0L) == pr(edgeDef), s"pageRank $what")
-        assert(cc(0L) == cc(edgeDef), s"components $what")
-        assert(sp(0L) == sp(edgeDef), s"sssp $what")
+      // TWO routes per fixpoint: edgeLimit 0 = DataFrame shuffle-join
+      // rounds, the default = all-driver rounds — bit-for-bit equal
+      def pr(el: Long) = withRoutes("graph.edges" -> el) {
+        graft.operators.Graph.pageRank(edges, iters = 3)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
-    assert(withRoutes("graph.edges" -> 0L) {
-      graft.operators.Graph.minLabelComponents(fixed, iters = 4)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    }("z") == "x")
+      def cc(el: Long) = withRoutes("graph.edges" -> el) {
+        graft.operators.Graph.minLabelComponents(edges, iters = 5)
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      }
+      def sp(el: Long) = withRoutes("graph.edges" -> el) {
+        graft.operators.Graph.shortestPaths(edges, "v1", iters = 4)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      val edgeDef = graft.operators.Graph.DefaultDriverEdgeLimit
+      assert(pr(0L) == pr(edgeDef), s"pageRank trial $trial")
+      assert(cc(0L) == cc(edgeDef), s"components trial $trial")
+      assert(sp(0L) == sp(edgeDef), s"sssp trial $trial")
+    }
   }
 
   test("triangleCount: driver route ≡ distributed wedge join (r15)") {
