@@ -3,7 +3,7 @@ package graft.bitemp
 import java.time.LocalDateTime
 import org.apache.spark.sql.{Column, DataFrame, ResidentRelation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType, TimestampNTZType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType, TimestampNTZType}
 import graft.sources.Route
 
 /** Bounded ALL-DRIVER route for the INTERACTIVE transaction paths
@@ -19,10 +19,13 @@ import graft.sources.Route
   * as-of read ([[tryAsOf]]) reads that value by reference, with no
   * collect and no job.
   *
-  * SEMANTICS ARE NOT REIMPLEMENTED: the per-entity fold is the same
-  * [[TxLogFold.foldEntity]] the distributed groupByKey fold runs (the
-  * one implementation the randomized differential specs pin against the
-  * sequential applyTx oracle); this object only adds the match/cas
+  * [[State.applyTx]] is the ONE in-memory tx application: the node route
+  * ([[tryApplyTx]]), the batch route ([[tryApplyBatch]], a fold of it
+  * over the batch's txs) and the ingest store's mirror
+  * (`graft.streaming.IngestStream`) all call it. Its per-entity fold is
+  * the same [[TxLogFold.foldEntity]] the distributed groupByKey fold runs
+  * (the one implementation the randomized differential specs pin against
+  * the sequential applyTx oracle); it only adds the match/cas
   * precondition in its in-memory form — an exact mirror of
   * [[TxLog.applyTxParts]]' candidate model: resolved pre-tx history
   * (cand_seq −1) plus EARLIER same-tx writes (cand_seq < check seq),
@@ -57,7 +60,7 @@ private[graft] object TxDriver {
       startVt: Option[LocalDateTime], endVt: Option[LocalDateTime],
       atVt: Option[LocalDateTime], expected: Option[String], seq: Long)
 
-  /** The op kinds [[MemState.applyOne]] models as [[TxLog.applyTxParts]]
+  /** The op kinds [[State.applyTx]] models as [[TxLog.applyTxParts]]
     * does; any other kind declines the route. */
   private val modelledOps = Set("put", "delete", "cas", "match", "evict")
 
@@ -67,8 +70,7 @@ private[graft] object TxDriver {
   /** None when any op row has a null `seq` (the distributed join drops
     * such rows, so the route declines rather than guess an order), a null
     * `eid`, or an op kind outside [[modelledOps]]. */
-  private[graft] def opRowsOf(rows: Array[Row],
-      schema: org.apache.spark.sql.types.StructType): Option[Array[OpRow]] = {
+  private def opRowsOf(rows: Array[Row], schema: StructType): Option[Array[OpRow]] = {
     val (iOp, iEid, iH, iS, iE, iA, iX, iQ) = (schema.fieldIndex("op"),
       schema.fieldIndex("eid"), schema.fieldIndex("content_hash"),
       schema.fieldIndex("start_vt"), schema.fieldIndex("end_vt"),
@@ -83,89 +85,10 @@ private[graft] object TxDriver {
 
   private implicit val ldtOrd: Ordering[LocalDateTime] = _ compareTo _
 
-  /** In-memory version store, seeded with the touched entities' rows (a
-    * tx reads no other entity); one instance per routed call. */
-  private[graft] final class MemState(state: Array[Bitemp.Version]) {
-    val byEid = new scala.collection.mutable.HashMap[
-      String, scala.collection.mutable.ArrayBuffer[Bitemp.Version]]
-    state.foreach(v => byEid.getOrElseUpdate(v.eid,
-      scala.collection.mutable.ArrayBuffer.empty[Bitemp.Version]) += v)
-
-    /** Apply ONE transaction; returns the version rows it emitted, or
-      * None (state untouched) on a match/cas abort. Mirrors
-      * [[TxLog.applyTx]]'s eager path exactly: precondition first, then
-      * the fold, then evict-wins merge. */
-    def applyOne(ops: Array[OpRow], txId: Long,
-        txTime: LocalDateTime): Option[Array[Bitemp.Version]] = {
-      val checks = ops.filter(o => o.op == "match" || o.op == "cas")
-      if (checks.nonEmpty) {
-        // candidates = resolved pre-tx history (cand_seq −1) + EARLIER
-        // same-tx writes — applyTxParts' exact model, including the
-        // documented deviation (range caps are not candidates)
-        val txWrites = ops.iterator
-          .filter(o => o.op == "put" || o.op == "delete" || o.op == "cas")
-          .map { o =>
-            val vt =
-              if (o.op == "cas") o.atVt.orElse(o.startVt).getOrElse(txTime)
-              else o.startVt.getOrElse(txTime)
-            val h = if (o.op == "delete") None else o.hash
-            (o.eid, vt, txId, h, o.seq)
-          }.toArray
-        val aborted = checks.exists { c =>
-          val basis = c.atVt.orElse(c.startVt).getOrElse(txTime)
-          val resolved = byEid.getOrElse(c.eid, Nil).groupBy(_.vt)
-            .iterator.map { case (vt, vs) =>
-              val w = vs.maxBy(_.txId)
-              (vt, w.txId, -1L, Option(w.contentHash))
-            }
-          val cands = resolved ++ txWrites.iterator
-            .filter(w => w._1 == c.eid && w._5 < c.seq)
-            .map(w => (w._2, w._3, w._5, w._4))
-          val visible = cands.filter(t => !t._1.isAfter(basis))
-            .maxByOption(t => (t._1, t._2, t._3))
-            .flatMap(_._4)
-          c.expected != visible // null-safe: None == None passes
-        }
-        if (aborted) return None
-      }
-      // the fold: identical FoldIn rows to applyPutDeleteTxs' op mapping
-      // (cas → put at its basis vt, delete → null hash, evict → no vt),
-      // run through the ONE shared foldEntity implementation
-      val foldOps: Array[FoldIn] = ops.flatMap { o =>
-        o.op match {
-          case "evict" =>
-            Some(FoldIn(o.eid, 1, None, Some(txTime), txId, None,
-              tomb = false, "evict", None, o.seq))
-          case "put" | "delete" | "cas" =>
-            val isCas = o.op == "cas"
-            val vt =
-              if (isCas) o.atVt.orElse(o.startVt).getOrElse(txTime)
-              else o.startVt.getOrElse(txTime)
-            val h = if (o.op == "delete") None else o.hash
-            Some(FoldIn(o.eid, 1, Some(vt), Some(txTime), txId, h,
-              tomb = false, if (isCas) "put" else o.op, o.endVt, o.seq))
-          case _ => None // match (and anything unknown) never folds
-        }
-      }
-      val emitted = foldOps.groupBy(_.eid).iterator.flatMap {
-        case (eid, eops) =>
-          val hist = byEid.getOrElse(eid, Nil).iterator.map(v =>
-            FoldIn(eid, 0, Some(v.vt), Some(v.tt), v.txId, Option(v.contentHash), v.tombstone,
-              "", None, 0L))
-          TxLogFold.foldEntity(hist ++ eops.iterator)
-      }.map(r => Bitemp.Version(r.eid, r.vt, r.tt, r.txId, r.hash.orNull, r.tomb)).toArray
-      // evict wins over the same tx's writes (foldEntity already emits
-      // nothing for an evicted entity); dropping the eid's rows IS the
-      // distributed path's anti-join
-      ops.iterator.filter(_.op == "evict").map(_.eid).toSet
-        .foreach((e: String) => byEid.remove(e))
-      emitted.foreach { v =>
-        byEid.getOrElseUpdate(v.eid,
-          scala.collection.mutable.ArrayBuffer.empty[Bitemp.Version]) += v
-      }
-      Some(emitted)
-    }
-  }
+  /** One tx applied to a [[State]]: the state after it, the version rows
+    * it emitted by entity, and the entities it evicted. */
+  private[graft] final case class Applied(state: State,
+      emitted: Map[String, Vector[Bitemp.Version]], evicted: Set[String])
 
   /** A driver-resident version state: its rows by entity and their
     * count. Immutable; a [[ResidentRelation]] state frame holds it by
@@ -187,23 +110,67 @@ private[graft] object TxDriver {
       else Some((byEid.valuesIterator.flatMap(_.iterator.map(_.txId)).max,
         byEid.valuesIterator.flatMap(_.iterator.map(_.tt)).max))
 
-    /** A [[MemState]] seeded with the rows of the entities `ops` touch
-      * (a tx reads no other entity) and, once `run` has folded over it,
-      * this state with those entities' rows replaced by the fold's. */
-    def fold(ops: Iterable[OpRow])(run: MemState => Unit): State = {
-      val eids = ops.iterator.map(_.eid).toSet
-      val mem = new MemState(eids.iterator.flatMap(e => byEid.getOrElse(e, Vector.empty)).toArray)
-      run(mem)
-      var next = byEid
-      var n = size
-      eids.foreach { e =>
-        n -= byEid.get(e).fold(0)(_.size)
-        mem.byEid.get(e).filter(_.nonEmpty) match {
-          case Some(vs) => next = next.updated(e, vs.toVector); n += vs.size
-          case None => next -= e
+    /** Apply ONE transaction — [[TxLog.applyTx]]'s eager path in memory:
+      * the match/cas precondition first, then the fold, then the
+      * evict-wins merge. The tx time is truncated to the microseconds
+      * Spark stores (the distributed fold's `lit(txTime)`), so a resident
+      * state reads as a stored one. None on a match/cas abort. */
+    def applyTx(ops: Array[OpRow], txId: Long, txTime: LocalDateTime): Option[Applied] = {
+      val tt = micros(txTime)
+      def history(eid: String) = byEid.getOrElse(eid, Vector.empty)
+      // a write's valid time (cas writes at its basis) and hash
+      def vtOf(o: OpRow) =
+        (if (o.op == "cas") o.atVt.orElse(o.startVt) else o.startVt).getOrElse(tt)
+      def hashOf(o: OpRow) = if (o.op == "delete") None else o.hash
+      def isWrite(o: OpRow) = o.op == "put" || o.op == "delete" || o.op == "cas"
+      lazy val writes = ops.filter(isWrite)
+      // candidates = resolved pre-tx history (cand_seq −1) + EARLIER
+      // same-tx writes — applyTxParts' exact model, including the
+      // documented deviation (range caps are not candidates)
+      val aborted = ops.exists { c =>
+        (c.op == "match" || c.op == "cas") && {
+          val basis = c.atVt.orElse(c.startVt).getOrElse(tt)
+          val resolved = history(c.eid).groupBy(_.vt).iterator.map { case (vt, vs) =>
+            val w = vs.maxBy(_.txId)
+            (vt, w.txId, -1L, Option(w.contentHash))
+          }
+          val earlier = writes.iterator.filter(w => w.eid == c.eid && w.seq < c.seq)
+            .map(w => (vtOf(w), txId, w.seq, hashOf(w)))
+          val visible = (resolved ++ earlier).filter(t => !t._1.isAfter(basis))
+            .maxByOption(t => (t._1, t._2, t._3)).flatMap(_._4)
+          c.expected != visible // null-safe: None == None passes
         }
       }
-      new State(next, n)
+      if (aborted) None
+      else {
+        // the fold: identical FoldIn rows to applyPutDeleteTxs' op mapping
+        // (cas → put at its basis vt, delete → null hash, evict → no vt),
+        // run through the ONE shared foldEntity implementation
+        val foldOps = ops.collect {
+          case o if o.op == "evict" =>
+            FoldIn(o.eid, 1, None, Some(tt), txId, None, tomb = false, "evict", None, o.seq)
+          case o if isWrite(o) =>
+            FoldIn(o.eid, 1, Some(vtOf(o)), Some(tt), txId, hashOf(o), tomb = false,
+              if (o.op == "cas") "put" else o.op, o.endVt, o.seq)
+        }
+        val emitted = foldOps.groupBy(_.eid).map { case (eid, eops) =>
+          val hist = history(eid).iterator.map(v => FoldIn(eid, 0, Some(v.vt), Some(v.tt),
+            v.txId, Option(v.contentHash), v.tombstone, "", None, 0L))
+          eid -> TxLogFold.foldEntity(hist ++ eops.iterator).map(r =>
+            Bitemp.Version(r.eid, r.vt, r.tt, r.txId, r.hash.orNull, r.tomb)).toVector
+        }.filter(_._2.nonEmpty)
+        // evict wins over the same tx's writes (foldEntity already emits
+        // nothing for an evicted entity); dropping the eid's rows IS the
+        // distributed path's anti-join
+        val evicted = ops.iterator.filter(_.op == "evict").map(_.eid).toSet
+        val kept = evicted.foldLeft((byEid, size)) { case ((m, n), e) =>
+          (m - e, n - m.get(e).fold(0)(_.size))
+        }
+        val (next, n) = emitted.foldLeft(kept) { case ((m, n), (e, vs)) =>
+          (m.updated(e, m.getOrElse(e, Vector.empty) ++ vs), n + vs.size)
+        }
+        Some(Applied(new State(next, n), emitted, evicted))
+      }
     }
   }
 
@@ -258,15 +225,20 @@ private[graft] object TxDriver {
 
   /** `state` as a [[State]] within `b` rows: the resident value itself,
     * or any other frame pulled once by one bounded collect. */
-  private def stateOf(state: DataFrame, b: Long): Option[State] =
+  private[graft] def stateOf(state: DataFrame, b: Long): Option[State] =
     ResidentRelation.valueOf(state) match {
       case Some(s: State) => Some(s).filter(_.size <= b)
       case _ => Route.collect(state.select(TxLog.versionSchema.fieldNames.map(col).toSeq: _*), b)
         .flatMap(Bitemp.versionsOf).map(vs => State.of(vs.iterator))
     }
 
-  /** A tx time at the microsecond precision Spark stores (the distributed
-    * fold's `lit(txTime)`), so a resident state reads as a stored one. */
+  /** One tx's op list within `b` rows, by one bounded collect; None over
+    * the bound or when [[opRowsOf]] declines it. */
+  private[graft] def opsOf(ops: DataFrame, b: Long): Option[Array[OpRow]] =
+    Route.collect(ops.select(TxLog.opSchema.fieldNames.map(col).toSeq: _*), b)
+      .flatMap(opRowsOf(_, TxLog.opSchema))
+
+  /** A tx time at the microsecond precision Spark stores. */
   private def micros(t: LocalDateTime): LocalDateTime =
     t.truncatedTo(java.time.temporal.ChronoUnit.MICROS)
 
@@ -275,19 +247,11 @@ private[graft] object TxDriver {
   private[bitemp] def tryApplyTx(state: DataFrame, ops: DataFrame,
       txId: Long, txTime: LocalDateTime): Option[(DataFrame, Boolean)] = {
     val b = bound(state)
-    Route.attempt {
-      val opsSel = ops.select(TxLog.opSchema.fieldNames.map(col).toSeq: _*)
-      for {
-        opRows <- Route.collect(opsSel, b)
-        txOps <- opRowsOf(opRows, TxLog.opSchema)
-        st <- stateOf(state, b)
-      } yield {
-        var aborted = false
-        val next = st.fold(txOps)(mem =>
-          aborted = mem.applyOne(txOps, txId, micros(txTime)).isEmpty)
-        if (aborted) (state, true) else (next.frame(state.sparkSession), false)
-      }
-    }
+    Route.attempt(for {
+      txOps <- opsOf(ops, b)
+      st <- stateOf(state, b)
+    } yield st.applyTx(txOps, txId, txTime)
+      .fold((state, true))(a => (a.state.frame(state.sparkSession), false)))
   }
 
   /** [[TxLog.applyBatch]]'s driver route: the WHOLE batch's op lists are
@@ -303,21 +267,16 @@ private[graft] object TxDriver {
         ops.select(lit(i).as("_i") +:
           TxLog.opSchema.fieldNames.map(col).toSeq: _*)
       }.reduce(_ unionByName _)
-      val taggedSchema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("_i",
-          org.apache.spark.sql.types.IntegerType) +: TxLog.opSchema.fields)
+      val taggedSchema = StructType(StructField("_i", IntegerType) +: TxLog.opSchema.fields)
       for {
         opRows <- Route.collect(tagged, b)
         txOps <- opRowsOf(opRows, taggedSchema)
         st <- stateOf(state, b)
       } yield {
         val byTx = opRows.map(_.getInt(0)).zip(txOps).groupMap(_._1)(_._2)
-        st.fold(txOps) { mem =>
-          txs.zipWithIndex.foreach { case ((txId, txTime, _), i) =>
-            // aborted txs leave state unchanged (applyBatch contract)
-            mem.applyOne(byTx.getOrElse(i, Array.empty[OpRow]), txId, micros(txTime))
-            ()
-          }
+        // aborted txs leave state unchanged (applyBatch contract)
+        txs.zipWithIndex.foldLeft(st) { case (s, ((txId, txTime, _), i)) =>
+          s.applyTx(byTx.getOrElse(i, Array.empty[OpRow]), txId, txTime).fold(s)(_.state)
         }.frame(state.sparkSession)
       }
     }

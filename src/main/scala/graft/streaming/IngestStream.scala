@@ -34,10 +34,11 @@ final case class SessionRow(user_id: Long, start_us: Long, end_us: Long, n_event
   * version rows and each maintained view's folded rows, for as long as
   * the store fits the `tx` size route's bound
   * (`spark.graft.route.tx.maxRows`, default 2^17 rows). Under the bound a
-  * batch folds in memory ([[graft.bitemp.TxDriver]]'s MemState, the same
-  * fold the node and the distributed path run) and writes its parquet
-  * from the driver rows, and [[loadState]]/[[loadView]] answer from the
-  * mirror without listing or scanning parquet. Over the bound, with the
+  * batch applies in memory ([[graft.bitemp.TxDriver]]'s `State.applyTx`,
+  * the one in-memory tx the node runs too, over the distributed path's
+  * per-entity fold) and writes its parquet from the driver rows, and
+  * [[loadState]]/[[loadView]] answer from the mirror without listing or
+  * scanning parquet. Over the bound, with the
   * bound at 0, for a store another writer commits to, or in a JVM that
   * did not write the store, every call runs the distributed parquet
   * plans.
@@ -253,14 +254,15 @@ object IngestStream {
   }
 
   /** The batch on the resident mirror: the ops are pulled in one bounded
-    * collect, folded by [[StoreMirror.fold]] (TxDriver.MemState), and the
-    * delta — or on compaction/evict the base — is written from the driver
-    * rows in one job. Each flushed view aggregates its in-memory signed
-    * rows in one job and writes the collected delta in one more. Returns
-    * the manifest to commit and the snapshot that matches it; None sends
-    * the batch to [[applyDistributed]]: ops over the bound, a null `seq`
-    * or `eid`, an op kind MemState does not model, or ops a declared
-    * `txShape` rules out (the check-free fold would ignore them). */
+    * collect ([[TxDriver.opsOf]]), applied to the mirror's state by
+    * [[TxDriver.State.applyTx]], and the delta — or on compaction/evict
+    * the base — is written from the driver rows in one job. Each flushed
+    * view aggregates its in-memory signed rows in one job and writes the
+    * collected delta in one more. Returns the manifest to commit and the
+    * snapshot that matches it; None sends the batch to
+    * [[applyDistributed]]: ops over the bound, a null `seq` or `eid`, an
+    * op kind applyTx does not model, or ops a declared `txShape` rules
+    * out (the check-free fold would ignore them). */
   private def applyResident(sp: SparkSession, ops: DataFrame, batchId: Long,
       txTime: java.time.LocalDateTime, stateDir: String, cur: Option[StateManifest],
       snap: StoreMirror.Snapshot, compactEvery: Int, matViewDir: Option[String],
@@ -268,51 +270,78 @@ object IngestStream {
       flushDue: (Boolean, Boolean) => Boolean,
       conf: org.apache.hadoop.conf.Configuration)
       : Option[(StateManifest, StoreMirror.Snapshot)] = {
-    val bound = graft.bitemp.TxDriver.maxRows(sp)
+    val bound = TxDriver.maxRows(sp)
     for {
-      opRows <- Route.collect(ops.select(TxLog.opSchema.fieldNames.map(col).toSeq: _*), bound)
-      txOps <- graft.bitemp.TxDriver.opRowsOf(opRows, TxLog.opSchema)
+      txOps <- TxDriver.opsOf(ops, bound)
       if txShape.forall(sh =>
         (sh.hasChecks || !txOps.exists(o => o.op == "match" || o.op == "cas")) &&
           (sh.hasEvict || !txOps.exists(_.op == "evict")))
     } yield {
       val hasEvict = txShape.fold(txOps.exists(_.op == "evict"))(_.hasEvict)
-      val f = StoreMirror.fold(snap, txOps, batchId, txTime)
-      val curDirs = (cur.flatMap(_.base), cur.toSeq.flatMap(_.deltas))
-      def write(dir: String, label: String, st: TxDriver.State): Unit =
-        labeled(sp, batchId, label)(
-          StoreMirror.single(sp, st.rows.toSeq, TxLog.versionSchema)
-            .write.mode("overwrite").parquet(s"$stateDir/$dir"))
-      def writeState(): (StateManifest, TxDriver.State) =
-        if (f.aborted) // advance the tx id over the same data dirs
-          (StateManifest(batchId, curDirs._1, curDirs._2), snap.state)
-        else if (hasEvict || cur.exists(_.deltas.size + 1 >= compactEvery)) {
-          val baseName = s"base-$batchId"
-          val compacted = TxDriver.State(f.compactedByEid)
-          write(baseName, "state compact+fold", compacted)
-          (StateManifest(batchId, Some(baseName), Nil), compacted)
-        } else {
-          val deltaName = s"delta-$batchId"
-          write(deltaName, "delta fold+write", TxDriver.State(f.emitted))
-          (StateManifest(batchId, curDirs._1, curDirs._2 :+ deltaName),
-            TxDriver.State(f.afterByEid))
-        }
-      matViewDir.filter(_ => flushDue(f.aborted, hasEvict)) match {
-        case None =>
-          val (next, state) = writeState()
-          (next, f.next(state, snap.views, snap.declinedViews))
-        case Some(vd) =>
-          // the state write and the view jobs share only the driver-side
-          // fold, so they run concurrently; the state write is joined
-          // even when the views fail, so no write outlives the call
-          val stateF = forked(sp)(writeState())
-          val viewsT = scala.util.Try(labeled(sp, batchId, "view maintenance")(
-            maintainResident(sp, vd, views, batchId, f, viewCompactEvery, bound, conf)))
-          val (next, state) = scala.concurrent.Await.result(stateF,
-            scala.concurrent.duration.Duration.Inf)
-          val (vs, declined) = viewsT.get
-          (next, f.next(state, vs, declined))
+      val applied = snap.state.applyTx(txOps, batchId, txTime)
+      val a = applied.getOrElse(TxDriver.Applied(snap.state, Map.empty, Set.empty))
+      def write(dir: String, rows: Iterator[org.apache.spark.sql.Row]): Unit =
+        StoreMirror.single(sp, rows.toSeq, TxLog.versionSchema)
+          .write.mode("overwrite").parquet(s"$stateDir/$dir")
+      val viewsOf = matViewDir.filter(_ => flushDue(applied.isEmpty, hasEvict)).map { vd =>
+        () => labeled(sp, batchId, "view maintenance")(maintainResident(sp, vd, views,
+          batchId, snap, StoreMirror.Folded(snap.state, a.emitted, a.evicted,
+            txOps.iterator.map(_.eid).toSet),
+          viewCompactEvery, bound, conf))
       }
+      val (next, state, vs) = commitBatch(sp, batchId, cur, compactEvery,
+        applied.isEmpty, hasEvict, viewsOf)(
+        kept = a.state,
+        compact = { dir =>
+          // the distributed compaction's dropDuplicates("eid", "vt", "tx_id")
+          // of the repeated rows a range restore re-emits
+          val c = TxDriver.State(a.state.byEid.map { case (e, hist) =>
+            e -> hist.distinctBy(v => (v.vt, v.txId)) })
+          write(dir, c.rows); c
+        },
+        append = { dir =>
+          write(dir, a.emitted.valuesIterator.flatMap(_.iterator.map(_.toRow)))
+          a.state
+        })
+      val (viewRows, declined) = vs.getOrElse((snap.views, snap.declinedViews))
+      (next, new StoreMirror.Snapshot(None, state, viewRows, declined))
+    }
+  }
+
+  /** One ingest batch's commit policy, for both routes: an aborted batch
+    * advances the tx id over the same data dirs (the state is `kept`);
+    * an evict, or a delta stack that reaches `compactEvery`, compacts
+    * into a fresh `base-<tx>` dir (`compact` writes it; the old dirs stay
+    * live until the manifest commits); any other batch appends its
+    * `delta-<tx>` dir (`append`). When views flush this batch, the state
+    * write runs on a pool thread beside `views` (the two share only the
+    * batch's fold) and is joined even when the views fail, so no write
+    * outlives the call. Returns the manifest to commit, the state
+    * writer's value and the views'. */
+  private def commitBatch[S, V](sp: SparkSession, batchId: Long, cur: Option[StateManifest],
+      compactEvery: Int, aborted: Boolean, hasEvict: Boolean, views: Option[() => V])(
+      kept: => S, compact: String => S, append: String => S): (StateManifest, S, Option[V]) = {
+    val (base, deltas) = (cur.flatMap(_.base), cur.toSeq.flatMap(_.deltas))
+    def writeState(): (StateManifest, S) =
+      if (aborted) (StateManifest(batchId, base, deltas), kept)
+      else if (hasEvict || cur.exists(_.deltas.size + 1 >= compactEvery)) {
+        val dir = s"base-$batchId"
+        (StateManifest(batchId, Some(dir), Nil),
+          labeled(sp, batchId, "state compact+fold")(compact(dir)))
+      } else {
+        val dir = s"delta-$batchId"
+        (StateManifest(batchId, base, deltas :+ dir),
+          labeled(sp, batchId, "delta fold+write")(append(dir)))
+      }
+    views match {
+      case None =>
+        val (m, st) = writeState()
+        (m, st, None)
+      case Some(run) =>
+        val stateF = forked(sp)(writeState())
+        val viewsT = scala.util.Try(run())
+        val (m, st) = scala.concurrent.Await.result(stateF, scala.concurrent.duration.Duration.Inf)
+        (m, st, Some(viewsT.get))
     }
   }
 
@@ -382,63 +411,20 @@ object IngestStream {
         TxLog.applyTxParts(current, ops, batchId, txTimeOfBatch, txShape)
     }
     val delta = parts.newRows
-    def labeled[A](what: String)(f: => A): A =
-      IngestStream.labeled(sp, batchId, what)(f)
-    // When views flush this tx, the tx's two actions — the state
-    // delta write and the view maintenance — are INDEPENDENT given
-    // the shared cached fold (both derive from histTouched + ops),
-    // so they run concurrently: the fold rows are persisted once and
-    // the block manager's per-block locks guarantee each partition
-    // computes exactly once even with both jobs racing for it. The
-    // per-tx wall drops from write+views to max(write, views). Both
-    // complete before the manifest commits, so crash semantics are
-    // unchanged (a committed vdelta with an uncommitted manifest is
-    // already handled by maintainViews' replay skip).
+    // When views flush this tx, the state write and the view
+    // maintenance both derive from the cached fold (histTouched + ops)
+    // and run concurrently ([[commitBatch]]): the block manager's
+    // per-block locks compute each partition exactly once even with both
+    // jobs racing for it. Both complete before the manifest commits (a
+    // committed vdelta with an uncommitted manifest is handled by
+    // maintainViews' replay skip).
     val wantViews = flushDue(parts.aborted, parts.hasEvict)
     val deltaCached =
       if (wantViews)
         delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else delta
-    def writeState(): StateManifest =
-      if (parts.aborted) // advance the tx id over the same data dirs
-        StateManifest(batchId, cur.flatMap(_.base), cur.toSeq.flatMap(_.deltas))
-      else {
-        // evict emptiness is driver-known (TxParts.hasEvict) — no
-        // extra job to decide compaction
-        val mustCompact =
-          parts.hasEvict || cur.exists(_.deltas.size + 1 >= compactEvery)
-        if (mustCompact) {
-          // evict is the one destructive op — it (and stack-depth
-          // maintenance) rewrites into a fresh base dir; the old
-          // dirs stay live until the manifest below commits
-          val baseName = s"base-$batchId"
-          val pruned =
-            if (parts.hasEvict)
-              current.join(broadcast(parts.evictEids), Seq("eid"), "left_anti")
-            else current
-          val full = pruned
-            .unionByName(deltaCached)
-            .dropDuplicates("eid", "vt", "tx_id") // restore-row dups
-          labeled("state compact+fold")(
-            full.write.mode("overwrite").parquet(s"$stateDir/$baseName"))
-          StateManifest(batchId, Some(baseName), Nil)
-        } else {
-          val deltaName = s"delta-$batchId"
-          // ONE file per delta — every later tx's state scan opens
-          // the whole delta stack, so file fanout is the read-side
-          // constant that compounds. The fold's reduce keeps its
-          // declared parallelism: repartition(1) caps the file count
-          // after a shuffle boundary (a coalesce(1) here would run
-          // the reduce itself in one task)
-          labeled("delta fold+write")(
-            deltaCached.repartition(1).write.mode("overwrite")
-              .parquet(s"$stateDir/$deltaName"))
-          StateManifest(batchId, cur.flatMap(_.base),
-            cur.toSeq.flatMap(_.deltas) :+ deltaName)
-        }
-      }
-    def writeViews(): Unit = matViewDir.foreach { vd =>
-      labeled("view maintenance") {
+    val viewsOf = matViewDir.filter(_ => wantViews).map { vd =>
+      () => labeled(sp, batchId, "view maintenance") {
         // per-view span source: a view whose high-water is exactly
         // the previous tx rides the tx's own cached frames (zero
         // extra store scans); a lagging view (group-committed span,
@@ -454,16 +440,27 @@ object IngestStream {
         maintainViews(sp, vd, views, batchId, signedFor, viewCompactEvery)
       }
     }
-    val next: StateManifest =
-      if (wantViews) {
-        import scala.concurrent.Await
-        import scala.concurrent.duration.Duration
-        val stateF = forked(sp)(writeState())
-        val viewF = forked(sp)(writeViews())
-        val m = Await.result(stateF, Duration.Inf)
-        Await.result(viewF, Duration.Inf)
-        m
-      } else writeState()
+    // evict emptiness is driver-known (TxParts.hasEvict) — no extra job
+    // to decide compaction
+    val (next, _, _) = commitBatch(sp, batchId, cur, compactEvery,
+      parts.aborted, parts.hasEvict, viewsOf)(
+      kept = (),
+      compact = { dir =>
+        val pruned =
+          if (parts.hasEvict)
+            current.join(broadcast(parts.evictEids), Seq("eid"), "left_anti")
+          else current
+        pruned.unionByName(deltaCached)
+          .dropDuplicates("eid", "vt", "tx_id") // restore-row dups
+          .write.mode("overwrite").parquet(s"$stateDir/$dir")
+      },
+      // ONE file per delta — every later tx's state scan opens the whole
+      // delta stack, so file fanout is the read-side constant that
+      // compounds. The fold's reduce keeps its declared parallelism:
+      // repartition(1) caps the file count after a shuffle boundary (a
+      // coalesce(1) here would run the reduce itself in one task)
+      append = dir => deltaCached.repartition(1).write.mode("overwrite")
+        .parquet(s"$stateDir/$dir"))
     (next, () => { if (wantViews) deltaCached.unpersist(); parts.cleanup() })
   }
 
@@ -715,12 +712,12 @@ object IngestStream {
     * maintainViews': a committed `vdelta-<txId>` is trusted, a torn one
     * replaced. Returns the views' rows and the declined view dirs. */
   private def maintainResident(sp: SparkSession, viewDir: String, views: Seq[ViewDef],
-      txId: Long, f: StoreMirror.Folded, compactEvery: Int, bound: Long,
-      conf: org.apache.hadoop.conf.Configuration)
+      txId: Long, snap: StoreMirror.Snapshot, f: StoreMirror.Folded, compactEvery: Int,
+      bound: Long, conf: org.apache.hadoop.conf.Configuration)
       : (Map[String, StoreMirror.ViewRows], Set[String]) = {
     import org.apache.hadoop.fs.Path
     val fs = hfs(viewDir, conf)
-    views.foldLeft((f.before.views, f.before.declinedViews)) { case ((vs, declined), v) =>
+    views.foldLeft((snap.views, snap.declinedViews)) { case ((vs, declined), v) =>
       val dir = s"$viewDir/${v.name}"
       val measures = v.measures.map(_._1)
       val ids0 = viewIds(fs, dir, None)
@@ -950,7 +947,7 @@ object IngestStream {
       vr <- snap.views.get(dir) if vr.ids == ids && vr.measures == measures
       folded <- (v, tailTo) match {
         case (Some(view), Some(_)) => Route.attempt {
-          val span = StoreMirror.Folded(snap, Map.empty, Set.empty, Set.empty, aborted = false)
+          val span = StoreMirror.Folded(snap.state, Map.empty, Set.empty, Set.empty)
           val agg = viewDelta(view, StoreMirror.single(sp,
             span.signed(ids.highWater, Long.MaxValue, SignedBasis), StoreMirror.signedSchema))
           vr.merge(agg.collect(), agg.schema, vr.ids)
@@ -1102,7 +1099,7 @@ object IngestStream {
   def loadState(spark: SparkSession, stateDir: String): DataFrame = {
     val cur = currentManifest(stateDir, spark.sessionState.newHadoopConf())
     StoreMirror.resident(spark, stateDir, cur).fold(storedState(spark, stateDir, cur))(
-      _.frame(spark))
+      _.state.frame(spark))
   }
 
   /** [[loadState]]'s parquet form: one scan of `cur`'s dirs. */

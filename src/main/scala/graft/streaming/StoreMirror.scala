@@ -18,7 +18,8 @@ import IngestStream.StateManifest
   * resolves in memory) and, per maintained view, its folded rows. It is
   * used while the store fits the `tx` route bound
   * (`spark.graft.route.tx.maxRows`) of the calling session; `0` turns it
-  * off for that session.
+  * off for that session. A batch applies to the mirror through
+  * [[TxDriver.State.applyTx]], the one in-memory tx the node runs too.
   *
   * The mirror is correct or absent:
   *  - a snapshot answers only for the manifest it was built for,
@@ -123,12 +124,6 @@ private[streaming] object StoreMirror {
   final class Snapshot(val manifest: Option[StateManifest], val state: TxDriver.State,
       val views: Map[String, ViewRows], val declinedViews: Set[String]) {
 
-    /** The version rows as the `tx` route's resident leaf over [[state]]:
-      * building it copies and converts nothing, an as-of read over it
-      * (filtered by `eid` or not) resolves in memory
-      * ([[Bitemp.asOf]]), and a job that scans it converts the rows then. */
-    def frame(spark: SparkSession): DataFrame = state.frame(spark)
-
     def at(m: StateManifest): Snapshot = new Snapshot(Some(m), state, views, declinedViews)
   }
 
@@ -143,10 +138,6 @@ private[streaming] object StoreMirror {
     * and runs as one single-task job, and a write lands one file. */
   def single(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     local(spark, rows, schema).coalesce(1)
-
-  private def snapshotOf(manifest: Option[StateManifest],
-      versions: Iterator[Bitemp.Version]): Snapshot =
-    new Snapshot(manifest, TxDriver.State.of(versions), Map.empty, Set.empty)
 
   /** What this JVM knows of one store epoch: its snapshot, or None once
     * the mirror declined it; and the view dirs whose `_viewmeta` sidecar
@@ -194,7 +185,7 @@ private[streaming] object StoreMirror {
     val bound = TxDriver.maxRows(spark)
     if (bound <= 0) None
     else cur match {
-      case None => Some(snapshotOf(None, Iterator.empty))
+      case None => Some(new Snapshot(None, TxDriver.State(Map.empty), Map.empty, Set.empty))
       case Some(m) => m.epoch.flatMap { e =>
         val c = cell(spark, stateDir)
         c.slot match {
@@ -203,8 +194,8 @@ private[streaming] object StoreMirror {
             if (hit.isEmpty) c.slot = Some(s.copy(snap = None))
             hit.filter(_.state.size <= bound)
           case _ =>
-            val seeded = Route.attempt(Route.collect(stored, bound)
-              .flatMap(Bitemp.versionsOf).map(vs => snapshotOf(Some(m), vs.iterator)))
+            val seeded = Route.attempt(TxDriver.stateOf(stored, bound))
+              .map(new Snapshot(Some(m), _, Map.empty, Set.empty))
             c.slot = Some(Slot(e, seeded, Set.empty))
             seeded
         }
@@ -224,26 +215,11 @@ private[streaming] object StoreMirror {
       c.slot = Some(Slot(e, after, known ++ meta))
     }
 
-  /** One batch folded over a snapshot in memory. */
-  final case class Folded(before: Snapshot, emitted: Map[String, Vector[Bitemp.Version]],
-      evicted: Set[String], opEids: Set[String], aborted: Boolean) {
-    /** Every entity's rows after the batch: evicted entities dropped, the
-      * emitted rows appended (the delta stack's row multiset). */
-    def afterByEid: Map[String, Vector[Bitemp.Version]] =
-      emitted.foldLeft(before.state.byEid -- evicted) { case (acc, (eid, vs)) =>
-        acc.updated(eid, acc.getOrElse(eid, Vector.empty) ++ vs)
-      }
-
-    /** The rows a compaction writes: [[afterByEid]] without the repeated
-      * (eid, vt, tx_id) rows a range restore re-emits — the distributed
-      * compaction's `dropDuplicates("eid", "vt", "tx_id")`. */
-    def compactedByEid: Map[String, Vector[Bitemp.Version]] =
-      afterByEid.map { case (eid, vs) => eid -> vs.distinctBy(v => (v.vt, v.txId)) }
-
-    def next(state: TxDriver.State, views: Map[String, ViewRows],
-        declined: Set[String]): Snapshot =
-      new Snapshot(None, state, views, declined)
-
+  /** One batch applied to the `before` state in memory: the rows it
+    * emitted by entity, the entities it evicted and those its ops name —
+    * what the view delta's [[signed]] rows read. */
+  final case class Folded(before: TxDriver.State, emitted: Map[String, Vector[Bitemp.Version]],
+      evicted: Set[String], opEids: Set[String]) {
     /** Signed before/after rows of the span (fromTx, this batch] for the
       * view delta: per touched entity its winner before the span (rows
       * with tx_id ≤ fromTx) at −1 and after the batch at +1, resolved by
@@ -254,18 +230,18 @@ private[streaming] object StoreMirror {
     def signed(fromTx: Long, txId: Long, basis: LocalDateTime): Seq[Row] = {
       val touched: Iterable[String] =
         if (fromTx >= txId - 1) opEids
-        else opEids ++ before.state.byEid.iterator.collect {
+        else opEids ++ before.byEid.iterator.collect {
           case (e, vs) if vs.exists(_.txId > fromTx) => e
         } ++ emitted.keysIterator
       def winner(vs: Iterable[Bitemp.Version]): Option[Bitemp.Version] =
         Bitemp.asOfLocal(vs, basis, Right(basis)).headOption
       touched.iterator.flatMap { eid =>
-        val stack = before.state.byEid.getOrElse(eid, Vector.empty) ++
+        val stack = before.byEid.getOrElse(eid, Vector.empty) ++
           emitted.getOrElse(eid, Vector.empty)
         val after = if (evicted(eid)) None else winner(stack)
         // a one-batch span's before side is the pre-batch rows alone (a
         // range restore re-emits an older tx id, which is not "before")
-        val prior = winner(if (fromTx >= txId - 1) before.state.byEid.getOrElse(eid, Vector.empty)
+        val prior = winner(if (fromTx >= txId - 1) before.byEid.getOrElse(eid, Vector.empty)
           else stack.filter(_.txId <= fromTx))
         after.map(v => Row.fromSeq(1L +: v.toRow.toSeq)).iterator ++
           prior.map(v => Row.fromSeq(-1L +: v.toRow.toSeq)).iterator
@@ -276,20 +252,4 @@ private[streaming] object StoreMirror {
   /** Schema of [[Folded.signed]]'s rows: `_sign` then the version columns. */
   val signedSchema: StructType =
     StructType(StructField("_sign", LongType, nullable = false) +: TxLog.versionSchema.fields)
-
-  /** Fold one batch's ops over `snap` with [[TxDriver.MemState]] — the
-    * node's and the distributed fold's [[graft.bitemp.TxLogFold]] — seeded
-    * with just the touched entities' rows. */
-  def fold(snap: Snapshot, ops: Array[TxDriver.OpRow], txId: Long,
-      txTime: LocalDateTime): Folded = {
-    val opEids = ops.iterator.map(_.eid).toSet
-    val mem = new TxDriver.MemState(
-      opEids.iterator.flatMap(e => snap.state.byEid.getOrElse(e, Vector.empty)).toArray)
-    mem.applyOne(ops, txId, txTime) match {
-      case None => Folded(snap, Map.empty, Set.empty, opEids, aborted = true)
-      case Some(emitted) =>
-        Folded(snap, emitted.toVector.groupBy(_.eid),
-          ops.iterator.filter(_.op == "evict").map(_.eid).toSet, opEids, aborted = false)
-    }
-  }
 }

@@ -4,9 +4,10 @@ import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.{Bench, SparkEntry}
 
@@ -83,6 +84,7 @@ object Profile {
     private val stageRun = new ConcurrentHashMap[Int, Tally]()
     private val queryRun = new ConcurrentHashMap[UUID, Tally]()
     private val liveQueries = ConcurrentHashMap.newKeySet[UUID]()
+    private val executions = new ConcurrentHashMap[String, String]()
 
     /** Called by the timing thread right before run `i` starts. */
     def begin(i: Int): Unit = { runStartMs(i) = System.currentTimeMillis(); current = i }
@@ -98,9 +100,12 @@ object Profile {
       else {
         val t = runAt(j.time)
         j.stageIds.foreach(stageRun.putIfAbsent(_, t))
-        // undescribed jobs: the short call site, which names the result
-        // stage (the job's last-created stage)
+        // undescribed jobs: the description of the SQL execution they run
+        // in (a job Spark starts from its own threads, as for a
+        // broadcast, has a call site that names no operator), else the
+        // short call site, which names the result stage
         val key = prop("spark.job.description")
+          .orElse(prop("spark.sql.execution.id").flatMap(id => Option(executions.get(id))))
           .getOrElse(j.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?"))
         open.put(j.jobId, (t, bucket(key), j.time))
       }
@@ -116,6 +121,12 @@ object Profile {
         }
         case None => if (j.jobId == sentinelJob) sentinelDone.countDown()
       }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => executions.put(s.executionId.toString, s.description); ()
+      case s: SparkListenerSQLExecutionEnd => executions.remove(s.executionId.toString); ()
+      case _ =>
+    }
 
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       Option(stageRun.get(s.stageInfo.stageId)).foreach(t => synchronized {

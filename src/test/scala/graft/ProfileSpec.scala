@@ -39,6 +39,15 @@ class ProfileSpec extends AnyFunSuite {
     assert(Profile.lines(q1).head.startsWith("q1 "))
   }
 
+  test("a broadcast join's jobs bucket under their SQL execution, not the async call site") {
+    val q3 = Profile.profile(spark, Seq("q3"), dir, None) match {
+      case Seq(("q3", Right(p))) => p
+      case other => fail(s"unexpected profile: $other")
+    }
+    val keys = q3.best.buckets.map(_._1)
+    assert(keys.nonEmpty && !keys.exists(_.contains("withThreadLocalCaptured")), keys)
+  }
+
   test("--explain writes the gate's formatted physical plan") {
     assert(Files.readString(explainDir.resolve("q1.txt")).contains("Physical Plan"))
   }

@@ -154,6 +154,22 @@ class StoreMirrorSpec extends AnyFunSuite {
     }, runs = 6, seed = 17L)
   }
 
+  test("a batch at a nanosecond tx time reads as the microsecond one the store keeps") {
+    // the default stream clock stamps nanosecond digits; Spark keeps micros
+    val at = LocalDateTime.parse("2025-01-01T00:00:00.000000500")
+    def reads(): (Map[Seq[Any], Int], Map[Seq[Any], Int]) = {
+      val state = tmp("graft_mirror_nanos")
+      IngestStream.applyToStore(spark, opsDf(Seq(put("1", "A", null, 0))), 0, state, at,
+        matViewDir = None)
+      val st = IngestStream.loadState(spark, state).filter(col("eid") === "1")
+      (bag(Bitemp.asOf(st, lit(t0), lit(Long.MaxValue))), bag(Bitemp.asOfTime(st, lit(t0), lit(t0))))
+    }
+    val (asOf, asOfTime) = reads()
+    val stored = distributed(reads())
+    assert(stored._1 == Map(Seq("1", t0, t0, 0L, "A", false) -> 1))
+    assert(asOf == stored._1 && asOfTime == stored._2)
+  }
+
   test("a frame taken before a commit keeps the pre-commit rows") {
     Seq(false, true).foreach { off =>
       def mode[A](body: => A): A = if (off) distributed(body) else body

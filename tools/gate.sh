@@ -17,6 +17,9 @@ mkdir -p "$OUT"
 
 stamp() { date -u +%Y-%m-%dT%H:%M:%SZ; }
 
+# the north star's "fewer lines" figure, recorded with every gate run
+echo "gate: main-code lines $(find src/main -name '*.scala' | xargs cat | wc -l)"
+
 echo "gate: sbt test start $(stamp)"
 sbt -batch test > "$OUT/sbt_test.log" 2>&1 || {
   grep -E "Tests:|FAILED|Failed tests" "$OUT/sbt_test.log" | tail -10 || true
