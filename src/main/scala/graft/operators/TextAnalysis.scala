@@ -153,8 +153,8 @@ object TextAnalysis {
     * the (word, freq) vocabulary, and a real tokenizer run is 32k merge
     * rounds — one Spark job cycle per merge is fine at 4 rounds and
     * hours at 32k. While the vocabulary fits route `bpe` (2²⁰ words; the
-    * bounded-driver policy of [[graft.operators.Dedup.connectedComponents]]
-    * and the descent's pair route), the merge rounds run IN-DRIVER as
+    * bounded-driver policy of [[graft.operators.Dedup.connectedComponents]]),
+    * the merge rounds run IN-DRIVER as
     * the actual learn_bpe algorithm: pair statistics built once, an
     * ordered set for O(log n) argmax, and per-merge incremental updates
     * that touch only the words containing the merged pair — thousands

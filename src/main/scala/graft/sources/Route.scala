@@ -6,7 +6,7 @@ import scala.util.control.NonFatal
 /** The one size-route helper. A size route is an operator that runs in
   * driver memory while its input stays under a row bound and on its
   * distributed form above it (graph fixpoints, the tx fold, the suffix
-  * probe, the dedup pair routes, bpe training, cumsum, Datalog rule
+  * probe, the dedup components route, bpe training, cumsum, Datalog rule
   * fixpoints). Every route takes its bound, its bounded pull and its
   * fallback from here:
   *

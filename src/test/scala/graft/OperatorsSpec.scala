@@ -487,42 +487,6 @@ class OperatorsSpec extends AnyFunSuite {
         r.getBoolean(4))).toSet == dedicatedDecon)
   }
 
-  test("LCP descent: broadcast probe route ≡ shuffled route, zero exchanges (r13)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(31)
-    val d = (0L until 20L).map { i =>
-      (i, Seq.fill(10 + rnd.nextInt(25))("abc"(rnd.nextInt(3)).toString).mkString(" "))
-    }.toDF("doc_id", "text")
-    val idx = Dedup.buildSuffixIndex(d, maxLen = 8)
-    val sa = idx.sa
-    val adj = sa.select(col("_sa"), col("doc_id").as("da"), col("pos").as("pa"))
-      .join(sa.select((col("_sa") - 1).as("_sa"), col("doc_id").as("db"),
-        col("pos").as("pb")), Seq("_sa"))
-      .select(col("da"), col("pa"), col("db"), col("pb"))
-    val (dvRoute, rel1) = Dedup.lcpDescent(adj, idx, 3, 8)
-    val (shRoute, rel2) = withRoutes("dedup.descent" -> 0L) {
-      Dedup.lcpDescent(adj, idx, 3, 8)
-    }
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("da"), r.getAs[Int]("pa"), r.getAs[Long]("db"),
-        r.getAs[Int]("pb"), r.getAs[Long]("match_len"))).toSet
-    assert(rows(dvRoute) == rows(shRoute))
-    // THE PIN (r13 judge ask #4): each driver-route descent probe is ONE
-    // BroadcastHashJoin with the tiny key set as build side — the
-    // corpus-sized rank frame streams from its cached blocks with NO
-    // Exchange and no sort, so a Catalyst mis-estimate cannot shuffle it
-    val keyDf = Seq((0L, 0)).toDF("_kd", "_kp")
-    val p = Dedup.probeRanks(idx.rounds(0), keyDf)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"), p.take(3000))
-    assert(!p.contains("Exchange hashpartitioning"), p.take(3000))
-    assert(!p.contains("ShuffleExchange"), p.take(3000))
-    assert(!p.contains("SortMergeJoin"), p.take(3000))
-    assert(!p.contains("Sort "), p.take(3000))
-    (rel1 ++ rel2).foreach(graft.sources.SessionCache.release)
-    idx.release()
-  }
-
   test("suffix index + cluster labels release their checkpoint blocks (r13)") {
     import spark.implicits._
     val sc = spark.sparkContext
@@ -623,12 +587,56 @@ class OperatorsSpec extends AnyFunSuite {
       rows(eDist.decontaminateExternal(bench, 3)))
     assert(rows(eDp.cutExternal(corpus, bench, 3)) ==
       rows(eDist.cutExternal(corpus, bench, 3)))
-    // and vs the fully-shuffled descent (pair bound 0) on the dp handle
+    // and vs a distributed copy of the dp handle (same checkpointed rounds)
     assert(rows(eDp.decontaminateExternal(bench, 3)) ==
-      withRoutes("dedup.descent" -> 0L) {
-        rows(Dedup.decontaminateExternal(eDp, bench, 3))
-      })
+      rows(Dedup.decontaminateExternal(eDp.withDriverProbeMax(0L), bench, 3)))
     Seq(jDp, jDist, eDp, eDist).foreach(_.release())
+  }
+
+  test("external query: a snapshot whose candidate pairs overflow driverProbeMax ≡ distributed probes") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(53)
+    // a two-token corpus and benchmark: every level-j0 window recurs
+    // across the corpus, so the pairing scan's candidate pairs far
+    // outnumber the corpus positions
+    def text(n: Int) = Seq.fill(n)("ab"(rnd.nextInt(2)).toString).mkString(" ")
+    val corpusL = (0L until 12L).map(i => (i, text(10 + rnd.nextInt(15))))
+    val benchL = (100L until 104L).map(i => (i, text(10 + rnd.nextInt(15))))
+    val corpus = corpusL.toDF("doc_id", "text")
+    val bench = benchL.toDF("doc_id", "text")
+    val (minLen, maxLen) = (4, 8)
+    val positions = corpusL.map(_._2.split(" ").length).sum.toLong
+    // candidate pairs: a bench position with ≥ minLen tokens left and a
+    // corpus position whose first 2^j0 tokens (j0 = ⌊log₂ minLen⌋) equal
+    // its own — the rank-j0 equality the pairing scan joins on
+    val w = Integer.highestOneBit(minLen)
+    def windows(t: String, left: Int): Seq[Seq[String]] = {
+      val tk = t.split(" ").toSeq
+      (0 to tk.length - left).map(p => tk.slice(p, p + w))
+    }
+    val corpusWin = corpusL.flatMap(c => windows(c._2, w))
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+    val pairs = benchL.flatMap(b => windows(b._2, minLen))
+      .map(corpusWin.getOrElse(_, 0)).sum
+    assert(pairs > positions + 1, s"$pairs candidate pairs, $positions positions")
+    // dedup.probe just above the corpus positions: the snapshot exists,
+    // but the external query's pairs overflow the same bound, so it
+    // lifts the fingerprints from the snapshot and runs the cascade
+    val idx = withRoutes("dedup.probe" -> (positions + 1)) {
+      Dedup.buildSuffixIndex(corpus, maxLen)
+    }
+    assert(idx.dupSpans(minLen).queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "expected the driver-probe snapshot at this corpus size")
+    val dist = idx.withDriverProbeMax(0L)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.mkString("|")).toSet
+    val decon = rows(idx.decontaminateExternal(bench, minLen))
+    assert(decon.exists(_.endsWith("|true")))
+    assert(decon == rows(Dedup.decontaminateExternal(dist, bench, minLen)))
+    assert(rows(idx.cutExternal(corpus, bench, minLen)) ==
+      rows(Dedup.cutExternal(dist, corpus, bench, minLen)))
+    idx.release()
   }
 
   test("decontaminateSubstr ≡ brute-force max-LCP-vs-benchmark (r12)") {
@@ -704,12 +712,11 @@ class OperatorsSpec extends AnyFunSuite {
         col("contaminated")))
     assert(joint.exists(_._4) && joint.exists(t => !t._4)) // both classes live
     // in-session corpus-only index: pairmaps derived lazily from the
-    // rounds; BOTH descent routes
+    // rounds; BOTH routes (driver snapshot and distributed probes)
     val idx = Dedup.buildSuffixIndex(corpus, maxLen)
     assert(outSet(idx.decontaminateExternal(bench, minLen)) == joint)
-    assert(withRoutes("dedup.descent" -> 0L) {
-      outSet(Dedup.decontaminateExternal(idx, bench, minLen))
-    } == joint)
+    assert(outSet(Dedup.decontaminateExternal(idx.withDriverProbeMax(0L),
+      bench, minLen)) == joint)
     // in-session PINNED pair maps (withPairmaps — the in-memory
     // analogue of the saved artifact): identical results, no-op when
     // maps are present, and release() frees every pinned block
@@ -742,9 +749,8 @@ class OperatorsSpec extends AnyFunSuite {
     val loaded = Dedup.loadSuffixIndex(spark, dir)
     assert(loaded.pairmaps.nonEmpty) // persisted, not re-derived
     assert(outSet(loaded.decontaminateExternal(bench, minLen)) == joint)
-    assert(withRoutes("dedup.descent" -> 0L) {
-      outSet(Dedup.decontaminateExternal(loaded, bench, minLen))
-    } == joint)
+    assert(outSet(Dedup.decontaminateExternal(loaded.withDriverProbeMax(0L),
+      bench, minLen)) == joint)
     // cap behavior is CHUNKING, not failure (r15): a benchmark larger
     // than maxBenchPositions greedy-packs into doc-granularity chunks,
     // each run through the same query, per-position spans max-merged —
@@ -752,10 +758,8 @@ class OperatorsSpec extends AnyFunSuite {
     // chunks on this fixture (docs are ≤ ~48 tokens each)
     assert(outSet(loaded.decontaminateExternal(bench, minLen,
       maxBenchPositions = 60)) == joint)
-    assert(withRoutes("dedup.descent" -> 0L) {
-      outSet(Dedup.decontaminateExternal(loaded, bench, minLen,
-        maxBenchPositions = 60))
-    } == joint)
+    assert(outSet(Dedup.decontaminateExternal(loaded.withDriverProbeMax(0L),
+      bench, minLen, maxBenchPositions = 60)) == joint)
     // a SINGLE doc above the cap still fails loudly (splitting a doc
     // would corrupt its remaining-length clamp)
     val e = intercept[IllegalArgumentException](
@@ -831,7 +835,7 @@ class OperatorsSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       loaded.cutExternal(corpus.limit(3), bench, minLen))
     assert(e2.getMessage.contains("indexed corpus"))
-    // THE PIN (the probeRanks discipline applied to the pairing scan):
+    // THE PIN on the pairing scan:
     // the bench fingerprint table broadcasts, the corpus rank frame
     // STREAMS — one BroadcastHashJoin, no shuffle exchange, no sort, so
     // a Catalyst mis-estimate cannot shuffle round j0
@@ -871,14 +875,15 @@ class OperatorsSpec extends AnyFunSuite {
     single.release()
     assert(ref.exists(_._4) && ref.exists(t => !t._4)) // both classes live
     // 3-shard hash-split federation: per-shard queries unioned must
-    // equal the single index on BOTH descent routes
+    // equal the single index on BOTH routes (driver snapshot and
+    // distributed probes)
     val fed = Dedup.buildShardedSuffixIndex(corpus, nShards = 3, maxLen = maxLen)
     assert(fed.shards.length == 3 && fed.shards.forall(_.nDocs > 0))
     assert(fed.nDocs == 18L)
     assert(outSet(fed.decontaminateExternal(bench, minLen)) == ref)
-    assert(withRoutes("dedup.descent" -> 0L) {
-      outSet(fed.decontaminateExternal(bench, minLen))
-    } == ref)
+    assert(outSet(Dedup.federateSuffixIndexes(
+      fed.shards.map(_.withDriverProbeMax(0L)))
+      .decontaminateExternal(bench, minLen)) == ref)
     assert(cutMap(fed.cutExternal(corpus, bench, minLen)) == refCut)
     // pinned pair maps: same answers, maps present on every shard
     val fedPm = fed.withPinnedPairmaps
@@ -2349,20 +2354,20 @@ class OperatorsSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).toSet
     assert(spanSet(spans) == spanSet(spans2))
     graft.sources.SessionCache.release(spans2)
-    // dedup.descent: the driver descent leaves nothing to release, the
-    // shuffled cascade its pre-filter checkpoint
+    // the distributed LCP descent hands back its pre-filter checkpoint,
+    // and releasing it frees the blocks
     val idx = Dedup.buildSuffixIndex(d, maxLen = 8)
     val adj = idx.sa.select(col("_sa"), col("doc_id").as("da"), col("pos").as("pa"))
       .join(idx.sa.select((col("_sa") - 1).as("_sa"), col("doc_id").as("db"),
         col("pos").as("pb")), Seq("_sa"))
       .select(col("da"), col("pa"), col("db"), col("pb"))
-    val (dv, dvRel) = Dedup.lcpDescent(adj, idx, 3, 8)
-    val (sh, shRel) = withRoutes("dedup.descent" -> 0L)(Dedup.lcpDescent(adj, idx, 3, 8))
-    assert(dvRel.isEmpty && shRel.nonEmpty)
-    def lcps(df: org.apache.spark.sql.DataFrame) =
-      spanSet(df.select("da", "pa", "db", "pb", "match_len"))
-    assert(lcps(dv) == lcps(sh))
-    graft.sources.SessionCache.release(shRel)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val beforeDescent = persisted
+    val (lcp, lcpRel) = Dedup.lcpDescent(adj, idx, 3, 8)
+    assert(lcpRel.nonEmpty && (persisted -- beforeDescent).nonEmpty)
+    assert(lcp.count() > 0)
+    graft.sources.SessionCache.release(lcpRel)
+    assert((persisted -- beforeDescent).isEmpty)
     idx.release()
     // dedup.components: driver union-find (LocalRelation) vs label rounds
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("d1", "d2")

@@ -170,6 +170,23 @@ class StoreMirrorSpec extends AnyFunSuite {
     assert(asOf == stored._1 && asOfTime == stored._2)
   }
 
+  test("a match sees only the writes its own tx made before it") {
+    // seq 1 expects "A"; the same tx's seq 2 put of "B" at the match's
+    // basis vt comes after the match, so it is no candidate and the tx
+    // commits
+    val batches = Seq(
+      Seq(put("1", "A", past, 0)),
+      Seq(Row("match", "1", null, null, null, past, "A", 1L), put("1", "B", past, 2)))
+    val a = Store(tmp("graft_mirror_seq_a")); val b = Store(tmp("graft_mirror_seq_b"))
+    batches.zipWithIndex.foreach { case (ops, i) =>
+      a.apply(i.toLong, ops, None, Nil)
+      distributed(b.apply(i.toLong, ops, None, Nil))
+    }
+    val st = IngestStream.loadState(spark, a.state)
+    assert(bag(Bitemp.asOf(st, lit(latest), lit(Long.MaxValue))).keySet.map(_(4)) == Set("B"))
+    assert(a.stateRows == distributed(b.stateRows))
+  }
+
   test("a frame taken before a commit keeps the pre-commit rows") {
     Seq(false, true).foreach { off =>
       def mode[A](body: => A): A = if (off) distributed(body) else body

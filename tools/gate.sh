@@ -20,6 +20,16 @@ stamp() { date -u +%Y-%m-%dT%H:%M:%SZ; }
 # the north star's "fewer lines" figure, recorded with every gate run
 echo "gate: main-code lines $(find src/main -name '*.scala' | xargs cat | wc -l)"
 
+# the README "Size routes" table names exactly the keys the code reads
+# through Route.maxRows(<spark>, "<name>", <default>)
+code_keys=$({ grep -rhoE 'Route\.maxRows\([^,]+, *"[a-z.]+"' src/main || true; } \
+  | grep -oE '"[a-z.]+"' | tr -d '"' | sort -u)
+doc_keys=$(awk '/^Size routes/ {s = 1; next} s && /^\|/ {t = 1; print; next} t {exit}' README.md \
+  | sed -nE 's/^\| `([a-z.]+)` \|.*/\1/p' | sort -u)
+echo "gate: route keys $(echo "$code_keys" | grep -c .)"
+[ "$code_keys" = "$doc_keys" ] || {
+  echo "gate: route keys differ: code [$(echo $code_keys)] README [$(echo $doc_keys)]"; exit 1; }
+
 echo "gate: sbt test start $(stamp)"
 sbt -batch test > "$OUT/sbt_test.log" 2>&1 || {
   grep -E "Tests:|FAILED|Failed tests" "$OUT/sbt_test.log" | tail -10 || true
