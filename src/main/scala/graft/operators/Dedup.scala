@@ -1446,11 +1446,11 @@ object Dedup {
     * final filter, so it drops BEFORE the descent and the cascade's
     * join cost tracks the duplicated minority, not the corpus.
     *
-    * This is the distributed form only: an index within route
-    * `dedup.probe` answers every consumer from its [[DriverProbe]]
-    * snapshot and never reaches here. The pre-filter is checkpointed
-    * once, since the shuffled left-join cascade
-    * ([[lcpDescentShuffled]]) references it 2(K+1) times.
+    * This is the distributed form: a consumer whose index has a
+    * [[DriverProbe]] snapshot (route `dedup.probe`) runs the descent in
+    * memory instead. The pre-filter is checkpointed once, since the
+    * shuffled left-join cascade ([[lcpDescentShuffled]]) references it
+    * 2(K+1) times.
     *
     * Returns (result, intermediates to release after the result
     * materializes — the caller owns them). */
